@@ -5,10 +5,15 @@ Reference surface re-expressed for Spark's execution model
 GROUP BY aggregates, probes are scalar functions):
 
 Build — ``build_filter(df, group_cols, hash_col, kind, ...)`` returns a
-DataFrame ``group_cols + [filter: binary]``.  Two physical strategies,
+DataFrame ``group_cols + [filter: binary]``.  Three physical strategies,
 chosen by filter algebra, NOT by data size:
 
-* **mergeable** (``bloom``, ``duckdb_bloom``, ``quotient``, ``cms``): two-phase —
+* **duckdb_bloom** (any grouping): in the JVM.  Each hash's sector and
+  4-bit mask are Catalyst expressions, ``bit_or`` ORs the masks per
+  (group, sector) with a partial aggregate before its shuffle, and only
+  the aggregated rows (at most ``num_sectors`` per group) reach a Python
+  worker, which packs each group's blob.
+* **other mergeable** (``bloom``, ``quotient``, ``cms``, ...): two-phase —
   ``mapInPandas`` folds each *partition* into one partial blob per group,
   then a tiny shuffle of partials is OR/union-merged per group.  At 100 TB
   the shuffle carries ``#partitions × #groups`` small blobs instead of every
@@ -18,9 +23,17 @@ chosen by filter algebra, NOT by data size:
   (``groupBy().applyInPandas``) — same data movement DuckDB's aggregate
   does implicitly, and the numpy build is O(n) vectorized.
 
-Probe — ``filter_contains(filter_col, hash_col)`` is an Arrow pandas UDF
-that sniffs the blob format, deserializes each *distinct* blob once per
-batch, and probes the whole batch vectorized.  The intended plan shape is
+Probe — ``probe_filter(df, filters, hash_col, on)`` collects the blobs
+once.  A global (``on=[]``) duckdb_bloom probe runs in the JVM: the blob's
+non-zero sectors become a broadcast (sector, bits) relation, LEFT-joined
+on each row's sector, and ``bits & mask = mask`` is the test, so fact rows
+never pass through a Python worker.  Grouped probes and every other blob
+format ride a broadcast variable into an Arrow UDF: per group, joining
+rows to that group's sectors would carry a relation of #groups ×
+num_sectors rows, which costs more than the vectorized numpy probe.
+``filter_contains(filter_col, hash_col)`` is the Arrow UDF over a blob
+column: it sniffs the format, deserializes each *distinct* blob once per
+batch, and probes the whole batch vectorized.  Its plan shape is
 ``fact CROSS JOIN broadcast(filters)`` (a handful of blob rows) → probe is
 map-side, no shuffle of the fact table.
 
@@ -126,6 +139,73 @@ def _merge_blobs(kind: str, blobs: list) -> bytes:
     raise ValueError(f"filter kind {kind!r} is not mergeable")
 
 
+def _duckdb_bloom_cols(h: Column, num_sectors: int) -> tuple[Column, Column]:
+    """(sector, mask) of the i64 hash ``h`` as Catalyst expressions: the
+    index and 4-bit mask of ``core.bloom.duckdb_bloom_build``. Shifts, ANDs
+    and ORs only, so nothing can overflow under ANSI mode (``1 << 63`` is
+    the i64 minimum, the same bits as the u64 mask)."""
+    mask = None
+    for byte_idx in (4, 5, 6, 7):
+        bit = F.shiftright(h, 8 * byte_idx).bitwiseAND(F.lit(0x3F)).cast("int")
+        m = F.call_function("shiftleft", F.lit(1).cast("long"), bit)
+        mask = m if mask is None else mask.bitwiseOR(m)
+    return h.bitwiseAND(F.lit(num_sectors - 1).cast("long")), mask
+
+
+def _build_duckdb_bloom(
+    proj: DataFrame, group_cols: list, num_sectors: int, out_schema: StructType
+) -> DataFrame:
+    """duckdb_bloom build in the JVM: OR the masks per (group, sector) with
+    ``bit_or`` (partial aggregate before the shuffle, so raw rows never
+    shuffle), then pack each group's non-zero sectors into the
+    ``[u64 num_sectors][u64 sectors...]`` blob. Only the aggregated rows,
+    at most ``num_sectors`` per group, reach a Python worker."""
+    filter_col = out_schema.fields[-1].name
+    sector, mask = _duckdb_bloom_cols(F.col("__h"), num_sectors)
+    agg = proj.groupBy(*group_cols, sector.alias("__s")).agg(
+        F.bit_or(mask).alias("__b")
+    )
+
+    def pack(t: pa.Table) -> pa.Table:
+        sectors = np.zeros(num_sectors, dtype=np.uint64)
+        sectors[t["__s"].to_numpy()] = t["__b"].to_numpy().view(np.uint64)
+        cols = {c: t[c].slice(0, 1) for c in group_cols}
+        cols[filter_col] = pa.array([B.duckdb_bloom_serialize(sectors)], pa.binary())
+        return pa.table(cols)
+
+    return agg.groupBy(*group_cols).applyInArrow(pack, schema=out_schema)
+
+
+def _probe_duckdb_bloom(
+    df: DataFrame, blob: bytes | None, hash_col: str, result_col: str
+) -> DataFrame:
+    """Global duckdb_bloom probe in the JVM: the blob's non-zero sectors
+    become a small local (sector, bits) relation, broadcast and LEFT-joined
+    on each row's sector; a row is in when ``bits & mask = mask``. No fact
+    row passes through a Python worker. NULL hash → NULL; no filter (or an
+    absent sector) → False."""
+    h = df[hash_col].cast("long")
+    if blob is None:
+        return df.withColumn(result_col, F.when(h.isNotNull(), F.lit(False)))
+    sectors = B.duckdb_bloom_deserialize(blob)
+    nz = np.flatnonzero(sectors)
+    table = pa.table({
+        "__bf_s": pa.array(nz, pa.int64()),
+        "__bf_b": pa.array(sectors[nz].view(np.int64), pa.int64()),
+    })
+    schema = StructType(
+        [StructField("__bf_s", LongType(), False), StructField("__bf_b", LongType(), False)]
+    )
+    bits = F.broadcast(df.sparkSession.createDataFrame(table, schema))
+    sector, mask = _duckdb_bloom_cols(h, len(sectors))
+    hit = F.coalesce(bits["__bf_b"].bitwiseAND(mask) == mask, F.lit(False))
+    return (
+        df.join(bits, sector == bits["__bf_s"], "left")
+        .withColumn(result_col, F.when(h.isNotNull(), hit))
+        .drop("__bf_s", "__bf_b")
+    )
+
+
 def build_filter(
     df: DataFrame,
     group_cols: list,
@@ -161,6 +241,8 @@ def build_filter(
     Probing routes each hash to its shard's sub-filter (same prefix
     function), so membership semantics are identical.
     """
+    if kind == "duckdb_bloom" and (num_sectors <= 0 or num_sectors & (num_sectors - 1)):
+        raise ValueError("num_sectors must be a power of 2")
     params = {
         "q": q, "r": r, "num_sectors": num_sectors, "n": n, "fpp": fpp,
         "d": d, "w": w, "k": k, "p": p,
@@ -179,7 +261,9 @@ def build_filter(
     gfields = [proj.schema[c] for c in group_cols]
     out_schema = StructType(gfields + [StructField(filter_col, BinaryType())])
 
-    if kind in MERGEABLE:
+    if kind == "duckdb_bloom":
+        out = _build_duckdb_bloom(proj, group_cols, num_sectors, out_schema)
+    elif kind in MERGEABLE:
         def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             acc: dict = {}
             gvals: dict = {}
@@ -203,9 +287,6 @@ def build_filter(
                         part = CKF.ck_entries(hs[m], nbuckets, fp_bits)
                         prev = acc.get(kk)
                         acc[kk] = part if prev is None else np.union1d(prev, part)
-                    elif kind == "duckdb_bloom":
-                        sect = B.duckdb_bloom_build(hs[m], num_sectors)
-                        acc[kk] = sect if kk not in acc else (acc[kk] | sect)
                     elif kind == "cms":
                         mat = CM.cms_counts(hs[m], d, w)
                         acc[kk] = mat if kk not in acc else (acc[kk] + mat)
@@ -249,8 +330,6 @@ def build_filter(
                     )
                 elif kind == "cuckoo":
                     blob = CKF.ck_partial_serialize(st, nbuckets, fp_bits, bucket_size)
-                elif kind == "duckdb_bloom":
-                    blob = B.duckdb_bloom_serialize(st)
                 elif kind == "cms":
                     blob = CM.cms_serialize(st)
                 elif kind == "kmv":
@@ -754,7 +833,14 @@ def probe_filter(
     collected once, broadcast to executors, deserialized once per worker,
     and the probe UDF receives only the group key + hash columns.  Adds
     ``result_col`` (boolean; null group → False).  Rows whose group has no
-    filter probe False.
+    filter probe False; a NULL hash probes NULL.
+
+    A global (``on=[]``) duckdb_bloom blob, or no filter at all, probes in
+    the JVM instead: the blob's non-zero sectors ride a broadcast join and
+    the mask test is a Catalyst expression, so no row reaches a Python
+    worker. Grouped probes keep the UDF: joining each row to its group's
+    sectors costs more than the vectorized probe once there are many
+    groups of many sectors.
     """
     on = list(on or [])
     if isinstance(filters, DataFrame):
@@ -780,6 +866,10 @@ def probe_filter(
             f"{len(fmap)} groups — too large to broadcast. Join the filters "
             "DataFrame on the group keys and probe with filter_contains."
         )
+    if not on:
+        blob = next(iter(fmap.values()), None)
+        if blob is None or blob[:4] not in _KIND_BY_MAGIC:  # duckdb_bloom: no magic
+            return _probe_duckdb_bloom(df, blob, hash_col, result_col)
     sc = df.sparkSession.sparkContext
     bc = sc.broadcast(fmap)
 
@@ -789,9 +879,8 @@ def probe_filter(
         out = np.zeros(len(h), dtype=bool)
         m = bc.value
         if not on:
-            blob = next(iter(m.values()), None)
-            if blob is not None and len(h):
-                out[:] = _probe_blob(blob, h)
+            if len(h):
+                out[:] = _probe_blob(next(iter(m.values())), h)
         elif len(h):
             series = [a.to_pandas() for a in arrays[:-1]]
             if len(on) == 1:

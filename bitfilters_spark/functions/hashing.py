@@ -27,10 +27,10 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
-from pyspark.sql.types import LongType
+from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 from ..core import hashing as H
 
@@ -38,6 +38,21 @@ from ..core import hashing as H
 def spark_hash64(*cols) -> Column:
     """Native JVM xxhash64 over one or more columns (codegen fast path)."""
     return F.xxhash64(*[F.col(c) if isinstance(c, str) else c for c in cols])
+
+
+def key_hash64(df: DataFrame, *cols: str) -> Column:
+    """``spark_hash64`` of ``df``'s key columns, with byte/short/int columns
+    widened to bigint first. ``xxhash64`` hashes an int as 4 bytes and a
+    bigint as 8, while a join compares the two as equal values; hashing the
+    widened value gives equal keys of either width the same hash, which is
+    also the hash of the value as a Python int (``sources.skipping``'s
+    local XXH64 of a long). Use it on both sides of every filter that
+    stands in for a join on these keys."""
+    narrow = (ByteType, ShortType, IntegerType)
+    return spark_hash64(*[
+        F.col(c).cast("long") if isinstance(df.schema[c].dataType, narrow) else F.col(c)
+        for c in cols
+    ])
 
 
 def _hash_arrow(a: "pa.Array", version: str) -> tuple[np.ndarray, np.ndarray]:

@@ -844,8 +844,9 @@ def filter_contamination(
     [bloom/cuckoo/quotient] are auto-sized from the gram count at a
     safe load factor unless their geometry kwargs are passed
     explicitly), which broadcasts and
-    probes map-side (`probe_filter` — numpy over Arrow batches, no
-    shuffle on the corpus gram stream before its per-doc aggregation).
+    probes map-side (`probe_filter` — numpy over Arrow batches, or for
+    duckdb_bloom a broadcast join to the blob's sectors; no shuffle on the
+    corpus gram stream before its per-doc aggregation).
 
     Returns per doc (docs shorter than ``n`` tokens produce no rows):
 

@@ -2,17 +2,26 @@
 case (docs/README.md 'Performance Benefits': build a filter on the small
 side of a join, probe the large side before the join).
 
-Spark realization: build the filter on the dim keys (tiny result), ship
-the blob to executors as a broadcast VARIABLE (not a join column — a
-joined blob column would duplicate KBs..MBs into every fact row), probe
-the fact rows map-side (zero Exchanges before the cut —
-tests/test_plans.py::test_probe_is_mapside_no_shuffle), then run the exact
-join on the survivors. Because the filter has no false negatives, the
-result is IDENTICAL to the plain join; the filter only cuts shuffle input.
+Spark realization: build the filter on the dim keys (tiny result), probe
+the fact rows map-side (zero shuffles of the fact side before the cut),
+then run the exact join on the survivors. Because the filter has no false
+negatives, the result is IDENTICAL to the plain join; the filter only cuts
+shuffle input. Keys hash with ``key_hash64`` on both sides: byte, short
+and int keys widen to bigint first, so an int key meets an equal bigint
+key at the same hash.
+
+The probe depends on the kind. The default ``duckdb_bloom`` probes in the
+JVM: the blob's non-zero sectors are a small relation broadcast to every
+executor, each fact row LEFT-joins its sector, and the mask test is a
+Catalyst expression, so no fact row passes through a Python worker
+(tests/test_plans.py::test_duckdb_bloom_probe_runs_in_the_jvm). Other
+kinds ship the blob as a broadcast VARIABLE into one vectorized Arrow UDF
+pass (tests/test_plans.py::test_probe_is_mapside_no_shuffle); the blob is
+never a join column, which would duplicate KBs..MBs into every fact row.
 
 At 100 TB: the fact side never shuffles before the probe, so a selective
 dim predicate (say 1% of keys) cuts the join's shuffle bytes ~99% at the
-cost of one broadcast blob + one vectorized UDF pass.
+cost of one broadcast and one map-side probe.
 """
 
 from __future__ import annotations
@@ -21,7 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.filters import build_filter, probe_filter
-from ..functions.hashing import spark_hash64
+from ..functions.hashing import key_hash64
 
 
 def bloom_prefiltered_join(
@@ -39,11 +48,11 @@ def bloom_prefiltered_join(
     join (no false negatives); only the data movement changes."""
     dim_keys = dim.select(dim_key).where(F.col(dim_key).isNotNull())
     blobs = build_filter(
-        dim_keys.select(spark_hash64(dim_key).alias("__h")), [], "__h", kind,
+        dim_keys.select(key_hash64(dim, dim_key).alias("__h")), [], "__h", kind,
         **filter_kwargs,
     )
     probed = probe_filter(
-        fact.withColumn("__h", spark_hash64(fact_key)), blobs, "__h"
+        fact.withColumn("__h", key_hash64(fact, fact_key)), blobs, "__h"
     )
     survivors = probed.where(F.col("__contains")).drop("__contains", "__h")
     return survivors.join(dim, survivors[fact_key] == dim[dim_key], how)
@@ -75,14 +84,14 @@ def antijoin_filter(
     default build-and-collect blocks plan construction on a Spark job;
     a caller composing several eager steps can build the filter
     concurrently (guide §2.6) and pass it in. MUST cover the same key
-    set, or the no-false-negative guarantee (result ≡ plain anti-join)
-    is lost.
+    set, hashed with ``key_hash64`` (integral keys widened to bigint), or
+    the no-false-negative guarantee (result ≡ plain anti-join) is lost.
     """
-    key_hashes = keys.select(spark_hash64(keys_key).alias("__h"))
+    key_hashes = keys.select(key_hash64(keys, keys_key).alias("__h"))
     if blobs is None:
         blobs = build_filter(key_hashes, [], "__h", kind, **filter_kwargs)
     probed = probe_filter(
-        fact.withColumn("__h", spark_hash64(fact_key)), blobs, "__h"
+        fact.withColumn("__h", key_hash64(fact, fact_key)), blobs, "__h"
     )
     clean = probed.where(~F.col("__contains")).drop("__contains", "__h")
     suspects = probed.where(F.col("__contains")).drop("__contains", "__h")
@@ -109,10 +118,10 @@ def semijoin_filter(
     ``exact=False`` returns the probabilistic superset (filter hits only —
     no join at all, zero shuffles); ``exact=True`` confirms with a
     leftsemi join on the survivors."""
-    key_hashes = keys.select(spark_hash64(keys_key).alias("__h"))
+    key_hashes = keys.select(key_hash64(keys, keys_key).alias("__h"))
     blobs = build_filter(key_hashes, [], "__h", kind, **filter_kwargs)
     probed = probe_filter(
-        fact.withColumn("__h", spark_hash64(fact_key)), blobs, "__h"
+        fact.withColumn("__h", key_hash64(fact, fact_key)), blobs, "__h"
     )
     survivors = probed.where(F.col("__contains")).drop("__contains", "__h")
     if not exact:

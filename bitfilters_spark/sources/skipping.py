@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.filters import _probe_blob, build_filter
-from ..functions.hashing import spark_hash64
+from ..functions.hashing import key_hash64, spark_hash64
 
 
 def build_file_index(
@@ -48,12 +48,14 @@ def build_file_index(
 
     Mergeable kinds only make sense here (the per-file build is the
     two-phase partial aggregate); peeled kinds would work but buy nothing
-    for an index.
+    for an index. Integral key columns hash as bigint (``key_hash64``), the
+    hash ``key_hashes`` gives a Python int, so an int32 key column prunes
+    correctly.
     """
     df = spark.read.parquet(path)
     keyed = df.select(
         F.input_file_name().alias("file"),
-        spark_hash64(*key_cols).alias("h"),
+        key_hash64(df, *key_cols).alias("h"),
     )
     return build_filter(keyed, ["file"], "h", kind, **filter_kw)
 
@@ -89,7 +91,8 @@ def _xxhash64_longs(vals, seed: int = 42) -> np.ndarray:
 
 def key_hashes(spark: SparkSession, values: list) -> np.ndarray:
     """Hash probe values with the SAME hash the index used (Spark
-    xxhash64, seed 42). Integer keys hash locally (`_xxhash64_longs` —
+    xxhash64, seed 42, integral keys widened to bigint). Integer keys hash
+    locally (`_xxhash64_longs` —
     zero Spark jobs, the common literal-IN-list shape); other types fall
     back to the tiny-DataFrame round trip so the parity guarantee stays
     expression-level."""
@@ -248,7 +251,7 @@ def refresh_file_index(
         new_df = spark.read.parquet(*new_files)
         keyed = new_df.select(
             F.input_file_name().alias("file"),
-            spark_hash64(*key_cols).alias("h"),
+            key_hash64(new_df, *key_cols).alias("h"),
         )
         built = build_filter(keyed, ["file"], "h", kind, **filter_kw)
         out_rows = kept + [

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.filters import build_filter, probe_filter
-from ..functions.hashing import spark_hash64
+from ..functions.hashing import key_hash64
 
 
 def streaming_filter_join(
@@ -37,14 +37,17 @@ def streaming_filter_join(
 
     ``build_filter`` runs here, eagerly, on the static side;
     ``probe_filter`` collects + broadcasts the blob at construction, so
-    per-micro-batch work is a map-side Arrow probe followed by the exact
-    join on survivors only.
+    per-micro-batch work is a map-side probe followed by the exact join on
+    survivors only. The probe is an Arrow UDF, or for ``duckdb_bloom`` a
+    stream-static LEFT join to the broadcast sectors, which keeps the
+    stream's rows out of Python. Keys hash with ``key_hash64``, so an int
+    stream key matches an equal bigint dim key.
     """
     dim_key = dim_key or stream_key
     filters = build_filter(
-        dim.select(spark_hash64(dim_key).alias("h")), [], "h", kind, **filter_kw
+        dim.select(key_hash64(dim, dim_key).alias("h")), [], "h", kind, **filter_kw
     )
-    hashed = stream.withColumn("__h", spark_hash64(stream_key))
+    hashed = stream.withColumn("__h", key_hash64(stream, stream_key))
     survivors = (
         probe_filter(hashed, filters, "__h")
         .where(F.col("__contains"))

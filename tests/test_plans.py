@@ -56,6 +56,50 @@ def test_probe_is_mapside_no_shuffle(spark):
     assert "Exchange" not in plan, f"probe path must not shuffle:\n{plan}"
 
 
+def test_duckdb_bloom_probe_runs_in_the_jvm(spark):
+    """A global duckdb_bloom probe is a broadcast join on the sector plus a
+    mask expression: no Python UDF node, and the probed side still never
+    shuffles (the only exchange is the sector relation's broadcast)."""
+    lineitem = spark.read.parquet(f"{SF}/lineitem.parquet")
+    orders = spark.read.parquet(f"{SF}/orders.parquet")
+    hot = orders.where(F.col("o_totalprice") > 450000.0).select("o_orderkey")
+    blobs = build_filter(
+        hot.select(spark_hash64("o_orderkey").alias("h")), [], "h",
+        "duckdb_bloom", num_sectors=1024,
+    )
+    probed = probe_filter(
+        lineitem.withColumn("h", spark_hash64("l_orderkey")), blobs, "h"
+    ).where(F.col("__contains"))
+    plan = plan_of(probed)
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    assert "BroadcastExchange" in plan, plan
+    shuffles = [ln for ln in plan.splitlines()
+                if "Exchange" in ln and "BroadcastExchange" not in ln]
+    assert not shuffles, f"probe path must not shuffle:\n{plan}"
+
+
+@pytest.mark.parametrize("fact_type", ["tinyint", "smallint", "int"])
+def test_filter_joins_match_exact_joins_across_key_widths(spark, fact_type):
+    """Narrow integral fact keys against the same bigint dim keys: the
+    filter must hash both at one width, or it drops true matches (hashed
+    at their own widths, these joins kept none of the n matches)."""
+    from bitfilters_spark.plans.filter_join import (
+        antijoin_filter,
+        bloom_prefiltered_join,
+        semijoin_filter,
+    )
+
+    n = 100 if fact_type == "tinyint" else 500
+    fact = spark.range(n).select(F.col("id").cast(fact_type).alias("fk"))
+    dim = spark.range(n).select(F.col("id").alias("dk"))
+    assert bloom_prefiltered_join(fact, dim, "fk", "dk").count() == n
+    assert antijoin_filter(fact, dim, "fk", "dk").count() == 0
+    assert semijoin_filter(fact, dim, "fk", "dk").count() == n
+    # and the other way round: bigint fact keys, narrow dim keys
+    assert bloom_prefiltered_join(dim, fact, "dk", "fk").count() == n
+    assert antijoin_filter(dim, fact, "dk", "fk").count() == 0
+
+
 def test_projection_prunes_document_scan(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     q = docs.select("doc_id", F.length("text").alias("n"))

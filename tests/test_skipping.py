@@ -52,6 +52,18 @@ def test_absent_keys_prune_everything(spark, part_dir):
     assert got.count() == 0
 
 
+def test_skipping_read_over_an_int32_key(spark, tmp_path):
+    """The index hashes an int column as bigint, as ``key_hashes`` hashes
+    Python ints; hashing it as 4 bytes pruned every file (0 of 3 rows)."""
+    dest = str(tmp_path / "ints")
+    spark.range(0, 3000, numPartitions=4).select(
+        F.col("id").cast("int").alias("k"), F.col("id").alias("v")
+    ).write.parquet(dest)
+    idx = build_file_index(spark, dest, ["k"], "bloom", n=1000, fpp=0.01)
+    got = skipping_read(spark, dest, "k", [5, 1500, 2999], index=idx)
+    assert sorted(r["v"] for r in got.collect()) == [5, 1500, 2999]
+
+
 def test_index_roundtrip(spark, part_dir, tmp_path):
     idx = build_file_index(spark, part_dir, ["o_custkey"], "duckdb_bloom", num_sectors=1024)
     p = str(tmp_path / "idx")

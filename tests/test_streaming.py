@@ -159,9 +159,7 @@ def test_streaming_window_counts_matches_batch(spark, tmp_path):
         q.stop()
 
 
-def test_streaming_filter_join_matches_batch_join(spark, tmp_path):
-    """Stream-static bloom-prefiltered join: result identical to the plain
-    join (no false negatives), across micro-batches."""
+def _check_streaming_filter_join(spark, tmp_path, kind, **kw):
     from bitfilters_spark.streaming import streaming_filter_join
 
     src = str(tmp_path / "fj_in")
@@ -173,7 +171,7 @@ def test_streaming_filter_join_matches_batch_join(spark, tmp_path):
 
     stream = spark.readStream.schema("id long, fp string").parquet(src)
     stream = stream.withColumn("k", F.col("id") % 10)
-    joined = streaming_filter_join(stream, dim, "k", kind="bloom", n=100, fpp=0.01)
+    joined = streaming_filter_join(stream, dim, "k", kind=kind, **kw)
     q = (
         joined.writeStream.format("memory")
         .queryName("fj_sink")
@@ -199,6 +197,18 @@ def test_streaming_filter_join_matches_batch_join(spark, tmp_path):
     )
     # ids 0..39, k = id % 10 ∈ {2,5,7} → 3 matches per 10 ids = 12 rows
     assert got == want and len(got) == 12
+
+
+def test_streaming_filter_join_matches_batch_join(spark, tmp_path):
+    """Stream-static bloom-prefiltered join: result identical to the plain
+    join (no false negatives), across micro-batches."""
+    _check_streaming_filter_join(spark, tmp_path, "bloom", n=100, fpp=0.01)
+
+
+def test_streaming_filter_join_duckdb_bloom_matches_batch_join(spark, tmp_path):
+    """Same as above with the duckdb_bloom filter, which probes in the JVM:
+    a stream-static LEFT join to the broadcast sectors."""
+    _check_streaming_filter_join(spark, tmp_path, "duckdb_bloom", num_sectors=64)
 
 
 def test_streaming_distinct_counts_exact_under_capacity(spark, tmp_path):
