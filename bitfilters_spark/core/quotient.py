@@ -35,10 +35,14 @@ def qf_fingerprints(hashes: np.ndarray, q: int, r: int) -> np.ndarray:
     return hashes.astype(np.uint64) & mask
 
 
-def qf_build(hashes: np.ndarray, q: int, r: int) -> bytes:
-    fps = np.unique(qf_fingerprints(hashes, q, r))
+def qf_serialize(q: int, r: int, fps: np.ndarray) -> bytes:
+    """Blob of a sorted, distinct fingerprint array."""
     head = _MAGIC + bytes([q, r]) + np.uint64(len(fps)).tobytes()
     return head + fps.astype("<u8").tobytes()
+
+
+def qf_build(hashes: np.ndarray, q: int, r: int) -> bytes:
+    return qf_serialize(q, r, np.unique(qf_fingerprints(hashes, q, r)))
 
 
 def qf_deserialize(blob: bytes):
@@ -73,8 +77,7 @@ def qf_merge(blobs: list) -> bytes:
         parts.append(fps)
     if q is None:
         raise ValueError("no filters to merge")
-    fps = np.unique(np.concatenate(parts)) if parts else np.zeros(0, np.uint64)
-    return _MAGIC + bytes([q, r]) + np.uint64(len(fps)).tobytes() + fps.astype("<u8").tobytes()
+    return qf_serialize(q, r, np.unique(np.concatenate(parts)))
 
 
 def qf_resize(blob: bytes, new_q: int, new_r: int | None = None) -> bytes:
@@ -104,13 +107,11 @@ def qf_resize(blob: bytes, new_q: int, new_r: int | None = None) -> bytes:
     if new_q + new_r < q + r:
         mask = np.uint64((1 << (new_q + new_r)) - 1)
         fps = np.unique(fps & mask)
-    head = _MAGIC + bytes([new_q, new_r]) + np.uint64(len(fps)).tobytes()
-    return head + fps.astype("<u8").tobytes()
+    return qf_serialize(new_q, new_r, fps)
 
 
 def qf_remove(blob: bytes, hashes: np.ndarray) -> bytes:
     """Delete support (quotient filters' distinguishing capability)."""
     q, r, fps = qf_deserialize(blob)
     gone = np.unique(qf_fingerprints(hashes, q, r))
-    keep = fps[~np.isin(fps, gone)]
-    return _MAGIC + bytes([q, r]) + np.uint64(len(keep)).tobytes() + keep.astype("<u8").tobytes()
+    return qf_serialize(q, r, fps[~np.isin(fps, gone)])

@@ -4,24 +4,36 @@ Reference surface re-expressed for Spark's execution model
 (``docs/README.md`` of the reference lists the SQL functions; builds are
 GROUP BY aggregates, probes are scalar functions):
 
-Build — ``build_filter(df, group_cols, hash_col, kind, ...)`` returns a
-DataFrame ``group_cols + [filter: binary]``.  Three physical strategies,
-chosen by filter algebra, NOT by data size:
+Formats — ``_FORMATS`` is the one table of blob formats: per kind its
+magic, the label ``filter_describe`` reports, probe, merge, describe,
+delete, and how it builds (a partial fold for mergeable kinds, a bulk
+build for peeled ones). Every sniff, probe, merge and build below reads
+it; ``sql.py`` registers this module's UDFs.
 
-* **duckdb_bloom** (any grouping): in the JVM.  Each hash's sector and
-  4-bit mask are Catalyst expressions, ``bit_or`` ORs the masks per
-  (group, sector) with a partial aggregate before its shuffle, and only
-  the aggregated rows (at most ``num_sectors`` per group) reach a Python
-  worker, which packs each group's blob.
-* **other mergeable** (``bloom``, ``quotient``, ``cms``, ...): two-phase —
-  ``mapInPandas`` folds each *partition* into one partial blob per group,
-  then a tiny shuffle of partials is OR/union-merged per group.  At 100 TB
-  the shuffle carries ``#partitions × #groups`` small blobs instead of every
-  row; raw rows never shuffle.
-* **peeled** (``xor8/16``, ``fuse8/16``): construction needs the whole key
-  set at once (hypergraph peeling), so groups shuffle to their builder
-  (``groupBy().applyInPandas``) — same data movement DuckDB's aggregate
-  does implicitly, and the numpy build is O(n) vectorized.
+Build — ``build_filter(df, group_cols, hash_col, kind, ...)`` returns a
+DataFrame ``group_cols + [filter: binary]``. The plan follows the
+kind's algebra, not the data size:
+
+* **duckdb_bloom**: in the JVM. Each hash's sector and 4-bit mask are
+  Catalyst expressions, ``bit_or`` ORs the masks per (group, sector) with
+  a partial aggregate before its shuffle, and only the aggregated rows (at
+  most ``num_sectors`` per group) reach a Python worker, which packs each
+  group's blob.
+* **other mergeable** (``bloom``, ``quotient``, ``cuckoo``, ``cms``,
+  ``kmv``, ``hll``, ``mg``): the partial fold ``build_filters_multi``
+  runs too. One ``mapInPandas`` pass folds each Arrow batch into a
+  running state per group and emits one partial blob per (partition,
+  group); the shuffle carries those ``#partitions × #groups`` blobs,
+  never rows, and one ``applyInPandas`` task per group merges them —
+  merge(build(A), build(B)) = build(A ∪ B).
+* **peeled** (``xor8/16``, ``fuse8/16``, ``ribbon8/16``): construction
+  needs the whole key set at once (hypergraph peeling / banded solve), so
+  rows shuffle to their group's builder (``groupBy().applyInPandas``), or
+  with ``num_shards`` to one builder per (group, hash-prefix shard) and an
+  assembly task per group.
+
+NULL hashes are skipped; a NULL group key is a group of its own (SQL
+GROUP BY), for every kind.
 
 Probe — ``probe_filter(df, filters, hash_col, on)`` collects the blobs
 once.  A global (``on=[]``) duckdb_bloom probe runs in the JVM: the blob's
@@ -44,7 +56,7 @@ the value columns internally (CombineHash for multi-key), mirroring
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -64,7 +76,9 @@ from pyspark.sql.types import (
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 
+from ..core import bksample as BKS
 from ..core import bloom as B
 from ..core import cms as CM
 from ..core import cuckoo as CKF
@@ -78,65 +92,244 @@ from ..core import xor as X
 from ..core import hashing as H
 from .hashing import _hash_arrays
 
-MERGEABLE = {"bloom", "duckdb_bloom", "quotient", "cms", "kmv", "hll", "mg", "cuckoo"}
-PEELED = {"xor8", "xor16", "fuse8", "fuse16", "ribbon8", "ribbon16"}
-
 
 def _to_u64(s: pd.Series) -> np.ndarray:
     return s.to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
 
 
-def _bulk_build(kind: str, hashes: np.ndarray, p: dict) -> bytes:
-    if kind == "quotient":
-        return Q.qf_build(hashes, p["q"], p["r"])
-    if kind == "xor8":
-        return X.xor_build(hashes, 8)
-    if kind == "xor16":
-        return X.xor_build(hashes, 16)
-    if kind == "fuse8":
-        return FU.fuse_build(hashes, 8)
-    if kind == "fuse16":
-        return FU.fuse_build(hashes, 16)
-    if kind == "ribbon8":
-        return RB.ribbon_build(hashes, 8)
-    if kind == "ribbon16":
-        return RB.ribbon_build(hashes, 16)
-    if kind == "duckdb_bloom":
-        return B.duckdb_bloom_serialize(B.duckdb_bloom_build(hashes, p["num_sectors"]))
-    if kind == "bloom":
-        m, k = B.bloom_params(p["n"], p["fpp"])
-        return B.bloom_serialize(B.bloom_build(hashes, p["n"], p["fpp"]), k)
-    if kind == "cms":
-        return CM.cms_build(hashes, p["d"], p["w"])
-    if kind == "kmv":
-        return KV.kmv_build(hashes, p["k"])
-    if kind == "hll":
-        return HL.hll_build(hashes, p["p"])
-    if kind == "mg":
-        return MG.mg_build(hashes, p["k"])
-    if kind == "cuckoo":
-        return CKF.ck_build(hashes, p["nbuckets"], p["fp_bits"], p["bucket_size"])
-    raise ValueError(f"unknown filter kind {kind!r}")
+# ------------------------------------------------------------ formats ---
+
+
+class _Format(NamedTuple):
+    """One blob format.
+
+    ``magic`` is the 4-byte header (None: the headerless duckdb_bloom
+    layout) and ``label`` the name ``filter_describe`` reports.
+    ``probe(blob, hashes)`` answers membership, ``merge(blobs)`` unions
+    blobs (None: not mergeable), ``describe(blob)`` gives ``(n_entries,
+    fill_ratio, est_fpp)`` and ``remove(blob, hashes)`` deletes keys.
+    A mergeable kind builds through ``fold(state, hashes, params)``, which
+    folds one batch's hashes into the running partial state (None before
+    the first batch), and ``serialize(state, params)``, the partial blob
+    ``merge`` finishes; a peeled kind through ``build(hashes, params)``
+    over its whole key set."""
+
+    magic: bytes | None
+    label: str
+    probe: Callable
+    merge: Callable | None = None
+    fold: Callable | None = None
+    serialize: Callable | None = None
+    build: Callable | None = None
+    describe: Callable = lambda blob: (None, None, None)
+    remove: Callable | None = None
+
+
+def _fold_with(part: Callable, combine: Callable) -> Callable:
+    """``fold`` from a batch's partial state ``part(hashes, params)`` and
+    the ``combine(a, b)`` of two states."""
+
+    def fold(state, hashes: np.ndarray, p: dict):
+        new = part(hashes, p)
+        return new if state is None else combine(state, new)
+
+    return fold
+
+
+def _mg_fold(state, hashes: np.ndarray, p: dict):
+    """Exact counts of the batch, added to the state, compressed after each
+    batch: per-group state stays <= k counters regardless of partition
+    size (the PODS'12 merge keeps the n/(k+1) bound)."""
+    keys, counts = np.unique(hashes, return_counts=True)
+    counts = counts.astype(np.uint64)
+    if state is not None:
+        keys, inv = np.unique(np.concatenate([state[0], keys]), return_inverse=True)
+        summed = np.zeros(len(keys), dtype=np.uint64)
+        np.add.at(summed, inv, np.concatenate([state[1], counts]))
+        counts = summed
+    return MG.mg_summarize(keys, counts, p["k"])
+
+
+def _not_membership(what: str, use: str) -> Callable:
+    def probe(blob: bytes, hashes: np.ndarray) -> np.ndarray:
+        raise ValueError(f"{what}, not a membership filter; {use}")
+
+    return probe
+
+
+def _bits(words: np.ndarray) -> float:
+    return float(np.unpackbits(words.view(np.uint8)).sum())
+
+
+def _describe_bloom(blob: bytes) -> tuple:
+    words, m_bits, k = B.bloom_deserialize(blob)
+    fill = _bits(words) / m_bits
+    return None, fill, fill**k
+
+
+def _describe_cuckoo(blob: bytes) -> tuple:
+    tab = CKF.ck_deserialize(blob)[3]
+    used = int(np.count_nonzero(tab))
+    return used, used / tab.size, None
+
+
+def _describe_duckdb_bloom(blob: bytes) -> tuple:
+    sect = B.duckdb_bloom_deserialize(blob)
+    return None, _bits(sect) / (len(sect) * 64), None
+
+
+def _describe_hll(blob: bytes) -> tuple:
+    regs = HL.hll_deserialize(blob)[1]
+    return None, float(np.count_nonzero(regs)) / len(regs), None
+
+
+def _peeled(magic: bytes, label: str, probe: Callable, build: Callable, bits: int) -> _Format:
+    return _Format(magic, label, probe, build=lambda h, p: build(h, bits))
+
+
+_SHARD_MAGIC = b"SHRD"
+
+
+def shard_pack(num_shards: int, blobs_by_shard: dict) -> bytes:
+    """Container for hash-prefix-sharded sub-filters:
+    ``SHRD | u32 num_shards | u64 lengths[num_shards] | blobs...``.
+    Shards with no keys are stored zero-length (probe → False)."""
+    lens = [len(blobs_by_shard.get(i, b"")) for i in range(num_shards)]
+    head = (
+        _SHARD_MAGIC
+        + np.uint32(num_shards).tobytes()
+        + np.array(lens, dtype="<u8").tobytes()
+    )
+    return head + b"".join(blobs_by_shard.get(i, b"") for i in range(num_shards))
+
+
+def _shard_of(hashes: np.ndarray, num_shards: int) -> np.ndarray:
+    """Shard = top-16-hash-bits mod num_shards — matches the JVM-side
+    ``shiftrightunsigned(h, 48) % num_shards`` used at build time."""
+    return (
+        (hashes.astype(np.uint64, copy=False) >> np.uint64(48))
+        % np.uint64(num_shards)
+    ).astype(np.int64)
+
+
+def _shard_probe(blob: bytes, hashes: np.ndarray) -> np.ndarray:
+    num = int(np.frombuffer(blob[4:8], dtype="<u4")[0])
+    lens = np.frombuffer(blob[8 : 8 + 8 * num], dtype="<u8").astype(np.int64)
+    offs = np.concatenate([[0], np.cumsum(lens)]) + 8 + 8 * num
+    shard = _shard_of(hashes, num)
+    out = np.zeros(len(hashes), dtype=bool)
+    for s in np.unique(shard):
+        sub = blob[offs[s] : offs[s + 1]]
+        if len(sub):
+            m = shard == s
+            out[m] = _probe_blob(sub, hashes[m])
+    return out
+
+
+_FORMATS = {
+    "quotient": _Format(
+        Q._MAGIC, "quotient", Q.qf_probe, Q.qf_merge,
+        fold=_fold_with(
+            lambda h, p: np.unique(Q.qf_fingerprints(h, p["q"], p["r"])), np.union1d
+        ),
+        serialize=lambda st, p: Q.qf_serialize(p["q"], p["r"], st),
+        describe=lambda b: (len(Q.qf_deserialize(b)[2]), None, None),
+        remove=Q.qf_remove,
+    ),
+    "cuckoo": _Format(
+        CKF.CKF_MAGIC, "cuckoo", CKF.ck_probe, CKF.ck_merge,
+        fold=_fold_with(
+            lambda h, p: CKF.ck_entries(h, p["nbuckets"], p["fp_bits"]), np.union1d
+        ),
+        serialize=lambda st, p: CKF.ck_partial_serialize(
+            st, p["nbuckets"], p["fp_bits"], p.get("bucket_size", 4)
+        ),
+        describe=_describe_cuckoo,
+        remove=CKF.ck_remove,
+    ),
+    "duckdb_bloom": _Format(
+        None, "duckdb_bloom", B.duckdb_bloom_probe, B.duckdb_bloom_merge,
+        fold=_fold_with(
+            lambda h, p: B.duckdb_bloom_build(h, p["num_sectors"]), np.bitwise_or
+        ),
+        serialize=lambda st, p: B.duckdb_bloom_serialize(st),
+        describe=_describe_duckdb_bloom,
+    ),
+    "bloom": _Format(
+        B._MAGIC, "bloom", B.bloom_probe, B.bloom_merge,
+        fold=_fold_with(lambda h, p: B.bloom_build(h, p["n"], p["fpp"]), np.bitwise_or),
+        serialize=lambda st, p: B.bloom_serialize(st, B.bloom_params(p["n"], p["fpp"])[1]),
+        describe=_describe_bloom,
+    ),
+    "cms": _Format(
+        CM.CMS_MAGIC, "count_min",
+        _not_membership("count-min sketch is a frequency sketch", "probe with cms_estimate()"),
+        CM.cms_merge,
+        fold=_fold_with(lambda h, p: CM.cms_counts(h, p["d"], p["w"]), np.add),
+        serialize=lambda st, p: CM.cms_serialize(st),
+    ),
+    "kmv": _Format(
+        KV.KMV_MAGIC, "kmv",
+        _not_membership("KMV is a cardinality sketch", "use kmv_distinct()"),
+        KV.kmv_merge,
+        fold=lambda st, h, p: np.unique(
+            h if st is None else np.concatenate([st, np.unique(h)[: p["k"]]])
+        )[: p["k"]],
+        serialize=lambda st, p: KV.kmv_serialize(p["k"], st),
+        describe=lambda b: (len(KV.kmv_deserialize(b)[1]), None, None),
+    ),
+    "hll": _Format(
+        HL.HLL_MAGIC, "hyperloglog",
+        _not_membership("HyperLogLog is a cardinality sketch", "use hll_distinct()"),
+        HL.hll_merge,
+        fold=_fold_with(lambda h, p: HL.hll_registers(h, p["p"]), np.maximum),
+        serialize=lambda st, p: HL.hll_serialize(p["p"], st),
+        describe=_describe_hll,
+    ),
+    "mg": _Format(
+        MG.MG_MAGIC, "misra_gries",
+        _not_membership("Misra-Gries is a frequency sketch", "use mg_estimate()"),
+        MG.mg_merge,
+        fold=_mg_fold,
+        serialize=lambda st, p: MG.mg_serialize(p["k"], *st),
+        describe=lambda b: (len(MG.mg_deserialize(b)[1]), None, None),
+    ),
+    "xor8": _peeled(X._MAGIC, "xor", X.xor_probe, X.xor_build, 8),
+    "xor16": _peeled(X._MAGIC, "xor", X.xor_probe, X.xor_build, 16),
+    "fuse8": _peeled(FU._MAGIC, "binary_fuse", FU.fuse_probe, FU.fuse_build, 8),
+    "fuse16": _peeled(FU._MAGIC, "binary_fuse", FU.fuse_probe, FU.fuse_build, 16),
+    "ribbon8": _peeled(RB.RIBBON_MAGIC, "ribbon", RB.ribbon_probe, RB.ribbon_build, 8),
+    "ribbon16": _peeled(RB.RIBBON_MAGIC, "ribbon", RB.ribbon_probe, RB.ribbon_build, 16),
+    # formats no build_filter kind emits
+    "sharded": _Format(_SHARD_MAGIC, "sharded", _shard_probe),
+    "bks": _Format(
+        BKS.BKS_MAGIC, "bottomk_sample",
+        _not_membership("a bottom-k sample is a row sample", "use bks_quantile()"),
+        describe=lambda b: (len(BKS.bks_deserialize(b)[2]), None, None),
+    ),
+}
+_BY_MAGIC = {f.magic: f for f in _FORMATS.values() if f.magic}
+MERGEABLE = {k for k, f in _FORMATS.items() if f.fold}
+PEELED = {k for k, f in _FORMATS.items() if f.build}
+
+
+def _format_of(blob: bytes) -> _Format:
+    """The format of a blob, sniffed from its header."""
+    return _BY_MAGIC.get(bytes(blob[:4]), _FORMATS["duckdb_bloom"])
+
+
+def _probe_blob(blob: bytes, hashes: np.ndarray) -> np.ndarray:
+    return _format_of(blob).probe(blob, hashes)
 
 
 def _merge_blobs(kind: str, blobs: list) -> bytes:
-    if kind == "quotient":
-        return Q.qf_merge(blobs)
-    if kind == "duckdb_bloom":
-        return B.duckdb_bloom_merge(blobs)
-    if kind == "bloom":
-        return B.bloom_merge(blobs)
-    if kind == "cms":
-        return CM.cms_merge(blobs)
-    if kind == "kmv":
-        return KV.kmv_merge(blobs)
-    if kind == "hll":
-        return HL.hll_merge(blobs)
-    if kind == "mg":
-        return MG.mg_merge(blobs)
-    if kind == "cuckoo":
-        return CKF.ck_merge(blobs)
-    raise ValueError(f"filter kind {kind!r} is not mergeable")
+    f = _FORMATS.get(kind)
+    if f is None or f.merge is None:
+        raise ValueError(f"filter kind {kind!r} is not mergeable")
+    return f.merge(blobs)
+
+
+# -------------------------------------------------------------- build ---
 
 
 def _duckdb_bloom_cols(h: Column, num_sectors: int) -> tuple[Column, Column]:
@@ -206,6 +399,103 @@ def _probe_duckdb_bloom(
     )
 
 
+def _batch_groups(pdf: pd.DataFrame, group_cols: list) -> Iterator[tuple]:
+    """``(group key tuple, u64 hashes)`` per group of one batch: factorize
+    the key columns, then mask per group. A NULL key is a group of its own."""
+    hs = _to_u64(pdf["__h"])
+    codes = np.zeros(len(pdf), dtype=np.int64)
+    keys = [()] if len(pdf) else []
+    for c in group_cols:
+        col_codes, uniq = pd.factorize(pdf[c])
+        uniq = list(uniq)
+        if (col_codes < 0).any():
+            col_codes = np.where(col_codes < 0, len(uniq), col_codes)
+            uniq.append(None)
+        if len(keys) == 1:
+            codes, keys = col_codes, [keys[0] + (u,) for u in uniq]
+        else:
+            n = len(uniq)
+            codes, pairs = pd.factorize(codes * n + col_codes)
+            keys = [keys[v // n] + (uniq[v % n],) for v in pairs.tolist()]
+    for code, key in enumerate(keys):
+        yield key, hs[codes == code]
+
+
+def _fold_build(
+    proj: DataFrame, group_cols: list, specs: list, filter_col: str
+) -> DataFrame:
+    """The partial fold behind every Python-side build except the peeled
+    ``build_filter``: ``group_cols + (filter_type, filter, __shard)``, one
+    row per (group, spec name, shard).
+
+    One ``mapInPandas`` pass folds each batch of each partition into a
+    running state per (group, mergeable spec) and emits one partial blob
+    each; a peeled spec instead carries the partition's distinct hashes
+    of the group, split by hash-prefix shard when its params hold
+    ``num_shards``, and raw hashes are kept only when some spec is
+    peeled. One finish task per (group, name, shard) merges the partials
+    or bulk-builds the peeled filter; ``__shard`` is -1 when unsharded."""
+    by_name = {name: (_FORMATS[kind], p) for name, kind, p in specs}
+    folds = {n: fp for n, fp in by_name.items() if fp[0].fold}
+    peeled = [n for n in by_name if n not in folds]
+    shards = {n: int(by_name[n][1].get("num_shards") or 0) for n in peeled}
+    schema = StructType(
+        [proj.schema[c] for c in group_cols] + [
+            StructField("filter_type", StringType()),
+            StructField(filter_col, BinaryType()),
+            StructField("__shard", IntegerType()),
+        ]
+    )
+
+    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        state: dict = {}
+        raw: dict = {}
+        for pdf in batches:
+            for gkey, hs in _batch_groups(pdf, group_cols):
+                for name, (f, p) in folds.items():
+                    state[gkey, name] = f.fold(state.get((gkey, name)), hs, p)
+                if peeled:
+                    raw.setdefault(gkey, []).append(hs)
+        rows = [
+            (*gkey, name, folds[name][0].serialize(st, folds[name][1]), -1)
+            for (gkey, name), st in state.items()
+        ]
+        for gkey, parts in raw.items():
+            hs = np.unique(np.concatenate(parts))
+            for name in peeled:
+                sh = _shard_of(hs, shards[name]) if shards[name] else None
+                for s in [-1] if sh is None else np.unique(sh):
+                    sub = hs if sh is None else hs[sh == s]
+                    rows.append((*gkey, name, sub.astype("<u8").tobytes(), int(s)))
+        if rows:
+            yield pd.DataFrame(rows, columns=schema.names)
+
+    def finish(pdf: pd.DataFrame) -> pd.DataFrame:
+        f, p = by_name[pdf["filter_type"].iloc[0]]
+        payloads = [bytes(b) for b in pdf[filter_col]]
+        if f.fold:
+            blob = f.merge(payloads)
+        else:
+            hs = np.unique(np.concatenate([np.frombuffer(b, dtype="<u8") for b in payloads]))
+            blob = f.build(hs, p)
+        out = pdf.iloc[[0]].copy()
+        out[filter_col] = [blob]
+        return out
+
+    return proj.mapInPandas(partials, schema=schema).groupBy(
+        *group_cols, "filter_type", "__shard"
+    ).applyInPandas(finish, schema=schema)
+
+
+def _project_hashes(df: DataFrame, group_cols: list, hash_col: str) -> DataFrame:
+    # NULL hashes are skipped, like DuckDB aggregates skip NULL inputs; this
+    # also guarantees the pandas batches keep int64 dtype (a null would
+    # force float64 and round 64-bit hash values)
+    return df.select(*group_cols, F.col(hash_col).cast("long").alias("__h")).where(
+        F.col("__h").isNotNull()
+    )
+
+
 def build_filter(
     df: DataFrame,
     group_cols: list,
@@ -241,6 +531,8 @@ def build_filter(
     Probing routes each hash to its shard's sub-filter (same prefix
     function), so membership semantics are identical.
     """
+    if kind not in MERGEABLE | PEELED:
+        raise ValueError(f"unknown filter kind {kind!r}")
     if kind == "duckdb_bloom" and (num_sectors <= 0 or num_sectors & (num_sectors - 1)):
         raise ValueError("num_sectors must be a power of 2")
     params = {
@@ -252,148 +544,59 @@ def build_filter(
     if dummy:
         df = df.withColumn("__g", F.lit(0))
         group_cols = ["__g"]
-    # NULL hashes are skipped, like DuckDB aggregates skip NULL inputs; this
-    # also guarantees the pandas batches keep int64 dtype (a null would
-    # force float64 and round 64-bit hash values)
-    proj = df.select(*group_cols, F.col(hash_col).cast("long").alias("__h")).where(
-        F.col("__h").isNotNull()
-    )
+    proj = _project_hashes(df, group_cols, hash_col)
     gfields = [proj.schema[c] for c in group_cols]
     out_schema = StructType(gfields + [StructField(filter_col, BinaryType())])
 
     if kind == "duckdb_bloom":
         out = _build_duckdb_bloom(proj, group_cols, num_sectors, out_schema)
     elif kind in MERGEABLE:
-        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            acc: dict = {}
-            gvals: dict = {}
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                codes, uniq = pd.factorize(
-                    pd.Series(zip(*[pdf[c] for c in group_cols])) if len(group_cols) > 1 else pdf[group_cols[0]]
-                )
-                hs = _to_u64(pdf["__h"])
-                for code in range(len(uniq)):
-                    m = codes == code
-                    key = uniq[code]
-                    kk = tuple(key) if isinstance(key, tuple) else (key,)
-                    gvals[kk] = kk
-                    if kind == "quotient":
-                        part = np.unique(Q.qf_fingerprints(hs[m], q, r))
-                        prev = acc.get(kk)
-                        acc[kk] = part if prev is None else np.union1d(prev, part)
-                    elif kind == "cuckoo":
-                        part = CKF.ck_entries(hs[m], nbuckets, fp_bits)
-                        prev = acc.get(kk)
-                        acc[kk] = part if prev is None else np.union1d(prev, part)
-                    elif kind == "cms":
-                        mat = CM.cms_counts(hs[m], d, w)
-                        acc[kk] = mat if kk not in acc else (acc[kk] + mat)
-                    elif kind == "kmv":
-                        vals = np.unique(hs[m])[:k]
-                        prev = acc.get(kk)
-                        acc[kk] = (
-                            vals if prev is None
-                            else np.unique(np.concatenate([prev, vals]))[:k]
-                        )
-                    elif kind == "hll":
-                        regs = HL.hll_registers(hs[m], p)
-                        acc[kk] = regs if kk not in acc else np.maximum(acc[kk], regs)
-                    elif kind == "mg":
-                        bk, bc = np.unique(hs[m], return_counts=True)
-                        prev = acc.get(kk)
-                        if prev is not None:
-                            allk = np.concatenate([prev[0], bk])
-                            allc = np.concatenate(
-                                [prev[1], bc.astype(np.uint64)]
-                            )
-                            uk, inv = np.unique(allk, return_inverse=True)
-                            uc = np.zeros(len(uk), dtype=np.uint64)
-                            np.add.at(uc, inv, allc)
-                            bk, bc = uk, uc
-                        # compress after each batch: per-group state stays
-                        # <= k counters regardless of partition size (the
-                        # PODS'12 merge keeps the n/(k+1) bound)
-                        acc[kk] = MG.mg_summarize(bk, bc.astype(np.uint64), k)
-                    else:  # bloom
-                        bits = B.bloom_build(hs[m], n, fpp)
-                        acc[kk] = bits if kk not in acc else (acc[kk] | bits)
-            rows = []
-            for kk, st in acc.items():
-                if kind == "quotient":
-                    blob = (
-                        Q._MAGIC
-                        + bytes([q, r])
-                        + np.uint64(len(st)).tobytes()
-                        + st.astype("<u8").tobytes()
-                    )
-                elif kind == "cuckoo":
-                    blob = CKF.ck_partial_serialize(st, nbuckets, fp_bits, bucket_size)
-                elif kind == "cms":
-                    blob = CM.cms_serialize(st)
-                elif kind == "kmv":
-                    blob = KV.kmv_serialize(k, st)
-                elif kind == "hll":
-                    blob = HL.hll_serialize(p, st)
-                elif kind == "mg":
-                    blob = MG.mg_serialize(k, st[0], st[1])
-                else:
-                    blob = B.bloom_serialize(st, B.bloom_params(n, fpp)[1])
-                rows.append((*kk, blob))
-            yield pd.DataFrame(rows, columns=group_cols + [filter_col])
+        out = _fold_build(proj, group_cols, [(kind, kind, params)], filter_col).drop(
+            "filter_type", "__shard"
+        )
+    elif num_shards and num_shards > 1:
+        build = _FORMATS[kind].build
+        ns = int(num_shards)
+        sharded = proj.withColumn(
+            "__shard",
+            (F.shiftrightunsigned(F.col("__h"), 48) % ns).cast("int"),
+        )
+        sub_schema = StructType(
+            gfields
+            + [StructField("__shard", IntegerType()), StructField(filter_col, BinaryType())]
+        )
 
-        partial_df = proj.mapInPandas(partials, schema=out_schema)
+        def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+            blob = build(_to_u64(pdf["__h"]), params)
+            return pd.DataFrame(
+                [(*[pdf[c].iloc[0] for c in group_cols], int(pdf["__shard"].iloc[0]), blob)],
+                columns=group_cols + ["__shard", filter_col],
+            )
 
-        def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-            blob = _merge_blobs(kind, [bytes(b) for b in pdf[filter_col]])
+        subs = sharded.groupBy(*group_cols, "__shard").applyInPandas(
+            build_shard, schema=sub_schema
+        )
+
+        def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
+            by_shard = {
+                int(s): bytes(b) for s, b in zip(pdf["__shard"], pdf[filter_col])
+            }
+            blob = shard_pack(ns, by_shard)
+            return pd.DataFrame(
+                [(*[pdf[c].iloc[0] for c in group_cols], blob)],
+                columns=group_cols + [filter_col],
+            )
+
+        out = subs.groupBy(*group_cols).applyInPandas(assemble, schema=out_schema)
+    else:
+        build = _FORMATS[kind].build
+
+        def build_group(pdf: pd.DataFrame) -> pd.DataFrame:
+            blob = build(_to_u64(pdf["__h"]), params)
             return pd.DataFrame([(*[pdf[c].iloc[0] for c in group_cols], blob)],
                                 columns=group_cols + [filter_col])
 
-        out = partial_df.groupBy(*group_cols).applyInPandas(merge, schema=out_schema)
-    elif kind in PEELED:
-        if num_shards and num_shards > 1:
-            ns = int(num_shards)
-            sharded = proj.withColumn(
-                "__shard",
-                (F.shiftrightunsigned(F.col("__h"), 48) % ns).cast("int"),
-            )
-            sub_schema = StructType(
-                gfields
-                + [StructField("__shard", IntegerType()), StructField(filter_col, BinaryType())]
-            )
-
-            def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-                blob = _bulk_build(kind, _to_u64(pdf["__h"]), params)
-                return pd.DataFrame(
-                    [(*[pdf[c].iloc[0] for c in group_cols], int(pdf["__shard"].iloc[0]), blob)],
-                    columns=group_cols + ["__shard", filter_col],
-                )
-
-            subs = sharded.groupBy(*group_cols, "__shard").applyInPandas(
-                build_shard, schema=sub_schema
-            )
-
-            def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-                by_shard = {
-                    int(s): bytes(b) for s, b in zip(pdf["__shard"], pdf[filter_col])
-                }
-                blob = shard_pack(ns, by_shard)
-                return pd.DataFrame(
-                    [(*[pdf[c].iloc[0] for c in group_cols], blob)],
-                    columns=group_cols + [filter_col],
-                )
-
-            out = subs.groupBy(*group_cols).applyInPandas(assemble, schema=out_schema)
-        else:
-            def build(pdf: pd.DataFrame) -> pd.DataFrame:
-                blob = _bulk_build(kind, _to_u64(pdf["__h"]), params)
-                return pd.DataFrame([(*[pdf[c].iloc[0] for c in group_cols], blob)],
-                                    columns=group_cols + [filter_col])
-
-            out = proj.groupBy(*group_cols).applyInPandas(build, schema=out_schema)
-    else:
-        raise ValueError(f"unknown filter kind {kind!r}")
+        out = proj.groupBy(*group_cols).applyInPandas(build_group, schema=out_schema)
 
     return out.drop("__g") if dummy else out
 
@@ -407,156 +610,39 @@ def build_filters_multi(
 ) -> DataFrame:
     """Build MANY filters over the same key set in ONE scan.
 
-    ``specs`` is ``[(name, kind, params_dict), ...]``. A single
-    ``mapInPandas`` pass folds each partition into one payload per
+    ``specs`` is ``[(name, kind, params_dict), ...]``; a params dict holds
+    the ``build_filter`` keyword arguments its kind reads. The partial
+    fold ``build_filter`` uses for mergeable kinds runs every spec in a
+    single ``mapInPandas`` pass: each partition yields one payload per
     (group, spec) — a partial blob for mergeable kinds, the partition's
     distinct raw hashes for peeled kinds (which need the full key set
-    anyway) — and a per-(group, name) merge task finishes each filter.
+    anyway) — and a per-(group, name) task finishes each filter.
     The input is scanned exactly once regardless of how many filters are
     requested (vs. one scan per filter). Returns
     ``group_cols + (filter_type, filter)``.
 
     A peeled spec may carry ``"num_shards": NS`` in its params: the
     group's key set then splits by hash prefix into NS independently
-    built sub-filters assembled into one SHRD container (r10 — the same
-    container `build_filter(num_shards=...)` emits, now available in the
-    one-scan multi-build). This removes the single-task bottleneck of a
-    huge group's sequential peeled construction: the finish stage runs
-    one task per (group, kind, shard) instead of per (group, kind), so
-    a billion-key group builds in parallel across the cluster. Probe
-    dispatch is unchanged (magic-sniffed); the container size stays
-    SQL-replayable because the shard split is a pure function of the
-    hash prefix.
+    built sub-filters assembled into one SHRD container (the same
+    container ``build_filter(num_shards=...)`` emits). This removes the
+    single-task bottleneck of a huge group's sequential peeled
+    construction: the finish stage runs one task per (group, kind,
+    shard) instead of per (group, kind), so a billion-key group builds in
+    parallel across the cluster. Probe dispatch is unchanged
+    (magic-sniffed); the container size stays SQL-replayable because the
+    shard split is a pure function of the hash prefix.
     """
-    _RAW = b"HSHS"  # payload prefix: partition's raw distinct hashes
     group_cols = list(group_cols or [])
-    by_name = {name: (kind, p) for name, kind, p in specs}
+    for _, kind, _ in specs:
+        if kind not in MERGEABLE | PEELED:
+            raise ValueError(f"unknown filter kind {kind!r}")
     sharded = {
         name: int(p["num_shards"])
-        for name, (kind, p) in by_name.items()
+        for name, kind, p in specs
         if kind in PEELED and p.get("num_shards")
     }
-    proj = df.select(
-        *group_cols, F.col(hash_col).cast("long").alias("__h")
-    ).where(F.col("__h").isNotNull())
-    gfields = [proj.schema[c] for c in group_cols]
-    out_schema = StructType(
-        gfields
-        + [StructField("filter_type", StringType()), StructField(filter_col, BinaryType())]
-    )
-    mid_schema = StructType(
-        list(out_schema.fields) + [StructField("__shard", IntegerType())]
-    )
-
-    def _fold(state: dict, gkey, hs: np.ndarray) -> None:
-        for name, (kind, p) in by_name.items():
-            if kind not in MERGEABLE:
-                continue
-            skey = (gkey, name)
-            prev = state.get(skey)
-            if kind == "quotient":
-                part = np.unique(Q.qf_fingerprints(hs, p["q"], p["r"]))
-                state[skey] = part if prev is None else np.union1d(prev, part)
-            elif kind == "cuckoo":
-                part = CKF.ck_entries(hs, p["nbuckets"], p["fp_bits"])
-                state[skey] = part if prev is None else np.union1d(prev, part)
-            elif kind == "duckdb_bloom":
-                sect = B.duckdb_bloom_build(hs, p["num_sectors"])
-                state[skey] = sect if prev is None else prev | sect
-            elif kind == "cms":
-                mat = CM.cms_counts(hs, p["d"], p["w"])
-                state[skey] = mat if prev is None else prev + mat
-            elif kind == "kmv":
-                vals = np.unique(hs)[: p["k"]]
-                state[skey] = (
-                    vals if prev is None
-                    else np.unique(np.concatenate([prev, vals]))[: p["k"]]
-                )
-            elif kind == "hll":
-                regs = HL.hll_registers(hs, p["p"])
-                state[skey] = regs if prev is None else np.maximum(prev, regs)
-            else:  # bloom
-                w = B.bloom_build(hs, p["n"], p["fpp"])
-                state[skey] = w if prev is None else prev | w
-
-    def _partial_blob(kind: str, p: dict, st) -> bytes:
-        if kind == "quotient":
-            return (
-                Q._MAGIC + bytes([p["q"], p["r"]])
-                + np.uint64(len(st)).tobytes() + st.astype("<u8").tobytes()
-            )
-        if kind == "cuckoo":
-            return CKF.ck_partial_serialize(
-                st, p["nbuckets"], p["fp_bits"], p.get("bucket_size", 4)
-            )
-        if kind == "duckdb_bloom":
-            return B.duckdb_bloom_serialize(st)
-        if kind == "cms":
-            return CM.cms_serialize(st)
-        if kind == "kmv":
-            return KV.kmv_serialize(p["k"], st)
-        if kind == "hll":
-            return HL.hll_serialize(p["p"], st)
-        return B.bloom_serialize(st, B.bloom_params(p["n"], p["fpp"])[1])
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        merge_state: dict = {}
-        raw: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if group_cols:
-                for gkey, sub in pdf.groupby(group_cols, dropna=False, sort=False):
-                    gkey = gkey if isinstance(gkey, tuple) else (gkey,)
-                    hs = _to_u64(sub["__h"])
-                    raw.setdefault(gkey, []).append(hs)
-                    _fold(merge_state, gkey, hs)
-            else:
-                hs = _to_u64(pdf["__h"])
-                raw.setdefault((), []).append(hs)
-                _fold(merge_state, (), hs)
-        if not raw:
-            return
-        rows = []
-        for gkey, parts in raw.items():
-            all_h = np.unique(np.concatenate(parts))
-            for name, (kind, p) in by_name.items():
-                if kind in MERGEABLE:
-                    rows.append(
-                        (*gkey, name, _partial_blob(kind, p, merge_state[(gkey, name)]), -1)
-                    )
-                elif name in sharded:
-                    sh = _shard_of(all_h, sharded[name])
-                    for s in np.unique(sh):
-                        payload = _RAW + all_h[sh == s].astype("<u8").tobytes()
-                        rows.append((*gkey, name, payload, int(s)))
-                else:
-                    rows.append((*gkey, name, _RAW + all_h.astype("<u8").tobytes(), -1))
-        yield pd.DataFrame(
-            rows, columns=group_cols + ["filter_type", filter_col, "__shard"]
-        )
-
-    partial_df = proj.mapInPandas(partials, schema=mid_schema)
-
-    def finish(pdf: pd.DataFrame) -> pd.DataFrame:
-        name = pdf["filter_type"].iloc[0]
-        kind, p = by_name[name]
-        payloads = [bytes(b) for b in pdf[filter_col]]
-        if kind in MERGEABLE:
-            blob = _merge_blobs(kind, payloads)
-        else:
-            hs = np.unique(np.concatenate(
-                [np.frombuffer(b[len(_RAW):], dtype="<u8") for b in payloads]
-            ))
-            blob = _bulk_build(kind, hs, p)
-        out = pdf.iloc[[0]].copy()
-        out[filter_col] = [blob]
-        return out
-
-    # one finish task per (group, kind, shard): sharded peeled kinds
-    # parallelize their sub-builds; everything else is shard -1
-    finished = partial_df.groupBy(*group_cols, "filter_type", "__shard").applyInPandas(
-        finish, schema=mid_schema
+    finished = _fold_build(
+        _project_hashes(df, group_cols, hash_col), group_cols, specs, filter_col
     )
     if not sharded:
         return finished.drop("__shard")
@@ -571,77 +657,13 @@ def build_filters_multi(
             out[filter_col] = [shard_pack(sharded[name], by_shard)]
         return out
 
+    out_schema = StructType([f for f in finished.schema.fields if f.name != "__shard"])
     return finished.groupBy(*group_cols, "filter_type").applyInPandas(
         assemble, schema=out_schema
     )
 
 
-_SHARD_MAGIC = b"SHRD"
-
-
-def shard_pack(num_shards: int, blobs_by_shard: dict) -> bytes:
-    """Container for hash-prefix-sharded sub-filters:
-    ``SHRD | u32 num_shards | u64 lengths[num_shards] | blobs...``.
-    Shards with no keys are stored zero-length (probe → False)."""
-    lens = [len(blobs_by_shard.get(i, b"")) for i in range(num_shards)]
-    head = (
-        _SHARD_MAGIC
-        + np.uint32(num_shards).tobytes()
-        + np.array(lens, dtype="<u8").tobytes()
-    )
-    return head + b"".join(blobs_by_shard.get(i, b"") for i in range(num_shards))
-
-
-def _shard_of(hashes: np.ndarray, num_shards: int) -> np.ndarray:
-    """Shard = top-16-hash-bits mod num_shards — matches the JVM-side
-    ``shiftrightunsigned(h, 48) % num_shards`` used at build time."""
-    return (
-        (hashes.astype(np.uint64, copy=False) >> np.uint64(48))
-        % np.uint64(num_shards)
-    ).astype(np.int64)
-
-
-def _shard_probe(blob: bytes, hashes: np.ndarray) -> np.ndarray:
-    num = int(np.frombuffer(blob[4:8], dtype="<u4")[0])
-    lens = np.frombuffer(blob[8 : 8 + 8 * num], dtype="<u8").astype(np.int64)
-    offs = np.concatenate([[0], np.cumsum(lens)]) + 8 + 8 * num
-    shard = _shard_of(hashes, num)
-    out = np.zeros(len(hashes), dtype=bool)
-    for s in np.unique(shard):
-        sub = blob[offs[s] : offs[s + 1]]
-        if len(sub):
-            m = shard == s
-            out[m] = _probe_blob(sub, hashes[m])
-    return out
-
-
-def _probe_blob(blob: bytes, hashes: np.ndarray) -> np.ndarray:
-    magic = blob[:4]
-    if magic == CM.CMS_MAGIC:
-        raise ValueError(
-            "count-min sketch is a frequency sketch, not a membership "
-            "filter; probe with cms_estimate()"
-        )
-    if magic == KV.KMV_MAGIC:
-        raise ValueError(
-            "KMV is a cardinality sketch, not a membership filter; "
-            "use kmv_distinct()"
-        )
-    if magic == _SHARD_MAGIC:
-        return _shard_probe(blob, hashes)
-    if magic == b"QF01":
-        return Q.qf_probe(blob, hashes)
-    if magic == CKF.CKF_MAGIC:
-        return CKF.ck_probe(blob, hashes)
-    if magic == b"XORF":
-        return X.xor_probe(blob, hashes)
-    if magic == RB.RIBBON_MAGIC:
-        return RB.ribbon_probe(blob, hashes)
-    if magic == b"BFUS":
-        return FU.fuse_probe(blob, hashes)
-    if magic == b"SBL1":
-        return B.bloom_probe(blob, hashes)
-    return B.duckdb_bloom_probe(blob, hashes)  # headerless duckdb format
+# -------------------------------------------------------------- probe ---
 
 
 def _arrow_hashes_u64(hashes: "pa.Array") -> tuple[np.ndarray, np.ndarray]:
@@ -654,6 +676,86 @@ def _arrow_hashes_u64(hashes: "pa.Array") -> tuple[np.ndarray, np.ndarray]:
     return h, mask
 
 
+def _per_blob(fn: Callable, out_type: pa.DataType, blobs, h: np.ndarray, hmask) -> pa.Array:
+    """``fn(blob, hashes)`` over an Arrow batch of (blob, u64 hash) rows:
+    each distinct blob is deserialized once and its rows go through ``fn``
+    in one vectorized call. NULL blob or hash → NULL."""
+    if isinstance(blobs, pa.ChunkedArray):
+        blobs = blobs.combine_chunks()
+    out = np.zeros(len(h), dtype=out_type.to_pandas_dtype())
+    if len(h):
+        codes, uniq = pd.factorize(blobs.to_pandas(), use_na_sentinel=True)
+        for code, blob in enumerate(uniq):
+            m = codes == code
+            out[m] = fn(bytes(blob), h[m])
+    return pa.array(out, type=out_type, mask=hmask | np.asarray(blobs.is_null()))
+
+
+def _per_row(fn: Callable, out_type: pa.DataType, blobs) -> pa.Array:
+    """``fn(blob)`` per row of a blob column; NULL → NULL."""
+    return pa.array(
+        [None if b is None else fn(bytes(b)) for b in blobs.to_pylist()], type=out_type
+    )
+
+
+def _col(c) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
+# The scalar UDFs over blob columns; ``sql.register_sql_functions``
+# registers these same objects.
+@arrow_udf(BooleanType())
+def _contains_udf(blobs, hashes):
+    return _per_blob(_probe_blob, pa.bool_(), blobs, *_arrow_hashes_u64(hashes))
+
+
+@arrow_udf(LongType())
+def _cms_estimate_udf(blobs, hashes):
+    return _per_blob(
+        lambda b, h: CM.cms_estimate(b, h).astype(np.int64),
+        pa.int64(), blobs, *_arrow_hashes_u64(hashes),
+    )
+
+
+@arrow_udf(LongType())
+def _mg_estimate_udf(blobs, hashes):
+    return _per_blob(
+        lambda b, h: MG.mg_estimate(b, h).astype(np.int64),
+        pa.int64(), blobs, *_arrow_hashes_u64(hashes),
+    )
+
+
+@arrow_udf(LongType())
+def _kmv_distinct_udf(blobs):
+    return _per_row(KV.kmv_estimate, pa.int64(), blobs)
+
+
+@arrow_udf(LongType())
+def _hll_distinct_udf(blobs):
+    return _per_row(HL.hll_estimate, pa.int64(), blobs)
+
+
+@arrow_udf(StringType())
+def _kind_udf(blobs):
+    return _per_row(lambda b: _format_of(b).label, pa.string(), blobs)
+
+
+_DESCRIBE = StructType([
+    StructField("n_entries", LongType()),
+    StructField("fill_ratio", DoubleType()),
+    StructField("est_fpp", DoubleType()),
+])
+
+
+@arrow_udf(_DESCRIBE)
+def _describe_udf(blobs):
+    return _per_row(
+        lambda b: dict(zip(_DESCRIBE.names, _format_of(b).describe(b))),
+        to_arrow_type(_DESCRIBE),
+        blobs,
+    )
+
+
 def filter_contains(filter_col, hash_col) -> Column:
     """True if the filter may contain the hash (no false negatives).
 
@@ -662,24 +764,7 @@ def filter_contains(filter_col, hash_col) -> Column:
     once; probes are whole-batch vectorized. NULL hash or NULL filter →
     NULL (reference scalar-function semantics).
     """
-
-    @arrow_udf(BooleanType())
-    def _probe(blobs: pa.Array, hashes: pa.Array) -> pa.Array:
-        if isinstance(blobs, pa.ChunkedArray):
-            blobs = blobs.combine_chunks()
-        h, hmask = _arrow_hashes_u64(hashes)
-        out = np.zeros(len(h), dtype=bool)
-        if len(h):
-            codes, uniq = pd.factorize(blobs.to_pandas(), use_na_sentinel=True)
-            for code, blob in enumerate(uniq):
-                m = codes == code
-                out[m] = _probe_blob(bytes(blob), h[m])
-        mask = hmask | np.asarray(blobs.is_null())
-        return pa.array(out, type=pa.bool_(), mask=mask)
-
-    f = F.col(filter_col) if isinstance(filter_col, str) else filter_col
-    h = F.col(hash_col) if isinstance(hash_col, str) else hash_col
-    return _probe(f, h)
+    return _contains_udf(_col(filter_col), _col(hash_col))
 
 
 def cms_estimate(filter_col, hash_col) -> Column:
@@ -690,43 +775,14 @@ def cms_estimate(filter_col, hash_col) -> Column:
     ``filter_contains``: each distinct blob deserialized once per batch.
     NULL hash or NULL blob -> NULL.
     """
-
-    @arrow_udf(LongType())
-    def _est(blobs: pa.Array, hashes: pa.Array) -> pa.Array:
-        if isinstance(blobs, pa.ChunkedArray):
-            blobs = blobs.combine_chunks()
-        h, hmask = _arrow_hashes_u64(hashes)
-        out = np.zeros(len(h), dtype=np.int64)
-        if len(h):
-            codes, uniq = pd.factorize(blobs.to_pandas(), use_na_sentinel=True)
-            for code, blob in enumerate(uniq):
-                m = codes == code
-                out[m] = CM.cms_estimate(bytes(blob), h[m]).astype(np.int64)
-        mask = hmask | np.asarray(blobs.is_null())
-        return pa.array(out, type=pa.int64(), mask=mask)
-
-    f = F.col(filter_col) if isinstance(filter_col, str) else filter_col
-    h = F.col(hash_col) if isinstance(hash_col, str) else hash_col
-    return _est(f, h)
+    return _cms_estimate_udf(_col(filter_col), _col(hash_col))
 
 
 def kmv_distinct(filter_col) -> Column:
     """Deterministic distinct-count estimate from a KMV1 blob (exact while
     the sketch is under-full; integer arithmetic at capacity, so an
     external engine reproduces the value exactly)."""
-
-    @arrow_udf(LongType())
-    def _est(blobs: pa.Array) -> pa.Array:
-        if isinstance(blobs, pa.ChunkedArray):
-            blobs = blobs.combine_chunks()
-        out = [
-            None if b is None else KV.kmv_estimate(bytes(b))
-            for b in blobs.to_pylist()
-        ]
-        return pa.array(out, type=pa.int64())
-
-    f = F.col(filter_col) if isinstance(filter_col, str) else filter_col
-    return _est(f)
+    return _kmv_distinct_udf(_col(filter_col))
 
 
 def hll_distinct(filter_col) -> Column:
@@ -734,19 +790,7 @@ def hll_distinct(filter_col) -> Column:
     the small range while every key owns its own register via the linear
     counting correction). The fixed-2^p-byte sibling of
     :func:`kmv_distinct` for billion-group rollups."""
-
-    @arrow_udf(LongType())
-    def _est(blobs: pa.Array) -> pa.Array:
-        if isinstance(blobs, pa.ChunkedArray):
-            blobs = blobs.combine_chunks()
-        out = [
-            None if b is None else HL.hll_estimate(bytes(b))
-            for b in blobs.to_pylist()
-        ]
-        return pa.array(out, type=pa.int64())
-
-    f = F.col(filter_col) if isinstance(filter_col, str) else filter_col
-    return _est(f)
+    return _hll_distinct_udf(_col(filter_col))
 
 
 def mg_estimate(filter_col, hash_col) -> Column:
@@ -754,24 +798,7 @@ def mg_estimate(filter_col, hash_col) -> Column:
     the CMS complement: CMS only overcounts, MG only undercounts, and
     their interval brackets the true count). Vectorized like
     ``filter_contains``: each distinct blob deserialized once per batch."""
-
-    @arrow_udf(LongType())
-    def _est(blobs: pa.Array, hashes: pa.Array) -> pa.Array:
-        if isinstance(blobs, pa.ChunkedArray):
-            blobs = blobs.combine_chunks()
-        h, hmask = _arrow_hashes_u64(hashes)
-        out = np.zeros(len(h), dtype=np.int64)
-        if len(h):
-            codes, uniq = pd.factorize(blobs.to_pandas(), use_na_sentinel=True)
-            for code, blob in enumerate(uniq):
-                m = codes == code
-                out[m] = MG.mg_estimate(bytes(blob), h[m]).astype(np.int64)
-        mask = hmask | np.asarray(blobs.is_null())
-        return pa.array(out, type=pa.int64(), mask=mask)
-
-    f = F.col(filter_col) if isinstance(filter_col, str) else filter_col
-    h = F.col(hash_col) if isinstance(hash_col, str) else hash_col
-    return _est(f, h)
+    return _mg_estimate_udf(_col(filter_col), _col(hash_col))
 
 
 def heavy_hitters(
@@ -868,7 +895,7 @@ def probe_filter(
         )
     if not on:
         blob = next(iter(fmap.values()), None)
-        if blob is None or blob[:4] not in _KIND_BY_MAGIC:  # duckdb_bloom: no magic
+        if blob is None or _format_of(blob) is _FORMATS["duckdb_bloom"]:
             return _probe_duckdb_bloom(df, blob, hash_col, result_col)
     sc = df.sparkSession.sparkContext
     bc = sc.broadcast(fmap)
@@ -928,43 +955,16 @@ def merge_filters(
             if not blobs:
                 out.append(None)
                 continue
-            magic = blobs[0][:4]
-            kind = {
-                b"QF01": "quotient",
-                b"CKF1": "cuckoo",
-                b"SBL1": "bloom",
-                b"CMS1": "cms",
-                b"KMV1": "kmv",
-                b"HLL1": "hll",
-                b"MGS1": "mg",
-            }.get(magic, "duckdb_bloom")
-            if magic in (b"XORF", b"BFUS", _SHARD_MAGIC):
-                raise ValueError(
-                    "peeled filters (xor/fuse) are not mergeable; rebuild instead"
-                )
-            out.append(_merge_blobs(kind, blobs))
+            f = _format_of(blobs[0])
+            if f.merge is None:
+                raise ValueError(f"{f.label} filters are not mergeable; rebuild instead")
+            out.append(f.merge(blobs))
         return pa.array(out, type=pa.binary())
 
     agged = filters.groupBy(*group_cols).agg(
         F.collect_list(filter_col).alias("__blobs")
     )
     return agged.withColumn(filter_col, _merge(F.col("__blobs"))).drop("__blobs")
-
-
-_KIND_BY_MAGIC = {
-    b"QF01": "quotient",
-    b"CKF1": "cuckoo",
-    b"XORF": "xor",
-    b"RIBN": "ribbon",
-    b"BFUS": "binary_fuse",
-    b"SBL1": "bloom",
-    b"SHRD": "sharded",
-    b"CMS1": "count_min",
-    b"KMV1": "kmv",
-    b"BKS1": "bottomk_sample",
-    b"HLL1": "hyperloglog",
-    b"MGS1": "misra_gries",
-}
 
 
 def filter_describe(filters: DataFrame, filter_col: str = "filter") -> DataFrame:
@@ -976,90 +976,13 @@ def filter_describe(filters: DataFrame, filter_col: str = "filter") -> DataFrame
     (`fill^k` for the generic bloom; per-sector mask expectation is not
     derivable for the duckdb format, so it reports bit fill only)."""
 
-    @arrow_udf(StringType())
-    def _kind(blobs: pa.Array) -> pa.Array:
-        out = []
-        for b in blobs.to_pylist():
-            if b is None:
-                out.append(None)
-            else:
-                out.append(_KIND_BY_MAGIC.get(bytes(b[:4]), "duckdb_bloom"))
-        return pa.array(out, type=pa.string())
-
-    @arrow_udf(LongType())
-    def _entries(blobs: pa.Array) -> pa.Array:
-        out = []
-        for b in blobs.to_pylist():
-            if b is None:
-                out.append(None)
-                continue
-            b = bytes(b)
-            magic = b[:4]
-            if magic == Q._MAGIC:
-                out.append(int(np.frombuffer(b[6:14], dtype="<u8")[0]))
-            elif magic == CKF.CKF_MAGIC:
-                out.append(int(np.count_nonzero(CKF.ck_deserialize(b)[3])))
-            elif magic == KV.KMV_MAGIC:
-                k, vals = KV.kmv_deserialize(b)
-                out.append(int(len(vals)))
-            elif magic == b"BKS1":
-                from ..core import bksample as BKS
-
-                out.append(int(len(BKS.bks_deserialize(b)[2])))
-            elif magic == MG.MG_MAGIC:
-                out.append(int(len(MG.mg_deserialize(b)[1])))
-            else:
-                out.append(None)
-        return pa.array(out, type=pa.int64())
-
-    @arrow_udf(DoubleType())
-    def _fill(blobs: pa.Array) -> pa.Array:
-        out = []
-        for b in blobs.to_pylist():
-            if b is None:
-                out.append(None)
-                continue
-            b = bytes(b)
-            magic = b[:4]
-            if magic == B._MAGIC:
-                words, m_bits, k = B.bloom_deserialize(b)
-                out.append(float(np.unpackbits(words.view(np.uint8)).sum()) / m_bits)
-            elif magic == HL.HLL_MAGIC:
-                p_, regs = HL.hll_deserialize(b)
-                out.append(float(np.count_nonzero(regs)) / len(regs))
-            elif magic == CKF.CKF_MAGIC:
-                tab = CKF.ck_deserialize(b)[3]
-                out.append(float(np.count_nonzero(tab)) / tab.size)
-            elif magic not in _KIND_BY_MAGIC:  # duckdb_bloom (no magic)
-                sect = B.duckdb_bloom_deserialize(b)
-                bits = np.unpackbits(sect.view(np.uint8)).sum()
-                out.append(float(bits) / (len(sect) * 64))
-            else:
-                out.append(None)
-        return pa.array(out, type=pa.float64())
-
-    @arrow_udf(DoubleType())
-    def _est_fpp(blobs: pa.Array) -> pa.Array:
-        out = []
-        for b in blobs.to_pylist():
-            if b is None:
-                out.append(None)
-                continue
-            b = bytes(b)
-            if b[:4] == B._MAGIC:
-                words, m_bits, k = B.bloom_deserialize(b)
-                fill = float(np.unpackbits(words.view(np.uint8)).sum()) / m_bits
-                out.append(fill**k)
-            else:
-                out.append(None)
-        return pa.array(out, type=pa.float64())
-
+    col = F.col(filter_col)
     return (
-        filters.withColumn("filter_kind", _kind(F.col(filter_col)))
-        .withColumn("size_bytes", F.length(filter_col))
-        .withColumn("n_entries", _entries(F.col(filter_col)))
-        .withColumn("fill_ratio", _fill(F.col(filter_col)))
-        .withColumn("est_fpp", _est_fpp(F.col(filter_col)))
+        filters.withColumn("filter_kind", _kind_udf(col))
+        .withColumn("size_bytes", F.length(col))
+        .withColumn("__describe", _describe_udf(col))
+        .withColumns({c: F.col(f"__describe.{c}") for c in _DESCRIBE.names})
+        .drop("__describe")
     )
 
 
@@ -1100,16 +1023,14 @@ def filter_remove(
         if len(del_pdf):
             hs = _to_u64(del_pdf["__h"])
             blob = bytes(out[filter_col].iloc[0])
-            if blob[:4] == CKF.CKF_MAGIC:
-                out[filter_col] = [CKF.ck_remove(blob, hs)]
-            elif blob[:4] == Q._MAGIC:
-                out[filter_col] = [Q.qf_remove(blob, hs)]
-            else:
+            remove = _format_of(blob).remove
+            if remove is None:
                 raise ValueError(
                     "filter_remove supports deletable kinds only "
                     "(quotient QF01 / cuckoo CKF1); got "
                     + repr(blob[:4])
                 )
+            out[filter_col] = [remove(blob, hs)]
         return out
 
     res = filters.groupBy(*on).cogroup(dels.groupBy(*on)).applyInPandas(
@@ -1138,11 +1059,7 @@ def quotient_filter_resize(
 
     @arrow_udf(BinaryType())
     def _resize(blobs: pa.Array) -> pa.Array:
-        out = [
-            None if b is None else Q.qf_resize(bytes(b), new_q, new_r)
-            for b in blobs.to_pylist()
-        ]
-        return pa.array(out, type=pa.binary())
+        return _per_row(lambda b: Q.qf_resize(b, new_q, new_r), pa.binary(), blobs)
 
     return filters.withColumn(filter_col, _resize(F.col(filter_col)))
 
@@ -1165,21 +1082,11 @@ def duckdb_bloom_probe(version: str, filter_col, *value_cols) -> Column:
 
     @arrow_udf(BooleanType())
     def _probe(blobs: pa.Array, *arrays: pa.Array) -> pa.Array:
-        if isinstance(blobs, pa.ChunkedArray):
-            blobs = blobs.combine_chunks()
-        hs, hmask = _hash_arrays(arrays, version)
-        out = np.zeros(len(blobs), dtype=bool)
-        if len(blobs):
-            codes, uniq = pd.factorize(blobs.to_pandas(), use_na_sentinel=True)
-            for code, blob in enumerate(uniq):
-                m = codes == code
-                out[m] = B.duckdb_bloom_probe(bytes(blob), hs[m])
-        mask = hmask | np.asarray(blobs.is_null())
-        return pa.array(out, type=pa.bool_(), mask=mask)
+        return _per_blob(
+            B.duckdb_bloom_probe, pa.bool_(), blobs, *_hash_arrays(arrays, version)
+        )
 
-    f = F.col(filter_col) if isinstance(filter_col, str) else filter_col
-    vals = [F.col(c) if isinstance(c, str) else c for c in value_cols]
-    return _probe(f, *vals)
+    return _probe(_col(filter_col), *[_col(c) for c in value_cols])
 
 
 def probe_cms(

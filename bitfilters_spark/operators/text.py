@@ -1498,10 +1498,6 @@ def split_sentences(col) -> Column:
     return F.split(c, SENTENCE_BOUNDARY_RE)
 
 
-def sentence_count(col) -> Column:
-    return F.size(split_sentences(col))
-
-
 def dedup_sentences(
     df: DataFrame, id_col: str, text_col: str, min_chars: int = 0
 ) -> DataFrame:

@@ -17,10 +17,12 @@ side of this engine is exposed to ``spark.sql`` too (reference
 * ``bf_hll_distinct(filter)``     — HyperLogLog cardinality estimate
 * ``bf_mg_estimate(filter, h)``   — Misra–Gries lower-bound count
 
-Builds stay on the DataFrame API: Python cannot register SQL AGGREGATE
-functions (Spark has no Python UDAF), and the two-phase mergeable build
-is deliberately a composed plan, not a black-box aggregate. To close the
-UX gap with the reference's ``CREATE TABLE ... AS SELECT
+The scalar functions are the Arrow UDF objects ``functions/filters.py``
+defines, registered under SQL names. Builds stay on the DataFrame API:
+Python cannot register SQL AGGREGATE functions (Spark has no Python
+UDAF), and the two-phase mergeable build is deliberately a composed
+plan, not a black-box aggregate. To close the UX gap with the
+reference's ``CREATE TABLE ... AS SELECT
 quotient_filter(16, 4, hash(id)) ... GROUP BY`` workflow
 (test/sql/bitfilters.test:37-50), :func:`bf_build` runs that build from
 SQL strings and registers the result as a temp view — build→probe is
@@ -60,12 +62,13 @@ def bf_build(
     the i64 key hash (default ``xxhash64`` of the first group-free
     column is NOT guessed — pass it explicitly). ``kind`` and
     ``build_kwargs`` are exactly :func:`~bitfilters_spark.functions.
-    filters.build_filter`'s (quotient/xor8/xor16/fuse8/fuse16/bloom/
-    duckdb_bloom/cms/kmv/bks/hll/mg). The build itself is the same
-    two-phase mergeable DataFrame plan — this helper only bridges the
-    SQL-string surface Spark's missing Python UDAF would otherwise
-    leave closed. Returns the result DataFrame; when ``view`` is given
-    it is also registered as a temp view under that name."""
+    filters.build_filter`'s (quotient/cuckoo/bloom/duckdb_bloom/cms/kmv/
+    hll/mg/xor8/xor16/fuse8/fuse16/ribbon8/ribbon16; bottom-k samples
+    are built by ``functions/sample.py``, not here). The build itself is
+    the same DataFrame plan ``build_filter`` runs — this helper only
+    bridges the SQL-string surface Spark's missing Python UDAF would
+    otherwise leave closed. Returns the result DataFrame; when ``view``
+    is given it is also registered as a temp view under that name."""
     from .functions.filters import build_filter
 
     if hash_expr is None:
@@ -103,59 +106,15 @@ def register_sql_functions(spark: SparkSession, prefix: str = "bf_") -> list:
         return names
 
     import numpy as np
-    import pandas as pd
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
-    from pyspark.sql.types import BinaryType, BooleanType, LongType, StringType
+    from pyspark.sql.types import BinaryType, LongType
 
-    from .functions.filters import (
-        _KIND_BY_MAGIC,
-        _arrow_hashes_u64,
-        _probe_blob,
-    )
+    from .functions import filters as FL
     from .core import bksample as BK
     from .core import cms as CM
-    from .core import hll as HL
-    from .core import mg as MG
     from .core import quotient as Q
-    from .core import kmv as KV
     from .core import hashing as H
-
-    @arrow_udf(BooleanType())
-    def _contains(blobs, hashes):
-        if isinstance(blobs, pa.ChunkedArray):
-            blobs = blobs.combine_chunks()
-        h, hmask = _arrow_hashes_u64(hashes)
-        out = np.zeros(len(h), dtype=bool)
-        if len(h):
-            codes, uniq = pd.factorize(blobs.to_pandas(), use_na_sentinel=True)
-            for code, blob in enumerate(uniq):
-                m = codes == code
-                out[m] = _probe_blob(bytes(blob), h[m])
-        return pa.array(out, type=pa.bool_(), mask=hmask | np.asarray(blobs.is_null()))
-
-    @arrow_udf(LongType())
-    def _cms_est(blobs, hashes):
-        if isinstance(blobs, pa.ChunkedArray):
-            blobs = blobs.combine_chunks()
-        h, hmask = _arrow_hashes_u64(hashes)
-        out = np.zeros(len(h), dtype=np.int64)
-        if len(h):
-            codes, uniq = pd.factorize(blobs.to_pandas(), use_na_sentinel=True)
-            for code, blob in enumerate(uniq):
-                m = codes == code
-                out[m] = CM.cms_estimate(bytes(blob), h[m]).astype(np.int64)
-        return pa.array(out, type=pa.int64(), mask=hmask | np.asarray(blobs.is_null()))
-
-    @arrow_udf(LongType())
-    def _kmv_dist(blobs):
-        if isinstance(blobs, pa.ChunkedArray):
-            blobs = blobs.combine_chunks()
-        out = [
-            None if b is None else KV.kmv_estimate(bytes(b))
-            for b in blobs.to_pylist()
-        ]
-        return pa.array(out, type=pa.int64())
 
     @arrow_udf(LongType())
     def _dhash(values):
@@ -169,18 +128,6 @@ def register_sql_functions(spark: SparkSession, prefix: str = "bf_") -> list:
             data = ["" if x is None else str(x) for x in values.to_pylist()]
             h = H.hash_bytes([s.encode() for s in data], "v1.0.0")
         return pa.array(h.view(np.int64), type=pa.int64(), mask=mask)
-
-    @arrow_udf(StringType())
-    def _kind(blobs):
-        if isinstance(blobs, pa.ChunkedArray):
-            blobs = blobs.combine_chunks()
-        out = [
-            None
-            if b is None
-            else _KIND_BY_MAGIC.get(bytes(b[:4]), "duckdb_bloom")
-            for b in blobs.to_pylist()
-        ]
-        return pa.array(out, type=pa.string())
 
     @arrow_udf(BinaryType())
     def _qf_resize(blobs, qs, rs):
@@ -212,21 +159,8 @@ def register_sql_functions(spark: SparkSession, prefix: str = "bf_") -> list:
 
     @arrow_udf(LongType())
     def _bks_size(blobs):
-        if isinstance(blobs, pa.ChunkedArray):
-            blobs = blobs.combine_chunks()
-        out = [
-            None if b is None else len(BK.bks_deserialize(bytes(b))[2])
-            for b in blobs.to_pylist()
-        ]
-        return pa.array(out, type=pa.int64())
+        return FL._per_row(lambda b: len(BK.bks_deserialize(b)[2]), pa.int64(), blobs)
 
-    spark.udf.register(f"{prefix}contains", _contains)
-    spark.udf.register(f"{prefix}cms_estimate", _cms_est)
-    spark.udf.register(f"{prefix}kmv_distinct", _kmv_dist)
-    spark.udf.register(f"{prefix}duckdb_hash", _dhash)
-    spark.udf.register(f"{prefix}filter_kind", _kind)
-    spark.udf.register(f"{prefix}qf_resize", _qf_resize)
-    spark.udf.register(f"{prefix}bks_quantile", _bks_quant)
     @arrow_udf(LongType())
     def _cms_join(a_blobs, b_blobs):
         if isinstance(a_blobs, pa.ChunkedArray):
@@ -241,32 +175,11 @@ def register_sql_functions(spark: SparkSession, prefix: str = "bf_") -> list:
             )
         return pa.array(out, type=pa.int64())
 
-    @arrow_udf(LongType())
-    def _hll_dist(blobs):
-        if isinstance(blobs, pa.ChunkedArray):
-            blobs = blobs.combine_chunks()
-        out = [
-            None if b is None else HL.hll_estimate(bytes(b))
-            for b in blobs.to_pylist()
-        ]
-        return pa.array(out, type=pa.int64())
-
-    @arrow_udf(LongType())
-    def _mg_est(blobs, hashes):
-        if isinstance(blobs, pa.ChunkedArray):
-            blobs = blobs.combine_chunks()
-        h, hmask = _arrow_hashes_u64(hashes)
-        out = np.zeros(len(h), dtype=np.int64)
-        if len(h):
-            codes, uniq = pd.factorize(blobs.to_pandas(), use_na_sentinel=True)
-            for code, blob in enumerate(uniq):
-                m = codes == code
-                out[m] = MG.mg_estimate(bytes(blob), h[m]).astype(np.int64)
-        return pa.array(out, type=pa.int64(), mask=hmask | np.asarray(blobs.is_null()))
-
-    spark.udf.register(f"{prefix}bks_size", _bks_size)
-    spark.udf.register(f"{prefix}cms_join_size", _cms_join)
-    spark.udf.register(f"{prefix}hll_distinct", _hll_dist)
-    spark.udf.register(f"{prefix}mg_estimate", _mg_est)
+    for name, f in zip(names, [
+        FL._contains_udf, FL._cms_estimate_udf, FL._kmv_distinct_udf, _dhash,
+        FL._kind_udf, _qf_resize, _bks_quant, _bks_size, _cms_join,
+        FL._hll_distinct_udf, FL._mg_estimate_udf,
+    ]):
+        spark.udf.register(name, f)
     _REGISTERED.add(key)
     return names

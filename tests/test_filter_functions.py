@@ -277,14 +277,22 @@ def test_merge_equals_build_on_union(spark, orders, kind, kw):
 
 
 def test_merge_rejects_peeled(spark, orders):
+    import numpy as np
+    from bitfilters_spark.core import bksample as BKS
     from bitfilters_spark.functions.filters import merge_filters
 
     keyed = orders.select(
         (F.col("o_orderkey") % 2).alias("grp"), spark_hash64("o_orderkey").alias("h")
     )
-    fine = build_filter(keyed, ["grp"], "h", "xor8")
+    for kind in ("xor8", "ribbon8"):
+        fine = build_filter(keyed, ["grp"], "h", kind)
+        with pytest.raises(Exception, match="not mergeable"):
+            merge_filters(fine, []).collect()
+    hs = np.arange(1, 100, dtype=np.uint64)
+    sample = BKS.bks_build(hs, hs.astype(np.int64), 16)
+    samples = spark.createDataFrame([(0, sample), (1, sample)], "grp int, filter binary")
     with pytest.raises(Exception, match="not mergeable"):
-        merge_filters(fine, []).collect()
+        merge_filters(samples, []).collect()
 
 
 def test_merge_global(spark, orders):
@@ -384,6 +392,7 @@ def test_multi_build_includes_sketches(spark, orders):
                 ("cms", "cms", {"d": 2, "w": 1024}),
                 ("kmv", "kmv", {"k": 64}),
                 ("hll", "hll", {"p": 12}),
+                ("mg", "mg", {"k": 16}),
             ],
         ).collect()
     }
@@ -396,7 +405,12 @@ def test_multi_build_includes_sketches(spark, orders):
     solo_hll = bytes(
         build_filter(keyed, [], "h", "hll", p=12).collect()[0]["filter"]
     )
-    assert multi == {"cms": solo_cms, "kmv": solo_kmv, "hll": solo_hll}
+    solo_mg = bytes(
+        build_filter(keyed, [], "h", "mg", k=16).collect()[0]["filter"]
+    )
+    assert multi == {
+        "cms": solo_cms, "kmv": solo_kmv, "hll": solo_hll, "mg": solo_mg
+    }
 
 
 def test_merge_rejects_mismatched_params(spark, orders):
@@ -478,3 +492,136 @@ def test_multi_build_sharded_peeled_kind(spark, orders):
         4, {int(s): ribbon_build(hs[sh == s], 8) for s in np.unique(sh)}
     )
     assert by["ribbon8"][(0,)] == want
+
+
+# Small enough parameters that every kind builds over a few thousand keys;
+# mg's k exceeds the distinct keys per group, so it stays exact.
+_KIND_PARAMS = {
+    "quotient": {"q": 16, "r": 4},
+    "cuckoo": {"nbuckets": 4096, "fp_bits": 12, "bucket_size": 4},
+    "duckdb_bloom": {"num_sectors": 512},
+    "bloom": {"n": 2000, "fpp": 0.01},
+    "cms": {"d": 2, "w": 1024},
+    "kmv": {"k": 64},
+    "hll": {"p": 10},
+    "mg": {"k": 4096},
+    "xor8": {}, "xor16": {}, "fuse8": {}, "fuse16": {},
+    "ribbon8": {}, "ribbon16": {},
+}
+_MERGEABLE_KINDS = [
+    "quotient", "cuckoo", "duckdb_bloom", "bloom", "cms", "kmv", "hll", "mg"
+]
+
+
+def _core_bulk_build(kind, hs, p):
+    """The core kernel's one-shot build of a whole key set."""
+    import numpy as np
+    from bitfilters_spark.core import bloom as B
+    from bitfilters_spark.core import cms as CM
+    from bitfilters_spark.core import cuckoo as CKF
+    from bitfilters_spark.core import hll as HL
+    from bitfilters_spark.core import kmv as KV
+    from bitfilters_spark.core import mg as MG
+    from bitfilters_spark.core import quotient as Q
+
+    hs = np.asarray(hs, dtype=np.int64).view(np.uint64)
+    return {
+        "quotient": lambda: Q.qf_build(hs, p["q"], p["r"]),
+        "cuckoo": lambda: CKF.ck_build(hs, p["nbuckets"], p["fp_bits"], p["bucket_size"]),
+        "duckdb_bloom": lambda: B.duckdb_bloom_serialize(
+            B.duckdb_bloom_build(hs, p["num_sectors"])
+        ),
+        "bloom": lambda: B.bloom_serialize(
+            B.bloom_build(hs, p["n"], p["fpp"]), B.bloom_params(p["n"], p["fpp"])[1]
+        ),
+        "cms": lambda: CM.cms_build(hs, p["d"], p["w"]),
+        "kmv": lambda: KV.kmv_build(hs, p["k"]),
+        "hll": lambda: HL.hll_build(hs, p["p"]),
+        "mg": lambda: MG.mg_build(hs, p["k"]),
+    }[kind]()
+
+
+def _hashes_by_group(keyed):
+    out = {}
+    for r in keyed.collect():
+        out.setdefault(r["g"], []).append(r["h"])
+    return out
+
+
+@pytest.fixture(scope="module")
+def fold_input(spark):
+    """6 partitions of 1000 rows over 3 groups, and each group's hashes."""
+    keyed = spark.range(0, 6000, numPartitions=6).select(
+        (F.col("id") % 3).alias("g"), F.xxhash64(F.col("id") % 2000).alias("h")
+    )
+    return keyed, _hashes_by_group(keyed)
+
+
+@pytest.mark.parametrize("kind", _MERGEABLE_KINDS)
+def test_partial_fold_matches_core_bulk_build(spark, fold_input, kind):
+    """Grouped build_filter and build_filters_multi both equal, byte for
+    byte, the core kernel's bulk build of each group's hashes — over 6
+    partitions of 2 Arrow batches each, so batch states combine and
+    partition partials merge."""
+    from bitfilters_spark.functions import build_filters_multi
+
+    p = _KIND_PARAMS[kind]
+    keyed, by_group = fold_input
+    want = {g: _core_bulk_build(kind, hs, p) for g, hs in by_group.items()}
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "500")
+    try:
+        single = {
+            r["g"]: bytes(r["filter"])
+            for r in build_filter(keyed, ["g"], "h", kind, **p).collect()
+        }
+        multi = {
+            r["g"]: bytes(r["filter"])
+            for r in build_filters_multi(
+                keyed, "h", [(kind, kind, p)], group_cols=["g"]
+            ).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    assert set(want) == {0, 1, 2}
+    assert single == want
+    assert multi == want
+
+
+@pytest.fixture(scope="module")
+def null_group_input(spark):
+    """300 rows in groups 1, 2 and NULL, and the NULL group's hashes."""
+    keyed = spark.range(0, 300, numPartitions=3).select(
+        F.when(F.col("id") % 3 != 0, F.col("id") % 3).cast("int").alias("g"),
+        F.xxhash64("id").alias("h"),
+    )
+    return keyed, _hashes_by_group(keyed)[None]
+
+
+@pytest.mark.parametrize("kind", sorted(_KIND_PARAMS))
+def test_null_group_gets_its_own_filter(spark, null_group_input, kind):
+    """A NULL group key is a group of its own, as in SQL GROUP BY: every
+    kind emits a blob for it, and that blob holds the NULL group's keys."""
+    import numpy as np
+    from bitfilters_spark.core import cms as CM
+    from bitfilters_spark.core import hll as HL
+    from bitfilters_spark.core import kmv as KV
+    from bitfilters_spark.core import mg as MG
+    from bitfilters_spark.functions.filters import _probe_blob
+
+    keyed, null_hs = null_group_input
+    blobs = {
+        r["g"]: bytes(r["filter"])
+        for r in build_filter(keyed, ["g"], "h", kind, **_KIND_PARAMS[kind]).collect()
+    }
+    assert set(blobs) == {None, 1, 2}
+    hs = np.array(null_hs, dtype=np.int64).view(np.uint64)
+    blob = blobs[None]
+    holds = {
+        "cms": lambda: (CM.cms_estimate(blob, hs) >= 1).all(),
+        "kmv": lambda: set(KV.kmv_deserialize(blob)[1].tolist())
+        == set(np.unique(hs)[:64].tolist()),
+        "hll": lambda: abs(HL.hll_estimate(blob) - len(hs)) <= 2,
+        "mg": lambda: (MG.mg_estimate(blob, hs) == 1).all(),
+    }.get(kind, lambda: _probe_blob(blob, hs).all())
+    assert holds()

@@ -1,7 +1,7 @@
 """Dump `.explain("formatted")` for every declared query to
-plans/r15/<query>_<suffix>.txt. Usage:
+plans/<round>/<query>_<suffix>.txt. Usage:
 
-    python tools/dump_r15_plans.py before [q_name ...]
+    python tools/dump_round_plans.py r15 before [q_name ...]
 
 With no query names, dumps all of queries().
 """
@@ -17,16 +17,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    round_tag, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import __spark_entry__ as E
     from bitfilters_spark.session import make_session
 
-    spark = make_session(app="dump-plans-r15", cpus=4, shuffle_partitions=8)
+    spark = make_session(app=f"dump-plans-{round_tag}", cpus=4, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r15")
+    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", round_tag)
     os.makedirs(outdir, exist_ok=True)
     qs = E.queries()
     for name, fn in qs.items():
