@@ -1924,16 +1924,18 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     pool = ThreadPoolExecutor(max_workers=1)
-    counts_fut = pool.submit(SP.mixture_strata_counts, docs, "source")
-    stats = dsir_feature_stats(
-        docs, F.col("doc_id") % 23 == 0, parity=True, n_buckets=4096,
-        materialize=True,
-    )
-    out = SP.mixture_sample(
-        docs, "doc_id", "source", {"src0": 3, "src1": 1, "src2": 1},
-        native=False, counts=counts_fut.result(),
-    )
-    pool.shutdown(wait=False)
+    try:
+        counts_fut = pool.submit(SP.mixture_strata_counts, docs, "source")
+        stats = dsir_feature_stats(
+            docs, F.col("doc_id") % 23 == 0, parity=True, n_buckets=4096,
+            materialize=True,
+        )
+        out = SP.mixture_sample(
+            docs, "doc_id", "source", {"src0": 3, "src1": 1, "src2": 1},
+            native=False, counts=counts_fut.result(),
+        )
+    finally:
+        pool.shutdown(wait=False, cancel_futures=True)
     return out.join(stats, "doc_id").select(
         "doc_id", "source", "n_feats", "n_pos"
     )

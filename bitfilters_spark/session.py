@@ -11,6 +11,14 @@ only ``master``/memory change:
 - Arrow enabled for the pandas/arrow UDF boundary (all probe/hash kernels).
 - ``files.maxPartitionBytes`` left at 128m: scan parallelism for 100 TB
   inputs comes from the file count; partitions stay executor-memory-sized.
+- Python workers fork from ``bitfilters_spark._daemon`` (``WORKER_CONF``).
+  Grouped builds and probes and the file-index build run as Python tasks,
+  and stock workers paid ~0.23 s of CPU per task before reading a row:
+  each task's ``importlib.invalidate_caches()`` re-read ``pyspark.zip``'s
+  central directory once per cached zip importer (16 in a worker).
+  The daemon re-reads an archive only when it changed, which took a
+  trivial 4-task Arrow UDF over 65,536 rows from 0.92 s to 0.15 s of
+  worker CPU (4 cores).
 """
 
 from __future__ import annotations
@@ -18,6 +26,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the Python-worker settings every session of this package runs with
+WORKER_CONF = {"spark.python.daemon.module": "bitfilters_spark._daemon"}
 
 
 def make_session(
@@ -59,6 +70,7 @@ def make_session(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", driver_memory)
         .config("spark.cleaner.periodicGC.interval", "15s")
+        .config(map=WORKER_CONF)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -60,6 +60,9 @@ def build_file_index(
     return build_filter(keyed, ["file"], "h", kind, **filter_kw)
 
 
+_I64_MIN, _I64_MAX = -(2**63), 2**63 - 1
+
+
 def _xxhash64_longs(vals, seed: int = 42) -> np.ndarray:
     """Spark's ``xxhash64`` of int64 values (XXH64 of the 8-byte long,
     Spark's default seed 42), computed locally in numpy — byte-identical
@@ -91,13 +94,15 @@ def _xxhash64_longs(vals, seed: int = 42) -> np.ndarray:
 
 def key_hashes(spark: SparkSession, values: list) -> np.ndarray:
     """Hash probe values with the SAME hash the index used (Spark
-    xxhash64, seed 42, integral keys widened to bigint). Integer keys hash
-    locally (`_xxhash64_longs` —
-    zero Spark jobs, the common literal-IN-list shape); other types fall
+    xxhash64, seed 42, integral keys widened to bigint). Integer keys that
+    fit in int64 hash locally (`_xxhash64_longs` —
+    zero Spark jobs, the common literal-IN-list shape); other values fall
     back to the tiny-DataFrame round trip so the parity guarantee stays
-    expression-level."""
+    expression-level. There an int outside int64 becomes a NULL long, a
+    value no integral key column can hold, so it prunes nothing wrongly."""
     if values and all(
-        isinstance(v, int) and not isinstance(v, bool) for v in values
+        isinstance(v, int) and not isinstance(v, bool) and _I64_MIN <= v <= _I64_MAX
+        for v in values
     ):
         return _xxhash64_longs(values)
     vdf = spark.createDataFrame([(v,) for v in values], ["v"])

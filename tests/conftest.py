@@ -1,7 +1,10 @@
 import os
+import time
 
 import pytest
 from pyspark.sql import SparkSession
+
+from bitfilters_spark.session import WORKER_CONF
 
 # /tmp is disk-backed (ext4) in this environment while /dev/shm is a
 # large tmpfs; streaming checkpoints, state-store deltas and shuffle
@@ -13,16 +16,25 @@ from pyspark.sql import SparkSession
 _SHM = "/dev/shm"
 
 
+def _age(path):
+    try:
+        return time.time() - os.path.getmtime(path)
+    except OSError:  # reaped by a concurrent run
+        return 0.0
+
+
 def pytest_configure(config):
     if os.path.isdir(_SHM) and config.option.basetemp is None:
         base = os.path.join(_SHM, f"bf-pytest-{os.getuid()}")
         os.makedirs(base, exist_ok=True)
-        # reap tmp trees left by runs whose pytest process is gone
+        # reap tmp trees left by runs whose pytest process is gone, or
+        # older than a day (a reused pid must not pin a dead run's tree)
         import shutil
 
         for d in os.listdir(base):
-            if d.isdigit() and not os.path.exists(f"/proc/{d}"):
-                shutil.rmtree(os.path.join(base, d), ignore_errors=True)
+            path = os.path.join(base, d)
+            if d.isdigit() and (not os.path.exists(f"/proc/{d}") or _age(path) > 86400):
+                shutil.rmtree(path, ignore_errors=True)
         config.option.basetemp = os.path.join(base, str(os.getpid()))
 
 
@@ -59,6 +71,8 @@ def spark():
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
+        # the production Python-worker path (session.WORKER_CONF)
+        .config(map=WORKER_CONF)
     )
     if os.path.isdir(_SHM):
         local = os.path.join(_SHM, f"bf-pytest-{os.getuid()}", "spark-local")

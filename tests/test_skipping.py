@@ -354,3 +354,17 @@ def test_local_xxhash64_matches_spark(spark):
     # key_hashes must route pure-int lists through the local path and
     # agree with the Spark-job fallback
     assert (key_hashes(spark, vals) == expect).all()
+
+
+def test_key_hashes_outside_int64_fall_back_to_spark(spark):
+    """An int outside int64 cannot go through the local long hash (numpy
+    raised OverflowError); the list takes the Spark path, where in-range
+    ints still hash as longs, so no integral key is pruned wrongly."""
+    import numpy as np
+
+    from bitfilters_spark.sources.skipping import _xxhash64_longs
+
+    vals = [1, 2**64, 61, -(2**63) - 1]
+    got = key_hashes(spark, vals)
+    assert got.dtype == np.uint64 and len(got) == len(vals)
+    assert (got[[0, 2]] == _xxhash64_longs([1, 61])).all()

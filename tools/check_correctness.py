@@ -26,11 +26,14 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 def main(sf_dir: str, only: list | None = None) -> int:
     from pyspark.sql import SparkSession
 
+    from bitfilters_spark.session import WORKER_CONF
+
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config(map=WORKER_CONF)
         .getOrCreate()
     )
     con = duckdb.connect()

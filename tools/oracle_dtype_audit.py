@@ -71,10 +71,13 @@ def pandas_kind(dtype, series: pd.Series) -> str:
 def main(sf_dir: str) -> int:
     from pyspark.sql import SparkSession
 
+    from bitfilters_spark.session import WORKER_CONF
+
     spark = (
         SparkSession.builder.master("local[2]")
         .config("spark.sql.shuffle.partitions", "2")
         .config("spark.ui.enabled", "false")
+        .config(map=WORKER_CONF)
         .getOrCreate()
     )
     con = duckdb.connect()
