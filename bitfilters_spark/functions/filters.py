@@ -21,10 +21,10 @@ kind's algebra, not the data size:
   group's blob.
 * **other mergeable** (``bloom``, ``quotient``, ``cuckoo``, ``cms``,
   ``kmv``, ``hll``, ``mg``): the partial fold ``build_filters_multi``
-  runs too. One ``mapInPandas`` pass folds each Arrow batch into a
+  runs too. One ``mapInArrow`` pass folds each Arrow batch into a
   running state per group and emits one partial blob per (partition,
   group); the shuffle carries those ``#partitions × #groups`` blobs,
-  never rows, and one ``applyInPandas`` task per group merges them —
+  never rows, and one ``applyInArrow`` task per group merges them —
   merge(build(A), build(B)) = build(A ∪ B).
 * **peeled** (``xor8/16``, ``fuse8/16``, ``ribbon8/16``): construction
   needs the whole key set at once (hypergraph peeling / banded solve), so
@@ -399,24 +399,35 @@ def _probe_duckdb_bloom(
     )
 
 
-def _batch_groups(pdf: pd.DataFrame, group_cols: list) -> Iterator[tuple]:
-    """``(group key tuple, u64 hashes)`` per group of one batch: factorize
-    the key columns, then mask per group. A NULL key is a group of its own."""
-    hs = _to_u64(pdf["__h"])
-    codes = np.zeros(len(pdf), dtype=np.int64)
-    keys = [()] if len(pdf) else []
-    for c in group_cols:
-        col_codes, uniq = pd.factorize(pdf[c])
-        uniq = list(uniq)
-        if (col_codes < 0).any():
-            col_codes = np.where(col_codes < 0, len(uniq), col_codes)
+def _group_codes(columns: list, n: int) -> tuple[np.ndarray, list]:
+    """Factorize the key columns (Arrow arrays) of a batch of ``n`` rows in
+    Arrow: a group code per row and the key tuple of each code. Integers
+    stay exact when the batch holds NULLs, which pandas would turn into
+    float64 (2^53 + 1 would become 2^53). A NULL is a key value of its own
+    (``None``); no key columns make one group, ``()``."""
+    codes = np.zeros(n, dtype=np.int64)
+    keys = [()] if n else []
+    for col in columns:
+        enc = col.dictionary_encode()
+        uniq = enc.dictionary.to_pylist()
+        if enc.null_count:
             uniq.append(None)
+        col_codes = pc.fill_null(enc.indices, len(uniq) - 1).to_numpy().astype(np.int64)
         if len(keys) == 1:
             codes, keys = col_codes, [keys[0] + (u,) for u in uniq]
         else:
-            n = len(uniq)
-            codes, pairs = pd.factorize(codes * n + col_codes)
-            keys = [keys[v // n] + (uniq[v % n],) for v in pairs.tolist()]
+            m = len(uniq)
+            codes, pairs = pd.factorize(codes * m + col_codes)
+            keys = [keys[v // m] + (uniq[v % m],) for v in pairs.tolist()]
+    return codes, keys
+
+
+def _batch_groups(batch: pa.RecordBatch, group_cols: list) -> Iterator[tuple]:
+    """``(group key tuple, u64 hashes)`` per group of one batch of
+    ``group_cols + [__h]`` (``__h`` never NULL). A NULL key is a group of
+    its own."""
+    hs = batch.column("__h").to_numpy(zero_copy_only=False).view(np.uint64)
+    codes, keys = _group_codes([batch.column(c) for c in group_cols], batch.num_rows)
     for code, key in enumerate(keys):
         yield key, hs[codes == code]
 
@@ -428,7 +439,7 @@ def _fold_build(
     ``build_filter``: ``group_cols + (filter_type, filter, __shard)``, one
     row per (group, spec name, shard).
 
-    One ``mapInPandas`` pass folds each batch of each partition into a
+    One ``mapInArrow`` pass folds each batch of each partition into a
     running state per (group, mergeable spec) and emits one partial blob
     each; a peeled spec instead carries the partition's distinct hashes
     of the group, split by hash-prefix shard when its params hold
@@ -447,11 +458,13 @@ def _fold_build(
         ]
     )
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         state: dict = {}
         raw: dict = {}
-        for pdf in batches:
-            for gkey, hs in _batch_groups(pdf, group_cols):
+        key_types = None
+        for batch in batches:
+            key_types = [batch.schema.field(c).type for c in group_cols]
+            for gkey, hs in _batch_groups(batch, group_cols):
                 for name, (f, p) in folds.items():
                     state[gkey, name] = f.fold(state.get((gkey, name)), hs, p)
                 if peeled:
@@ -468,23 +481,26 @@ def _fold_build(
                     sub = hs if sh is None else hs[sh == s]
                     rows.append((*gkey, name, sub.astype("<u8").tobytes(), int(s)))
         if rows:
-            yield pd.DataFrame(rows, columns=schema.names)
+            types = key_types + [pa.string(), pa.binary(), pa.int32()]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(list(v), t) for v, t in zip(zip(*rows), types)],
+                names=schema.names,
+            )
 
-    def finish(pdf: pd.DataFrame) -> pd.DataFrame:
-        f, p = by_name[pdf["filter_type"].iloc[0]]
-        payloads = [bytes(b) for b in pdf[filter_col]]
+    def finish(t: pa.Table) -> pa.Table:
+        f, p = by_name[t["filter_type"][0].as_py()]
+        payloads = t[filter_col].to_pylist()
         if f.fold:
             blob = f.merge(payloads)
         else:
             hs = np.unique(np.concatenate([np.frombuffer(b, dtype="<u8") for b in payloads]))
             blob = f.build(hs, p)
-        out = pdf.iloc[[0]].copy()
-        out[filter_col] = [blob]
-        return out
+        i = t.schema.get_field_index(filter_col)
+        return t.slice(0, 1).set_column(i, t.schema.field(i), pa.array([blob], pa.binary()))
 
-    return proj.mapInPandas(partials, schema=schema).groupBy(
+    return proj.mapInArrow(partials, schema=schema).groupBy(
         *group_cols, "filter_type", "__shard"
-    ).applyInPandas(finish, schema=schema)
+    ).applyInArrow(finish, schema=schema)
 
 
 def _project_hashes(df: DataFrame, group_cols: list, hash_col: str) -> DataFrame:
@@ -613,7 +629,7 @@ def build_filters_multi(
     ``specs`` is ``[(name, kind, params_dict), ...]``; a params dict holds
     the ``build_filter`` keyword arguments its kind reads. The partial
     fold ``build_filter`` uses for mergeable kinds runs every spec in a
-    single ``mapInPandas`` pass: each partition yields one payload per
+    single ``mapInArrow`` pass: each partition yields one payload per
     (group, spec) — a partial blob for mergeable kinds, the partition's
     distinct raw hashes for peeled kinds (which need the full key set
     anyway) — and a per-(group, name) task finishes each filter.
@@ -909,15 +925,9 @@ def probe_filter(
             if len(h):
                 out[:] = _probe_blob(next(iter(m.values())), h)
         elif len(h):
-            series = [a.to_pandas() for a in arrays[:-1]]
-            if len(on) == 1:
-                codes, uniq = pd.factorize(series[0])
-                keys = [(k,) for k in uniq]
-            else:
-                codes, uniq = pd.factorize(pd.Series(list(zip(*series))))
-                keys = [tuple(k) for k in uniq]
+            codes, keys = _group_codes(list(arrays[:-1]), len(h))
             for code, key in enumerate(keys):
-                blob = m.get(key)
+                blob = None if None in key else m.get(key)
                 if blob is not None:
                     sel = codes == code
                     out[sel] = _probe_blob(blob, h[sel])

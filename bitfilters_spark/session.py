@@ -13,12 +13,15 @@ only ``master``/memory change:
   inputs comes from the file count; partitions stay executor-memory-sized.
 - Python workers fork from ``bitfilters_spark._daemon`` (``WORKER_CONF``).
   Grouped builds and probes and the file-index build run as Python tasks,
-  and stock workers paid ~0.23 s of CPU per task before reading a row:
-  each task's ``importlib.invalidate_caches()`` re-read ``pyspark.zip``'s
-  central directory once per cached zip importer (16 in a worker).
-  The daemon re-reads an archive only when it changed, which took a
-  trivial 4-task Arrow UDF over 65,536 rows from 0.92 s to 0.15 s of
-  worker CPU (4 cores).
+  and stock workers paid ~0.23 s of CPU per task before reading a row.
+  Two causes, both mended in the daemon: each task's
+  ``importlib.invalidate_caches()`` re-read ``pyspark.zip``'s central
+  directory once per cached zip importer (16 in a worker), and the
+  ``gc.collect()`` a reused worker runs after each task walked the ~75k
+  objects it inherited from the daemon's imports (~35 ms). The daemon
+  re-reads an archive only when it changed and freezes its heap
+  (``gc.freeze()``) before forking. ``tools/worker_task_cost.py``
+  measures what is left per task.
 """
 
 from __future__ import annotations

@@ -32,6 +32,7 @@ import os
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from ..functions.filters import _probe_blob, build_filter
 from ..functions.hashing import key_hash64, spark_hash64
@@ -60,7 +61,8 @@ def build_file_index(
     return build_filter(keyed, ["file"], "h", kind, **filter_kw)
 
 
-_I64_MIN, _I64_MAX = -(2**63), 2**63 - 1
+def _outside_int64(v) -> bool:
+    return isinstance(v, int) and not -(2**63) <= v < 2**63
 
 
 def _xxhash64_longs(vals, seed: int = 42) -> np.ndarray:
@@ -101,7 +103,7 @@ def key_hashes(spark: SparkSession, values: list) -> np.ndarray:
     expression-level. There an int outside int64 becomes a NULL long, a
     value no integral key column can hold, so it prunes nothing wrongly."""
     if values and all(
-        isinstance(v, int) and not isinstance(v, bool) and _I64_MIN <= v <= _I64_MAX
+        isinstance(v, int) and not isinstance(v, bool) and not _outside_int64(v)
         for v in values
     ):
         return _xxhash64_longs(values)
@@ -134,13 +136,22 @@ def skipping_read(
 ) -> DataFrame:
     """``SELECT * FROM path WHERE key_col IN values`` reading only files the
     index cannot rule out. Exact: the final ``isin`` predicate re-checks
-    survivors (bloom FPs cost I/O, never correctness)."""
+    survivors (bloom FPs cost I/O, never correctness). Over an integral
+    key column, ints outside int64 match no row and are left out of it
+    (Spark cannot make a literal of them)."""
     if index is None:
         index = build_file_index(spark, path, [key_col], kind, **filter_kw)
     files = prune_files(index, key_hashes(spark, values))
     if not files:
         return spark.read.parquet(path).where(F.lit(False))
-    return spark.read.parquet(*files).where(F.col(key_col).isin(values))
+    df = spark.read.parquet(*files)
+    if any(_outside_int64(v) for v in values) and isinstance(
+        df.select(key_col).schema[0].dataType, IntegralType
+    ):
+        values = [v for v in values if not _outside_int64(v)]
+        if not values:
+            return df.where(F.lit(False))
+    return df.where(F.col(key_col).isin(values))
 
 
 def save_index(index: DataFrame, path: str) -> None:

@@ -625,3 +625,45 @@ def test_null_group_gets_its_own_filter(spark, null_group_input, kind):
         "mg": lambda: (MG.mg_estimate(blob, hs) == 1).all(),
     }.get(kind, lambda: _probe_blob(blob, hs).all())
     assert holds()
+
+
+_BIG = 2**53 + 1  # the smallest bigint float64 cannot hold
+
+
+def _one_partition(spark, rows):
+    return spark.createDataFrame(rows, "g long, h long").coalesce(1)
+
+
+@pytest.mark.parametrize("kind", ["quotient", "bloom"])
+def test_fold_keeps_bigint_group_keys_exact_beside_a_null(spark, kind):
+    """The partial fold reads group keys from Arrow: a bigint key above
+    2^53 in a batch that also holds a NULL key comes back exact (through
+    pandas the column became float64 and 2^53 + 1 came back as 2^53)."""
+    from bitfilters_spark.functions import build_filters_multi
+
+    keyed = _one_partition(spark, [(_BIG, 11), (None, 12), (5, 13)])
+    p = _KIND_PARAMS[kind]
+    single = build_filter(keyed, ["g"], "h", kind, **p).collect()
+    multi = build_filters_multi(keyed, "h", [(kind, kind, p)], group_cols=["g"]).collect()
+    assert sorted(r["g"] for r in single if r["g"] is not None) == [5, _BIG]
+    assert sorted(r["g"] for r in multi if r["g"] is not None) == [5, _BIG]
+    assert len(single) == len(multi) == 3
+
+
+@pytest.mark.parametrize("kind", ["xor8", "duckdb_bloom", "bloom"])
+def test_grouped_probe_keys_stay_exact_beside_a_null(spark, kind):
+    """A grouped probe finds the blob of a bigint key above 2^53 when the
+    batch also holds a NULL key (through pandas the key became 2^53 and
+    its member probed False); the NULL key probes False."""
+    from bitfilters_spark.functions import probe_filter
+
+    filters = build_filter(
+        _one_partition(spark, [(_BIG, 777), (5, 777)]), ["g"], "h", kind,
+        **_KIND_PARAMS[kind],
+    )
+    rows = _one_partition(spark, [(_BIG, 777), (None, 777), (5, 777)])
+    got = {
+        r["g"]: r["__contains"]
+        for r in probe_filter(rows, filters, "h", on=["g"]).collect()
+    }
+    assert got == {_BIG: True, None: False, 5: True}

@@ -368,3 +368,17 @@ def test_key_hashes_outside_int64_fall_back_to_spark(spark):
     got = key_hashes(spark, vals)
     assert got.dtype == np.uint64 and len(got) == len(vals)
     assert (got[[0, 2]] == _xxhash64_longs([1, 61])).all()
+
+
+def test_skipping_read_leaves_out_ints_outside_int64(spark, tmp_path):
+    """No bigint column holds an int outside int64, and Spark cannot make
+    a literal of one (the exact predicate raised Py4JError): such ints
+    match nothing, and a list of only such ints reads no row."""
+    dest = str(tmp_path / "longs")
+    spark.range(0, 3000, numPartitions=4).select(
+        "id", (F.col("id") * 10).alias("v")
+    ).write.parquet(dest)
+    idx = build_file_index(spark, dest, ["id"], "bloom", n=1000, fpp=0.01)
+    got = skipping_read(spark, dest, "id", [1, 2**64], index=idx)
+    assert [r["v"] for r in got.collect()] == [10]
+    assert skipping_read(spark, dest, "id", [2**64], index=idx).count() == 0
