@@ -3,7 +3,7 @@ a mergeable uniform row sample with payload per group, plus plug-in
 quantile probes.
 
 Build is the sketch family's two-phase shape (the 100 TB path): one
-``mapInPandas`` pass folds per-partition partial sketches per group —
+``mapInArrow`` pass folds per-partition partial sketches per group —
 so the shuffle carries #partitions × #groups blobs of at most
 ``12 + 16k`` bytes, never rows — then a per-group merge reduces them.
 ``merge(build(A), build(B)) == build(A ∪ B)`` byte-exact, so sketches
@@ -23,15 +23,13 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StructField, StructType
 
 from ..core import bksample as BK
-
-
-def _to_u64(s: pd.Series) -> np.ndarray:
-    return s.to_numpy(dtype=np.int64).astype(np.uint64)
+from .filters import _group_codes
 
 
 def bottomk_sample(
@@ -46,7 +44,8 @@ def bottomk_sample(
     hash ranks in the group's k smallest.  ``hash_col`` must be i64
     (two's-complement u64, e.g. ``spark_hash64`` / ``duckdb_hash`` of a
     UNIQUE row key), ``value_col`` any integer-castable payload.  Rows
-    with a NULL hash or value are skipped (aggregate NULL semantics).
+    with a NULL hash or value are skipped (aggregate NULL semantics); a
+    NULL group key is a group of its own, as in ``build_filter``.
     ``group_cols=[]`` builds one global sketch."""
     dummy = not group_cols
     if dummy:
@@ -60,46 +59,45 @@ def bottomk_sample(
     gfields = [proj.schema[c] for c in group_cols]
     out_schema = StructType(gfields + [StructField(filter_col, BinaryType())])
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # group keys are factorized in Arrow: pandas would turn a bigint
+        # column holding a NULL into float64 and drop the NULL group
         acc: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes, uniq = pd.factorize(
-                pd.Series(zip(*[pdf[c] for c in group_cols]))
-                if len(group_cols) > 1
-                else pdf[group_cols[0]]
+        key_types = None
+        for batch in batches:
+            key_types = [batch.schema.field(c).type for c in group_cols]
+            codes, keys = _group_codes(
+                [batch.column(c) for c in group_cols], batch.num_rows
             )
-            hs = _to_u64(pdf["__h"])
-            vs = pdf["__v"].to_numpy(dtype=np.int64)
-            for code in range(len(uniq)):
+            hs = batch.column("__h").to_numpy(zero_copy_only=False).view(np.uint64)
+            vs = batch.column("__v").to_numpy(zero_copy_only=False)
+            for code, key in enumerate(keys):
                 m = codes == code
-                key = uniq[code]
-                kk = tuple(key) if isinstance(key, tuple) else (key,)
                 h, v = BK._reduce(hs[m], vs[m], k)
-                prev = acc.get(kk)
+                prev = acc.get(key)
                 if prev is not None:
                     h, v = BK._reduce(
                         np.concatenate([prev[0], h]),
                         np.concatenate([prev[1], v]),
                         k,
                     )
-                acc[kk] = (h, v)
-        rows = [
-            (*kk, BK.bks_serialize(k, h, v)) for kk, (h, v) in acc.items()
-        ]
-        yield pd.DataFrame(rows, columns=group_cols + [filter_col])
+                acc[key] = (h, v)
+        if acc:
+            rows = [(*key, BK.bks_serialize(k, h, v)) for key, (h, v) in acc.items()]
+            types = key_types + [pa.binary()]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(list(c), t) for c, t in zip(zip(*rows), types)],
+                names=out_schema.names,
+            )
 
-    partial_df = proj.mapInPandas(partials, schema=out_schema)
+    partial_df = proj.mapInArrow(partials, schema=out_schema)
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = BK.bks_merge([bytes(b) for b in pdf[filter_col]])
-        return pd.DataFrame(
-            [(*[pdf[c].iloc[0] for c in group_cols], blob)],
-            columns=group_cols + [filter_col],
-        )
+    def merge(t: pa.Table) -> pa.Table:
+        blob = BK.bks_merge(t[filter_col].to_pylist())
+        i = t.schema.get_field_index(filter_col)
+        return t.slice(0, 1).set_column(i, t.schema.field(i), pa.array([blob], pa.binary()))
 
-    out = partial_df.groupBy(*group_cols).applyInPandas(merge, schema=out_schema)
+    out = partial_df.groupBy(*group_cols).applyInArrow(merge, schema=out_schema)
     return out.drop("__g") if dummy else out
 
 

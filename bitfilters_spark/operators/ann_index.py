@@ -13,9 +13,9 @@ nearest-neighbor audits). This module splits the cost:
   scoring replays `ivf_topk`'s arithmetic bit-for-bit) plus the
   ``<name>_centroids`` table (model-scale). Bucketing + in-bucket cell
   sort mean a probe's candidate cells live in known buckets, in sorted
-  runs parquet min/max stats prune to. Builds land in STAGING tables and
-  swap on success (the `bm25_index` atomicity contract: a failed rebuild
-  leaves the previous index fully queryable).
+  runs parquet min/max stats prune to. Builds publish through
+  `sources/index_store.py`: a failed rebuild leaves the previous index
+  fully queryable.
 * :func:`append_to_ann_index` — fold NEW vectors in at cost ∝ the new
   data: they route through the STORED centroids (no re-training — the
   quantizer is frozen, the standard IVF maintenance trade: cell balance
@@ -60,9 +60,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..sources.io import write_bucketed
-from .bm25_index import _check_name, _stage_path
+from ..sources import index_store
+from ..sources.index_store import Table
 from .similarity import ivf_centroids
+
+_ANN = (Table("cells", "cell", sort=True), Table("centroids"))
+_IVFPQ = _ANN + (Table("codebooks"),)
+_SIG = (Table("sigs", "id", sort=True),)
 
 _CELL_SCHEMA = StructType(
     [
@@ -96,22 +100,11 @@ def _route(df: DataFrame, id_col: str, vec_col: str, C: np.ndarray) -> DataFrame
     return df.select(id_col, vec_col).mapInPandas(assign, schema=_CELL_SCHEMA)
 
 
-def _stamp(spark: SparkSession, table: str, num_buckets: int, n_centroids: int):
-    spark.sql(
-        f"ALTER TABLE {table} SET TBLPROPERTIES "
-        f"('bitfilters.num_buckets'='{num_buckets}', "
-        f"'bitfilters.n_centroids'='{n_centroids}')"
+def _centroid_frame(spark: SparkSession, C: np.ndarray) -> DataFrame:
+    return spark.createDataFrame(
+        [(int(i), [float(x) for x in C[i]]) for i in range(len(C))],
+        "cell long, vec array<double>",
     )
-
-
-def _stored_geometry(spark: SparkSession, name: str) -> dict:
-    rows = spark.sql(f"SHOW TBLPROPERTIES {name}_cells").collect()
-    props = {r["key"]: r["value"] for r in rows}
-    return {
-        k: int(props[f"bitfilters.{k}"])
-        for k in ("num_buckets", "n_centroids")
-        if f"bitfilters.{k}" in props
-    }
 
 
 def build_ann_index(
@@ -130,7 +123,7 @@ def build_ann_index(
     pre-trained quantizer (`load_ivf_index` / a prior build) and skips
     the k-means pass. ``path`` makes the tables EXTERNAL, same contract
     as the BM25/LSH indexes."""
-    _check_name(name)
+    index_store.check_name(name)
     spark = df.sparkSession
     C = np.asarray(
         centroids
@@ -138,48 +131,12 @@ def build_ann_index(
         else ivf_centroids(df, vec_col, n_centroids, seed=seed),
         dtype=np.float64,
     )
-    _write_staged(spark, name, _route(df, id_col, vec_col, C), C, num_buckets, path)
-    return C
-
-
-def _write_staged(
-    spark: SparkSession,
-    name: str,
-    cells: DataFrame,
-    C: np.ndarray,
-    num_buckets: int,
-    path: str | None,
-) -> None:
-    """Stage-and-swap both index tables (external data lands in
-    per-rebuild ALTERNATING directories via `bm25_index._stage_path` —
-    a rebuild staging into the live table's own directory would destroy
-    the previous index mid-build). Shared by build and compact."""
-    stage = f"{name}__stage"
-    for suffix in ("cells", "centroids"):
-        spark.sql(f"DROP TABLE IF EXISTS {stage}_{suffix}")
-    write_bucketed(
-        cells,
-        f"{stage}_cells",
-        ["cell"],
-        num_buckets=num_buckets,
-        sort_cols=["cell"],
-        path=_stage_path(spark, f"{name}_cells", path, f"{name}_cells"),
+    index_store.publish(
+        spark, name, _ANN,
+        [_route(df, id_col, vec_col, C), _centroid_frame(spark, C)],
+        {"num_buckets": num_buckets, "n_centroids": len(C)}, path,
     )
-    cw = spark.createDataFrame(
-        [(int(i), [float(x) for x in C[i]]) for i in range(len(C))],
-        "cell long, vec array<double>",
-    ).write.mode("overwrite")
-    if path:
-        cw = cw.option(
-            "path",
-            _stage_path(spark, f"{name}_centroids", path, f"{name}_centroids"),
-        )
-    cw.saveAsTable(f"{stage}_centroids")
-    _stamp(spark, f"{stage}_cells", num_buckets, len(C))
-    # all staging writes succeeded — metadata-only swap
-    for suffix in ("cells", "centroids"):
-        spark.sql(f"DROP TABLE IF EXISTS {name}_{suffix}")
-        spark.sql(f"ALTER TABLE {stage}_{suffix} RENAME TO {name}_{suffix}")
+    return C
 
 
 def compact_ann_index(
@@ -194,45 +151,12 @@ def compact_ann_index(
     Same staging-swap atomicity as a build: a crash mid-compact leaves
     the live index untouched. Returns postings file counts
     ``{"files_before": n, "files_after": n}``."""
-    _check_name(name)
-    _refresh(spark, name)
-    geom = _stored_geometry(spark, name)
-    num_buckets = geom["num_buckets"]
-
-    def _nfiles():
-        return (
-            spark.table(f"{name}_cells")
-            .select(F.input_file_name())
-            .distinct()
-            .count()
-        )
-
-    files_before = _nfiles()
-    C = load_ann_centroids(spark, name)
-    # one-bucket-per-task repartition => exactly one file per bucket;
-    # read the FILES so the bucketed read's advertised partitioning
-    # cannot elide the repartition (see compact_bm25_index)
-    from .bm25_index import _live_location
-
-    loc = _live_location(spark, f"{name}_cells")
-    cells_src = spark.read.parquet(loc) if loc else spark.table(f"{name}_cells")
-    cells = cells_src.repartition(num_buckets, F.col("cell"))
-    _write_staged(spark, name, cells, C, num_buckets, path)
-    return {"files_before": files_before, "files_after": _nfiles()}
-
-
-def _refresh(spark: SparkSession, name: str) -> None:
-    """Metadata-only refresh (the `bm25_index._refresh` rationale):
-    appends from another session — streaming maintenance's foreachBatch
-    clone — are on disk, but this session may hold a stale cached file
-    listing for the tables."""
-    for suffix in ("cells", "centroids"):
-        spark.catalog.refreshTable(f"{name}_{suffix}")
+    return index_store.compact(spark, name, _ANN, path)
 
 
 def load_ann_centroids(spark: SparkSession, name: str) -> np.ndarray:
     rows = sorted(
-        spark.table(f"{_check_name(name)}_centroids").collect(),
+        spark.table(f"{index_store.check_name(name)}_centroids").collect(),
         key=lambda r: r["cell"],
     )
     return np.array([r["vec"] for r in rows], dtype=np.float64)
@@ -249,19 +173,14 @@ def append_to_ann_index(
     through the STORED centroids (the quantizer stays frozen — identical
     cells to a rebuild with the same centroids, so append-then-probe ≡
     rebuild-then-probe, tested), append into the bucketed layout."""
-    _check_name(name)
     spark = new_df.sparkSession
-    geom = _stored_geometry(spark, name)
-    if geom.get("num_buckets") is not None and geom["num_buckets"] != num_buckets:
-        raise ValueError(
-            f"ANN index '{name}' was built with num_buckets="
-            f"{geom['num_buckets']}, called with {num_buckets}; appended "
-            "rows would land in the wrong buckets."
-        )
+    index_store.check_geometry(
+        spark, name, _ANN, {"num_buckets": num_buckets}, "ANN"
+    )
     C = load_ann_centroids(spark, name)
-    _route(new_df, id_col, vec_col, C).write.mode("append").format(
-        "parquet"
-    ).bucketBy(num_buckets, "cell").sortBy("cell").saveAsTable(f"{name}_cells")
+    index_store.append(
+        spark, name, _ANN[:1], [_route(new_df, id_col, vec_col, C)], num_buckets
+    )
 
 
 class AnnProbe:
@@ -275,11 +194,11 @@ class AnnProbe:
 
     def __init__(self, spark: SparkSession, name: str):
         self.spark = spark
-        self.name = _check_name(name)
+        self.name = index_store.check_name(name)
         self.refresh()
 
     def refresh(self) -> "AnnProbe":
-        _refresh(self.spark, self.name)
+        index_store.refresh(self.spark, self.name, _ANN)
         self.C = load_ann_centroids(self.spark, self.name)
         return self
 
@@ -402,8 +321,7 @@ def ann_index_report(spark: SparkSession, name: str) -> DataFrame:
     each vector to its own centroid — WATCH it across appends; a drop
     vs the post-build reading means the frozen quantizer no longer fits
     the data: rebuild to re-center."""
-    _check_name(name)
-    _refresh(spark, name)
+    index_store.refresh(spark, name, _ANN)
     C = load_ann_centroids(spark, name)
     bc = spark.sparkContext.broadcast(C)
 
@@ -477,9 +395,8 @@ def recenter_ann_index(
     new centroid matrix. Cost: one k-means sample pass + one full
     re-route of the stored vectors — the documented trade vs appends
     (∝ new data) that this call amortizes."""
-    _check_name(name)
-    spark.catalog.refreshTable(f"{name}_cells")
-    geom = _stored_geometry(spark, name)
+    index_store.refresh(spark, name, _ANN)
+    geom = index_store.geometry(spark, name, _ANN)
     vecs = spark.table(f"{name}_cells").select("id", "vec")
     # localCheckpoint: the rebuild DROPS the table these rows come from
     # mid-plan; materialize first so the swap can't pull the scan's
@@ -557,62 +474,6 @@ def _encode_residuals(routed: DataFrame, C: np.ndarray, cb: np.ndarray) -> DataF
     return routed.mapInPandas(enc, schema=_CODE_SCHEMA)
 
 
-def _write_pq_staged(
-    spark: SparkSession,
-    name: str,
-    codes: DataFrame,
-    C: np.ndarray,
-    cb: np.ndarray,
-    num_buckets: int,
-    path: str | None,
-) -> None:
-    """Stage-and-swap all three IVFPQ tables (cells=codes, centroids,
-    codebooks) — the `_write_staged` contract with the PQ model added."""
-    stage = f"{name}__stage"
-    for suffix in ("cells", "centroids", "codebooks"):
-        spark.sql(f"DROP TABLE IF EXISTS {stage}_{suffix}")
-    write_bucketed(
-        codes,
-        f"{stage}_cells",
-        ["cell"],
-        num_buckets=num_buckets,
-        sort_cols=["cell"],
-        path=_stage_path(spark, f"{name}_cells", path, f"{name}_cells"),
-    )
-    cw = spark.createDataFrame(
-        [(int(i), [float(x) for x in C[i]]) for i in range(len(C))],
-        "cell long, vec array<double>",
-    ).write.mode("overwrite")
-    if path:
-        cw = cw.option(
-            "path",
-            _stage_path(spark, f"{name}_centroids", path, f"{name}_centroids"),
-        )
-    cw.saveAsTable(f"{stage}_centroids")
-    bw = spark.createDataFrame(
-        [
-            (int(s), int(j), [float(x) for x in cb[s, j]])
-            for s in range(cb.shape[0])
-            for j in range(cb.shape[1])
-        ],
-        "s long, j long, vec array<double>",
-    ).write.mode("overwrite")
-    if path:
-        bw = bw.option(
-            "path",
-            _stage_path(spark, f"{name}_codebooks", path, f"{name}_codebooks"),
-        )
-    bw.saveAsTable(f"{stage}_codebooks")
-    _stamp(spark, f"{stage}_cells", num_buckets, len(C))
-    spark.sql(
-        f"ALTER TABLE {stage}_cells SET TBLPROPERTIES "
-        f"('bitfilters.pq_m'='{cb.shape[0]}')"
-    )
-    for suffix in ("cells", "centroids", "codebooks"):
-        spark.sql(f"DROP TABLE IF EXISTS {name}_{suffix}")
-        spark.sql(f"ALTER TABLE {stage}_{suffix} RENAME TO {name}_{suffix}")
-
-
 def build_ivfpq_index(
     df: DataFrame,
     id_col: str,
@@ -637,7 +498,7 @@ def build_ivfpq_index(
     trained models and skip the respective training."""
     from .similarity import train_pq_books
 
-    _check_name(name)
+    index_store.check_name(name)
     spark = df.sparkSession
     C = np.asarray(
         centroids
@@ -665,15 +526,26 @@ def build_ivfpq_index(
         cb = train_pq_books(R, m, n_codes, iters, seed)
     else:
         cb = np.asarray(codebooks, dtype=np.float64)
-    _write_pq_staged(
-        spark, name, _encode_residuals(routed, C, cb), C, cb, num_buckets, path
+    books = spark.createDataFrame(
+        [
+            (int(s), int(j), [float(x) for x in cb[s, j]])
+            for s in range(cb.shape[0])
+            for j in range(cb.shape[1])
+        ],
+        "s long, j long, vec array<double>",
+    )
+    index_store.publish(
+        spark, name, _IVFPQ,
+        [_encode_residuals(routed, C, cb), _centroid_frame(spark, C), books],
+        {"num_buckets": num_buckets, "n_centroids": len(C), "pq_m": cb.shape[0]},
+        path,
     )
     return C, cb
 
 
 def load_pq_codebooks(spark: SparkSession, name: str) -> np.ndarray:
     rows = sorted(
-        spark.table(f"{_check_name(name)}_codebooks").collect(),
+        spark.table(f"{index_store.check_name(name)}_codebooks").collect(),
         key=lambda r: (r["s"], r["j"]),
     )
     m = int(rows[-1]["s"]) + 1
@@ -696,21 +568,18 @@ def append_to_ivfpq_index(
     models, so append-then-probe ≡ rebuild-then-probe, tested). Same
     geometry guard and single-writer contract as
     `append_to_ann_index`."""
-    _check_name(name)
     spark = new_df.sparkSession
-    geom = _stored_geometry(spark, name)
-    if geom.get("num_buckets") is not None and geom["num_buckets"] != num_buckets:
-        raise ValueError(
-            f"IVFPQ index '{name}' was built with num_buckets="
-            f"{geom['num_buckets']}, called with {num_buckets}; appended "
-            "rows would land in the wrong buckets."
-        )
+    index_store.check_geometry(
+        spark, name, _IVFPQ, {"num_buckets": num_buckets}, "IVFPQ"
+    )
     C = load_ann_centroids(spark, name)
     cb = load_pq_codebooks(spark, name)
-    _encode_residuals(_route(new_df, id_col, vec_col, C), C, cb).write.mode(
-        "append"
-    ).format("parquet").bucketBy(num_buckets, "cell").sortBy("cell").saveAsTable(
-        f"{name}_cells"
+    index_store.append(
+        spark,
+        name,
+        _IVFPQ[:1],
+        [_encode_residuals(_route(new_df, id_col, vec_col, C), C, cb)],
+        num_buckets,
     )
 
 
@@ -723,12 +592,11 @@ class IvfPqProbe:
 
     def __init__(self, spark: SparkSession, name: str):
         self.spark = spark
-        self.name = _check_name(name)
+        self.name = index_store.check_name(name)
         self.refresh()
 
     def refresh(self) -> "IvfPqProbe":
-        _refresh(self.spark, self.name)
-        self.spark.catalog.refreshTable(f"{self.name}_codebooks")
+        index_store.refresh(self.spark, self.name, _IVFPQ)
         self.C = load_ann_centroids(self.spark, self.name)
         self.cb = load_pq_codebooks(self.spark, self.name)
         return self
@@ -861,30 +729,7 @@ def compact_ivfpq_index(
     so probes are bit-identical before/after; same staging-swap
     atomicity (a crash mid-compact leaves the live index untouched).
     Returns ``{"files_before": n, "files_after": n}``."""
-    _check_name(name)
-    _refresh(spark, name)
-    spark.catalog.refreshTable(f"{name}_codebooks")
-    geom = _stored_geometry(spark, name)
-    num_buckets = geom["num_buckets"]
-
-    def _nfiles():
-        return (
-            spark.table(f"{name}_cells")
-            .select(F.input_file_name())
-            .distinct()
-            .count()
-        )
-
-    files_before = _nfiles()
-    C = load_ann_centroids(spark, name)
-    cb = load_pq_codebooks(spark, name)
-    from .bm25_index import _live_location
-
-    loc = _live_location(spark, f"{name}_cells")
-    src = spark.read.parquet(loc) if loc else spark.table(f"{name}_cells")
-    codes = src.repartition(num_buckets, F.col("cell"))
-    _write_pq_staged(spark, name, codes, C, cb, num_buckets, path)
-    return {"files_before": files_before, "files_after": _nfiles()}
+    return index_store.compact(spark, name, _IVFPQ, path)
 
 
 def ivfpq_index_report(spark: SparkSession, name: str) -> DataFrame:
@@ -899,8 +744,7 @@ def ivfpq_index_report(spark: SparkSession, name: str) -> DataFrame:
     raw vectors the codes table deliberately no longer stores — decode
     error vs the ORIGINAL vectors is `similarity.pq_recall_report`'s
     job at build/validate time."""
-    _check_name(name)
-    _refresh(spark, name)
+    index_store.refresh(spark, name, _IVFPQ)
     cells = spark.table(f"{name}_cells")
     per = cells.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_vecs"),
@@ -930,6 +774,16 @@ def ivfpq_index_report(spark: SparkSession, name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _sig_rows(df: DataFrame, id_col: str, vec_col: str, keep_vectors: bool) -> DataFrame:
+    from .similarity import binary_signatures
+
+    base = binary_signatures(df.select(id_col, vec_col), vec_col)
+    cols = [F.col(id_col).alias("id"), F.col("sig")]
+    if keep_vectors:
+        cols.append(F.col(vec_col).alias("vec"))
+    return base.select(*cols)
+
+
 def build_sig_index(
     df: DataFrame,
     id_col: str,
@@ -943,26 +797,9 @@ def build_sig_index(
     ``keep_vectors=False`` stores signatures only (8 B/vector at 64
     dims) — probes then serve the coarse Hamming ranking and refuse
     re-ranking loudly."""
-    from .similarity import binary_signatures
-
-    _check_name(name)
-    spark = df.sparkSession
-    base = binary_signatures(df.select(id_col, vec_col), vec_col)
-    cols = [F.col(id_col).alias("id"), F.col("sig")]
-    if keep_vectors:
-        cols.append(F.col(vec_col).alias("vec"))
-    write_bucketed(
-        base.select(*cols),
-        f"{name}_sigs",
-        ["id"],
-        num_buckets=num_buckets,
-        sort_cols=["id"],
-        path=None if path is None else f"{path}/sigs",
-    )
-    spark.sql(
-        f"ALTER TABLE {name}_sigs SET TBLPROPERTIES "
-        f"('bitfilters.num_buckets'='{num_buckets}', "
-        f"'bitfilters.keep_vectors'='{int(keep_vectors)}')"
+    index_store.publish(
+        df.sparkSession, name, _SIG, [_sig_rows(df, id_col, vec_col, keep_vectors)],
+        {"num_buckets": num_buckets, "keep_vectors": int(keep_vectors)}, path,
     )
 
 
@@ -977,27 +814,15 @@ def append_to_sig_index(
     scan-speed); the stored layout decides whether vectors ride along.
     Same geometry guard and single-writer contract as the other index
     families."""
-    from .similarity import binary_signatures
-
-    _check_name(name)
     spark = new_df.sparkSession
-    rows = spark.sql(f"SHOW TBLPROPERTIES {name}_sigs").collect()
-    props = {r["key"]: r["value"] for r in rows}
-    stored_nb = props.get("bitfilters.num_buckets")
-    if stored_nb is not None and int(stored_nb) != num_buckets:
-        raise ValueError(
-            f"signature index '{name}' was built with num_buckets="
-            f"{stored_nb}, called with {num_buckets}; appended rows "
-            "would land in the wrong buckets."
-        )
-    keep_vectors = props.get("bitfilters.keep_vectors", "1") == "1"
-    base = binary_signatures(new_df.select(id_col, vec_col), vec_col)
-    cols = [F.col(id_col).alias("id"), F.col("sig")]
-    if keep_vectors:
-        cols.append(F.col(vec_col).alias("vec"))
-    base.select(*cols).write.mode("append").format("parquet").bucketBy(
-        num_buckets, "id"
-    ).sortBy("id").saveAsTable(f"{name}_sigs")
+    stored = index_store.check_geometry(
+        spark, name, _SIG, {"num_buckets": num_buckets}, "signature"
+    )
+    keep_vectors = stored.get("keep_vectors", 1) == 1
+    index_store.append(
+        spark, name, _SIG, [_sig_rows(new_df, id_col, vec_col, keep_vectors)],
+        num_buckets,
+    )
 
 
 def sig_query_index(
@@ -1025,7 +850,7 @@ def sig_query_index(
         binary_signatures,
     )
 
-    _check_name(name)
+    index_store.check_name(name)
     _check_query_count(queries, max_queries, "sig_query_index")
     sigs = spark.table(f"{name}_sigs")
     q = binary_signatures(queries.select(id_col, vec_col), vec_col).select(
@@ -1051,46 +876,5 @@ def sig_query_index(
 
 def compact_sig_index(spark: SparkSession, name: str, path: str | None = None) -> dict:
     """Rewrite the signature table into one file-set per bucket —
-    rows/probe results unchanged, staging-swap atomicity with the
-    alternating external directories (the family contract)."""
-    from .bm25_index import _live_location
-
-    _check_name(name)
-    spark.catalog.refreshTable(f"{name}_sigs")
-    rows = spark.sql(f"SHOW TBLPROPERTIES {name}_sigs").collect()
-    props = {
-        r["key"]: r["value"] for r in rows if r["key"].startswith("bitfilters.")
-    }
-    if "bitfilters.num_buckets" not in props:
-        raise ValueError(
-            f"signature index '{name}' carries no stored geometry; "
-            "compaction needs the bucket count to preserve the layout."
-        )
-    nb = int(props["bitfilters.num_buckets"])
-
-    def _nfiles():
-        return (
-            spark.table(f"{name}_sigs")
-            .select(F.input_file_name())
-            .distinct()
-            .count()
-        )
-
-    files_before = _nfiles()
-    stage = f"{name}__stage"
-    spark.sql(f"DROP TABLE IF EXISTS {stage}_sigs")
-    loc = _live_location(spark, f"{name}_sigs")
-    src = spark.read.parquet(loc) if loc else spark.table(f"{name}_sigs")
-    write_bucketed(
-        src.repartition(nb, F.col("id")),
-        f"{stage}_sigs",
-        ["id"],
-        num_buckets=nb,
-        sort_cols=["id"],
-        path=_stage_path(spark, f"{name}_sigs", path, f"{name}_sigs"),
-    )
-    kv = ", ".join(f"'{k_}'='{v}'" for k_, v in props.items())
-    spark.sql(f"ALTER TABLE {stage}_sigs SET TBLPROPERTIES ({kv})")
-    spark.sql(f"DROP TABLE IF EXISTS {name}_sigs")
-    spark.sql(f"ALTER TABLE {stage}_sigs RENAME TO {name}_sigs")
-    return {"files_before": files_before, "files_after": _nfiles()}
+    rows/probe results unchanged, published like a build."""
+    return index_store.compact(spark, name, _SIG, path)

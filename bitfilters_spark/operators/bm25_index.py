@@ -15,9 +15,9 @@ between query batches. This module splits that cost:
   at probe time, which is what makes :func:`append_to_bm25_index`
   incremental. Bucketing + in-bucket token sort pre-pay the probe-time
   work: a query's postings live in known buckets, in sorted runs parquet
-  min/max stats prune to. The build lands in STAGING tables first and
-  swaps into place only after every write succeeds — a failed rebuild
-  leaves the previous index fully queryable.
+  min/max stats prune to. The build publishes through
+  `sources/index_store.py`: a failed rebuild leaves the previous index
+  fully queryable.
 * :func:`append_to_bm25_index` — fold NEW documents in at cost ∝ the new
   data (the `append_to_lsh_index` maintenance pattern): postings append
   into the bucketed layout, vocab/stats append partial rows. The indexed
@@ -47,89 +47,14 @@ postings, like re-appending to the LSH index duplicates its band rows).
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.io import write_bucketed
+from ..sources import index_store
+from ..sources.index_store import Table
 from .text import bm25_contribution, tokens
 
-_SUFFIXES = ("postings", "vocab", "stats")
-
-
-def _check_name(name: str) -> str:
-    """Index names are interpolated into SQL DDL statements — restrict to
-    identifier characters so a crafted name cannot smuggle SQL."""
-    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
-        raise ValueError(
-            f"index name {name!r} must be a plain SQL identifier "
-            "([A-Za-z_][A-Za-z0-9_]*)"
-        )
-    return name
-
-
-def _live_location(spark: SparkSession, table: str) -> str:
-    """The live table's storage location ('' when the table doesn't
-    exist) — used to pick a staging directory a rebuild can safely
-    overwrite."""
-    try:
-        if not spark.catalog.tableExists(table):
-            return ""
-        rows = spark.sql(f"DESCRIBE FORMATTED {table}").collect()
-    except Exception:
-        return ""
-    for r in rows:
-        if (r["col_name"] or "").strip() == "Location":
-            return (r["data_type"] or "").strip()
-    return ""
-
-
-def _stage_path(
-    spark: SparkSession, table: str, path: str | None, base: str
-) -> str | None:
-    """Staging directory for an EXTERNAL (path=) rebuild of ``table``.
-
-    After the first build's rename, the live table POINTS AT the
-    directory the build staged into — a second build staging into that
-    same directory would overwrite the live data mid-rebuild and a
-    failed rebuild would destroy the previous index (the exact
-    atomicity the staging-swap exists to provide). Rebuilds therefore
-    ALTERNATE between two staging directories, picking whichever one
-    the live table does not currently occupy; at most two directories
-    ever exist per table and the stale one is overwritten by the next
-    rebuild, so no cleanup pass is needed."""
-    if path is None:
-        return None
-    live = _live_location(spark, table).rstrip("/")
-    a, b = f"{base}__stage_a", f"{base}__stage_b"
-    pick = b if live.endswith(a) else a
-    return f"{path}/{pick}"
-
-
-def _write_geom(spark: SparkSession, name: str, num_buckets: int) -> None:
-    """Stamp the bucket geometry on the postings table (the
-    `neardup_index` convention) so an append with a different bucket
-    count fails loudly instead of silently breaking co-located probes."""
-    spark.sql(
-        f"ALTER TABLE {name}_postings SET TBLPROPERTIES "
-        f"('bitfilters.num_buckets'='{num_buckets}')"
-    )
-
-
-def _check_geom(spark: SparkSession, name: str, num_buckets: int) -> None:
-    try:
-        rows = spark.sql(f"SHOW TBLPROPERTIES {name}_postings").collect()
-    except Exception:
-        return
-    props = {r["key"]: r["value"] for r in rows}
-    have = props.get("bitfilters.num_buckets")
-    if have is not None and int(have) != num_buckets:
-        raise ValueError(
-            f"BM25 index '{name}' was built with num_buckets={have}, called "
-            f"with num_buckets={num_buckets}; appended rows would land in "
-            "the wrong buckets. Pass the stored geometry."
-        )
+_LAYOUT = (Table("postings", "token", sort=True), Table("vocab", "token"), Table("stats"))
 
 
 def _corpus_tables(
@@ -166,74 +91,21 @@ def build_bm25_index(
     path: str | None = None,
 ) -> dict:
     """Build and persist the index; returns ``{"n_docs": float, "avgdl":
-    float}``. ``path`` makes the tables EXTERNAL (data under
-    ``path/<table>__stage``, bucket metadata in the catalog) — same
-    contract as the LSH index; without it the managed warehouse location
-    must not already hold an orphaned directory for the staging names.
+    float}``. ``path`` makes the tables EXTERNAL (data under ``path``,
+    bucket metadata in the catalog).
 
-    Atomicity: every table is written to ``<name>__stage_<suffix>`` first
-    and the old index stays live until all three staging writes succeed;
-    the final swap is metadata-only (drop + rename). A crash mid-build
-    leaves the previous index untouched; a crash mid-swap (a window of
-    three catalog statements, not a corpus scan) leaves the staging
-    tables intact for a re-run."""
-    _check_name(name)
+    Atomicity: the three tables are published through
+    :func:`index_store.publish` — the old index stays live until every
+    write succeeds, and the final swap is metadata-only."""
     spark = df.sparkSession
-    stage = f"{name}__stage"
-    for suffix in _SUFFIXES:
-        spark.sql(f"DROP TABLE IF EXISTS {stage}_{suffix}")
-
-    postings, vocab, stats = _corpus_tables(df, id_col, text_col)
-    _write_staged(spark, name, postings, vocab, stats, num_buckets, path)
+    index_store.publish(
+        spark, name, _LAYOUT,
+        _corpus_tables(df, id_col, text_col), {"num_buckets": num_buckets}, path,
+    )
     row = spark.table(f"{name}_stats").collect()[0]
     n_docs = float(row["n_docs"])
     avgdl = row["sum_dl"] / n_docs if n_docs else 1.0
     return {"n_docs": n_docs, "avgdl": avgdl}
-
-
-def _write_staged(
-    spark: SparkSession,
-    name: str,
-    postings: DataFrame,
-    vocab: DataFrame,
-    stats: DataFrame,
-    num_buckets: int,
-    path: str | None,
-) -> None:
-    """Write the three index tables to staging names (external data in
-    per-rebuild alternating directories — see :func:`_stage_path`) and
-    swap them live with metadata-only statements. Shared by build and
-    compact, so both carry the same atomicity contract."""
-    stage = f"{name}__stage"
-    for suffix in _SUFFIXES:
-        spark.sql(f"DROP TABLE IF EXISTS {stage}_{suffix}")
-    write_bucketed(
-        postings,
-        f"{stage}_postings",
-        ["token"],
-        num_buckets=num_buckets,
-        sort_cols=["token"],
-        path=_stage_path(spark, f"{name}_postings", path, f"{name}_postings"),
-    )
-    write_bucketed(
-        vocab,
-        f"{stage}_vocab",
-        ["token"],
-        num_buckets=num_buckets,
-        path=_stage_path(spark, f"{name}_vocab", path, f"{name}_vocab"),
-    )
-    sw = stats.write.mode("overwrite")
-    if path:
-        sw = sw.option(
-            "path", _stage_path(spark, f"{name}_stats", path, f"{name}_stats")
-        )
-    sw.saveAsTable(f"{stage}_stats")
-    _write_geom(spark, stage, num_buckets)
-
-    # all three staging writes succeeded — swap (metadata-only)
-    for suffix in _SUFFIXES:
-        spark.sql(f"DROP TABLE IF EXISTS {name}_{suffix}")
-        spark.sql(f"ALTER TABLE {stage}_{suffix} RENAME TO {name}_{suffix}")
 
 
 def compact_bm25_index(
@@ -244,57 +116,27 @@ def compact_bm25_index(
     month of streaming micro-batches leaves thousands) fold into one row
     each. Probe results are identical before/after — postings carry the
     same rows, and the probe was already summing the partials it now
-    finds pre-summed. Same staging-swap atomicity as a build: a crash
-    mid-compact leaves the live index untouched and fully queryable.
+    finds pre-summed. Published like a build: a crash mid-compact
+    leaves the live index untouched and fully queryable.
 
     ``path`` must be passed (the same value) for indexes built external;
     geometry is read from the stored table properties. Returns
     ``{"files_before": n, "files_after": n}`` for the postings table —
     the compaction's reason to exist (probe plans degrade with file
     count even though answers stay exact)."""
-    _check_name(name)
-    _refresh(spark, name)
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {name}_postings").collect()
-    }
-    num_buckets = int(props["bitfilters.num_buckets"])
-
-    def _nfiles():
-        return (
-            spark.table(f"{name}_postings")
-            .select(F.input_file_name())
-            .distinct()
-            .count()
-        )
-
-    files_before = _nfiles()
-    # repartition ON the bucket column into num_buckets tasks: bucketed
-    # writes emit one file per bucket PER TASK, and Spark's repartition
-    # hashing is the same pmod the bucket router uses, so each task holds
-    # exactly one bucket => exactly one file per bucket. Read the FILES,
-    # not the table: the bucketed-table read ADVERTISES
-    # HashPartitioning(token, nb), so the optimizer elides the
-    # repartition as redundant — while the physical scan packs small
-    # files into mixed-bucket partitions, leaving buckets split across
-    # tasks (observed: 6 files for 4 buckets).
-    loc = _live_location(spark, f"{name}_postings")
-    postings_src = (
-        spark.read.parquet(loc) if loc else spark.table(f"{name}_postings")
+    return index_store.compact(
+        spark,
+        name,
+        _LAYOUT,
+        path,
+        folds={
+            "vocab": lambda t: t.groupBy("token").agg(F.sum("df").alias("df")),
+            "stats": lambda t: t.agg(
+                F.coalesce(F.sum("n_docs"), F.lit(0).cast("long")).alias("n_docs"),
+                F.coalesce(F.sum("sum_dl"), F.lit(0).cast("long")).alias("sum_dl"),
+            ),
+        },
     )
-    postings = postings_src.repartition(num_buckets, F.col("token"))
-    vocab = (
-        spark.table(f"{name}_vocab")
-        .groupBy("token")
-        .agg(F.sum("df").alias("df"))
-        .repartition(num_buckets, F.col("token"))
-    )
-    stats = spark.table(f"{name}_stats").agg(
-        F.coalesce(F.sum("n_docs"), F.lit(0).cast("long")).alias("n_docs"),
-        F.coalesce(F.sum("sum_dl"), F.lit(0).cast("long")).alias("sum_dl"),
-    )
-    _write_staged(spark, name, postings, vocab, stats, num_buckets, path)
-    return {"files_before": files_before, "files_after": _nfiles()}
 
 
 def append_to_bm25_index(
@@ -310,34 +152,19 @@ def append_to_bm25_index(
     append as partial rows the probe sums — all three statistics are
     additive, so append-then-probe ≡ rebuild-then-probe bit-exactly
     (tested). The indexed corpus is never rescanned."""
-    _check_name(name)
     spark = new_df.sparkSession
-    _check_geom(spark, name, num_buckets)
-    postings, vocab, stats = _corpus_tables(new_df, id_col, text_col)
-    postings.write.mode("append").format("parquet").bucketBy(
-        num_buckets, "token"
-    ).sortBy("token").saveAsTable(f"{name}_postings")
-    vocab.write.mode("append").format("parquet").bucketBy(
-        num_buckets, "token"
-    ).saveAsTable(f"{name}_vocab")
-    stats.write.mode("append").format("parquet").saveAsTable(f"{name}_stats")
-
-
-def _refresh(spark: SparkSession, name: str, suffixes=_SUFFIXES) -> None:
-    """Drop this session's cached FileIndex snapshots for the index
-    tables: appends from ANOTHER session (a foreachBatch clone in
-    streaming maintenance, a second writer process) land on disk and in
-    the shared catalog, but a session that already read the table keeps
-    serving its cached file listing — refreshTable is metadata-only and
-    makes every probe see the latest appended files."""
-    for suffix in suffixes:
-        spark.catalog.refreshTable(f"{name}_{suffix}")
+    index_store.check_geometry(
+        spark, name, _LAYOUT, {"num_buckets": num_buckets}, "BM25"
+    )
+    index_store.append(
+        spark, name, _LAYOUT, _corpus_tables(new_df, id_col, text_col), num_buckets
+    )
 
 
 def bm25_index_stats(spark: SparkSession, name: str) -> dict:
     """Live ``{"n_docs": float, "avgdl": float}`` from the additive stats
     partials (one row per build/append)."""
-    _refresh(spark, _check_name(name))
+    index_store.refresh(spark, name, _LAYOUT)
     row = (
         spark.table(f"{name}_stats")
         .agg(F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("s"))
@@ -365,7 +192,7 @@ class BM25Probe:
         b: float = 0.75,
     ):
         self.spark = spark
-        self.name = _check_name(name)
+        self.name = index_store.check_name(name)
         self.k1, self.b = k1, b
         self.refresh()
 

@@ -47,6 +47,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..sources import index_store
+from ..sources.index_store import Table
+
 __all__ = [
     "gear_table",
     "cdc_chunks",
@@ -287,51 +290,30 @@ def cdc_dup_report(
 # a re-crawl dedups against YESTERDAY'S corpus without rescanning it).
 # The `neardup_index.py` (#75) contract applied to chunk hashes: one
 # bucketed, geometry-stamped table `<name>_chunks`, append cost ∝ new
-# data, probe-time index side never shuffles, staging-swap compaction.
+# data, probe-time index side never shuffles; builds and compaction go
+# through `sources/index_store.py`.
 # ---------------------------------------------------------------------------
 
-_CDC_GEOM_KEYS = ("min_size", "avg_size", "max_size", "num_buckets")
+_LAYOUT = (Table("chunks", "chunk_hash", sort=True),)
 
 
-def _cdc_geom(min_size: int, avg_size: int, max_size: int, num_buckets: int) -> dict:
-    return {
-        "min_size": min_size,
-        "avg_size": avg_size,
-        "max_size": max_size,
-        "num_buckets": num_buckets,
-    }
+def _cdc_geom(min_size: int, avg_size: int, max_size: int, **writer) -> dict:
+    """The stamped geometry: different chunking parameters cut different
+    boundaries, so probe hashes would simply never match the stored ones
+    — checked, instead of a silent near-zero dedup."""
+    return {"min_size": min_size, "avg_size": avg_size, "max_size": max_size, **writer}
 
 
-def _check_cdc_geom(spark, name: str, geom: dict) -> None:
-    """Fail fast on a geometry mismatch: different chunking parameters
-    cut different boundaries, so probe hashes would simply never match
-    the stored ones — silent near-zero dedup instead of an error."""
-    try:
-        rows = spark.sql(f"SHOW TBLPROPERTIES {name}_chunks").collect()
-    except Exception:
-        return
-    props = {r["key"]: r["value"] for r in rows}
-    for g, want in geom.items():
-        have = props.get(f"bitfilters.{g}")
-        if have is not None and int(have) != want:
-            raise ValueError(
-                f"CDC index '{name}' was built with {g}={have}, called "
-                f"with {g}={want}; mismatched chunking geometry yields "
-                "near-zero dedup. Rebuild the index or pass the stored "
-                "geometry (cdc_index_geometry)."
-            )
+def _chunk_rows(df, id_col, text_col, min_size, avg_size, max_size) -> DataFrame:
+    return cdc_chunks(
+        df, id_col, text_col, min_size, avg_size, max_size, keep_bytes=False
+    ).select("chunk_hash", F.col(id_col).alias("id"), "chunk_id", "length")
 
 
 def cdc_index_geometry(spark, name: str) -> dict:
     """The stored {min_size, avg_size, max_size, num_buckets} of a
     persisted chunk-hash index — pass these to probe/append."""
-    rows = spark.sql(f"SHOW TBLPROPERTIES {name}_chunks").collect()
-    props = {r["key"]: r["value"] for r in rows}
-    return {
-        g: int(props[f"bitfilters.{g}"])
-        for g in _CDC_GEOM_KEYS
-        if f"bitfilters.{g}" in props
-    }
+    return index_store.geometry(spark, name, _LAYOUT)
 
 
 def build_cdc_index(
@@ -352,25 +334,14 @@ def build_cdc_index(
     posture). Chunk payload bytes are NOT stored — the 60-bit md5 over
     ≥min_size-byte chunks is the identity, the same collision posture
     as every hash-keyed dedup in `dedup.py`/`substring.py`."""
-    from .bm25_index import _check_name
-    from ..sources.io import write_bucketed
-
-    _check_name(name)
-    spark = df.sparkSession
-    chunks = cdc_chunks(
-        df, id_col, text_col, min_size, avg_size, max_size, keep_bytes=False
-    ).select("chunk_hash", F.col(id_col).alias("id"), "chunk_id", "length")
-    write_bucketed(
-        chunks,
-        f"{name}_chunks",
-        ["chunk_hash"],
-        num_buckets=num_buckets,
-        sort_cols=["chunk_hash"],
-        path=None if path is None else f"{path}/chunks",
+    index_store.publish(
+        df.sparkSession,
+        name,
+        _LAYOUT,
+        [_chunk_rows(df, id_col, text_col, min_size, avg_size, max_size)],
+        _cdc_geom(min_size, avg_size, max_size, num_buckets=num_buckets),
+        path,
     )
-    geom = _cdc_geom(min_size, avg_size, max_size, num_buckets)
-    props = ", ".join(f"'bitfilters.{g}'='{v}'" for g, v in geom.items())
-    spark.sql(f"ALTER TABLE {name}_chunks SET TBLPROPERTIES ({props})")
 
 
 def append_to_cdc_index(
@@ -390,17 +361,17 @@ def append_to_cdc_index(
     over the union (pinned in pytest). Single-writer contract, like
     `append_to_lsh_index`."""
     spark = new_df.sparkSession
-    _check_cdc_geom(
-        spark, name, _cdc_geom(min_size, avg_size, max_size, num_buckets)
+    index_store.check_geometry(
+        spark, name, _LAYOUT,
+        _cdc_geom(min_size, avg_size, max_size, num_buckets=num_buckets), "CDC",
     )
-    cdc_chunks(
-        new_df, id_col, text_col, min_size, avg_size, max_size,
-        keep_bytes=False,
-    ).select("chunk_hash", F.col(id_col).alias("id"), "chunk_id", "length").write.mode(
-        "append"
-    ).format("parquet").bucketBy(num_buckets, "chunk_hash").sortBy(
-        "chunk_hash"
-    ).saveAsTable(f"{name}_chunks")
+    index_store.append(
+        spark,
+        name,
+        _LAYOUT,
+        [_chunk_rows(new_df, id_col, text_col, min_size, avg_size, max_size)],
+        num_buckets,
+    )
 
 
 def probe_cdc_index(
@@ -422,10 +393,8 @@ def probe_cdc_index(
     zeros (the `cdc_dup_report` convention)."""
     # probes don't write, so only the CHUNKING geometry is checked
     # (num_buckets is a writer concern)
-    _check_cdc_geom(
-        spark,
-        name,
-        {"min_size": min_size, "avg_size": avg_size, "max_size": max_size},
+    index_store.check_geometry(
+        spark, name, _LAYOUT, _cdc_geom(min_size, avg_size, max_size), "CDC"
     )
     new_chunks = cdc_chunks(
         new_df, id_col, text_col, min_size, avg_size, max_size,
@@ -502,44 +471,5 @@ def compact_cdc_index(spark, name: str, path: str | None = None) -> dict:
     """Rewrite the chunk table into one file-set per bucket (every
     append adds a file-set forever; answers stay exact but probe plans
     degrade with file count). Rows, geometry, and probe results are
-    unchanged; staging-swap atomicity with per-rebuild ALTERNATING
-    external directories — the `compact_lsh_index` contract."""
-    from .bm25_index import _check_name, _live_location, _stage_path
-    from ..sources.io import write_bucketed
-
-    _check_name(name)
-    spark.catalog.refreshTable(f"{name}_chunks")
-    geom = cdc_index_geometry(spark, name)
-    if "num_buckets" not in geom:
-        raise ValueError(
-            f"CDC index '{name}' carries no stored geometry; compaction "
-            "needs the bucket count to preserve the layout."
-        )
-    nb = geom["num_buckets"]
-
-    def _nfiles():
-        return (
-            spark.table(f"{name}_chunks")
-            .select(F.input_file_name())
-            .distinct()
-            .count()
-        )
-
-    files_before = _nfiles()
-    stage = f"{name}__stage"
-    spark.sql(f"DROP TABLE IF EXISTS {stage}_chunks")
-    loc = _live_location(spark, f"{name}_chunks")
-    src = spark.read.parquet(loc) if loc else spark.table(f"{name}_chunks")
-    write_bucketed(
-        src.repartition(nb, F.col("chunk_hash")),
-        f"{stage}_chunks",
-        ["chunk_hash"],
-        num_buckets=nb,
-        sort_cols=["chunk_hash"],
-        path=_stage_path(spark, f"{name}_chunks", path, f"{name}_chunks"),
-    )
-    props = ", ".join(f"'bitfilters.{g}'='{v}'" for g, v in geom.items())
-    spark.sql(f"ALTER TABLE {stage}_chunks SET TBLPROPERTIES ({props})")
-    spark.sql(f"DROP TABLE IF EXISTS {name}_chunks")
-    spark.sql(f"ALTER TABLE {stage}_chunks RENAME TO {name}_chunks")
-    return {"files_before": files_before, "files_after": _nfiles()}
+    unchanged; published like a build."""
+    return index_store.compact(spark, name, _LAYOUT, path)

@@ -32,7 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.io import write_bucketed
+from ..sources import index_store
+from ..sources.index_store import Table
 from .dedup import minhash_signatures
 from .text import word_shingles
 
@@ -70,46 +71,24 @@ def _banded(sig: DataFrame, id_col: str, k: int, bands: int) -> DataFrame:
     )
 
 
-_GEOM_KEYS = ("k", "bands", "shingle_n", "num_buckets")
+# the geometry (k, bands, shingle_n, num_buckets) is stamped on the bands
+# table: a probe or append with another geometry would not error — band
+# hashes simply never collide — so it is checked instead of silent zero
+# recall
+_LAYOUT = (Table("bands", "bh"), Table("shingles", "id"))
 
 
-def _write_geom(spark: SparkSession, name: str, geom: dict) -> None:
-    """Persist the index geometry as table properties on ``<name>_bands``.
-    Probe/append with a different geometry would not error — band hashes
-    simply never collide — so it must be an explicit failure instead of
-    silent zero recall."""
-    props = ", ".join(f"'bitfilters.{g}'='{geom[g]}'" for g in _GEOM_KEYS)
-    spark.sql(f"ALTER TABLE {name}_bands SET TBLPROPERTIES ({props})")
-
-
-def _check_geom(spark: SparkSession, name: str, geom: dict) -> None:
-    """Fail fast when the caller's geometry disagrees with the persisted
-    one. Indexes built before geometry stamping (no properties) pass."""
-    try:
-        rows = spark.sql(f"SHOW TBLPROPERTIES {name}_bands").collect()
-    except Exception:
-        return
-    props = {r["key"]: r["value"] for r in rows}
-    for g, want in geom.items():
-        have = props.get(f"bitfilters.{g}")
-        if have is not None and int(have) != want:
-            raise ValueError(
-                f"LSH index '{name}' was built with {g}={have}, called with "
-                f"{g}={want}; mismatched geometry yields near-zero recall. "
-                f"Rebuild the index or pass the stored geometry."
-            )
+def _shingle_sets(df: DataFrame, id_col: str, text_col: str, shingle_n: int) -> DataFrame:
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.array_distinct(word_shingles(text_col, shingle_n)).alias("sh"),
+    )
 
 
 def lsh_index_geometry(spark: SparkSession, name: str) -> dict:
     """The stored {k, bands, shingle_n, num_buckets} of a persisted index
     (empty dict for pre-stamping indexes) — pass these to probe/append."""
-    rows = spark.sql(f"SHOW TBLPROPERTIES {name}_bands").collect()
-    props = {r["key"]: r["value"] for r in rows}
-    return {
-        g: int(props[f"bitfilters.{g}"])
-        for g in _GEOM_KEYS
-        if f"bitfilters.{g}" in props
-    }
+    return index_store.geometry(spark, name, _LAYOUT)
 
 
 def build_lsh_index(
@@ -129,28 +108,13 @@ def build_lsh_index(
     ``minhash_signatures``); the only shuffles are the per-doc signature
     groupBy and the bucketed writes — both ∝ corpus size, paid once."""
     sig = minhash_signatures(df, id_col, text_col, k, shingle_n)
-    write_bucketed(
-        _banded(sig, id_col, k, bands),
-        f"{name}_bands",
-        ["bh"],
-        num_buckets=num_buckets,
-        path=None if path is None else f"{path}/bands",
-    )
-    shset = df.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(word_shingles(text_col, shingle_n)).alias("sh"),
-    )
-    write_bucketed(
-        shset,
-        f"{name}_shingles",
-        ["id"],
-        num_buckets=num_buckets,
-        path=None if path is None else f"{path}/shingles",
-    )
-    _write_geom(
+    index_store.publish(
         df.sparkSession,
         name,
+        _LAYOUT,
+        [_banded(sig, id_col, k, bands), _shingle_sets(df, id_col, text_col, shingle_n)],
         {"k": k, "bands": bands, "shingle_n": shingle_n, "num_buckets": num_buckets},
+        path,
     )
 
 
@@ -173,20 +137,21 @@ def append_to_lsh_index(
     never corrupt the bucketing; serialize appends (as
     ``streaming_neardup_dedup``'s per-micro-batch fold does) when probe
     results must reflect a consistent index version."""
-    _check_geom(
-        new_df.sparkSession,
+    spark = new_df.sparkSession
+    index_store.check_geometry(
+        spark,
         name,
+        _LAYOUT,
         {"k": k, "bands": bands, "shingle_n": shingle_n, "num_buckets": num_buckets},
+        "LSH",
     )
     sig = minhash_signatures(new_df, id_col, text_col, k, shingle_n)
-    _banded(sig, id_col, k, bands).write.mode("append").format("parquet").bucketBy(
-        num_buckets, "bh"
-    ).saveAsTable(f"{name}_bands")
-    new_df.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(word_shingles(text_col, shingle_n)).alias("sh"),
-    ).write.mode("append").format("parquet").bucketBy(num_buckets, "id").saveAsTable(
-        f"{name}_shingles"
+    index_store.append(
+        spark,
+        name,
+        _LAYOUT,
+        [_banded(sig, id_col, k, bands), _shingle_sets(new_df, id_col, text_col, shingle_n)],
+        num_buckets,
     )
 
 
@@ -206,7 +171,9 @@ def probe_lsh_index(
     the join keys); only the new side's band rows and candidate shingle
     sets move. LSH recall semantics are exactly ``minhash_lsh_pairs``:
     candidates from any shared band, then exact Jaccard >= threshold."""
-    _check_geom(spark, name, {"k": k, "bands": bands, "shingle_n": shingle_n})
+    index_store.check_geometry(
+        spark, name, _LAYOUT, {"k": k, "bands": bands, "shingle_n": shingle_n}, "LSH"
+    )
     sig = minhash_signatures(new_df, id_col, text_col, k, shingle_n)
     new_bands = _banded(sig, id_col, k, bands)
     ref_bands = spark.table(f"{name}_bands")
@@ -262,62 +229,8 @@ def compact_lsh_index(spark: SparkSession, name: str, path: str | None = None) -
     micro-batch fold) appends a file-set per bucket forever; probe
     answers stay exact but probe plans degrade with file count. Rows and
     geometry are unchanged — probe results are identical before/after
-    (joins + per-pair Jaccard, nothing order-sensitive). Staging-swap
-    atomicity (the `bm25_index` pattern, with per-rebuild ALTERNATING
-    external directories): a crash mid-compact leaves the live index
-    untouched and fully queryable. Returns bands-table file counts
+    (joins + per-pair Jaccard, nothing order-sensitive). Published like
+    a build: a crash mid-compact leaves the live index untouched and
+    fully queryable. Returns bands-table file counts
     ``{"files_before": n, "files_after": n}``."""
-    from .bm25_index import _check_name, _live_location, _stage_path
-
-    _check_name(name)
-    for suffix in ("bands", "shingles"):
-        spark.catalog.refreshTable(f"{name}_{suffix}")
-    geom = lsh_index_geometry(spark, name)
-    if "num_buckets" not in geom:
-        raise ValueError(
-            f"LSH index '{name}' carries no stored geometry; compaction "
-            "needs the bucket count to preserve the layout."
-        )
-    nb = geom["num_buckets"]
-
-    def _nfiles():
-        return (
-            spark.table(f"{name}_bands")
-            .select(F.input_file_name())
-            .distinct()
-            .count()
-        )
-
-    files_before = _nfiles()
-    stage = f"{name}__stage"
-    for suffix in ("bands", "shingles"):
-        spark.sql(f"DROP TABLE IF EXISTS {stage}_{suffix}")
-    # one-bucket-per-task repartition => exactly one file per bucket;
-    # read the FILES so the bucketed read's advertised partitioning
-    # cannot elide the repartition (see compact_bm25_index)
-    def _src(table):
-        loc = _live_location(spark, table)
-        return spark.read.parquet(loc) if loc else spark.table(table)
-
-    write_bucketed(
-        _src(f"{name}_bands").repartition(nb, F.col("bh")),
-        f"{stage}_bands",
-        ["bh"],
-        num_buckets=nb,
-        path=_stage_path(spark, f"{name}_bands", path, f"{name}_bands"),
-    )
-    write_bucketed(
-        _src(f"{name}_shingles").repartition(nb, F.col("id")),
-        f"{stage}_shingles",
-        ["id"],
-        num_buckets=nb,
-        path=_stage_path(spark, f"{name}_shingles", path, f"{name}_shingles"),
-    )
-    # re-stamp whatever geometry keys the live index carried (pre-swap,
-    # so a crash between swap statements never leaves a stampless index)
-    props = ", ".join(f"'bitfilters.{g}'='{v}'" for g, v in geom.items())
-    spark.sql(f"ALTER TABLE {stage}_bands SET TBLPROPERTIES ({props})")
-    for suffix in ("bands", "shingles"):
-        spark.sql(f"DROP TABLE IF EXISTS {name}_{suffix}")
-        spark.sql(f"ALTER TABLE {stage}_{suffix} RENAME TO {name}_{suffix}")
-    return {"files_before": files_before, "files_after": _nfiles()}
+    return index_store.compact(spark, name, _LAYOUT, path)

@@ -8,10 +8,10 @@ position, in which documents.)
 
 Layout: one bucketed, token-sorted postings table ``<name>_postings``
 (token, id, positions array) — the `bm25_index` layout with the term
-positions kept instead of collapsed to tf. Same staging-swap atomic
-builds, SQL-identifier validation, geometry stamping, and append
-maintenance (positions are per-document-complete, so appending NEW
-documents is a plain bucketed append).
+positions kept instead of collapsed to tf. Builds, geometry and
+compaction go through `sources/index_store.py`, like every index family;
+positions are per-document-complete, so appending NEW documents is a
+plain bucketed append.
 
 Probe algebra (`phrase_search`): a phrase "a b c" matches doc d at
 position p iff p ∈ positions(a,d) ∧ p+1 ∈ positions(b,d) ∧ p+2 ∈
@@ -32,8 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.io import write_bucketed
-from .bm25_index import _check_name, _live_location, _stage_path
+from ..sources import index_store
+from ..sources.index_store import Table
 from .text import tokens
 
 __all__ = [
@@ -43,6 +43,8 @@ __all__ = [
     "phrase_search",
     "phrase_contains",
 ]
+
+_LAYOUT = (Table("postings", "token", sort=True),)
 
 
 def _postings(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -56,16 +58,6 @@ def _postings(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _geom(spark: SparkSession, name: str) -> int | None:
-    try:
-        rows = spark.sql(f"SHOW TBLPROPERTIES {name}_postings").collect()
-    except Exception:
-        return None
-    props = {r["key"]: r["value"] for r in rows}
-    v = props.get("bitfilters.num_buckets")
-    return int(v) if v is not None else None
-
-
 def build_phrase_index(
     df: DataFrame,
     id_col: str,
@@ -74,27 +66,12 @@ def build_phrase_index(
     num_buckets: int = 32,
     path: str | None = None,
 ) -> None:
-    """One-time corpus scan persisting the positional postings table —
-    staging-swap atomic (a failed rebuild leaves the previous index
-    queryable; external rebuilds alternate staging directories, the
-    `bm25_index` contract)."""
-    _check_name(name)
-    spark = df.sparkSession
-    stage = f"{name}__stage_postings"
-    spark.sql(f"DROP TABLE IF EXISTS {stage}")
-    write_bucketed(
-        _postings(df, id_col, text_col),
-        stage,
-        ["token"],
-        num_buckets=num_buckets,
-        sort_cols=["token"],
-        path=_stage_path(spark, f"{name}_postings", path, f"{name}_postings"),
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {name}_postings")
-    spark.sql(f"ALTER TABLE {stage} RENAME TO {name}_postings")
-    spark.sql(
-        f"ALTER TABLE {name}_postings SET TBLPROPERTIES "
-        f"('bitfilters.num_buckets'='{num_buckets}')"
+    """One-time corpus scan persisting the positional postings table,
+    published through :func:`index_store.publish` (a failed rebuild
+    leaves the previous index queryable)."""
+    index_store.publish(
+        df.sparkSession, name, _LAYOUT, [_postings(df, id_col, text_col)],
+        {"num_buckets": num_buckets}, path,
     )
 
 
@@ -104,21 +81,12 @@ def append_to_phrase_index(
     """Fold NEW documents in at cost ∝ the new data (ids must be new —
     re-appending an indexed id would duplicate its postings, the
     `bm25_index`/`neardup_index` single-writer contract)."""
-    _check_name(name)
     spark = df.sparkSession
-    have = _geom(spark, name)
-    if have is not None and have != num_buckets:
-        raise ValueError(
-            f"phrase index '{name}' was built with num_buckets={have}, "
-            f"called with num_buckets={num_buckets}"
-        )
-    write_bucketed(
-        _postings(df, id_col, text_col),
-        f"{name}_postings",
-        ["token"],
-        num_buckets=num_buckets,
-        sort_cols=["token"],
-        mode="append",
+    index_store.check_geometry(
+        spark, name, _LAYOUT, {"num_buckets": num_buckets}, "phrase"
+    )
+    index_store.append(
+        spark, name, _LAYOUT, [_postings(df, id_col, text_col)], num_buckets
     )
 
 
@@ -144,8 +112,7 @@ def phrase_search(
     the driver (fail-fast over ``max_queries``, the `bm25_query_index`
     guard) to derive both the literal ``In`` pushdown and the broadcast
     term rows from the same result."""
-    _check_name(name)
-    spark.catalog.refreshTable(f"{name}_postings")
+    index_store.refresh(spark, name, _LAYOUT)
     # the caller's phrase_id type is preserved end-to-end (matching the
     # documented same-output contract of `phrase_contains`)
     pid_t = phrases.schema[id_col].dataType.simpleString()
@@ -271,47 +238,9 @@ def phrase_contains(
 def compact_phrase_index(
     spark: SparkSession, name: str, path: str | None = None
 ) -> dict:
-    """Rewrite the postings into one file-set per bucket (the
-    `compact_bm25_index` contract: appends/streaming folds add a
-    file-set each — probe answers stay exact but plans degrade with
-    file count). Staging-swap atomic; probe results identical
-    before/after. Returns {"files_before": n, "files_after": n}."""
-    _check_name(name)
-    spark.catalog.refreshTable(f"{name}_postings")
-    num_buckets = _geom(spark, name)
-    if num_buckets is None:
-        raise ValueError(f"phrase index '{name}' has no stored geometry")
-
-    def _nfiles():
-        return (
-            spark.table(f"{name}_postings")
-            .select(F.input_file_name())
-            .distinct()
-            .count()
-        )
-
-    files_before = _nfiles()
-    # read the FILES, not the table: the bucketed read advertises its
-    # HashPartitioning and the optimizer would elide the repartition
-    # that guarantees one-file-per-bucket (the compact_bm25_index note)
-    loc = _live_location(spark, f"{name}_postings")
-    src = spark.read.parquet(loc) if loc else spark.table(f"{name}_postings")
-    postings = src.repartition(num_buckets, F.col("token"))
-    stage = f"{name}__stage_postings"
-    spark.sql(f"DROP TABLE IF EXISTS {stage}")
-    write_bucketed(
-        postings,
-        stage,
-        ["token"],
-        num_buckets=num_buckets,
-        sort_cols=["token"],
-        path=_stage_path(spark, f"{name}_postings", path, f"{name}_postings"),
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {name}_postings")
-    spark.sql(f"ALTER TABLE {stage} RENAME TO {name}_postings")
-    spark.sql(
-        f"ALTER TABLE {name}_postings SET TBLPROPERTIES "
-        f"('bitfilters.num_buckets'='{num_buckets}')"
-    )
-    spark.catalog.refreshTable(f"{name}_postings")
-    return {"files_before": files_before, "files_after": _nfiles()}
+    """Rewrite the postings into one file-set per bucket (appends and
+    streaming folds add a file-set each — probe answers stay exact but
+    plans degrade with file count). Published like a build; probe
+    results identical before/after. Returns {"files_before": n,
+    "files_after": n}."""
+    return index_store.compact(spark, name, _LAYOUT, path)

@@ -10,7 +10,7 @@ crosses the driver), and any read folds the partials with one
 groupBy-sum. A 3-batch fold equals one `cdc_chunks` pass over the union
 (pinned in pytest), so streamed and batch dup accounting cannot diverge.
 
-Exactly-once per batch via the `streaming/index_maintenance.py` batch-id
+Exactly-once per batch via `state_io.once_per_batch`'s batch-id
 markers: a crash-replayed batch no-ops when its marker exists; the
 honest residual is one batch's double-append when the crash lands
 between the parquet write and the marker write (at-least-once for
@@ -36,14 +36,6 @@ __all__ = [
 ]
 
 
-def _applied(marker_path: str, batch_id: int, spark) -> bool:
-    return state_io.exists(f"{marker_path}/batch-{batch_id}", spark)
-
-
-def _mark(marker_path: str, batch_id: int, spark) -> None:
-    state_io.write_bytes(f"{marker_path}/batch-{batch_id}", b"1", spark)
-
-
 def _heal(spark: SparkSession, state_path: str) -> None:
     """Self-heal a compact interrupted between its two renames (the
     `streaming/tokenizer._heal` contract)."""
@@ -66,13 +58,8 @@ def cdc_stats_fold(
     exactly once per batch id. The partial is UNCAPPED and per-hash —
     any thresholding is a query-time concern, never baked into state."""
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
+    def apply(batch_df: DataFrame) -> None:
         spark = batch_df.sparkSession
-        if _applied(marker_path, batch_id, spark):
-            return
-        if batch_df.isEmpty():
-            _mark(marker_path, batch_id, spark)
-            return
         _heal(spark, state_path)
         (
             cdc_chunks(
@@ -87,9 +74,8 @@ def cdc_stats_fold(
             .write.mode("append")
             .parquet(f"{state_path}/chunks")
         )
-        _mark(marker_path, batch_id, spark)
 
-    return fold
+    return state_io.once_per_batch(marker_path, apply)
 
 
 def streaming_cdc_stats(

@@ -10,15 +10,16 @@ This closes the daily-crawl loop end-to-end in streaming: frontier
 (`streaming/frontier.py`) → fetch → `streaming_dedup_exact` → THIS sink,
 and query batches probe a live index between micro-batches.
 
-Exactly-once per batch via BATCH-ID MARKERS — an improvement over the
-module convention `streaming_filter_build`/`streaming_indexed_sink`
-document (replays re-append there): foreachBatch re-invokes a batch
-after a crash, so each fold first checks a ``<marker_path>/<batch_id>``
-marker (Hadoop-FS, any scheme) and no-ops when present. The residual
-window is honest and small: a crash BETWEEN the append and the marker
-write replays one batch's append (at-least-once for exactly that batch);
-the marker write is one tiny file, not a corpus scan. Idempotence is
-pinned by calling the fold twice with the same batch id in tests.
+Exactly-once per batch via BATCH-ID MARKERS (`state_io.once_per_batch`)
+— an improvement over the module convention
+`streaming_filter_build`/`streaming_indexed_sink` document (replays
+re-append there): foreachBatch re-invokes a batch after a crash, so each
+fold first checks a ``<marker_path>/batch-<batch_id>`` marker
+(Hadoop-FS, any scheme) and no-ops when present. The residual window is
+honest and small: a crash BETWEEN the append and the marker write
+replays one batch's append (at-least-once for exactly that batch); the
+marker write is one tiny file, not a corpus scan. Idempotence is pinned
+by calling the fold twice with the same batch id in tests.
 
 Single-writer contract inherited from the append paths: one maintenance
 stream per index name.
@@ -28,17 +29,22 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..operators.ann_index import append_to_ann_index
+from ..operators.ann_index import (
+    append_to_ann_index,
+    append_to_ivfpq_index,
+    append_to_sig_index,
+)
 from ..operators.bm25_index import append_to_bm25_index
+from ..operators.phrase_index import append_to_phrase_index
 from . import state_io
 
 
-def _applied(marker_path: str, batch_id: int, spark) -> bool:
-    return state_io.exists(f"{marker_path}/batch-{batch_id}", spark)
-
-
-def _mark(marker_path: str, batch_id: int, spark) -> None:
-    state_io.write_bytes(f"{marker_path}/batch-{batch_id}", b"1", spark)
+def _fold(append, marker_path: str, id_col: str, col: str, name: str, num_buckets: int):
+    """The one fold behind every ``*_maintenance_fold``: ``append`` the
+    batch to index ``name``, exactly once per batch id."""
+    return state_io.once_per_batch(
+        marker_path, lambda df: append(df, id_col, col, name, num_buckets)
+    )
 
 
 def bm25_maintenance_fold(
@@ -52,17 +58,7 @@ def bm25_maintenance_fold(
     a batch id directly): append the batch's NEW documents to the BM25
     index, exactly once per batch id."""
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if _applied(marker_path, batch_id, spark):
-            return  # crash-replay of an already-applied batch
-        if batch_df.isEmpty():
-            _mark(marker_path, batch_id, spark)
-            return
-        append_to_bm25_index(batch_df, id_col, text_col, name, num_buckets)
-        _mark(marker_path, batch_id, spark)
-
-    return fold
+    return _fold(append_to_bm25_index, marker_path, id_col, text_col, name, num_buckets)
 
 
 def streaming_bm25_index(
@@ -97,17 +93,7 @@ def ann_maintenance_fold(
     """foreachBatch function: route the batch's NEW vectors through the
     index's frozen centroids and append, exactly once per batch id."""
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if _applied(marker_path, batch_id, spark):
-            return
-        if batch_df.isEmpty():
-            _mark(marker_path, batch_id, spark)
-            return
-        append_to_ann_index(batch_df, id_col, vec_col, name, num_buckets)
-        _mark(marker_path, batch_id, spark)
-
-    return fold
+    return _fold(append_to_ann_index, marker_path, id_col, vec_col, name, num_buckets)
 
 
 def streaming_ann_index(
@@ -137,19 +123,7 @@ def phrase_maintenance_fold(
 ):
     """foreachBatch function: append the batch's NEW documents'
     positional postings to the phrase index, exactly once per batch."""
-    from ..operators.phrase_index import append_to_phrase_index
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if _applied(marker_path, batch_id, spark):
-            return
-        if batch_df.isEmpty():
-            _mark(marker_path, batch_id, spark)
-            return
-        append_to_phrase_index(batch_df, id_col, text_col, name, num_buckets)
-        _mark(marker_path, batch_id, spark)
-
-    return fold
+    return _fold(append_to_phrase_index, marker_path, id_col, text_col, name, num_buckets)
 
 
 def streaming_phrase_index(
@@ -178,19 +152,7 @@ def ivfpq_maintenance_fold(
     """foreachBatch function: route the batch's NEW vectors through the
     IVFPQ index's frozen centroids AND encode through its frozen
     codebooks, then append — exactly once per batch id."""
-    from ..operators.ann_index import append_to_ivfpq_index
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if _applied(marker_path, batch_id, spark):
-            return
-        if batch_df.isEmpty():
-            _mark(marker_path, batch_id, spark)
-            return
-        append_to_ivfpq_index(batch_df, id_col, vec_col, name, num_buckets)
-        _mark(marker_path, batch_id, spark)
-
-    return fold
+    return _fold(append_to_ivfpq_index, marker_path, id_col, vec_col, name, num_buckets)
 
 
 def streaming_ivfpq_index(
@@ -224,19 +186,7 @@ def sig_maintenance_fold(
     signatures and append to the persisted signature index — exactly
     once per batch id (the family contract; signature packing has no
     trained model at all, so streamed maintenance is drift-free)."""
-    from ..operators.ann_index import append_to_sig_index
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if _applied(marker_path, batch_id, spark):
-            return
-        if batch_df.isEmpty():
-            _mark(marker_path, batch_id, spark)
-            return
-        append_to_sig_index(batch_df, id_col, vec_col, name, num_buckets)
-        _mark(marker_path, batch_id, spark)
-
-    return fold
+    return _fold(append_to_sig_index, marker_path, id_col, vec_col, name, num_buckets)
 
 
 def streaming_sig_index(

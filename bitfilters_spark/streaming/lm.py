@@ -13,7 +13,7 @@ derivation `train_kn_lm` uses (`kn_model_from_type_tables`), so batch and
 streamed models cannot diverge arithmetically — pinned by a pytest
 comparing a 3-batch fold against one batch train over the union.
 
-Exactly-once per batch via the `streaming/index_maintenance.py` batch-id
+Exactly-once per batch via `state_io.once_per_batch`'s batch-id
 markers: a crash-replayed batch no-ops when its marker exists; the honest
 residual is one batch's double-append when the crash lands between the
 parquet write and the marker write (at-least-once for exactly that
@@ -40,14 +40,6 @@ __all__ = [
 ]
 
 
-def _applied(marker_path: str, batch_id: int, spark) -> bool:
-    return state_io.exists(f"{marker_path}/batch-{batch_id}", spark)
-
-
-def _mark(marker_path: str, batch_id: int, spark) -> None:
-    state_io.write_bytes(f"{marker_path}/batch-{batch_id}", b"1", spark)
-
-
 def _batch_tables(df: DataFrame, text_col: str) -> tuple[DataFrame, DataFrame]:
     seq = df.select(
         F.transform(tokens(text_col), lambda t: F.xxhash64(t)).alias("hs")
@@ -70,20 +62,14 @@ def kn_stats_fold(text_col: str, state_path: str, marker_path: str):
     a batch id): append the batch's bigram/token count partials, exactly
     once per batch id."""
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
+    def apply(batch_df: DataFrame) -> None:
         spark = batch_df.sparkSession
-        if _applied(marker_path, batch_id, spark):
-            return
-        if batch_df.isEmpty():
-            _mark(marker_path, batch_id, spark)
-            return
         _heal(spark, state_path)
         bi, uni = _batch_tables(batch_df, text_col)
         bi.write.mode("append").parquet(f"{state_path}/bigrams")
         uni.write.mode("append").parquet(f"{state_path}/unigrams")
-        _mark(marker_path, batch_id, spark)
 
-    return fold
+    return state_io.once_per_batch(marker_path, apply)
 
 
 def streaming_kn_stats(

@@ -12,7 +12,7 @@ with, so batch and streamed reports are EXACTLY equal — pinned by a
 pytest comparing a 3-batch fold against `length_bias_report` on the
 union.
 
-Exactly-once per batch via the `streaming/index_maintenance.py`
+Exactly-once per batch via `state_io.once_per_batch`'s
 batch-id markers, same residual as every fold in this package (a crash
 between the parquet write and the marker write replays that one batch
 at-least-once).
@@ -36,14 +36,6 @@ _COLS = (
     "n_pairs", "n_ok", "n_chosen_longer", "n_rejected_longer",
     "n_len_tied", "sum_len_delta_ok",
 )
-
-
-def _applied(marker_path: str, batch_id: int, spark) -> bool:
-    return state_io.exists(f"{marker_path}/batch-{batch_id}", spark)
-
-
-def _mark(marker_path: str, batch_id: int, spark) -> None:
-    state_io.write_bytes(f"{marker_path}/batch-{batch_id}", b"1", spark)
 
 
 def _batch_partial(
@@ -80,19 +72,12 @@ def preference_stats_fold(
     a batch id): append the batch's six-counter partial, exactly once
     per batch id."""
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if _applied(marker_path, batch_id, spark):
-            return
-        if batch_df.isEmpty():
-            _mark(marker_path, batch_id, spark)
-            return
+    def apply(batch_df: DataFrame) -> None:
         _batch_partial(
             batch_df, prompt_col, chosen_col, rejected_col
         ).write.mode("append").parquet(f"{state_path}/partials")
-        _mark(marker_path, batch_id, spark)
 
-    return fold
+    return state_io.once_per_batch(marker_path, apply)
 
 
 def streaming_preference_stats(

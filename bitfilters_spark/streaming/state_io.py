@@ -24,7 +24,9 @@ construction; nothing here ships to executors.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from typing import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _jvm_fs(path: str, spark: SparkSession | None = None):
@@ -141,3 +143,25 @@ def batch_state_dirs(
         if exists(join(d, payload), spark):
             out.append((bid, d))
     return sorted(out)
+
+
+def once_per_batch(
+    marker_path: str, apply: Callable[[DataFrame], None]
+) -> Callable[[DataFrame, int], None]:
+    """A ``foreachBatch`` function running ``apply(batch_df)`` exactly
+    once per batch id. foreachBatch re-invokes a batch after a crash, so
+    the fold first checks a ``<marker_path>/batch-<id>`` marker and
+    no-ops when it is present; an empty batch only writes its marker. A
+    crash between ``apply`` and the marker write replays that one batch
+    (at-least-once for exactly that batch); the marker is one tiny file."""
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        marker = f"{marker_path}/batch-{batch_id}"
+        if exists(marker, spark):
+            return  # crash-replay of an already-applied batch
+        if not batch_df.isEmpty():
+            apply(batch_df)
+        write_bytes(marker, b"1", spark)
+
+    return fold

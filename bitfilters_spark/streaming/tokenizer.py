@@ -15,7 +15,7 @@ and streamed models cannot diverge arithmetically; pinned by pytests
 comparing a 3-batch fold against one batch train over the union, for
 BOTH tokenizer families.
 
-Exactly-once per batch via the `streaming/index_maintenance.py`
+Exactly-once per batch via `state_io.once_per_batch`'s
 batch-id markers: a crash-replayed batch no-ops when its marker exists;
 the honest residual is one batch's double-append when the crash lands
 between the parquet write and the marker write (at-least-once for
@@ -45,14 +45,6 @@ __all__ = [
 ]
 
 
-def _applied(marker_path: str, batch_id: int, spark) -> bool:
-    return state_io.exists(f"{marker_path}/batch-{batch_id}", spark)
-
-
-def _mark(marker_path: str, batch_id: int, spark) -> None:
-    state_io.write_bytes(f"{marker_path}/batch-{batch_id}", b"1", spark)
-
-
 def _heal(spark: SparkSession, state_path: str) -> None:
     """Self-heal a compact interrupted between its two renames (the
     `streaming/lm._heal` contract): live dir missing + ``__old``
@@ -71,20 +63,14 @@ def word_stats_fold(text_col: str, state_path: str, marker_path: str):
     never baked into the folded state (a capped partial would silently
     drop tail mass that later batches promote)."""
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
+    def apply(batch_df: DataFrame) -> None:
         spark = batch_df.sparkSession
-        if _applied(marker_path, batch_id, spark):
-            return
-        if batch_df.isEmpty():
-            _mark(marker_path, batch_id, spark)
-            return
         _heal(spark, state_path)
         word_frequencies(batch_df, text_col, top_words=None).write.mode(
             "append"
         ).parquet(f"{state_path}/words")
-        _mark(marker_path, batch_id, spark)
 
-    return fold
+    return state_io.once_per_batch(marker_path, apply)
 
 
 def streaming_word_stats(

@@ -104,6 +104,20 @@ def test_null_rows_are_skipped(spark):
     assert sorted(vv) == [10, 40]
 
 
+def test_group_keys_stay_exact_beside_a_null(spark):
+    """A bigint group key 2^53+1 in a batch that also holds a NULL key
+    comes back exact, and the NULL key gets its own sample, as in every
+    ``build_filter`` kind."""
+    big = 2**53 + 1
+    rows = [(big, 11, 1), (None, 22, 2), (5, 33, 3)]
+    df = spark.createDataFrame(rows, "g long, h long, v long").coalesce(1)
+    got = {
+        r["g"]: bks_sample_values(bytes(r["sample"])).tolist()
+        for r in bottomk_sample(df, ["g"], "h", "v", k=8).collect()
+    }
+    assert got == {big: [1], None: [2], 5: [3]}
+
+
 def test_duckdb_parity_build_and_quantiles(spark):
     """End-to-end engine parity: the sketch sample and its quantiles equal
     DuckDB ranking the same rows by the same hash."""

@@ -143,9 +143,11 @@ def test_external_rebuild_alternates_staging_dirs(spark, tmp_path):
     stage somewhere ELSE (and still leave a fully probeable index). The
     two builds' live locations must differ."""
     from bitfilters_spark.operators.bm25_index import (
-        _live_location,
         bm25_query_index,
         build_bm25_index,
+    )
+    from bitfilters_spark.sources.index_store import (
+        live_location as _live_location,
     )
 
     docs = _docs(spark)

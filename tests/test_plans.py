@@ -306,7 +306,7 @@ def test_duplicated_spans_elects_winners_without_a_gram_window(spark):
 
 
 def test_bottomk_sample_shuffles_blobs_not_rows(spark):
-    """The BKS build must be two-phase: a map-side MapInPandas partial pass
+    """The BKS build must be two-phase: a map-side MapInArrow partial pass
     feeding a grouped merge — the exchange between them carries one blob
     per (partition, group), never the sampled table's rows."""
     from bitfilters_spark.functions.sample import bottomk_sample
@@ -319,9 +319,9 @@ def test_bottomk_sample_shuffles_blobs_not_rows(spark):
     )
     plan = plan_of(bottomk_sample(keyed, ["grp"], "h", "v", k=64))
     # partial pass below the exchange, grouped merge above it
-    i_map = plan.find("MapInPandas")
+    i_map = plan.find("MapInArrow")
     i_exc = plan.find("Exchange")
-    i_fmap = plan.find("FlatMapGroupsInPandas")
+    i_fmap = plan.find("FlatMapGroupsInArrow")
     assert -1 < i_fmap < i_exc < i_map  # formatted plans print top-down
 
 
