@@ -56,6 +56,7 @@ the value columns internally (CombineHash for multi-key), mirroring
 
 from __future__ import annotations
 
+import datetime
 from typing import Callable, Iterator, NamedTuple
 
 import numpy as np
@@ -71,6 +72,8 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
+    TimestampType,
 )
 
 import pyarrow as pa
@@ -420,6 +423,30 @@ def _group_codes(columns: list, n: int) -> tuple[np.ndarray, list]:
             codes, pairs = pd.factorize(codes * m + col_codes)
             keys = [keys[v // m] + (uniq[v % m],) for v in pairs.tolist()]
     return codes, keys
+
+
+_TIMESTAMPS = (TimestampType, TimestampNTZType)
+
+
+def _key_array(arr):
+    """A group-key Arrow array as a grouped probe keys it: a timestamp as
+    its epoch micros (int64), the value the collected filter map and the
+    probe UDF both see; any other type unchanged. Collected, a timestamp
+    is a naive ``datetime`` and the UDF's Arrow value an aware one, so
+    they never matched."""
+    return arr.cast(pa.int64()) if pa.types.is_timestamp(arr.type) else arr
+
+
+def _timestamp_keys(fmap: dict, df: DataFrame, on: list) -> dict:
+    """``fmap`` with each ``datetime`` key part of a timestamp ``on``
+    column as its epoch micros (Spark's own conversion of that type)."""
+    types = {f.name: f.dataType for f in df.schema.fields}
+    conv = [types.get(c) if isinstance(types.get(c), _TIMESTAMPS) else None for c in on]
+    return {
+        tuple(t.toInternal(x) if t and isinstance(x, datetime.datetime) else x
+              for t, x in zip(conv, k)): b
+        for k, b in fmap.items()
+    }
 
 
 def _batch_groups(batch: pa.RecordBatch, group_cols: list) -> Iterator[tuple]:
@@ -892,13 +919,20 @@ def probe_filter(
             raise ValueError(
                 f"filters has key columns {fkey_cols} but on={on}; lengths must match"
             )
-        fmap = {
-            tuple(row[c] for c in fkey_cols): bytes(row["filter"])
-            for row in filters.collect()
-        }
+        if any(isinstance(filters.schema[c].dataType, _TIMESTAMPS) for c in fkey_cols):
+            t = filters.toArrow()
+            keys = zip(*(_key_array(t.column(c)).to_pylist() for c in fkey_cols))
+            fmap = dict(zip(keys, t.column("filter").to_pylist()))
+        else:
+            fmap = {
+                tuple(row[c] for c in fkey_cols): bytes(row["filter"])
+                for row in filters.collect()
+            }
     else:
         fmap = {tuple(k) if isinstance(k, (tuple, list)) else (k,): bytes(v)
                 for k, v in filters.items()}
+        if any(isinstance(x, datetime.datetime) for k in fmap for x in k):
+            fmap = _timestamp_keys(fmap, df, on)
     total_bytes = sum(len(v) for v in fmap.values())
     if total_bytes > 1 << 30:
         # honest scale guard: a >1 GiB blob map should not ride the driver +
@@ -925,7 +959,7 @@ def probe_filter(
             if len(h):
                 out[:] = _probe_blob(next(iter(m.values())), h)
         elif len(h):
-            codes, keys = _group_codes(list(arrays[:-1]), len(h))
+            codes, keys = _group_codes([_key_array(a) for a in arrays[:-1]], len(h))
             for code, key in enumerate(keys):
                 blob = None if None in key else m.get(key)
                 if blob is not None:

@@ -16,25 +16,64 @@ membership filters instead of min/max ranges:
    1 GB files has ~100k rows), so probing happens driver-side — exactly
    where Spark's own file listing and footer pruning happen; the surviving
    file list must reach the driver anyway to form the read plan.
-3. ``skipping_read`` — plan the parquet scan over ONLY the surviving
-   files, then apply the exact predicate. No false negatives ⇒ the result
-   is identical to a full scan; the filter only removes whole files that
-   provably contain no matching key.
+3. ``skipping_read`` — plan the parquet scan over the surviving files
+   and the files the index does not cover, then apply the exact
+   predicate. No false negatives ⇒ the result is identical to a full
+   scan; the filter only removes whole files that provably contain no
+   matching key.
 
 Persist the index with ``save_index`` / ``load_index`` and rebuild only
 for files that changed (an index row is keyed by file path).
+
+Index handle — a lookup pays for its scan, not for reloading metadata:
+
+* ``prune_files``, ``prune_files_range``, ``prune_files_multi`` and
+  ``refresh_file_index`` read an index DataFrame through one handle, held in a ``weakref.WeakKeyDictionary``
+  so that it never keeps the index alive. The first lookup collects the
+  index (one job) and keeps its rows, each file's filter (sniffed once),
+  and a version stamp: the (mtime, length) of each of the index's own
+  files, ``index.inputFiles()``. Every later lookup stats those files
+  again (no job) and collects again only when the stamp differs: an index
+  file rewritten in place or removed. ``load_index`` makes a new
+  DataFrame, so a re-saved index loaded again starts a new handle.
+* Per table path the module keeps the table's schema and file list,
+  keyed by the table root's stamp: each directory under a local root with
+  its (mtime, length, entry names), so a file added or removed anywhere
+  in the tree changes it. When the stamp changes, the schema is inferred
+  again (one job) and the files are listed again. Off the local file
+  system (HDFS, object stores) a directory's stamp cannot be trusted to
+  move, so the files are listed on every call and only the schema is
+  kept.
+* ``skipping_read`` and ``zone_read`` read, with that schema (no schema
+  job), every table file the index cannot rule out: the survivors, and
+  the files the index does not cover because they came after it. Files
+  gone from the table are not read.
+* The exact re-check holds an IN-list of numbers (over a numeric column)
+  or strings (over a string column) as one array literal,
+  ``array_contains``: generated code keeps it as one reference object,
+  so one plan shape compiles once. ``isin`` inlines each literal, and
+  every new list compiled a new class. ``isin`` stays for other type
+  pairs, where it coerces differently. Unlike ``isin``, the array is not
+  pushed into the Parquet reader's row-group pruning; the file index
+  does the skipping.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
+import weakref
+from functools import partial
+from urllib.parse import unquote, urlparse
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegralType
+from pyspark.sql.types import DataType, IntegralType, NumericType, StringType, StructType
 
-from ..functions.filters import _probe_blob, build_filter
+from ..functions.filters import _format_of, build_filter
 from ..functions.hashing import key_hash64, spark_hash64
 
 
@@ -112,16 +151,190 @@ def key_hashes(spark: SparkSession, values: list) -> np.ndarray:
     return np.array([r["h"] for r in rows], dtype=np.int64).view(np.uint64)
 
 
+# -- index handle and table cache ---------------------------------------------
+
+
+def _local(f: str) -> str | None:
+    """The OS path of a file on the local file system, given as a plain path
+    or a ``file:`` URI; None for another scheme. ``input_file_name`` and
+    ``inputFiles`` give percent-encoded URIs (``file:///a%20b/...``)."""
+    u = unquote(f)
+    scheme = urlparse(u).scheme
+    if scheme == "file":
+        return "/" + u[5:].lstrip("/")
+    return u if scheme == "" else None
+
+
+def _key(f: str) -> str:
+    """One spelling of a file's name, to match index rows to table files."""
+    return _local(f) or unquote(f)
+
+
+def _stat(spark: SparkSession, f: str):
+    """(mtime, length) of a file, None when it is gone."""
+    local = _local(f)
+    try:
+        if local is not None:
+            st = os.stat(local)
+            return st.st_mtime_ns, st.st_size
+        p = spark._jvm.org.apache.hadoop.fs.Path(unquote(f))
+        st = p.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(p)
+        return st.getModificationTime(), st.getLen()
+    except (OSError, Py4JJavaError):
+        return None
+
+
+def _tree_stamp(path: str):
+    """The stamp of a local table: (path, mtime, length, entry names) of
+    its root and of every directory below it, so adding or removing a file
+    anywhere changes it. None off the local file system, or when the path
+    cannot be stat'ed (a glob)."""
+    top = _local(path)
+    if top is None:
+        return None
+    out, todo = [], [top]
+    try:
+        while todo:
+            d = todo.pop()
+            st = os.stat(d)
+            names, subdirs = (), []
+            if stat.S_ISDIR(st.st_mode):
+                with os.scandir(d) as it:
+                    entries = sorted((e.name, e.is_dir()) for e in it)
+                names = tuple(n for n, _ in entries)
+                subdirs = [os.path.join(d, n) for n, is_dir in entries if is_dir]
+            out.append((d, st.st_mtime_ns, st.st_size, names))
+            todo += subdirs
+    except OSError:
+        return None
+    return tuple(out)
+
+
+# table path -> (stamp, schema, files), for the most recently read tables
+_TABLES: dict = {}
+_TABLES_MAX = 64
+_LOCK = threading.Lock()  # guards _TABLES and _HANDLES
+
+
+def _table(spark: SparkSession, path: str) -> tuple:
+    """(schema, files) of the parquet table at ``path``, kept while its
+    stamp holds. A table without a stamp (not on the local file system)
+    keeps its schema and is listed again on every call."""
+    stamp = _tree_stamp(path)
+    hit = _TABLES.get(path)
+    if hit is not None and stamp is not None and hit[0] == stamp:
+        return hit[1:]
+    if hit is None or stamp is not None:
+        df = spark.read.parquet(path)  # infers the schema: one job
+    else:
+        df = spark.read.schema(hit[1]).parquet(path)
+    entry = (stamp, df.schema, df.inputFiles())
+    with _LOCK:
+        if path not in _TABLES and len(_TABLES) >= _TABLES_MAX:
+            _TABLES.pop(next(iter(_TABLES)))  # the oldest entry
+        _TABLES[path] = entry
+    return entry[1:]
+
+
+class _Handle:
+    """What the lookups through one index DataFrame share: its rows, the
+    files it covers and each file's filter, valid while ``stamp`` (the
+    (mtime, length) of each of the index's input files) holds."""
+
+    def __init__(self, inputs: list):
+        self.inputs, self.lock = inputs, threading.Lock()
+        self.stamp = self.rows = None
+        self.covered, self.probes = frozenset(), {}
+
+    def refresh(self, index: DataFrame) -> "_Handle":
+        stamp = tuple(_stat(index.sparkSession, f) for f in self.inputs)
+        with self.lock:  # one collect when threads share an index
+            if self.rows is None or stamp != self.stamp:
+                rows = index.collect()  # metadata-scale: one row per file
+                self.covered = frozenset(_key(r["file"]) for r in rows)
+                self.stamp, self.rows, self.probes = stamp, rows, {}
+        return self
+
+    def filters(self, filter_col: str) -> list:
+        """(file, probe) per file whose filter holds any key."""
+        if filter_col not in self.probes:
+            blobs = ((r["file"], bytes(r[filter_col])) for r in self.rows)
+            self.probes[filter_col] = [
+                (f, partial(_format_of(b).probe, b)) for f, b in blobs if len(b)
+            ]
+        return self.probes[filter_col]
+
+
+_HANDLES: "weakref.WeakKeyDictionary[DataFrame, _Handle]" = weakref.WeakKeyDictionary()
+
+
+def _handle(index: DataFrame) -> _Handle:
+    """The index's handle, collected again if the index's files changed."""
+    with _LOCK:
+        h = _HANDLES.get(index)
+        if h is None:
+            h = _HANDLES[index] = _Handle(index.inputFiles())
+    return h.refresh(index)
+
+
+def _read(
+    spark: SparkSession, path: str, table: tuple, index: DataFrame, survivors: list
+) -> DataFrame:
+    """The table's files that the index did not rule out: its survivors and
+    the files it does not cover, read with the table's schema."""
+    schema, files = table
+    # the state the pruning just used: no second stamp between the two
+    covered = (_HANDLES.get(index) or _handle(index)).covered
+    keep = {_key(f) for f in survivors}
+    read = [f for f in files if _key(f) in keep or _key(f) not in covered]
+    if not read:
+        return _empty(spark, path, schema)
+    reader = spark.read.schema(schema)
+    if len(read) == len(files):
+        return reader.parquet(path)
+    if not any(c in path for c in "*?[{"):  # a root, not a glob
+        reader = reader.option("basePath", path)  # finds partition columns
+    return reader.parquet(*sorted(unquote(f) for f in read))
+
+
+def _empty(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+    """No rows, with the table's schema: planned as an empty local relation
+    (one job to count it, where an empty ``createDataFrame`` takes two)."""
+    return spark.read.schema(schema).parquet(path).where(F.lit(False))
+
+
+def _col_type(schema: StructType, df: DataFrame, col: str) -> DataType:
+    """The type of column ``col`` of ``df``, whose schema is ``schema``."""
+    fields = {f.name: f.dataType for f in schema.fields}
+    return fields[col] if col in fields else df.select(col).schema[0].dataType
+
+
+def _in_values(col: str, dtype: DataType, values: list) -> Column:
+    """``col IN values`` over non-NULL values. Numbers against a numeric
+    column, or strings against a string column, go in one array literal,
+    which generated code holds as one reference object, so each IN-list of
+    one plan shape compiles once; ``isin`` inlines each literal and
+    compiled a new class for every new list. Other pairs keep ``isin``:
+    its coercion differs from the array's (a date column against strings)."""
+    num = isinstance(dtype, NumericType) and all(
+        isinstance(v, (int, float)) and not isinstance(v, bool) for v in values
+    )
+    if num or (isinstance(dtype, StringType) and all(isinstance(v, str) for v in values)):
+        return F.array_contains(F.array(*map(F.lit, values)), F.col(col))
+    return F.col(col).isin(values)
+
+
+# -- lookups --------------------------------------------------------------------
+
+
 def prune_files(
     index: DataFrame, hashes: np.ndarray, filter_col: str = "filter"
 ) -> list[str]:
     """Files that MAY contain any of the hashed keys (no false negatives:
-    a pruned file definitely contains none of them)."""
-    rows = index.collect()  # metadata-scale: one row per file
+    a pruned file definitely contains none of them). Files the index does
+    not cover are not listed; ``skipping_read`` reads them anyway."""
     return sorted(
-        r["file"]
-        for r in rows
-        if len(r[filter_col]) and bool(_probe_blob(bytes(r[filter_col]), hashes).any())
+        f for f, probe in _handle(index).filters(filter_col) if bool(probe(hashes).any())
     )
 
 
@@ -135,23 +348,24 @@ def skipping_read(
     **filter_kw,
 ) -> DataFrame:
     """``SELECT * FROM path WHERE key_col IN values`` reading only files the
-    index cannot rule out. Exact: the final ``isin`` predicate re-checks
-    survivors (bloom FPs cost I/O, never correctness). Over an integral
-    key column, ints outside int64 match no row and are left out of it
-    (Spark cannot make a literal of them)."""
+    index cannot rule out, and every file it does not cover. Exact: the
+    final ``key_col IN values`` re-checks survivors (bloom FPs cost I/O,
+    never correctness). NULLs match nothing, so an empty or all-NULL list
+    reads no row. Over an integral key column, ints outside int64 match no
+    row and are left out of it (Spark cannot make a literal of them)."""
+    values = [v for v in values if v is not None]
+    table = _table(spark, path)
+    if not values:
+        return _empty(spark, path, table[0])
     if index is None:
         index = build_file_index(spark, path, [key_col], kind, **filter_kw)
-    files = prune_files(index, key_hashes(spark, values))
-    if not files:
-        return spark.read.parquet(path).where(F.lit(False))
-    df = spark.read.parquet(*files)
-    if any(_outside_int64(v) for v in values) and isinstance(
-        df.select(key_col).schema[0].dataType, IntegralType
-    ):
+    df = _read(spark, path, table, index, prune_files(index, key_hashes(spark, values)))
+    dtype = _col_type(table[0], df, key_col)
+    if isinstance(dtype, IntegralType):
         values = [v for v in values if not _outside_int64(v)]
         if not values:
-            return df.where(F.lit(False))
-    return df.where(F.col(key_col).isin(values))
+            return _empty(spark, path, table[0])
+    return df.where(_in_values(key_col, dtype, values))
 
 
 def save_index(index: DataFrame, path: str) -> None:
@@ -203,15 +417,7 @@ def prune_files_range(
 ) -> list[str]:
     """Files whose [min, max] intersects [lo, hi] (None = open bound).
     No false negatives: a pruned file provably holds no row in range."""
-    rows = zone_index.collect()  # metadata-scale
-    out = []
-    for r in rows:
-        mn, mx = r[f"{col}_min"], r[f"{col}_max"]
-        if mn is None and mx is None:
-            continue  # file had only NULLs: no row can satisfy a range
-        if (lo is None or mx >= lo) and (hi is None or mn <= hi):
-            out.append(r["file"])
-    return sorted(out)
+    return prune_files_multi(zone_index, [(col, lo, hi)])
 
 
 def zone_read(
@@ -223,21 +429,21 @@ def zone_read(
     zone_index: DataFrame | None = None,
 ) -> DataFrame:
     """``SELECT * FROM path WHERE col BETWEEN lo AND hi`` reading only
-    files the zone map cannot rule out; the exact predicate re-checks
-    survivors, so the result is full-scan-identical. On a range-ordered
-    layout (``make_file_partitioned_copy``) this prunes to
-    ~range-width/file-width of the files."""
+    files the zone map cannot rule out, and every file it does not cover;
+    the exact predicate re-checks survivors, so the result is
+    full-scan-identical. On a range-ordered layout
+    (``make_file_partitioned_copy``) this prunes to ~range-width/file-width
+    of the files."""
+    table = _table(spark, path)
     if zone_index is None:
         zone_index = build_zone_index(spark, path, [col])
-    files = prune_files_range(zone_index, col, lo, hi)
-    if not files:
-        return spark.read.parquet(path).where(F.lit(False))
+    df = _read(spark, path, table, zone_index, prune_files_range(zone_index, col, lo, hi))
     pred = F.lit(True)
     if lo is not None:
         pred = pred & (F.col(col) >= lo)
     if hi is not None:
         pred = pred & (F.col(col) <= hi)
-    return spark.read.parquet(*files).where(pred)
+    return df.where(pred)
 
 
 def refresh_file_index(
@@ -256,9 +462,8 @@ def refresh_file_index(
     dropped, and ONLY files new since ``old_index`` are scanned and
     filtered. The refresh scan cost is proportional to the NEW data, not
     the table."""
-    df = spark.read.parquet(path)
-    current = {f for f in df.inputFiles()}
-    old_rows = old_index.collect()  # metadata-scale
+    current = set(_table(spark, path)[1])
+    old_rows = _handle(old_index).rows  # metadata-scale
     kept = [(r["file"], bytes(r[filter_col])) for r in old_rows if r["file"] in current]
     known = {f for f, _ in kept}
     new_files = sorted(current - known)
@@ -344,9 +549,8 @@ def prune_files_multi(
     column's [min, max]; with a Z-order layout (`zorder_layout`) a
     multi-column conjunction prunes multiplicatively. No false
     negatives, same contract as `prune_files_range`."""
-    rows = zone_index.collect()  # metadata-scale
     out = []
-    for r in rows:
+    for r in _handle(zone_index).rows:
         ok = True
         for col, lo, hi in predicates:
             mn, mx = r[f"{col}_min"], r[f"{col}_max"]

@@ -667,3 +667,27 @@ def test_grouped_probe_keys_stay_exact_beside_a_null(spark, kind):
         for r in probe_filter(rows, filters, "h", on=["g"]).collect()
     }
     assert got == {_BIG: True, None: False, 5: True}
+
+
+@pytest.mark.parametrize("kind", ["duckdb_bloom", "xor8"])
+@pytest.mark.parametrize("ntz", [False, True])
+def test_grouped_probe_by_a_timestamp_key_finds_its_members(spark, kind, ntz):
+    """A timestamp group key matches between the collected filters and the
+    probe UDF (both key it by epoch micros). The collected key was a naive
+    ``datetime`` and the UDF's an aware one, so every member probed
+    False; a timestamp with no filter still probes False."""
+    import datetime
+
+    from bitfilters_spark.functions import probe_filter
+
+    t_type = "timestamp_ntz" if ntz else "timestamp"
+    t1, t2 = datetime.datetime(2024, 1, 1, 12), datetime.datetime(2024, 6, 1, 3, 0, 0, 7)
+    built = spark.createDataFrame([(t1, 11), (t2, 12)], f"t {t_type}, h long")
+    filters = build_filter(built, ["t"], "h", kind, **_KIND_PARAMS[kind])
+    collected = {(r["t"],): bytes(r["filter"]) for r in filters.collect()}
+    rows = spark.createDataFrame(
+        [(t1, 11), (t2, 12), (datetime.datetime(2030, 1, 1), 11)], f"t {t_type}, h long"
+    )
+    for f in (filters, collected):
+        got = [r["__contains"] for r in probe_filter(rows, f, "h", on=["t"]).orderBy("t").collect()]
+        assert got == [True, True, False]

@@ -382,3 +382,251 @@ def test_skipping_read_leaves_out_ints_outside_int64(spark, tmp_path):
     got = skipping_read(spark, dest, "id", [1, 2**64], index=idx)
     assert [r["v"] for r in got.collect()] == [10]
     assert skipping_read(spark, dest, "id", [2**64], index=idx).count() == 0
+
+
+# ------------------------------------------------------- the index handle ---
+
+
+class _Jobs:
+    """Spark jobs a block runs, counted with the status tracker."""
+
+    _n = 0
+
+    def __init__(self, spark):
+        self.sc = spark.sparkContext
+
+    def __enter__(self):
+        _Jobs._n += 1
+        self.group = f"skipping-jobs-{_Jobs._n}"
+        self.sc.setJobGroup(self.group, self.group)
+        return self
+
+    def __exit__(self, *exc):
+        self.sc.setLocalProperty("spark.jobGroup.id", None)
+        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
+        self.count = len(self.sc.statusTracker().getJobIdsForGroup(self.group))
+
+
+def _compiles(spark):
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+@pytest.fixture()
+def codegen(spark):
+    old = spark.conf.get("spark.sql.codegen.wholeStage")
+    spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    yield spark
+    spark.conf.set("spark.sql.codegen.wholeStage", old)
+
+
+def _table(spark, dest, n=4000, files=4):
+    spark.range(0, n, numPartitions=files).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    ).write.parquet(dest)
+    return dest
+
+
+def test_warm_lookup_runs_two_jobs_and_compiles_nothing(codegen, tmp_path):
+    """Through a warm handle a lookup runs the scan's two jobs, no index
+    collect and no schema job, and a new IN-list compiles no new class;
+    the first lookup on a freshly loaded index adds one collect."""
+    spark = codegen
+    dest = _table(spark, str(tmp_path / "t"))
+    p = str(tmp_path / "idx")
+    save_index(build_file_index(spark, dest, ["k"], "bloom", n=1000, fpp=0.01), p)
+    idx = load_index(spark, p)
+    skipping_read(spark, dest, "k", [1], index=idx).count()  # the table's schema and files
+    idx = load_index(spark, p)
+    with _Jobs(spark) as first:
+        assert skipping_read(spark, dest, "k", [2, 10**9], index=idx).count() == 1
+    with _Jobs(spark) as warm:
+        assert skipping_read(spark, dest, "k", [3, 1001, 10**9 + 1], index=idx).count() == 2
+    c0 = _compiles(spark)
+    with _Jobs(spark) as again:
+        assert skipping_read(spark, dest, "k", [4, 2002, 10**9 + 2], index=idx).count() == 2
+    assert _compiles(spark) == c0
+    assert warm.count <= 2 and again.count <= 2
+    assert first.count == warm.count + 1
+
+
+def test_handle_collects_again_when_the_index_files_change(spark, tmp_path):
+    """The handle's stamp is the (mtime, length) of the index's files: the
+    same index DataFrame collects again once they change, and not before."""
+    import os
+
+    dest = _table(spark, str(tmp_path / "t"))
+    p = str(tmp_path / "idx")
+    save_index(build_file_index(spark, dest, ["k"], "bloom", n=1000, fpp=0.01), p)
+    idx = load_index(spark, p)
+    skipping_read(spark, dest, "k", [1], index=idx).count()
+    with _Jobs(spark) as warm:
+        skipping_read(spark, dest, "k", [2], index=idx).count()
+    for f in glob.glob(f"{p}/part-*.parquet"):
+        os.utime(f, ns=(0, 0))
+    with _Jobs(spark) as touched:
+        assert skipping_read(spark, dest, "k", [3], index=idx).count() == 1
+    assert touched.count == warm.count + 1
+
+
+def test_refreshed_index_saved_in_place_is_collected_and_covers_the_new_file(
+    spark, tmp_path
+):
+    """``refresh_file_index`` then ``save_index`` to the same path: the
+    index loaded from it is collected again and prunes the new file by its
+    filter (it no longer reads it as an uncovered file)."""
+    from bitfilters_spark.sources.skipping import refresh_file_index
+
+    dest = _table(spark, str(tmp_path / "t"), files=2)
+    p = str(tmp_path / "idx")
+    save_index(build_file_index(spark, dest, ["k"], "bloom", n=1000, fpp=0.01), p)
+    old = load_index(spark, p)
+    skipping_read(spark, dest, "k", [1], index=old).count()
+    spark.createDataFrame([(5000, 7)], "k long, v long").coalesce(1).write.mode(
+        "append"
+    ).parquet(dest)
+    new_file = (set(spark.read.parquet(dest).inputFiles())
+                - {r["file"] for r in old.collect()}).pop()
+    assert prune_files(old, key_hashes(spark, [5000])) == []
+    assert [r["v"] for r in skipping_read(spark, dest, "k", [5000], index=old).collect()] == [7]
+
+    save_index(refresh_file_index(spark, dest, old, ["k"], "bloom", n=1000, fpp=0.01), p)
+    new = load_index(spark, p)
+    with _Jobs(spark) as first:
+        got = skipping_read(spark, dest, "k", [5000], index=new).collect()
+    with _Jobs(spark) as warm:
+        skipping_read(spark, dest, "k", [5001], index=new).count()
+    assert [r["v"] for r in got] == [7]
+    assert first.count == warm.count + 1
+    assert prune_files(new, key_hashes(spark, [5000])) == [new_file]
+
+
+def test_skipping_read_reads_files_the_index_does_not_cover(spark, tmp_path):
+    """A file added after the index was built is read, not skipped: the
+    index of a 2-file table said nothing about a third file holding k=5000,
+    and the lookup returned 0 rows where the exact count is 1. The zone
+    read follows the same rule."""
+    from bitfilters_spark.sources.skipping import build_zone_index, zone_read
+
+    dest = _table(spark, str(tmp_path / "t"), files=2)
+    idx = build_file_index(spark, dest, ["k"], "bloom", n=1000, fpp=0.01)
+    zi = build_zone_index(spark, dest, ["k"])
+    assert idx.count() == zi.count() == 2
+    skipping_read(spark, dest, "k", [1], index=idx).count()  # caches the 2-file table
+    spark.createDataFrame([(5000, 7)], "k long, v long").coalesce(1).write.mode(
+        "append"
+    ).parquet(dest)
+    assert [r["v"] for r in skipping_read(spark, dest, "k", [5000], index=idx).collect()] == [7]
+    assert [r["v"] for r in zone_read(spark, dest, "k", 4500, None, zone_index=zi).collect()] == [7]
+    assert skipping_read(spark, dest, "k", [5, 5000], index=idx).count() == 2
+
+
+def test_empty_and_all_null_in_lists_read_no_rows(spark, tmp_path):
+    """``k IN ()`` and ``k IN (NULL)`` match nothing: both return an empty
+    DataFrame with the table's schema (they raised while hashing the
+    keys), and a NULL beside a key changes nothing."""
+    dest = _table(spark, str(tmp_path / "t"))
+    idx = build_file_index(spark, dest, ["k"], "bloom", n=1000, fpp=0.01)
+    schema = spark.read.parquet(dest).schema
+    for values in ([], [None], [None, None]):
+        out = skipping_read(spark, dest, "k", values, index=idx)
+        assert out.schema == schema
+        assert out.count() == 0
+    assert [r["v"] for r in skipping_read(spark, dest, "k", [None, 5], index=idx).collect()] == [50]
+
+
+def test_skipping_read_of_a_table_under_a_path_with_a_space(spark, tmp_path):
+    """Index rows name files by percent-encoded URI; the read decodes them."""
+    dest = _table(spark, str(tmp_path / "a table"))
+    idx = build_file_index(spark, dest, ["k"], "bloom", n=1000, fpp=0.01)
+    assert [r["v"] for r in skipping_read(spark, dest, "k", [7], index=idx).collect()] == [70]
+
+
+def test_skipping_read_keeps_partition_columns(spark, tmp_path):
+    """Survivors of a partitioned table are read from its root, so the
+    partition column keeps its values."""
+    dest = str(tmp_path / "parted")
+    spark.range(0, 1000, numPartitions=2).select(
+        F.col("id").alias("k"), (F.col("id") % 3).alias("p")
+    ).write.partitionBy("p").parquet(dest)
+    idx = build_file_index(spark, dest, ["k"], "bloom", n=1000, fpp=0.01)
+    got = skipping_read(spark, dest, "k", [4, 5], index=idx).orderBy("k").collect()
+    assert [(r["k"], r["p"]) for r in got] == [(4, 1), (5, 2)]
+
+
+@pytest.mark.parametrize("col,values", [
+    ("i", [1, 2**31 - 1, 7]),
+    ("i", [2**40, 3]),
+    ("s", ["a", "c", "zz"]),
+    ("n", [1, None, 3]),
+    ("n", [3, 2**64, -(2**63) - 1]),
+    ("d", ["2024-01-02", "2030-01-01"]),
+])
+def test_in_list_recheck_matches_isin(spark, tmp_path, col, values):
+    """The exact re-check returns the rows ``isin`` returns over the
+    non-NULL, representable values: int32, string and NULL-bearing keys,
+    ints outside int64, and a date key against strings (which keeps
+    ``isin``). The lookup does too, except for the date key: its index
+    hashes dates, and strings hash as strings."""
+    import datetime
+
+    from bitfilters_spark.sources.skipping import _in_values
+
+    dest = str(tmp_path / "t")
+    rows = [
+        (1, "a", 1, datetime.date(2024, 1, 1)),
+        (2**31 - 1, "c", None, datetime.date(2024, 1, 2)),
+        (None, None, 3, None),
+        (3, "b", 4, datetime.date(2024, 1, 3)),
+    ]
+    spark.createDataFrame(rows, "i int, s string, n long, d date").coalesce(2).write.parquet(dest)
+    full = spark.read.parquet(dest)
+    exact = [v for v in values if v is not None and -(2**63) <= (v if isinstance(v, int) else 0) < 2**63]
+    recheck = _in_values(col, full.schema[col].dataType, exact)
+    assert ("array_contains" in str(recheck)) == (col != "d")
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    want = rows(full.where(F.col(col).isin(exact)))
+    assert want and rows(full.where(recheck)) == want
+    if col != "d":
+        idx = build_file_index(spark, dest, [col], "bloom", n=100, fpp=0.01)
+        assert rows(skipping_read(spark, dest, col, values, index=idx)) == want
+
+
+def test_threads_sharing_an_index_collect_it_once(spark, tmp_path):
+    """Lookups from many threads through one index DataFrame collect it
+    once, and each returns its exact rows."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    dest = _table(spark, str(tmp_path / "t"))
+    idx = build_file_index(spark, dest, ["k"], "bloom", n=1000, fpp=0.01)
+    skipping_read(spark, dest, "k", [], index=idx)  # the table's schema and files
+    collect, calls = idx.collect, []
+
+    def counted():
+        calls.append(1)
+        return collect()
+
+    idx.collect = counted
+    keys = list(range(0, 4000, 250))
+    with ThreadPoolExecutor(8) as pool:
+        futures = [pool.submit(lambda k=k: skipping_read(
+            spark, dest, "k", [k], index=idx).collect()) for k in keys]
+        got = [f.result(timeout=300) for f in futures]
+    assert [[r["v"] for r in rows] for rows in got] == [[k * 10] for k in keys]
+    assert len(calls) == 1
+
+
+def test_table_cache_keeps_the_most_recent_tables(spark, tmp_path, monkeypatch):
+    """The per-path table cache is bounded: past its size, the table read
+    longest ago is dropped."""
+    from bitfilters_spark.sources import skipping
+
+    monkeypatch.setattr(skipping, "_TABLES", {})
+    monkeypatch.setattr(skipping, "_TABLES_MAX", 2)
+    paths = [_table(spark, str(tmp_path / f"t{i}"), n=10, files=1) for i in range(3)]
+    for p in paths:
+        assert len(skipping._table(spark, p)[1]) == 1
+    assert list(skipping._TABLES) == paths[1:]
