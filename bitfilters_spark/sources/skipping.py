@@ -28,19 +28,24 @@ for files that changed (an index row is keyed by file path).
 Index handle — a lookup pays for its scan, not for reloading metadata:
 
 * ``prune_files``, ``prune_files_range``, ``prune_files_multi`` and
-  ``refresh_file_index`` read an index DataFrame through one handle, held in a ``weakref.WeakKeyDictionary``
-  so that it never keeps the index alive. The first lookup collects the
-  index (one job) and keeps its rows, each file's filter (sniffed once),
-  and a version stamp: the (mtime, length) of each of the index's own
-  files, ``index.inputFiles()``. Every later lookup stats those files
-  again (no job) and collects again only when the stamp differs: an index
-  file rewritten in place or removed. ``load_index`` makes a new
-  DataFrame, so a re-saved index loaded again starts a new handle.
-* Per table path the module keeps the table's schema and file list,
-  keyed by the table root's stamp: each directory under a local root with
-  its (mtime, length, entry names), so a file added or removed anywhere
-  in the tree changes it. When the stamp changes, the schema is inferred
-  again (one job) and the files are listed again. Off the local file
+  ``refresh_file_index`` read an index DataFrame through one handle, held
+  in a ``weakref.WeakKeyDictionary`` so that it never keeps the index
+  alive. The first lookup collects the index (one job) into a state: its
+  rows, the files it covers, each file's filter (sniffed once) and a
+  version stamp, the (mtime, length) of each of the index's own files,
+  ``index.inputFiles()``. Every later lookup stats those files again (no
+  job) and collects again only when the stamp differs: an index file
+  rewritten in place or removed. A new collect makes a new state and
+  swaps it in whole, and a lookup takes the covered files from the same
+  state its pruning read, so threads that share an index never mix two
+  collects. ``load_index`` makes a new DataFrame, so a re-saved index
+  loaded again starts a new handle.
+* Per table path the module keeps the table's schema and file list, for
+  the 64 tables read most recently, keyed by the table root's stamp: each
+  directory under a local root with its (mtime, length, entry names), so
+  a file added or removed anywhere in the tree changes it. When the stamp
+  changes, the schema is inferred again (one job), the files are listed
+  again and the row-group counts below are read again. Off the local file
   system (HDFS, object stores) a directory's stamp cannot be trusted to
   move, so the files are listed on every call and only the schema is
   kept.
@@ -48,14 +53,17 @@ Index handle — a lookup pays for its scan, not for reloading metadata:
   job), every table file the index cannot rule out: the survivors, and
   the files the index does not cover because they came after it. Files
   gone from the table are not read.
-* The exact re-check holds an IN-list of numbers (over a numeric column)
-  or strings (over a string column) as one array literal,
-  ``array_contains``: generated code keeps it as one reference object,
-  so one plan shape compiles once. ``isin`` inlines each literal, and
-  every new list compiled a new class. ``isin`` stays for other type
-  pairs, where it coerces differently. Unlike ``isin``, the array is not
-  pushed into the Parquet reader's row-group pruning; the file index
-  does the skipping.
+* The exact re-check of an IN-list is ``isin`` wherever the Parquet
+  reader can use it: pushed into the scan, it skips the row groups of a
+  surviving file whose statistics or dictionaries hold none of the keys,
+  which is where a large or clustered file pays. ``isin`` inlines each
+  number, though, and every new list of numbers compiled a new class. So
+  when each file read holds one row group (its footer, read once per
+  table stamp, says so), row-group pruning could only drop a whole file,
+  the index's own job, and numbers go in one ``array_contains``
+  literal instead, which generated code keeps as one reference object:
+  one plan shape compiles once. Strings are held by reference either way,
+  and keep ``isin``.
 """
 
 from __future__ import annotations
@@ -64,14 +72,18 @@ import os
 import stat
 import threading
 import weakref
+from collections import OrderedDict
 from functools import partial
+from typing import NamedTuple
 from urllib.parse import unquote, urlparse
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType, IntegralType, NumericType, StringType, StructType
+from pyspark.sql.types import DataType, IntegralType, NumericType, StructType
 
 from ..functions.filters import _format_of, build_filter
 from ..functions.hashing import key_hash64, spark_hash64
@@ -210,50 +222,68 @@ def _tree_stamp(path: str):
     return tuple(out)
 
 
-# table path -> (stamp, schema, files), for the most recently read tables
-_TABLES: dict = {}
+class _Table(NamedTuple):
+    """A parquet table's schema and files, valid while ``stamp`` holds."""
+
+    stamp: tuple | None
+    schema: StructType
+    files: list
+    groups: dict  # file -> row groups in it, read from its footer when first read
+
+
+# table path -> _Table, for the most recently read tables, the latest last
+_TABLES: "OrderedDict[str, _Table]" = OrderedDict()
 _TABLES_MAX = 64
 _LOCK = threading.Lock()  # guards _TABLES and _HANDLES
 
 
-def _table(spark: SparkSession, path: str) -> tuple:
-    """(schema, files) of the parquet table at ``path``, kept while its
-    stamp holds. A table without a stamp (not on the local file system)
-    keeps its schema and is listed again on every call."""
+def _table(spark: SparkSession, path: str) -> _Table:
+    """The parquet table at ``path``, kept while its stamp holds. A table
+    without a stamp (not on the local file system) keeps its schema and is
+    listed again on every call."""
     stamp = _tree_stamp(path)
-    hit = _TABLES.get(path)
-    if hit is not None and stamp is not None and hit[0] == stamp:
-        return hit[1:]
+    with _LOCK:
+        hit = _TABLES.get(path)
+        if hit is not None:
+            _TABLES.move_to_end(path)
+    if hit is not None and stamp is not None and hit.stamp == stamp:
+        return hit
     if hit is None or stamp is not None:
         df = spark.read.parquet(path)  # infers the schema: one job
     else:
-        df = spark.read.schema(hit[1]).parquet(path)
-    entry = (stamp, df.schema, df.inputFiles())
+        df = spark.read.schema(hit.schema).parquet(path)
+    entry = _Table(stamp, df.schema, df.inputFiles(), {})
     with _LOCK:
-        if path not in _TABLES and len(_TABLES) >= _TABLES_MAX:
-            _TABLES.pop(next(iter(_TABLES)))  # the oldest entry
         _TABLES[path] = entry
-    return entry[1:]
+        _TABLES.move_to_end(path)
+        if len(_TABLES) > _TABLES_MAX:
+            _TABLES.popitem(last=False)  # the table read longest ago
+    return entry
 
 
-class _Handle:
-    """What the lookups through one index DataFrame share: its rows, the
-    files it covers and each file's filter, valid while ``stamp`` (the
-    (mtime, length) of each of the index's input files) holds."""
+def _row_groups(table: _Table, f: str) -> int | None:
+    """Row groups in the table's file ``f``, from its footer (read once per
+    table stamp); None when it cannot be read, or is not on the local file
+    system."""
+    if f not in table.groups:
+        local = _local(f)
+        try:
+            n = None if local is None else pq.read_metadata(local).num_row_groups
+        except (OSError, pa.ArrowException):
+            n = None
+        table.groups[f] = n
+    return table.groups[f]
 
-    def __init__(self, inputs: list):
-        self.inputs, self.lock = inputs, threading.Lock()
-        self.stamp = self.rows = None
-        self.covered, self.probes = frozenset(), {}
 
-    def refresh(self, index: DataFrame) -> "_Handle":
-        stamp = tuple(_stat(index.sparkSession, f) for f in self.inputs)
-        with self.lock:  # one collect when threads share an index
-            if self.rows is None or stamp != self.stamp:
-                rows = index.collect()  # metadata-scale: one row per file
-                self.covered = frozenset(_key(r["file"]) for r in rows)
-                self.stamp, self.rows, self.probes = stamp, rows, {}
-        return self
+class _State(NamedTuple):
+    """One collect of an index: its rows, the files it covers and, per
+    filter column, each file's probe built from these rows. Valid while
+    ``stamp`` (the (mtime, length) of each of the index's files) holds."""
+
+    stamp: tuple
+    rows: list
+    covered: frozenset
+    probes: dict
 
     def filters(self, filter_col: str) -> list:
         """(file, probe) per file whose filter holds any key."""
@@ -265,36 +295,60 @@ class _Handle:
         return self.probes[filter_col]
 
 
+class _Handle:
+    """What the lookups through one index DataFrame share: its latest state,
+    swapped whole when the index's files change."""
+
+    def __init__(self, inputs: list):
+        self.inputs, self.lock, self.state = inputs, threading.Lock(), None
+
+    def refresh(self, index: DataFrame) -> _State:
+        stamp = tuple(_stat(index.sparkSession, f) for f in self.inputs)
+        with self.lock:  # one collect when threads share an index
+            if self.state is None or stamp != self.state.stamp:
+                rows = index.collect()  # metadata-scale: one row per file
+                covered = frozenset(_key(r["file"]) for r in rows)
+                self.state = _State(stamp, rows, covered, {})
+            return self.state
+
+
 _HANDLES: "weakref.WeakKeyDictionary[DataFrame, _Handle]" = weakref.WeakKeyDictionary()
+# per thread: (index, the state its last pruning read), until a read takes it
+_LAST = threading.local()
 
 
-def _handle(index: DataFrame) -> _Handle:
-    """The index's handle, collected again if the index's files changed."""
+def _state(index: DataFrame) -> _State:
+    """The index's state, collected again if the index's files changed."""
     with _LOCK:
         h = _HANDLES.get(index)
         if h is None:
             h = _HANDLES[index] = _Handle(index.inputFiles())
-    return h.refresh(index)
+    state = h.refresh(index)
+    _LAST.seen = (weakref.ref(index), state)
+    return state
 
 
 def _read(
-    spark: SparkSession, path: str, table: tuple, index: DataFrame, survivors: list
-) -> DataFrame:
+    spark: SparkSession, path: str, table: _Table, index: DataFrame, survivors: list
+) -> tuple[DataFrame, list]:
     """The table's files that the index did not rule out: its survivors and
-    the files it does not cover, read with the table's schema."""
-    schema, files = table
-    # the state the pruning just used: no second stamp between the two
-    covered = (_HANDLES.get(index) or _handle(index)).covered
+    the files it does not cover, read with the table's schema; and the list
+    of those files."""
+    # the files covered by the state the pruning read, so that a file a
+    # newer state covers is not left out as neither survivor nor uncovered
+    seen, _LAST.seen = getattr(_LAST, "seen", None), None
+    state = seen[1] if seen is not None and seen[0]() is index else _state(index)
     keep = {_key(f) for f in survivors}
-    read = [f for f in files if _key(f) in keep or _key(f) not in covered]
+    files = table.files
+    read = [f for f in files if _key(f) in keep or _key(f) not in state.covered]
     if not read:
-        return _empty(spark, path, schema)
-    reader = spark.read.schema(schema)
+        return _empty(spark, path, table.schema), read
+    reader = spark.read.schema(table.schema)
     if len(read) == len(files):
-        return reader.parquet(path)
+        return reader.parquet(path), read
     if not any(c in path for c in "*?[{"):  # a root, not a glob
         reader = reader.option("basePath", path)  # finds partition columns
-    return reader.parquet(*sorted(unquote(f) for f in read))
+    return reader.parquet(*sorted(unquote(f) for f in read)), read
 
 
 def _empty(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
@@ -309,17 +363,18 @@ def _col_type(schema: StructType, df: DataFrame, col: str) -> DataType:
     return fields[col] if col in fields else df.select(col).schema[0].dataType
 
 
-def _in_values(col: str, dtype: DataType, values: list) -> Column:
-    """``col IN values`` over non-NULL values. Numbers against a numeric
-    column, or strings against a string column, go in one array literal,
-    which generated code holds as one reference object, so each IN-list of
-    one plan shape compiles once; ``isin`` inlines each literal and
-    compiled a new class for every new list. Other pairs keep ``isin``:
-    its coercion differs from the array's (a date column against strings)."""
+def _in_values(col: str, dtype: DataType, values: list, pushdown: bool) -> Column:
+    """``col IN values`` over non-NULL values. ``isin`` is pushed into the
+    Parquet reader, which skips row groups by their statistics and
+    dictionaries, but it inlines each number, so every new list of numbers
+    compiles a new class (strings are held by reference and compile once).
+    Without ``pushdown``, numbers against a numeric column go in one array
+    literal instead: generated code holds it as one reference object, so
+    one plan shape compiles once."""
     num = isinstance(dtype, NumericType) and all(
         isinstance(v, (int, float)) and not isinstance(v, bool) for v in values
     )
-    if num or (isinstance(dtype, StringType) and all(isinstance(v, str) for v in values)):
+    if num and not pushdown:
         return F.array_contains(F.array(*map(F.lit, values)), F.col(col))
     return F.col(col).isin(values)
 
@@ -334,7 +389,7 @@ def prune_files(
     a pruned file definitely contains none of them). Files the index does
     not cover are not listed; ``skipping_read`` reads them anyway."""
     return sorted(
-        f for f, probe in _handle(index).filters(filter_col) if bool(probe(hashes).any())
+        f for f, probe in _state(index).filters(filter_col) if bool(probe(hashes).any())
     )
 
 
@@ -356,16 +411,18 @@ def skipping_read(
     values = [v for v in values if v is not None]
     table = _table(spark, path)
     if not values:
-        return _empty(spark, path, table[0])
+        return _empty(spark, path, table.schema)
     if index is None:
         index = build_file_index(spark, path, [key_col], kind, **filter_kw)
-    df = _read(spark, path, table, index, prune_files(index, key_hashes(spark, values)))
-    dtype = _col_type(table[0], df, key_col)
+    df, read = _read(spark, path, table, index, prune_files(index, key_hashes(spark, values)))
+    dtype = _col_type(table.schema, df, key_col)
     if isinstance(dtype, IntegralType):
         values = [v for v in values if not _outside_int64(v)]
         if not values:
-            return _empty(spark, path, table[0])
-    return df.where(_in_values(key_col, dtype, values))
+            return _empty(spark, path, table.schema)
+    # row-group pruning pays only inside a file of several row groups
+    pushdown = not all(_row_groups(table, f) in (0, 1) for f in read)
+    return df.where(_in_values(key_col, dtype, values, pushdown))
 
 
 def save_index(index: DataFrame, path: str) -> None:
@@ -437,7 +494,7 @@ def zone_read(
     table = _table(spark, path)
     if zone_index is None:
         zone_index = build_zone_index(spark, path, [col])
-    df = _read(spark, path, table, zone_index, prune_files_range(zone_index, col, lo, hi))
+    df, _ = _read(spark, path, table, zone_index, prune_files_range(zone_index, col, lo, hi))
     pred = F.lit(True)
     if lo is not None:
         pred = pred & (F.col(col) >= lo)
@@ -462,8 +519,8 @@ def refresh_file_index(
     dropped, and ONLY files new since ``old_index`` are scanned and
     filtered. The refresh scan cost is proportional to the NEW data, not
     the table."""
-    current = set(_table(spark, path)[1])
-    old_rows = _handle(old_index).rows  # metadata-scale
+    current = set(_table(spark, path).files)
+    old_rows = _state(old_index).rows  # metadata-scale
     kept = [(r["file"], bytes(r[filter_col])) for r in old_rows if r["file"] in current]
     known = {f for f, _ in kept}
     new_files = sorted(current - known)
@@ -550,7 +607,7 @@ def prune_files_multi(
     multi-column conjunction prunes multiplicatively. No false
     negatives, same contract as `prune_files_range`."""
     out = []
-    for r in _handle(zone_index).rows:
+    for r in _state(zone_index).rows:
         ok = True
         for col, lo, hi in predicates:
             mn, mx = r[f"{col}_min"], r[f"{col}_max"]

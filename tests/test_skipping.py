@@ -566,8 +566,8 @@ def test_in_list_recheck_matches_isin(spark, tmp_path, col, values):
     """The exact re-check returns the rows ``isin`` returns over the
     non-NULL, representable values: int32, string and NULL-bearing keys,
     ints outside int64, and a date key against strings (which keeps
-    ``isin``). The lookup does too, except for the date key: its index
-    hashes dates, and strings hash as strings."""
+    ``isin``), with and without pushdown. The lookup does too, except for
+    the date key: its index hashes dates, and strings hash as strings."""
     import datetime
 
     from bitfilters_spark.sources.skipping import _in_values
@@ -582,17 +582,76 @@ def test_in_list_recheck_matches_isin(spark, tmp_path, col, values):
     spark.createDataFrame(rows, "i int, s string, n long, d date").coalesce(2).write.parquet(dest)
     full = spark.read.parquet(dest)
     exact = [v for v in values if v is not None and -(2**63) <= (v if isinstance(v, int) else 0) < 2**63]
-    recheck = _in_values(col, full.schema[col].dataType, exact)
-    assert ("array_contains" in str(recheck)) == (col != "d")
 
     def rows(df):
         return sorted(map(tuple, df.collect()), key=repr)
 
     want = rows(full.where(F.col(col).isin(exact)))
-    assert want and rows(full.where(recheck)) == want
+    assert want
+    for pushdown in (False, True):
+        recheck = _in_values(col, full.schema[col].dataType, exact, pushdown)
+        assert ("array_contains" in str(recheck)) == (col in "in" and not pushdown)
+        assert rows(full.where(recheck)) == want
     if col != "d":
         idx = build_file_index(spark, dest, [col], "bloom", n=100, fpp=0.01)
         assert rows(skipping_read(spark, dest, col, values, index=idx)) == want
+
+
+def test_recheck_is_pushed_into_files_of_several_row_groups(spark, tmp_path):
+    """Where a file to read holds several row groups, the re-check stays a
+    pushed ``IN``, so the Parquet reader skips the row groups that hold none
+    of the keys; where each holds one, it is the array that compiles once."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    dest = tmp_path / "t"
+    dest.mkdir()
+    for i in range(2):
+        k = list(range(i * 1000, (i + 1) * 1000))
+        pq.write_table(pa.table({"k": k, "v": [x * 10 for x in k]}),
+                       str(dest / f"part-{i}.parquet"), row_group_size=100)
+    idx = build_file_index(spark, str(dest), ["k"], "bloom", n=1000, fpp=0.01)
+    got = skipping_read(spark, str(dest), "k", [1234, 10**9], index=idx)
+    assert "array_contains" not in plan(got) and " IN (" in plan(got)
+    assert [r["v"] for r in got.collect()] == [12340]
+
+    one = _table(spark, str(tmp_path / "one"))
+    idx = build_file_index(spark, one, ["k"], "bloom", n=1000, fpp=0.01)
+    got = skipping_read(spark, one, "k", [123, 10**9], index=idx)
+    assert "array_contains" in plan(got)
+    assert [r["v"] for r in got.collect()] == [1230]
+
+
+def test_read_takes_covered_files_from_the_state_its_pruning_read(
+    spark, tmp_path, monkeypatch
+):
+    """If another thread collects the index again between a lookup's
+    pruning and its read, the read still takes the files the index covers
+    from the state the pruning read. Taken from the newer state, a file it
+    covers but the older pruning never probed was read by neither rule."""
+    from bitfilters_spark.sources import skipping
+
+    dest = _table(spark, str(tmp_path / "t"), files=2)
+    idx = build_file_index(spark, dest, ["k"], "bloom", n=1000, fpp=0.01)
+    skipping_read(spark, dest, "k", [1], index=idx).count()  # caches the 2-file table
+    spark.createDataFrame([(5000, 7)], "k long, v long").coalesce(1).write.mode(
+        "append"
+    ).parquet(dest)
+    new_file = (set(spark.read.parquet(dest).inputFiles())
+                - {r["file"] for r in idx.collect()}).pop()
+    prune = skipping.prune_files
+
+    def racing(index, hashes, filter_col="filter"):
+        out = prune(index, hashes, filter_col)
+        h = skipping._HANDLES[index]  # a newer collect that covers the new file
+        h.state = h.state._replace(covered=h.state.covered | {skipping._key(new_file)})
+        return out
+
+    monkeypatch.setattr(skipping, "prune_files", racing)
+    assert [r["v"] for r in skipping_read(spark, dest, "k", [5000], index=idx).collect()] == [7]
 
 
 def test_threads_sharing_an_index_collect_it_once(spark, tmp_path):
@@ -621,12 +680,17 @@ def test_threads_sharing_an_index_collect_it_once(spark, tmp_path):
 
 def test_table_cache_keeps_the_most_recent_tables(spark, tmp_path, monkeypatch):
     """The per-path table cache is bounded: past its size, the table read
-    longest ago is dropped."""
+    longest ago is dropped, and reading a table again makes it the newest."""
+    from collections import OrderedDict
+
     from bitfilters_spark.sources import skipping
 
-    monkeypatch.setattr(skipping, "_TABLES", {})
+    monkeypatch.setattr(skipping, "_TABLES", OrderedDict())
     monkeypatch.setattr(skipping, "_TABLES_MAX", 2)
-    paths = [_table(spark, str(tmp_path / f"t{i}"), n=10, files=1) for i in range(3)]
-    for p in paths:
-        assert len(skipping._table(spark, p)[1]) == 1
-    assert list(skipping._TABLES) == paths[1:]
+    paths = [_table(spark, str(tmp_path / f"t{i}"), n=10, files=1) for i in range(4)]
+    for p in paths[:3]:
+        assert len(skipping._table(spark, p).files) == 1
+    assert list(skipping._TABLES) == paths[1:3]
+    skipping._table(spark, paths[1])  # a hit: now the newest
+    skipping._table(spark, paths[3])
+    assert list(skipping._TABLES) == [paths[1], paths[3]]
