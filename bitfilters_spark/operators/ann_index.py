@@ -8,14 +8,13 @@ nearest-neighbor audits). This module splits the cost:
 
 * :func:`build_ann_index` — ONE corpus pass k-means-trains (or reuses)
   the coarse quantizer, routes every vector to its nearest centroid
-  cell, and persists a CELL-BUCKETED table ``<name>_cells``
-  (cell, id, vec — the vector stored L2-NORMALIZED in float64, so probe
-  scoring replays `ivf_topk`'s arithmetic bit-for-bit) plus the
-  ``<name>_centroids`` table (model-scale). Bucketing + in-bucket cell
-  sort mean a probe's candidate cells live in known buckets, in sorted
-  runs parquet min/max stats prune to. Builds publish through
-  `sources/index_store.py`: a failed rebuild leaves the previous index
-  fully queryable.
+  cell (`_vectors.route`, the router `ivf_topk` uses), and persists a
+  CELL-BUCKETED table ``<name>_cells`` (cell, id, vec — the vector
+  stored L2-NORMALIZED in float64) plus the ``<name>_centroids`` table
+  (model-scale). Bucketing + in-bucket cell sort mean a probe's
+  candidate cells live in known buckets, in sorted runs parquet min/max
+  stats prune to. Builds publish through `sources/index_store.py`: a
+  failed rebuild leaves the previous index fully queryable.
 * :func:`append_to_ann_index` — fold NEW vectors in at cost ∝ the new
   data: they route through the STORED centroids (no re-training — the
   quantizer is frozen, the standard IVF maintenance trade: cell balance
@@ -26,16 +25,18 @@ nearest-neighbor audits). This module splits the cost:
   driver-side (small by contract, the `cosine_topk` convention), their
   ``nprobe`` nearest cells become a LITERAL In-filter pushed into the
   bucketed cells scan (non-candidate cells never leave parquet) plus a
-  broadcast (query, cell) probe list; scoring is per-partition numpy,
-  and the top-k window runs over candidates only. Probe cost ∝
-  corpus × nprobe / n_centroids, never the full corpus — and the
-  routing pass `ivf_topk` pays per call is already on disk.
+  broadcast (query, cell) probe list; each Arrow batch of candidates is
+  scored and keeps its local top-k, and the top-k window runs over
+  those survivors only. Probe cost ∝ corpus × nprobe / n_centroids,
+  never the full corpus — and the routing pass `ivf_topk` pays per call
+  is already on disk.
 
 Composition law (pytest, tests/test_similarity.py): at full probe
 (``nprobe == n_centroids``) ``ann_query_index`` returns EXACTLY
-``ivf_topk`` (itself exact vs brute force at full probe) — the persisted
-normalized float64 vectors round-trip parquet losslessly and the scoring
-expression order is identical, so the equality is bit-exact. Appending
+``ivf_topk`` (itself exact vs brute force at full probe). This holds by
+construction: both run `_vectors.probe_topk` with the same kernel, one
+over the stored cells and one over the in-session routed frame, and the
+normalized float64 vectors round-trip parquet losslessly. Appending
 half the corpus then probing equals a from-scratch rebuild over the
 union (same frozen centroids ⇒ same cells ⇒ same candidates).
 
@@ -48,56 +49,18 @@ top-k).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from ..sources import index_store
 from ..sources.index_store import Table
+from . import _vectors as V
 from .similarity import ivf_centroids
 
 _ANN = (Table("cells", "cell", sort=True), Table("centroids"))
 _IVFPQ = _ANN + (Table("codebooks"),)
 _SIG = (Table("sigs", "id", sort=True),)
-
-_CELL_SCHEMA = StructType(
-    [
-        StructField("cell", LongType()),
-        StructField("id", LongType()),
-        StructField("vec", ArrayType(DoubleType())),
-    ]
-)
-
-
-def _route(df: DataFrame, id_col: str, vec_col: str, C: np.ndarray) -> DataFrame:
-    """(cell, id, vec) — vectors L2-normalized in float64 and assigned to
-    their nearest centroid; one mapInPandas pass, centroids broadcast.
-    EXACTLY `ivf_topk`'s assignment arithmetic, so persisted rows replay
-    the in-session operator bit-for-bit."""
-    bc = df.sparkSession.sparkContext.broadcast(np.asarray(C, dtype=np.float64))
-
-    def assign(batches):
-        C_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            norms = np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            cells = np.argmax((mat / norms) @ C_.T, axis=1)
-            yield pd.DataFrame(
-                {"cell": cells, "id": ids, "vec": list(mat / norms)}
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(assign, schema=_CELL_SCHEMA)
 
 
 def _centroid_frame(spark: SparkSession, C: np.ndarray) -> DataFrame:
@@ -133,7 +96,7 @@ def build_ann_index(
     )
     index_store.publish(
         spark, name, _ANN,
-        [_route(df, id_col, vec_col, C), _centroid_frame(spark, C)],
+        [V.route(df, id_col, vec_col, C), _centroid_frame(spark, C)],
         {"num_buckets": num_buckets, "n_centroids": len(C)}, path,
     )
     return C
@@ -179,7 +142,7 @@ def append_to_ann_index(
     )
     C = load_ann_centroids(spark, name)
     index_store.append(
-        spark, name, _ANN[:1], [_route(new_df, id_col, vec_col, C)], num_buckets
+        spark, name, _ANN[:1], [V.route(new_df, id_col, vec_col, C)], num_buckets
     )
 
 
@@ -212,82 +175,21 @@ class AnnProbe:
         max_queries: int = 100_000,
     ) -> DataFrame:
         """(query_id, rank, neighbor_id) — identical rows to ``ivf_topk``
-        on the indexed corpus with the same centroids and nprobe. The
+        on the indexed corpus with the same centroids and nprobe: both
+        run `_vectors.probe_topk`, here over the stored cells. The
         candidate cell list is BOTH a literal In-filter on the bucketed
         cells scan (parquet prunes non-candidate cells) and a broadcast
         (query, cell) probe join; the only wide op is the final
-        per-query top-k window over candidates."""
-        spark, C = self.spark, self.C
-        # queries are driver-collected by contract (the cosine_topk
-        # convention); max_queries turns a corpus-sized "query" set into
-        # an error instead of a silent driver OOM
-        qrows = queries.select(id_col, vec_col).limit(max_queries + 1).collect()
-        if len(qrows) > max_queries:
-            raise ValueError(
-                f"ann_query_index collected more than max_queries="
-                f"{max_queries} query rows; batch the query set, or raise "
-                "max_queries consciously."
-            )
-        empty = spark.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long"
+        per-query top-k window over each batch's local top-k."""
+        got = V.collect_queries(
+            queries, id_col, vec_col, max_queries, "ann_query_index"
         )
-        if not qrows:  # 0-row query batches must not crash (repo convention)
-            return empty
-        qids = np.array([r[0] for r in qrows], dtype=np.int64)
-        qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-        qmat /= np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-        order = np.argsort(-(qmat @ C.T), axis=1)[:, : min(nprobe, len(C))]
-        probe_pairs = [
-            (int(qids[i]), int(c)) for i in range(len(qids)) for c in order[i]
-        ]
-        cand_cells = sorted({c for _, c in probe_pairs})
-        probes = spark.createDataFrame(probe_pairs, "query_id long, cell long")
-        qbc = spark.sparkContext.broadcast(
-            {int(qids[i]): qmat[i] for i in range(len(qids))}
-        )
-        cells = spark.table(f"{self.name}_cells").where(
-            F.col("cell").isin(cand_cells)
-        )
-        cand = (
-            F.broadcast(probes)
-            .join(cells, "cell")
-            .where(F.col("query_id") != F.col("id"))
-        )
-
-        sim_schema = StructType(
-            [
-                StructField("query_id", LongType()),
-                StructField("neighbor_id", LongType()),
-                StructField("sim", DoubleType()),
-            ]
-        )
-
-        def score(batches):
-            qm = qbc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                mat = np.array(list(pdf["vec"]), dtype=np.float64)
-                qv = np.array([qm[q] for q in pdf["query_id"]], dtype=np.float64)
-                sims = np.einsum("ij,ij->i", mat, qv)
-                yield pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"].to_numpy(dtype=np.int64),
-                        "neighbor_id": pdf["id"].to_numpy(dtype=np.int64),
-                        "sim": sims,
-                    }
-                )
-
-        scored = cand.mapInPandas(score, schema=sim_schema)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("sim").desc(), F.col("neighbor_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id")
+        if got is None:  # 0-row query batches must not crash (repo convention)
+            return V.empty_topk(self.spark)
+        qids, Q = got
+        return V.probe_topk(
+            self.spark.table(f"{self.name}_cells"), qids, Q, self.C, nprobe, k,
+            V.cell_kernel, Q,
         )
 
 
@@ -322,41 +224,31 @@ def ann_index_report(spark: SparkSession, name: str) -> DataFrame:
     vs the post-build reading means the frozen quantizer no longer fits
     the data: rebuild to re-center."""
     index_store.refresh(spark, name, _ANN)
-    C = load_ann_centroids(spark, name)
-    bc = spark.sparkContext.broadcast(C)
-
-    out_schema = StructType(
-        [
-            StructField("cell", LongType()),
-            StructField("n_vecs", LongType()),
-            StructField("sum_sim", DoubleType()),
-            StructField("min_sim", DoubleType()),
-        ]
-    )
+    bc = spark.sparkContext.broadcast(load_ann_centroids(spark, name))
 
     def per_cell(batches):
         C_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            cells = pdf["cell"].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf["vec"]), dtype=np.float64)
-            sims = np.einsum("ij,ij->i", mat, C_[cells])
-            g = pd.DataFrame({"cell": cells, "sim": sims}).groupby("cell")["sim"]
-            agg = g.agg(["count", "sum", "min"]).reset_index()
-            yield pd.DataFrame(
-                {
-                    "cell": agg["cell"],
-                    "n_vecs": agg["count"].astype(np.int64),
-                    "sum_sim": agg["sum"],
-                    "min_sim": agg["min"],
-                }
-            )
+            cells = V.ids(b.column(0))
+            sims = np.einsum("ij,ij->i", V.matrix(b.column(1)), C_[cells])
+            cell, inv = np.unique(cells, return_inverse=True)
+            min_sim = np.full(len(cell), np.inf)
+            np.minimum.at(min_sim, inv, sims)
+            yield pa.RecordBatch.from_pydict({
+                "cell": cell,
+                "n_vecs": np.bincount(inv),
+                "sum_sim": np.bincount(inv, weights=sims),
+                "min_sim": min_sim,
+            })
 
     partials = (
         spark.table(f"{name}_cells")
         .select("cell", "vec")
-        .mapInPandas(per_cell, schema=out_schema)  # partition-local partials
+        .mapInArrow(  # partition-local partials
+            per_cell, "cell long, n_vecs long, sum_sim double, min_sim double"
+        )
         .groupBy("cell")
         .agg(
             F.sum("n_vecs").alias("n_vecs"),
@@ -423,55 +315,13 @@ def recenter_ann_index(
 # vector store holds 16-byte codes where #132 holds 8·d-byte floats
 # (768-dim float64: 6144 → m bytes). Probing combines both halves of
 # the decomposition q·v = q·c_cell + q·r: the first term is computed
-# EXACTLY per (query, cell) on the driver, the second approximated by
+# EXACTLY per (query, cell) in each probe task, the second approximated by
 # ADC over the residual codebooks — so the only approximation is the
 # residual quantization error, and in the lossless-codebook regime
 # (every subspace ≤ n_codes distinct residuals) probing equals
 # `ivf_topk` with the same centroids and nprobe EXACTLY (pytest).
 # Codebooks are GLOBAL across cells (the FAISS default — per-cell books
 # would multiply model size by n_centroids for marginal recall).
-
-_CODE_SCHEMA = StructType(
-    [
-        StructField("cell", LongType()),
-        StructField("id", LongType()),
-        StructField("code", BinaryType()),
-    ]
-)
-
-
-def _encode_residuals(routed: DataFrame, C: np.ndarray, cb: np.ndarray) -> DataFrame:
-    """(cell, id, code) — PQ-encode each routed vector's residual
-    against its cell centroid; one mapInPandas pass, both models
-    broadcast. Assignment arithmetic mirrors `similarity.pq_encode`."""
-    m, dsub = cb.shape[0], cb.shape[2]
-    b = routed.sparkSession.sparkContext.broadcast(
-        (np.asarray(C, dtype=np.float64), np.asarray(cb, dtype=np.float64))
-    )
-
-    def enc(batches):
-        C_, cb_ = b.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cells = pdf["cell"].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf["vec"]), dtype=np.float64)
-            R = mat - C_[cells]
-            codes = np.empty((len(R), m), dtype=np.uint8)
-            for s in range(m):
-                Xs = R[:, s * dsub : (s + 1) * dsub]
-                Cb = cb_[s]
-                dist = -2.0 * (Xs @ Cb.T) + (Cb * Cb).sum(axis=1)[None, :]
-                codes[:, s] = np.argmin(dist, axis=1)
-            yield pd.DataFrame(
-                {
-                    "cell": cells,
-                    "id": pdf["id"].to_numpy(dtype=np.int64),
-                    "code": [c.tobytes() for c in codes],
-                }
-            )
-
-    return routed.mapInPandas(enc, schema=_CODE_SCHEMA)
 
 
 def build_ivfpq_index(
@@ -506,14 +356,14 @@ def build_ivfpq_index(
         else ivf_centroids(df, vec_col, n_centroids, seed=seed),
         dtype=np.float64,
     )
-    routed = _route(df, id_col, vec_col, C)
     if codebooks is None:
         # deterministic training sample (r14, ADVICE): an unordered
         # limit() varies across rebuilds of the same corpus, silently
         # changing the codebooks; TakeOrdered by the unique id pins it,
         # cost O(n log sample) distributed — never a full sort
         sample = (
-            routed.select("cell", "vec", "id")
+            V.route(df, id_col, vec_col, C)
+            .select("cell", "vec", "id")
             .orderBy("id")
             .limit(sample_rows)
             .collect()
@@ -536,7 +386,7 @@ def build_ivfpq_index(
     )
     index_store.publish(
         spark, name, _IVFPQ,
-        [_encode_residuals(routed, C, cb), _centroid_frame(spark, C), books],
+        [V.encode(df, id_col, vec_col, cb, C), _centroid_frame(spark, C), books],
         {"num_buckets": num_buckets, "n_centroids": len(C), "pq_m": cb.shape[0]},
         path,
     )
@@ -578,7 +428,7 @@ def append_to_ivfpq_index(
         spark,
         name,
         _IVFPQ[:1],
-        [_encode_residuals(_route(new_df, id_col, vec_col, C), C, cb)],
+        [V.encode(new_df, id_col, vec_col, cb, C)],
         num_buckets,
     )
 
@@ -614,92 +464,20 @@ class IvfPqProbe:
         over PQ codes: candidate cells are a literal In-filter on the
         bucketed codes scan + a broadcast probe list; per candidate the
         score is base[q, cell] + Σ_s LUT[q][s, code_s]."""
-        spark, C, cb = self.spark, self.C, self.cb
-        m, k_eff, dsub = cb.shape
-        qrows = queries.select(id_col, vec_col).limit(max_queries + 1).collect()
-        if len(qrows) > max_queries:
-            raise ValueError(
-                f"ivfpq_query_index collected more than max_queries="
-                f"{max_queries} query rows; batch the query set, or raise "
-                "max_queries consciously."
-            )
-        empty = spark.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long"
+        got = V.collect_queries(
+            queries, id_col, vec_col, max_queries, "ivfpq_query_index"
         )
-        if not qrows:
-            return empty
-        qids = np.array([r[0] for r in qrows], dtype=np.int64)
-        qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-        qmat /= np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-        base = qmat @ C.T  # exact q . c_cell term, (nq, n_centroids)
-        order = np.argsort(-base, axis=1)[:, : min(nprobe, len(C))]
-        probe_pairs = [
-            (int(qids[i]), int(c)) for i in range(len(qids)) for c in order[i]
-        ]
-        cand_cells = sorted({c for _, c in probe_pairs})
-        probes = spark.createDataFrame(probe_pairs, "query_id long, cell long")
-        qpos = {int(qids[i]): i for i in range(len(qids))}
-        # broadcast the COMPACT models (qmat is nq x d; C/cb are tiny)
-        # and derive the ADC LUT + base table ONCE PER TASK on the
-        # executor: the expanded LUT is (nq, m*k_eff) — up to ~32x qmat
-        # at the defaults, ~1.6 GB at max_queries — and shipping it
-        # would OOM long before the query bound AnnProbe sustains; the
-        # one einsum per task is nq*d*k_eff flops, noise next to scan
-        bc = spark.sparkContext.broadcast((qpos, qmat, C, cb))
-        cells = spark.table(f"{self.name}_cells").where(
-            F.col("cell").isin(cand_cells)
-        )
-        cand = (
-            F.broadcast(probes)
-            .join(cells, "cell")
-            .where(F.col("query_id") != F.col("id"))
-        )
-
-        sim_schema = StructType(
-            [
-                StructField("query_id", LongType()),
-                StructField("neighbor_id", LongType()),
-                StructField("sim", DoubleType()),
-            ]
-        )
-
-        def score(batches):
-            qpos_, qmat_, C_, cb_ = bc.value
-            base_ = qmat_ @ C_.T
-            lut_ = np.einsum(
-                "qsd,sjd->qsj", qmat_.reshape(len(qmat_), m, dsub), cb_
-            ).reshape(len(qmat_), m * k_eff)
-            offs = np.arange(m, dtype=np.int64) * k_eff
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                qidx = np.array(
-                    [qpos_[q] for q in pdf["query_id"]], dtype=np.int64
-                )
-                cells_ = pdf["cell"].to_numpy(dtype=np.int64)
-                cm = np.frombuffer(b"".join(pdf["code"]), dtype=np.uint8).reshape(
-                    -1, m
-                )
-                idx = cm.astype(np.int64) + offs[None, :]
-                adc = lut_[qidx[:, None], idx].sum(axis=1)
-                yield pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"].to_numpy(dtype=np.int64),
-                        "neighbor_id": pdf["id"].to_numpy(dtype=np.int64),
-                        "sim": base_[qidx, cells_] + adc,
-                    }
-                )
-
-        scored = cand.mapInPandas(score, schema=sim_schema)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("sim").desc(), F.col("neighbor_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id")
+        if got is None:
+            return V.empty_topk(self.spark)
+        qids, Q = got
+        # broadcast the COMPACT models (Q is nq x d; C/cb are tiny) and
+        # derive the ADC LUT + base table ONCE PER TASK on the executor:
+        # the expanded LUT is (nq, m*k_eff) — up to ~32x Q at the
+        # defaults, ~1.6 GB at max_queries — and shipping it would OOM
+        # long before the query bound AnnProbe sustains
+        return V.probe_topk(
+            self.spark.table(f"{self.name}_cells"), qids, Q, self.C, nprobe, k,
+            V.ivfpq_kernel, (Q, self.C, self.cb),
         )
 
 

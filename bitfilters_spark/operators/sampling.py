@@ -978,51 +978,18 @@ def mine_hard_negatives(
     mine block-locally (still same-cell near neighbors; the trade is
     documented, not silent). Deterministic given the quantizer."""
     from pyspark.sql import Window
-    from pyspark.sql.types import LongType, StructField, StructType
 
-    import numpy as np
-    import pandas as pd
-
+    from ._vectors import route
     from .similarity import ivf_centroids
 
     if k_negatives <= 0:
         raise ValueError("k_negatives must be positive")
     if max_cell < 1:
         raise ValueError("max_cell must be >= 1")
-    C = np.asarray(
-        centroids
-        if centroids is not None
-        else ivf_centroids(docs, vec_col, n_centroids, seed=seed),
-        dtype=np.float64,
+    C = centroids if centroids is not None else ivf_centroids(
+        docs, vec_col, n_centroids, seed=seed
     )
-    bc = docs.sparkSession.sparkContext.broadcast(C)
-    vec_type = docs.schema[vec_col].dataType
-    route_schema = StructType(
-        [
-            StructField("cell", LongType()),
-            StructField("id", LongType()),
-            StructField("vec", vec_type),
-        ]
-    )
-
-    def assign(batches):
-        C_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            norms = np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-            )
-            cells = np.argmax((mat / norms) @ C_.T, axis=1)
-            yield pd.DataFrame(
-                {"cell": cells, "id": ids, "vec": list(mat / norms)}
-            )
-
-    routed = docs.select(id_col, vec_col).mapInPandas(
-        assign, schema=route_schema
-    )
+    routed = route(docs, id_col, vec_col, C)
     wcell = Window.partitionBy("cell").orderBy("id")
     routed = routed.withColumn(
         "blk",

@@ -2,11 +2,12 @@
 approximate variant as the huge-N scale path.
 
 Exact path ("brute force done right"): instead of an n^2 row join with
-per-row array arithmetic, the (small-side) query/block matrix is collected
-once, L2-normalized, broadcast, and each partition computes a single numpy
-matmul against its rows via ``mapInPandas`` — Arrow-batched, BLAS-backed,
-no shuffle of the big side at all.  For corpus-vs-corpus near-dup the same
-kernel runs with corpus blocks as the broadcast side.
+per-row array arithmetic, the (small-side) query matrix is collected
+once, L2-normalized, broadcast, and each Arrow batch of the corpus runs a
+single numpy matmul against it in a ``mapInArrow`` scorer that keeps its
+tie-safe local top-k (the shared engine in ``_vectors``) — BLAS-backed,
+no shuffle of the big side at all. Corpus-vs-corpus near-dup packs
+corpus blocks with ``applyInArrow`` and joins block pairs.
 
 Approximate path: random-hyperplane signatures (sign bits of dot products
 with broadcast Gaussian vectors) bucket the corpus; only same-bucket pairs
@@ -17,25 +18,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, DoubleType
 
-
-def _collect_matrix(df: DataFrame, id_col: str, vec_col: str):
-    rows = df.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0] = 1.0
-    return ids, mat / norms[:, None]
+from . import _vectors as V
 
 
 def cosine_topk(
@@ -49,56 +37,22 @@ def cosine_topk(
 
     Returns (query_id, rank, neighbor_id). Rank orders by similarity desc
     with neighbor id as deterministic tiebreak. The corpus never shuffles:
-    queries are broadcast, each partition emits its local top-k, and only
-    #queries*k*#partitions candidate rows reduce to the global top-k."""
-    qids, qmat = _collect_matrix(queries, id_col, vec_col)
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast((qids, qmat))
+    queries are broadcast, each Arrow batch emits its local top-k, and only
+    the candidate rows reduce to the global top-k. An empty query set
+    returns no rows."""
+    got = V.collect_queries(queries, id_col, vec_col)
+    if got is None:
+        return V.empty_topk(df.sparkSession)
+    qids, Q = got
+    return V.score_topk(df.select(id_col, vec_col), qids, k, V.dot_kernel, Q)
 
-    schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("neighbor_id", LongType()),
-            StructField("sim", DoubleType()),
-        ]
-    )
 
-    def local_topk(batches):
-        qids_, qmat_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            norms = np.linalg.norm(mat, axis=1)
-            norms[norms == 0] = 1.0
-            sims = (mat / norms[:, None]) @ qmat_.T  # (rows, nq)
-            out = []
-            for qi in range(len(qids_)):
-                col = sims[:, qi]
-                mask = ids != qids_[qi]
-                cids, csims = ids[mask], col[mask]
-                if not len(cids):
-                    continue
-                top = min(k, len(cids))
-                sel = np.argpartition(-csims, top - 1)[:top]
-                out.append(
-                    pd.DataFrame(
-                        {"query_id": qids_[qi], "neighbor_id": cids[sel], "sim": csims[sel]}
-                    )
-                )
-            if out:
-                yield pd.concat(out)
-
-    local = df.mapInPandas(local_topk, schema=schema)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
-    )
+def _pair_columns(a: np.ndarray, b: np.ndarray) -> dict:
+    """Distinct (id_a < id_b) pairs of two aligned id arrays."""
+    lo, hi = np.minimum(a, b), np.maximum(a, b)
+    keep = lo < hi  # drop self (and same-id) pairs
+    pairs = np.unique(np.stack([lo[keep], hi[keep]], axis=1), axis=0)
+    return {"id_a": pairs[:, 0], "id_b": pairs[:, 1]}
 
 
 def cosine_neardup_pairs(
@@ -112,7 +66,7 @@ def cosine_neardup_pairs(
 
     All-pairs is inherently O(n^2) compute; the scale question is data
     movement. Rows are hashed into ``n_blocks`` blocks; each block's
-    L2-normalized matrix is packed into ONE row (groupBy + applyInPandas),
+    L2-normalized matrix is packed into ONE row (groupBy + applyInArrow),
     then the B*(B+1)/2 block pairs equi-join and each task runs one BLAS
     matmul. Nothing is collected to the driver and no side is broadcast
     whole: shuffle volume is ~n_blocks/2 copies of the corpus (the classic
@@ -122,31 +76,20 @@ def cosine_neardup_pairs(
     for that, :func:`lsh_bucket_pairs` is the approximate bucketed path.
     """
     spark = df.sparkSession
-    pack_schema = StructType(
-        [
-            StructField("bid", LongType()),
-            StructField("ids", BinaryType()),
-            StructField("mat", BinaryType()),
-            StructField("n", LongType()),
-        ]
-    )
+    pack_schema = "bid long, ids binary, mat binary, n long"
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0] = 1.0
-        mat /= norms[:, None]
-        return pd.DataFrame(
-            [
-                (
-                    int(pdf["__bid"].iloc[0]),
-                    ids.tobytes(),
-                    mat.astype("<f8").tobytes(),
-                    len(ids),
-                )
-            ],
-            columns=["bid", "ids", "mat", "n"],
+    def pack(t: pa.Table) -> pa.Table:
+        ids = V.ids(t.column(id_col))
+        mat = V.normalize(V.matrix(t.column(vec_col)))
+        return pa.Table.from_pydict(
+            {
+                "bid": [t.column("__bid")[0].as_py()],
+                "ids": [ids.tobytes()],
+                "mat": [mat.astype("<f8").tobytes()],
+                "n": [len(ids)],
+            },
+            schema=pa.schema([("bid", pa.int64()), ("ids", pa.binary()),
+                              ("mat", pa.binary()), ("n", pa.int64())]),
         )
 
     blocks = (
@@ -156,7 +99,7 @@ def cosine_neardup_pairs(
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("__bid"),
         )
         .groupBy("__bid")
-        .applyInPandas(pack, schema=pack_schema)
+        .applyInArrow(pack, schema=pack_schema)
         .cache()  # joined twice (bid_a / bid_b side); one packed copy of the corpus
     )
 
@@ -174,30 +117,23 @@ def cosine_neardup_pairs(
         .repartition(len(pair_ids))  # one matmul task per block pair
     )
 
-    out_schema = StructType(
-        [StructField("id_a", LongType()), StructField("id_b", LongType())]
-    )
-
     def matmul(batches):
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                ids_a = np.frombuffer(row["ids_a"], dtype=np.int64)
-                ids_b = np.frombuffer(row["ids_b"], dtype=np.int64)
-                na, nb = int(row["n_a"]), int(row["n_b"])
-                A = np.frombuffer(row["mat_a"], dtype="<f8").reshape(na, -1)
-                Bm = np.frombuffer(row["mat_b"], dtype="<f8").reshape(nb, -1)
-                sims = A @ Bm.T
-                ai, bj = np.nonzero(sims >= threshold)
-                a, b = ids_a[ai], ids_b[bj]
-                lo, hi = np.minimum(a, b), np.maximum(a, b)
-                keep = lo < hi  # drop self (and same-id) pairs
-                if keep.any():
-                    out = pd.DataFrame({"id_a": lo[keep], "id_b": hi[keep]})
-                    # same-block pairs appear twice mirrored only when a!=b
-                    # rows both land in the nonzero set; dedupe locally
-                    yield out.drop_duplicates()
+        for b in batches:
+            cols = b.to_pydict()
+            for ia, ib, ma, mb, na, nb in zip(
+                cols["ids_a"], cols["ids_b"], cols["mat_a"], cols["mat_b"],
+                cols["n_a"], cols["n_b"],
+            ):
+                A = np.frombuffer(ma, dtype="<f8").reshape(na, -1)
+                Bm = np.frombuffer(mb, dtype="<f8").reshape(nb, -1)
+                ai, bj = np.nonzero(A @ Bm.T >= threshold)
+                if len(ai):
+                    yield pa.RecordBatch.from_pydict(_pair_columns(
+                        np.frombuffer(ia, dtype=np.int64)[ai],
+                        np.frombuffer(ib, dtype=np.int64)[bj],
+                    ))
 
-    return joined.mapInPandas(matmul, schema=out_schema)
+    return joined.mapInArrow(matmul, schema="id_a long, id_b long")
 
 
 def ivf_centroids(
@@ -211,19 +147,11 @@ def ivf_centroids(
     """Coarse quantizer for IVF: k-means on a BOUNDED sample (driver-side
     numpy on <= sample_rows vectors — the only driver materialization, and
     it is O(sample), not O(corpus)). Returns L2-normalized centroids."""
-    frac_df = df.select(vec_col)
-    n = frac_df.limit(sample_rows * 2).count()  # cheap bound, not a full count
-    sample = frac_df.limit(sample_rows).collect() if n <= sample_rows else (
-        frac_df.sample(fraction=min(1.0, sample_rows / max(n, 1)), seed=seed)
-        .limit(sample_rows)
-        .collect()
-    )
-    X = np.array([r[0] for r in sample], dtype=np.float64)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    X = V.sample(df, vec_col, sample_rows, seed)
     rng = np.random.default_rng(seed)
     C = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)]
     for _ in range(iters):
-        assign = np.argmax(X @ C.T, axis=1)  # cosine on normalized vectors
+        assign = V.nearest(X, C)
         for c in range(len(C)):
             m = assign == c
             if m.any():
@@ -256,89 +184,26 @@ def ivf_topk(
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: corpus rows are assigned to their nearest
-    centroid cell (one mapInPandas pass, centroids broadcast); each query
-    scans only its ``nprobe`` nearest cells. The cell equi-join is the only
-    wide op — candidate volume is ~corpus * nprobe / n_centroids instead
-    of the full corpus per query. nprobe == n_centroids degrades to exact
-    brute force (recall 1.0), which the tests exploit. Pass ``centroids``
-    (from :func:`load_ivf_index`) to reuse a trained quantizer and skip
-    the k-means pass entirely."""
-    C = centroids if centroids is not None else ivf_centroids(
-        df, vec_col, n_centroids, seed=seed
+    centroid cell (one mapInArrow pass, centroids broadcast); each query
+    scans only its ``nprobe`` nearest cells. The broadcast cell join is
+    the only join — candidate volume is ~corpus * nprobe / n_centroids
+    instead of the full corpus per query. The probe, scorer and rank
+    window are the ones `ann_index.AnnProbe.query` runs over the stored
+    cells. nprobe == n_centroids degrades to exact brute force (recall
+    1.0), which the tests exploit. Pass ``centroids`` (from
+    :func:`load_ivf_index`) to reuse a trained quantizer and skip the
+    k-means pass entirely. An empty query set returns no rows."""
+    got = V.collect_queries(queries, id_col, vec_col)
+    if got is None:
+        return V.empty_topk(df.sparkSession)
+    qids, Q = got
+    C = np.asarray(
+        centroids if centroids is not None
+        else ivf_centroids(df, vec_col, n_centroids, seed=seed),
+        dtype=np.float64,
     )
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(C)
-
-    cell_schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("cell", LongType()),
-            StructField("vec", ArrayType(DoubleType())),
-        ]
-    )
-
-    def assign(batches):
-        C_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            norms = np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            cells = np.argmax((mat / norms) @ C_.T, axis=1)
-            yield pd.DataFrame(
-                {"id": ids, "cell": cells, "vec": list(mat / norms)}
-            )
-
-    cells = df.select(id_col, vec_col).mapInPandas(assign, schema=cell_schema)
-
-    # queries are the small side by contract (like cosine_topk): collect,
-    # compute their nprobe cells, broadcast the probe list
-    qrows = queries.select(id_col, vec_col).collect()
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    qmat /= np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-    order = np.argsort(-(qmat @ C.T), axis=1)[:, : min(nprobe, len(C))]
-    probe_pairs = [
-        (int(qids[i]), int(c)) for i in range(len(qids)) for c in order[i]
-    ]
-    probes = spark.createDataFrame(probe_pairs, "query_id long, cell long")
-    qbc = spark.sparkContext.broadcast({int(qids[i]): qmat[i] for i in range(len(qids))})
-
-    cand = probes.join(cells, "cell").where(F.col("query_id") != F.col("id"))
-
-    sim_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("neighbor_id", LongType()),
-            StructField("sim", DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        qm = qbc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.array(list(pdf["vec"]), dtype=np.float64)
-            qv = np.array([qm[q] for q in pdf["query_id"]], dtype=np.float64)
-            sims = np.einsum("ij,ij->i", mat, qv)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(dtype=np.int64),
-                    "neighbor_id": pdf["id"].to_numpy(dtype=np.int64),
-                    "sim": sims,
-                }
-            )
-
-    scored = cand.mapInPandas(score, schema=sim_schema)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
+    return V.probe_topk(
+        V.route(df, id_col, vec_col, C), qids, Q, C, nprobe, k, V.cell_kernel, Q
     )
 
 
@@ -402,31 +267,29 @@ def lsh_bucket_pairs(
     planes = rng.standard_normal((n_tables, n_planes, dim))
     bc = df.sparkSession.sparkContext.broadcast(planes)
 
-    sig_schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("table", LongType()),
-            StructField("bucket", LongType()),
-        ]
-    )
-
     def signatures(batches):
         pl = bc.value
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            out = []
+            ids = V.ids(b.column(0))
+            mat = V.matrix(b.column(1))
+            buckets = []
             for t in range(pl.shape[0]):
                 bits = (mat @ pl[t].T) > 0  # (rows, n_planes)
                 bucket = np.zeros(len(ids), dtype=np.int64)
                 for p in range(pl.shape[1]):
                     bucket |= bits[:, p].astype(np.int64) << p
-                out.append(pd.DataFrame({"id": ids, "table": t, "bucket": bucket}))
-            yield pd.concat(out)
+                buckets.append(bucket)
+            yield pa.RecordBatch.from_pydict({
+                "id": np.tile(ids, pl.shape[0]),
+                "table": np.repeat(np.arange(pl.shape[0], dtype=np.int64), len(ids)),
+                "bucket": np.concatenate(buckets),
+            })
 
-    sig = df.mapInPandas(signatures, schema=sig_schema)
+    sig = df.select(id_col, vec_col).mapInArrow(
+        signatures, schema="id long, table long, bucket long"
+    )
     a, b = sig.alias("a"), sig.alias("b")
     cands = (
         a.join(b, ["table", "bucket"])
@@ -456,39 +319,6 @@ def lsh_bucket_pairs(
 # ------------------------------------------------------------- semdedup ---
 
 
-def _assign_cells(
-    df: DataFrame, id_col: str, vec_col: str, C: np.ndarray
-) -> DataFrame:
-    """(id, cell, vec): nearest-centroid cell per row plus the
-    L2-normalized vector — the shared coarse-quantizer assignment of
-    `semantic_dup_pairs` and `semdedup_miss_report` (one code path so
-    the report measures exactly the cells the dedup would use)."""
-    bc = df.sparkSession.sparkContext.broadcast(C)
-
-    cell_schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("cell", LongType()),
-            StructField("vec", ArrayType(DoubleType())),
-        ]
-    )
-
-    def assign(batches):
-        C_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            norms = np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            mat /= norms
-            yield pd.DataFrame(
-                {"id": ids, "cell": np.argmax(mat @ C_.T, axis=1), "vec": list(mat)}
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(assign, schema=cell_schema)
-
-
 def semantic_dup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -512,22 +342,15 @@ def semantic_dup_pairs(
     :func:`lsh_bucket_pairs` if that profile is expected.
     """
     C = ivf_centroids(df, vec_col, n_centroids, seed=seed)
-    cells = _assign_cells(df, id_col, vec_col, C)
+    cells = V.route(df, id_col, vec_col, C)
 
-    out_schema = StructType(
-        [StructField("id_a", LongType()), StructField("id_b", LongType())]
-    )
+    def within(t: pa.Table) -> pa.Table:
+        ids = V.ids(t.column("id"))
+        mat = V.matrix(t.column("vec"))
+        ai, bj = np.nonzero(np.triu(mat @ mat.T >= threshold, k=1))
+        return pa.Table.from_pydict(_pair_columns(ids[ai], ids[bj]))
 
-    def within(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf["vec"]), dtype=np.float64)
-        sims = mat @ mat.T
-        ai, bj = np.nonzero(np.triu(sims >= threshold, k=1))
-        a, b = ids[ai], ids[bj]
-        lo, hi = np.minimum(a, b), np.maximum(a, b)
-        return pd.DataFrame({"id_a": lo, "id_b": hi}).drop_duplicates()
-
-    return cells.groupBy("cell").applyInPandas(within, schema=out_schema)
+    return cells.groupBy("cell").applyInArrow(within, schema="id_a long, id_b long")
 
 
 def semantic_dedup(
@@ -573,7 +396,7 @@ def semdedup_miss_report(
     On a deterministic hash-sample of ``n_sample`` rows: exact duplicate
     pairs come from the distributed brute-force `cosine_neardup_pairs`
     (no cells involved), cells come from the SAME quantizer assignment
-    the dedup uses (`_assign_cells` over `ivf_centroids` trained on the
+    the dedup uses (`_vectors.route` over `ivf_centroids` trained on the
     FULL corpus — the cells a real run would produce, unless explicit
     ``centroids`` are passed), and every exact pair whose members land
     in different cells is a measured miss.
@@ -602,7 +425,7 @@ def semdedup_miss_report(
         if centroids is not None
         else ivf_centroids(df, vec_col, n_centroids, seed=seed)
     )
-    cells = _assign_cells(sample, id_col, vec_col, C).select("id", "cell")
+    cells = V.route(sample, id_col, vec_col, C).select("id", "cell")
     marked = (
         truth.join(cells.withColumnsRenamed({"id": "id_a", "cell": "cell_a"}), "id_a")
         .join(cells.withColumnsRenamed({"id": "id_b", "cell": "cell_b"}), "id_b")
@@ -631,33 +454,27 @@ def semdedup_miss_report(
 def embedding_moments(df: DataFrame, vec_col: str):
     """(n, sum_vec d, gram d×d) accumulated distributedly: each partition
     reduces its rows to ONE (count, Σx, ΣxxT) partial inside a numpy
-    mapInPandas kernel (BLAS X.T@X per Arrow batch), and the driver sums
+    mapInArrow kernel (BLAS X.T@X per Arrow batch), and the driver sums
     the per-partition partials — P × (d² + d + 1) floats collected, never
     rows. d=64 ⇒ ~33 KB per partition: metadata-scale by construction."""
-    schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField("s", ArrayType(DoubleType())),
-            StructField("g", ArrayType(DoubleType())),
-        ]
-    )
 
     def partials(batches):
         n, s, g = 0, None, None
-        for pdf in batches:
-            if len(pdf) == 0:
+        for b in batches:
+            if not b.num_rows:
                 continue
-            X = np.stack(pdf[pdf.columns[0]].values).astype("float64")
+            X = V.matrix(b.column(0))
             n += X.shape[0]
             s = X.sum(0) if s is None else s + X.sum(0)
             gg = X.T @ X
             g = gg if g is None else g + gg
         if n:
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {"n": [n], "s": [s.tolist()], "g": [g.ravel().tolist()]}
             )
 
-    parts = df.select(vec_col).mapInPandas(partials, schema).collect()
+    schema = "n long, s array<double>, g array<double>"
+    parts = df.select(vec_col).mapInArrow(partials, schema).collect()
     if not parts:
         raise ValueError("empty input")
     n = sum(r["n"] for r in parts)
@@ -813,17 +630,9 @@ def train_pq(
     Returns {"codebooks": (m, n_codes_eff, d/m) float64, "m", "d"}."""
     if not 1 <= n_codes <= 256:
         raise ValueError("n_codes must be in [1, 256] (codes are one byte)")
-    frac_df = df.select(vec_col)
-    n = frac_df.limit(sample_rows * 2).count()
-    sample = frac_df.limit(sample_rows).collect() if n <= sample_rows else (
-        frac_df.sample(fraction=min(1.0, sample_rows / max(n, 1)), seed=seed)
-        .limit(sample_rows)
-        .collect()
-    )
-    if not sample:
+    X = V.sample(df, vec_col, sample_rows, seed)
+    if not len(X):
         raise ValueError("train_pq: empty input")
-    X = np.array([r[0] for r in sample], dtype=np.float64)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     return {"codebooks": train_pq_books(X, m, n_codes, iters, seed),
             "m": m, "d": X.shape[1]}
 
@@ -846,9 +655,7 @@ def train_pq_books(
         uniq = np.unique(Xs, axis=0)
         C = uniq[rng.choice(len(uniq), size=min(n_codes, len(uniq)), replace=False)]
         for _ in range(iters):
-            # L2 assignment via the expansion ||x-c||^2 = ||x||^2 - 2xc + ||c||^2
-            dist = -2.0 * (Xs @ C.T) + (C * C).sum(axis=1)[None, :]
-            assign = np.argmin(dist, axis=1)
+            assign = V.nearest_l2(Xs, C)
             for c in range(len(C)):
                 mask = assign == c
                 if mask.any():
@@ -869,36 +676,10 @@ def pq_encode(
     model: dict | None = None,
 ) -> DataFrame:
     """(id, code binary) — m bytes per vector, the persisted-index form.
-    One mapInPandas pass, codebooks broadcast; vectors normalized with
+    One mapInArrow pass, codebooks broadcast; vectors normalized with
     the same convention the trainer used."""
-    cb, m = model["codebooks"], model["m"]
-    dsub = model["d"] // m
-    bc = df.sparkSession.sparkContext.broadcast(cb)
-
-    schema = StructType(
-        [StructField("id", LongType()), StructField("code", BinaryType())]
-    )
-
-    def enc(batches):
-        cb_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            codes = np.empty((len(mat), m), dtype=np.uint8)
-            for s in range(m):
-                Xs = mat[:, s * dsub : (s + 1) * dsub]
-                C = cb_[s]
-                dist = -2.0 * (Xs @ C.T) + (C * C).sum(axis=1)[None, :]
-                codes[:, s] = np.argmin(dist, axis=1)
-            yield pd.DataFrame({"id": ids, "code": [c.tobytes() for c in codes]})
-
-    return (
-        df.select(id_col, vec_col)
-        .mapInPandas(enc, schema=schema)
-        .withColumnRenamed("id", id_col)
+    return V.encode(df, id_col, vec_col, model["codebooks"]).withColumnRenamed(
+        "id", id_col
     )
 
 
@@ -916,59 +697,14 @@ def pq_topk(
     vectors are never read. (query_id, rank, neighbor_id), ranked by
     reconstructed cosine with neighbor id tiebreak, self-matches
     excluded — the same contract as :func:`cosine_topk`, which it equals
-    exactly in the lossless-codebook regime."""
-    cb, m = model["codebooks"], model["m"]
-    dsub = model["d"] // m
-    k_eff = cb.shape[1]
-    qids, qmat = _collect_matrix(queries, id_col, vec_col)
-    # LUT[q, s, j] = q_sub(s) . centroid_j(s); ADC sim = sum_s LUT[q, s, code_s]
-    lut = np.einsum("qsd,sjd->qsj", qmat.reshape(len(qmat), m, dsub), cb)
-    sc = codes.sparkSession.sparkContext
-    bc = sc.broadcast((qids, lut.reshape(len(qmat), m * k_eff)))
-
-    schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("neighbor_id", LongType()),
-            StructField("sim", DoubleType()),
-        ]
-    )
-
-    def local_topk(batches):
-        qids_, flat = bc.value
-        offs = np.arange(m, dtype=np.int64) * k_eff
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            cm = np.frombuffer(b"".join(pdf["code"]), dtype=np.uint8).reshape(-1, m)
-            idx = cm.astype(np.int64) + offs[None, :]
-            out = []
-            for qi in range(len(qids_)):
-                sims = flat[qi][idx].sum(axis=1)
-                mask = ids != qids_[qi]
-                cids, csims = ids[mask], sims[mask]
-                if not len(cids):
-                    continue
-                top = min(k, len(cids))
-                sel = np.argpartition(-csims, top - 1)[:top]
-                out.append(
-                    pd.DataFrame(
-                        {"query_id": qids_[qi], "neighbor_id": cids[sel], "sim": csims[sel]}
-                    )
-                )
-            if out:
-                yield pd.concat(out)
-
-    local = codes.select(id_col, "code").mapInPandas(local_topk, schema=schema)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
-    )
+    exactly in the lossless-codebook regime. The compact queries and
+    codebooks are broadcast and each task derives the lookup tables."""
+    got = V.collect_queries(queries, id_col, vec_col)
+    if got is None:
+        return V.empty_topk(codes.sparkSession)
+    qids, Q = got
+    cb = np.asarray(model["codebooks"], dtype=np.float64)
+    return V.score_topk(codes.select(id_col, "code"), qids, k, V.adc_kernel, (Q, cb))
 
 
 def save_pq_index(model: dict, path: str) -> None:
@@ -1161,16 +897,7 @@ def _hamming_rank(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
         # rank 1 for every query
         .where(F.col("hamming").isNotNull())
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "hamming")
-    )
+    return V.rank_window(pairs, k, F.col("hamming").asc(), "hamming")
 
 
 def hamming_rerank_topk(
@@ -1219,40 +946,33 @@ def _cosine_rerank(
     (query_id, neighbor_id), nvec: (neighbor_id, __nv), qvec:
     (query_id, __qv, driver-scale). Shared by `hamming_rerank_topk`
     (in-session) and the signature index probe, identical arithmetic."""
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    def norm(v):
-        n = F.sqrt(dot(v, v))
-        return F.when(n == 0.0, F.lit(1.0)).otherwise(n)
-
     scored = (
         # survivor list is nq*k*overfetch rows -> broadcast it into the
         # corpus scan; the query side is already driver-scale
         nvec.join(F.broadcast(coarse), "neighbor_id")
         .join(F.broadcast(qvec), "query_id")
         .withColumn(
-            "score",
-            dot(F.col("__qv"), F.col("__nv"))
-            / (norm(F.col("__qv")) * norm(F.col("__nv"))),
+            "score", _jvm_cosine(F.col("__qv"), F.col("__nv"))
         )
         .drop("__qv", "__nv")
     )
-    from pyspark.sql import Window
+    return V.rank_window(scored, k, F.col("score").desc(), "score")
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+
+def _jvm_cosine(a, b):
+    """Cosine of two array columns as JVM higher-order expressions (a
+    zero-norm side counts as norm 1, so it scores 0)."""
+
+    def dot(x, y):
+        return F.aggregate(
+            F.zip_with(x, y, lambda u, v: u * v), F.lit(0.0), lambda acc, u: acc + u
+        )
+
+    def norm(v):
+        n = F.sqrt(dot(v, v))
+        return F.when(n == 0.0, F.lit(1.0)).otherwise(n)
+
+    return dot(a, b) / (norm(a) * norm(b))
 
 
 def chain_order_within_cells(
@@ -1274,8 +994,8 @@ def chain_order_within_cells(
     nearest-NEIGHBOR adjacency inside each cluster.
 
     Shape: the coarse quantizer routes vectors to cells (the `ivf_topk`
-    assignment arithmetic — one mapInPandas, centroids broadcast), then
-    ONE `applyInPandas` per (cell, block) runs the greedy chain: start
+    router — one mapInArrow, centroids broadcast), then
+    ONE `applyInArrow` per (cell, block) runs the greedy chain: start
     at the lowest id (deterministic), repeatedly hop to the most-
     cosine-similar unvisited vector (ties resolve to the lowest id).
     The chain is inherently sequential but only ever WITHIN a block, so
@@ -1291,54 +1011,18 @@ def chain_order_within_cells(
 
     if max_cell < 1:
         raise ValueError("max_cell must be >= 1")
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    C = np.asarray(
-        centroids
-        if centroids is not None
-        else ivf_centroids(df, vec_col, n_centroids, seed=seed),
-        dtype=np.float64,
+    C = centroids if centroids is not None else ivf_centroids(
+        df, vec_col, n_centroids, seed=seed
     )
-    bc = df.sparkSession.sparkContext.broadcast(C)
-    vec_type = df.schema[vec_col].dataType
-    route_schema = StructType(
-        [
-            StructField("cell", LongType()),
-            StructField("id", LongType()),
-            StructField("vec", vec_type),
-        ]
-    )
-
-    def assign(batches):
-        C_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            norms = np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            cells = np.argmax((mat / norms) @ C_.T, axis=1)
-            yield pd.DataFrame(
-                {"cell": cells, "id": ids, "vec": list(mat / norms)}
-            )
-
-    routed = df.select(id_col, vec_col).mapInPandas(assign, schema=route_schema)
+    routed = V.route(df, id_col, vec_col, C)
     wcell = Window.partitionBy("cell").orderBy("id")
     routed = routed.withColumn(
         "blk", ((F.row_number().over(wcell) - 1) / F.lit(max_cell)).cast("long")
     )
 
-    out_schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("cell", LongType()),
-            StructField("chain_pos", LongType()),
-        ]
-    )
-
-    def chain(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf["vec"]), dtype=np.float64)
+    def chain(t: pa.Table) -> pa.Table:
+        ids = V.ids(t.column("id"))
+        mat = V.matrix(t.column("vec"))
         order = np.argsort(ids)
         ids, mat = ids[order], mat[order]
         n = len(ids)
@@ -1354,15 +1038,16 @@ def chain_order_within_cells(
             sims[visited] = -np.inf
             # ids are sorted, so argmax's first-maximal IS the lowest id
             cur = int(np.argmax(sims))
-        base = int(pdf["blk"].iloc[0]) * max_cell
-        return pd.DataFrame(
-            {"id": ids, "cell": int(pdf["cell"].iloc[0]),
-             "chain_pos": pos + base}
-        )
+        base = t.column("blk")[0].as_py() * max_cell
+        return pa.Table.from_pydict({
+            "id": ids,
+            "cell": np.full(n, t.column("cell")[0].as_py(), dtype=np.int64),
+            "chain_pos": pos + base,
+        })
 
     return (
         routed.groupBy("cell", "blk")
-        .applyInPandas(chain, schema=out_schema)
+        .applyInArrow(chain, schema="id long, cell long, chain_pos long")
         .withColumnRenamed("id", id_col)
     )
 
@@ -1402,28 +1087,12 @@ def pq_code_neardup_pairs(
     )
     if verify_threshold is None:
         return pairs
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    def norm(v):
-        n = F.sqrt(dot(v, v))
-        return F.when(n == 0.0, F.lit(1.0)).otherwise(n)
-
     va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
     vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
     return (
         pairs.join(va, "id_a")
         .join(vb, "id_b")
-        .withColumn(
-            "cosine",
-            dot(F.col("__va"), F.col("__vb"))
-            / (norm(F.col("__va")) * norm(F.col("__vb"))),
-        )
+        .withColumn("cosine", _jvm_cosine(F.col("__va"), F.col("__vb")))
         .where(F.col("cosine") >= verify_threshold)
         .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
     )

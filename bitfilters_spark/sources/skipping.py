@@ -145,21 +145,31 @@ def _xxhash64_longs(vals, seed: int = 42) -> np.ndarray:
     return h
 
 
-def key_hashes(spark: SparkSession, values: list) -> np.ndarray:
+def key_hashes(
+    spark: SparkSession, values: list, dtype: DataType | None = None
+) -> np.ndarray:
     """Hash probe values with the SAME hash the index used (Spark
-    xxhash64, seed 42, integral keys widened to bigint). Integer keys that
-    fit in int64 hash locally (`_xxhash64_longs` —
-    zero Spark jobs, the common literal-IN-list shape); other values fall
-    back to the tiny-DataFrame round trip so the parity guarantee stays
-    expression-level. There an int outside int64 becomes a NULL long, a
-    value no integral key column can hold, so it prunes nothing wrongly."""
-    if values and all(
+    xxhash64, seed 42, integral keys widened to bigint). Given the key
+    column's ``dtype``, values hash as that type, as the index hashed them:
+    the string "2024-01-02" looked up in a date column hashes as the date.
+    Integer values that fit in int64 hash locally when the key column is
+    integral or its type is not given (`_xxhash64_longs` — zero Spark
+    jobs, the common literal-IN-list shape); other values take the
+    tiny-DataFrame round trip, cast to the key type there, so the parity
+    guarantee stays expression-level. A value the key type cannot hold
+    (an int outside int64, a string that is no date) becomes NULL there;
+    it matches no row, so what it prunes loses nothing."""
+    integral = dtype is None or isinstance(dtype, IntegralType)
+    if integral and values and all(
         isinstance(v, int) and not isinstance(v, bool) and not _outside_int64(v)
         for v in values
     ):
         return _xxhash64_longs(values)
-    vdf = spark.createDataFrame([(v,) for v in values], ["v"])
-    rows = vdf.select(spark_hash64("v").alias("h")).collect()
+    v = F.col("v")
+    if dtype is not None:
+        v = v.try_cast("long" if integral else dtype)
+    vdf = spark.createDataFrame([(x,) for x in values], ["v"])
+    rows = vdf.select(spark_hash64(v).alias("h")).collect()
     return np.array([r["h"] for r in rows], dtype=np.int64).view(np.uint64)
 
 
@@ -357,10 +367,16 @@ def _empty(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     return spark.read.schema(schema).parquet(path).where(F.lit(False))
 
 
-def _col_type(schema: StructType, df: DataFrame, col: str) -> DataType:
-    """The type of column ``col`` of ``df``, whose schema is ``schema``."""
+def _col_type(
+    schema: StructType, col: str, df: DataFrame | None = None
+) -> DataType | None:
+    """The type of column ``col`` of a table whose schema is ``schema``. A
+    column that is no top-level field resolves against ``df``, the table
+    read with that schema, and is None without it."""
     fields = {f.name: f.dataType for f in schema.fields}
-    return fields[col] if col in fields else df.select(col).schema[0].dataType
+    if col in fields or df is None:
+        return fields.get(col)
+    return df.select(col).schema[0].dataType
 
 
 def _in_values(col: str, dtype: DataType, values: list, pushdown: bool) -> Column:
@@ -414,8 +430,9 @@ def skipping_read(
         return _empty(spark, path, table.schema)
     if index is None:
         index = build_file_index(spark, path, [key_col], kind, **filter_kw)
-    df, read = _read(spark, path, table, index, prune_files(index, key_hashes(spark, values)))
-    dtype = _col_type(table.schema, df, key_col)
+    hashes = key_hashes(spark, values, _col_type(table.schema, key_col))
+    df, read = _read(spark, path, table, index, prune_files(index, hashes))
+    dtype = _col_type(table.schema, key_col, df)
     if isinstance(dtype, IntegralType):
         values = [v for v in values if not _outside_int64(v)]
         if not values:

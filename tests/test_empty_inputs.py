@@ -480,6 +480,25 @@ def test_r8_operators_empty_inputs(spark, empty_docs):
     assert pq_topk(codes, q, pq, k=3).count() == 0
 
 
+def test_topk_empty_query_batch(spark):
+    """An empty query batch yields no rows from every broadcast-query
+    top-k, as it does from the persisted-index probes."""
+    import numpy as np
+    from bitfilters_spark.operators.similarity import (
+        cosine_topk, ivf_topk, pq_encode, pq_topk,
+    )
+
+    corpus = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.5, 0.0]) for i in range(8)],
+        "vec_id long, embedding array<double>",
+    )
+    empty_q = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    assert cosine_topk(corpus, empty_q, k=3).count() == 0
+    assert ivf_topk(corpus, empty_q, k=3, n_centroids=2, nprobe=2).count() == 0
+    pq = {"codebooks": np.zeros((2, 4, 2)), "m": 2, "d": 4}
+    assert pq_topk(pq_encode(corpus, model=pq), empty_q, pq, k=3).count() == 0
+
+
 def test_r9_operators_empty_inputs(spark, empty_docs):
     """Ribbon build/probe, BM25, frontier scheduling, audio decode, and
     the HF import on empty/degenerate inputs."""

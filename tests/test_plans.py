@@ -618,9 +618,9 @@ def test_reservoir_prefiltered_plan_has_no_corpus_window_sort(spark):
 
 
 def test_pq_topk_never_shuffles_codes_before_local_topk(spark):
-    """pq_topk: the codes side feeds mapInPandas directly (broadcast
-    LUTs, per-partition top-k); the only Exchange is the final
-    per-query rank over #queries x k x #partitions candidate rows."""
+    """pq_topk: the codes side feeds mapInArrow directly (broadcast
+    LUTs, per-batch top-k); the only Exchange is the final
+    per-query rank over #queries x k x #batches candidate rows."""
     from bitfilters_spark.operators.similarity import (
         pq_encode, pq_topk, train_pq,
     )
@@ -634,7 +634,37 @@ def test_pq_topk_never_shuffles_codes_before_local_topk(spark):
     out = pq_topk(codes, df.limit(3), model, k=5)
     plan = out._jdf.queryExecution().executedPlan().toString()
     before_window = plan.split("Window")[-1]  # below the rank window
-    # below the window: mapInPandas over codes, no hash Exchange other
+    # below the window: mapInArrow over codes, no hash Exchange other
     # than the window's own requirement above it
-    assert "MapInPandas" in before_window
+    assert "MapInArrow" in before_window
     assert before_window.count("Exchange hashpartitioning") <= 1
+
+
+def _topk_below_window(out):
+    """The per-batch top-k (a MapInArrow) sits below the rank window's
+    single hash Exchange."""
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    below = plan.split("Window [")[-1]  # not WindowGroupLimit
+    assert below.count("Exchange hashpartitioning") == 1, plan
+    assert below.index("Exchange hashpartitioning") < below.index("MapInArrow"), plan
+
+
+def test_ivf_topk_and_ann_probe_topk_below_the_window(spark, tmp_path):
+    """ivf_topk and AnnProbe.query run one candidate/score/rank path:
+    the broadcast probe join feeds the Arrow scorer, whose per-batch
+    top-k is the only input to the window's one hash Exchange."""
+    import numpy as np
+
+    from bitfilters_spark.operators.ann_index import AnnProbe, build_ann_index
+    from bitfilters_spark.operators.similarity import ivf_topk
+
+    rng = np.random.default_rng(4)
+    rows = [(i, rng.standard_normal(8).tolist()) for i in range(200)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = df.where(F.col("vec_id") < 3)
+    C = build_ann_index(
+        df, "vec_id", "embedding", "plan_annix", n_centroids=4,
+        num_buckets=2, path=str(tmp_path / "plan_annix"),
+    )
+    _topk_below_window(ivf_topk(df, q, k=5, nprobe=2, centroids=C))
+    _topk_below_window(AnnProbe(spark, "plan_annix").query(q, k=5, nprobe=2))

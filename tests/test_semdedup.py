@@ -123,9 +123,8 @@ def test_miss_report_measures_planted_cross_cell_dup(spark):
     passing explicit centroids each member aligns with — the report
     must count it as missed, and its rate must equal brute force over
     the sample (here: the whole corpus, n_sample >= n)."""
-    from bitfilters_spark.operators.similarity import (
-        _assign_cells, semdedup_miss_report,
-    )
+    from bitfilters_spark.operators._vectors import route
+    from bitfilters_spark.operators.similarity import semdedup_miss_report
 
     rng = np.random.default_rng(11)
     dim = 8
@@ -149,7 +148,7 @@ def test_miss_report_measures_planted_cross_cell_dup(spark):
 
     cells = {
         r["id"]: r["cell"]
-        for r in _assign_cells(df, "vec_id", "embedding", C).collect()
+        for r in route(df, "vec_id", "embedding", C).collect()
     }
     assert cells[0] != cells[1]  # the plant is genuinely cross-cell
 

@@ -1081,3 +1081,91 @@ def test_mutual_knn_duplicated_edge_and_nbr_only_node(spark):
     }
     # nothing reciprocated -> all singletons, 99 present
     assert got == {1: (1, 1), 2: (2, 1), 99: (99, 1)}
+
+
+def test_topk_ties_break_by_lowest_neighbor_id(spark, tmp_path):
+    """Duplicate vectors tie on similarity; every top-k operator breaks
+    the tie by neighbor id, even when all candidates sit in one batch of
+    one partition (where a per-batch top-k could keep any of them)."""
+    from bitfilters_spark.operators.ann_index import (
+        ann_query_index,
+        build_ann_index,
+    )
+    from bitfilters_spark.operators.similarity import (
+        ivf_topk, pq_encode, pq_topk, train_pq,
+    )
+
+    df = spark.createDataFrame(
+        [(i, [1.0, 0.0]) for i in (9, 7, 5, 3)],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    q = spark.createDataFrame([(100, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    model = train_pq(df, m=2, n_codes=4, seed=1)  # one distinct subvector: lossless
+    codes = pq_encode(df, model=model)
+    C = build_ann_index(
+        df, "vec_id", "embedding", "tieix", n_centroids=2, num_buckets=1,
+        path=str(tmp_path / "tieix"),
+    )
+    for k, want in ((1, [3]), (2, [3, 5])):
+        runs = {
+            "cosine_topk": cosine_topk(df, q, k=k),
+            "pq_topk": pq_topk(codes, q, model, k=k),
+            "ivf_topk": ivf_topk(df, q, k=k, nprobe=2, centroids=C),
+            "ann_query_index": ann_query_index(spark, "tieix", q, k=k, nprobe=2),
+        }
+        for name, out in runs.items():
+            got = [r["neighbor_id"] for r in out.orderBy("rank").collect()]
+            assert got == want, (name, k, got)
+
+
+def test_vector_kernels_live_in_one_module():
+    """Vector columns become matrices and vectors route to centroids only
+    in `operators/_vectors.py`: a pandas list conversion or a centroid
+    argmax anywhere else in `operators/` is a copy of the engine."""
+    import pathlib
+    import re
+
+    import bitfilters_spark.operators as ops
+
+    found = []
+    for path in sorted(pathlib.Path(ops.__file__).parent.glob("*.py")):
+        if path.name == "_vectors.py":
+            continue
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if "np.array(list(" in line or re.search(r"argmax\(.*@\s*C\w*\.T", line):
+                found.append(f"{path.name}:{i}: {line.strip()}")
+    assert not found, found
+
+
+def test_batch_topk_equals_sorted_reference():
+    """The per-batch top-k keeps, per query, exactly the first k rows of
+    a plain sort by (sim desc, neighbor id asc) over the non-self rows —
+    on dense (rows x queries) scores and on (query, row) pairs, with
+    many ties."""
+    from bitfilters_spark.operators._vectors import _batch_topk
+
+    rng = np.random.default_rng(2)
+    qids = np.array([4, 11, 7], dtype=np.int64)
+
+    def reference(triples, k):
+        out = set()
+        for qp in range(len(qids)):
+            rows = sorted((-s, n) for q, n, s in triples if q == qp and n != qids[qp])
+            out |= {(qp, n, -s) for s, n in rows[:k]}
+        return out
+
+    for k in (1, 3, 50):
+        nid = rng.permutation(40).astype(np.int64)
+        dense = rng.integers(0, 4, size=(40, len(qids))).astype(np.float64)
+        got = _batch_topk(None, nid, dense, qids, k)
+        want = reference(
+            [(q, nid[r], dense[r, q]) for r in range(40) for q in range(len(qids))], k
+        )
+        assert set(zip(*(a.tolist() for a in got))) == want
+
+        qpos = rng.integers(0, len(qids), size=60)
+        pnid = rng.permutation(60).astype(np.int64)
+        psim = rng.integers(0, 3, size=60).astype(np.float64)
+        got = _batch_topk(qpos, pnid, psim, qids, k)
+        want = reference(list(zip(qpos, pnid, psim)), k)
+        assert sorted(zip(*(a.tolist() for a in got))) == sorted(want)

@@ -64,6 +64,22 @@ def test_skipping_read_over_an_int32_key(spark, tmp_path):
     assert sorted(r["v"] for r in got.collect()) == [5, 1500, 2999]
 
 
+def test_skipping_read_over_a_date_key_looked_up_by_string(spark, tmp_path):
+    """The index hashes a date column as dates; a lookup by the string
+    "2024-01-02" must hash the date too (hashing the string pruned the
+    file that holds it and read 0 rows)."""
+    dest = str(tmp_path / "dates")
+    spark.range(0, 400, numPartitions=4).select(
+        F.date_add(F.lit("2024-01-01").cast("date"), (F.col("id") % 40).cast("int")).alias("d"),
+        F.col("id").alias("v"),
+    ).write.parquet(dest)
+    idx = build_file_index(spark, dest, ["d"], "bloom", n=1000, fpp=0.01)
+    got = skipping_read(spark, dest, "d", ["2024-01-02"], index=idx)
+    want = spark.read.parquet(dest).where(F.col("d").isin(["2024-01-02"])).count()
+    assert want == 10
+    assert got.count() == want
+
+
 def test_index_roundtrip(spark, part_dir, tmp_path):
     idx = build_file_index(spark, part_dir, ["o_custkey"], "duckdb_bloom", num_sectors=1024)
     p = str(tmp_path / "idx")

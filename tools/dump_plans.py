@@ -67,8 +67,8 @@ NOTES = {
         "jumping) never replays its lineage."
     ),
     "q_embed_neardup_pairs": (
-        "Distributed exact all-pairs: per-block pack (FlatMapGroupsInPandas), "
-        "block-pair equi-joins, one BLAS matmul per task (MapInPandas). No "
+        "Distributed exact all-pairs: per-block pack (FlatMapGroupsInArrow), "
+        "block-pair equi-joins, one BLAS matmul per task (MapInArrow). No "
         "driver collect, no full-corpus broadcast."
     ),
     "q_contamination": (
