@@ -784,51 +784,53 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     pool = ThreadPoolExecutor(max_workers=1)
-    k128_fut = pool.submit(
-        lambda: build_filter(keyed, ["grp"], "h", "kmv", k=128).collect()
-    )
-    s64 = build_filter(keyed, ["grp"], "h", "kmv", k=64)
-    sbig = build_filter(keyed, ["grp"], "h", "kmv", k=65536)
-    sampled = orders.select(
-        (F.col("o_orderkey") % 2).alias("grp"),
-        duckdb_hash(ORACLE_VERSION, "o_orderkey").alias("h"),
-        F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01")).alias(
-            "day"
-        ),
-    )
-    bks = bottomk_sample(sampled, ["grp"], "h", "day", k=128)
-    # hll_occupied leg: the HyperLogLog register file (p=12, kind='hll' on
-    # the same two-phase mergeable build) — occupied-register count is
-    # INTEGER-exact by construction (a register is nonzero iff some key's
-    # top-12 hash bits index it), so the oracle reproduces it as
-    # count(DISTINCT h >> 52); fill_ratio * 4096 is exact IEEE arithmetic
-    # (power-of-two divide then multiply). The float HLL *estimate* is
-    # pytest-verified instead (tests/test_hll_mg.py).
-    from bitfilters_spark.functions import filter_describe
-
-    hllf = build_filter(keyed, ["grp"], "h", "hll", p=12)
-    hocc = filter_describe(hllf).select(
-        "grp",
-        F.round(F.col("fill_ratio") * 4096).cast("long").alias("hll_occupied"),
-    )
-    base = (
-        s64.select("grp", kmv_distinct("filter").alias("est64"))
-        .join(sbig.select("grp", kmv_distinct("filter").alias("est_exact")), "grp")
-        .join(
-            bks.select(
-                "grp",
-                bks_quantile_col("sample", 0.5).alias("p50_day"),
-                bks_quantile_col("sample", 0.9).alias("p90_day"),
-            ),
-            "grp",
+    try:
+        k128_fut = pool.submit(
+            lambda: build_filter(keyed, ["grp"], "h", "kmv", k=128).collect()
         )
-        .join(hocc, "grp")
-        .select("grp", "est64", "est_exact", "p50_day", "p90_day", "hll_occupied")
-    )
-    from bitfilters_spark.core.kmv import kmv_overlap
+        s64 = build_filter(keyed, ["grp"], "h", "kmv", k=64)
+        sbig = build_filter(keyed, ["grp"], "h", "kmv", k=65536)
+        sampled = orders.select(
+            (F.col("o_orderkey") % 2).alias("grp"),
+            duckdb_hash(ORACLE_VERSION, "o_orderkey").alias("h"),
+            F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01")).alias(
+                "day"
+            ),
+        )
+        bks = bottomk_sample(sampled, ["grp"], "h", "day", k=128)
+        # hll_occupied leg: the HyperLogLog register file (p=12, kind='hll' on
+        # the same two-phase mergeable build) — occupied-register count is
+        # INTEGER-exact by construction (a register is nonzero iff some key's
+        # top-12 hash bits index it), so the oracle reproduces it as
+        # count(DISTINCT h >> 52); fill_ratio * 4096 is exact IEEE arithmetic
+        # (power-of-two divide then multiply). The float HLL *estimate* is
+        # pytest-verified instead (tests/test_hll_mg.py).
+        from bitfilters_spark.functions import filter_describe
 
-    sketches = {r["grp"]: bytes(r["filter"]) for r in k128_fut.result()}
-    pool.shutdown(wait=False)
+        hllf = build_filter(keyed, ["grp"], "h", "hll", p=12)
+        hocc = filter_describe(hllf).select(
+            "grp",
+            F.round(F.col("fill_ratio") * 4096).cast("long").alias("hll_occupied"),
+        )
+        base = (
+            s64.select("grp", kmv_distinct("filter").alias("est64"))
+            .join(sbig.select("grp", kmv_distinct("filter").alias("est_exact")), "grp")
+            .join(
+                bks.select(
+                    "grp",
+                    bks_quantile_col("sample", 0.5).alias("p50_day"),
+                    bks_quantile_col("sample", 0.9).alias("p90_day"),
+                ),
+                "grp",
+            )
+            .join(hocc, "grp")
+            .select("grp", "est64", "est_exact", "p50_day", "p90_day", "hll_occupied")
+        )
+        from bitfilters_spark.core.kmv import kmv_overlap
+
+        sketches = {r["grp"]: bytes(r["filter"]) for r in k128_fut.result()}
+    finally:
+        pool.shutdown(wait=False, cancel_futures=True)
     k_eff, n_both, union_est = kmv_overlap(sketches[0], sketches[1])
     overlap = spark.createDataFrame(
         [(-1, union_est, n_both, k_eff, -1, -1)],
@@ -2382,98 +2384,100 @@ def q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     pool = ThreadPoolExecutor(max_workers=1)
-    count_fut = pool.submit(ev.count)
-    fr = ev.select(
-        "event_id", F.col("user_id").cast("string").alias("h"), "value"
-    )
-    out = url_frontier_schedule(
-        fr, "event_id", host_col="h", priority_col="value", per_host_per_round=3
-    )
-    planted = F.concat(
-        F.lit("http://H"),
-        F.col("host"),
-        F.lit(".Sub.Example.COM/p/"),
-        F.col("event_id").cast("string"),
-        F.lit("?q=1"),
-    )
-    out = out.select(
-        "event_id",
-        "host",
-        "round",
-        F.pmod(duckdb_hash(ORACLE_VERSION, "host"), F.lit(8)).cast("long").alias("fetcher"),
-        surt_key(planted).alias("surt"),
-    )
-
-    # ---- #144 redirect-chain collapse over a planted 3-hop mapping
-    mapping = ev.where(F.col("event_id") % 4 != 0).select(
-        F.concat(F.lit("u"), F.col("event_id").cast("string")).alias("src_url"),
-        F.concat(F.lit("u"), (F.col("event_id") - 1).cast("string")).alias(
-            "dst_url"
-        ),
-    )
-    # materialize=False: the mapping is gate-scale and consumed once —
-    # per-hop checkpoint jobs would cost more than the re-derived lineage
-    chains = resolve_redirect_chains(mapping, max_hops=4, materialize=False)
-    out = (
-        out.join(
-            chains.select(
-                F.regexp_replace("src_url", "^u", "")
-                .cast("long")
-                .alias("event_id"),
-                F.col("final_url").alias("__canon"),
-                F.col("hops").cast("long").alias("__hops"),
-            ),
+    try:
+        count_fut = pool.submit(ev.count)
+        fr = ev.select(
+            "event_id", F.col("user_id").cast("string").alias("h"), "value"
+        )
+        out = url_frontier_schedule(
+            fr, "event_id", host_col="h", priority_col="value", per_host_per_round=3
+        )
+        planted = F.concat(
+            F.lit("http://H"),
+            F.col("host"),
+            F.lit(".Sub.Example.COM/p/"),
+            F.col("event_id").cast("string"),
+            F.lit("?q=1"),
+        )
+        out = out.select(
             "event_id",
-            "left",
+            "host",
+            "round",
+            F.pmod(duckdb_hash(ORACLE_VERSION, "host"), F.lit(8)).cast("long").alias("fetcher"),
+            surt_key(planted).alias("surt"),
         )
-        .withColumn(
-            "canon",
-            F.coalesce(
-                "__canon", F.concat(F.lit("u"), F.col("event_id").cast("string"))
+
+        # ---- #144 redirect-chain collapse over a planted 3-hop mapping
+        mapping = ev.where(F.col("event_id") % 4 != 0).select(
+            F.concat(F.lit("u"), F.col("event_id").cast("string")).alias("src_url"),
+            F.concat(F.lit("u"), (F.col("event_id") - 1).cast("string")).alias(
+                "dst_url"
             ),
         )
-        .withColumn("canon_hops", F.coalesce("__hops", F.lit(0)).cast("long"))
-        .drop("__canon", "__hops")
-    )
-
-    # ---- #142 anchor-text corpus over planted edges, joined by bucket
-    edges = ev.select(
-        F.concat(F.lit("t"), (F.col("event_id") % 211).cast("string")).alias(
-            "dst_url"
-        ),
-        F.concat(F.lit("a"), (F.col("user_id") % 5).cast("string")).alias(
-            "anchor"
-        ),
-        F.concat(F.lit("h"), (F.col("user_id") % 17).cast("string")).alias(
-            "src_host"
-        ),
-        (F.col("event_id") % 13 == 0).alias("nofollow"),
-    )
-    corpus = anchor_text_corpus(edges, top_k=2)
-    out = (
-        out.withColumn("__b", F.col("event_id") % 211)
-        .join(
-            corpus.select(
-                F.regexp_replace("dst_url", "^t", "").cast("long").alias("__b"),
-                F.col("n_links").alias("anc_links"),
-                F.col("n_ref_hosts").alias("anc_hosts"),
-                F.col("anchor_text").alias("anc_text"),
-            ),
-            "__b",
-            "left",
+        # materialize=False: the mapping is gate-scale and consumed once —
+        # per-hop checkpoint jobs would cost more than the re-derived lineage
+        chains = resolve_redirect_chains(mapping, max_hops=4, materialize=False)
+        out = (
+            out.join(
+                chains.select(
+                    F.regexp_replace("src_url", "^u", "")
+                    .cast("long")
+                    .alias("event_id"),
+                    F.col("final_url").alias("__canon"),
+                    F.col("hops").cast("long").alias("__hops"),
+                ),
+                "event_id",
+                "left",
+            )
+            .withColumn(
+                "canon",
+                F.coalesce(
+                    "__canon", F.concat(F.lit("u"), F.col("event_id").cast("string"))
+                ),
+            )
+            .withColumn("canon_hops", F.coalesce("__hops", F.lit(0)).cast("long"))
+            .drop("__canon", "__hops")
         )
-        .drop("__b")
-    )
 
-    # ---- #143 authority-weighted fetch budgets, joined by host
-    hosts = ev.groupBy(F.col("user_id").cast("string").alias("hh")).agg(
-        F.count(F.lit(1)).cast("double").alias("cap"),
-        # % (not pmod): matches the oracle's sign semantics for any
-        # future negative ids — the adjacent anchor leg already uses %
-        F.min(F.col("user_id") % 7 + 1).cast("double").alias("w"),
-    )
-    budget = float(count_fut.result() // 2)
-    pool.shutdown(wait=False)
+        # ---- #142 anchor-text corpus over planted edges, joined by bucket
+        edges = ev.select(
+            F.concat(F.lit("t"), (F.col("event_id") % 211).cast("string")).alias(
+                "dst_url"
+            ),
+            F.concat(F.lit("a"), (F.col("user_id") % 5).cast("string")).alias(
+                "anchor"
+            ),
+            F.concat(F.lit("h"), (F.col("user_id") % 17).cast("string")).alias(
+                "src_host"
+            ),
+            (F.col("event_id") % 13 == 0).alias("nofollow"),
+        )
+        corpus = anchor_text_corpus(edges, top_k=2)
+        out = (
+            out.withColumn("__b", F.col("event_id") % 211)
+            .join(
+                corpus.select(
+                    F.regexp_replace("dst_url", "^t", "").cast("long").alias("__b"),
+                    F.col("n_links").alias("anc_links"),
+                    F.col("n_ref_hosts").alias("anc_hosts"),
+                    F.col("anchor_text").alias("anc_text"),
+                ),
+                "__b",
+                "left",
+            )
+            .drop("__b")
+        )
+
+        # ---- #143 authority-weighted fetch budgets, joined by host
+        hosts = ev.groupBy(F.col("user_id").cast("string").alias("hh")).agg(
+            F.count(F.lit(1)).cast("double").alias("cap"),
+            # % (not pmod): matches the oracle's sign semantics for any
+            # future negative ids — the adjacent anchor leg already uses %
+            F.min(F.col("user_id") % 7 + 1).cast("double").alias("w"),
+        )
+        budget = float(count_fut.result() // 2)
+    finally:
+        pool.shutdown(wait=False, cancel_futures=True)
     alloc = allocate_weighted_budget(hosts, "hh", "cap", "w", budget)
     # broadcast (r14): alloc is one row per HOST (metadata-scale by the
     # operator's own contract); without the hint the final left join

@@ -863,25 +863,28 @@ def heavy_hitters(
     )
     group_names = [f.name for f in out_fields]
 
-    def explode(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        for _, row in pdf.iterrows():
-            b = row[filter_col]
-            if b is None:
+    def explode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # group values are taken from the Arrow columns, so a bigint key
+        # beside a NULL never passes through float64
+        for batch in batches:
+            rows, keys, counts = [], [], []
+            for i, b in enumerate(batch.column(filter_col).to_pylist()):
+                if b is None:
+                    continue
+                ks, cs = MG.mg_topk(b, top_k)
+                rows.append(np.full(len(ks), i, dtype=np.int64))
+                keys.append(ks.view(np.int64))
+                counts.append(cs.astype(np.int64))
+            if not rows:
                 continue
-            keys, counts = MG.mg_topk(bytes(b), top_k)
-            yield pd.DataFrame(
-                {
-                    **{g: [row[g]] * len(keys) for g in group_names},
-                    "key_hash": keys.view(np.int64),
-                    "est_count": counts.astype(np.int64),
-                }
+            idx = pa.array(np.concatenate(rows))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(g).take(idx) for g in group_names]
+                + [pa.array(np.concatenate(keys)), pa.array(np.concatenate(counts))],
+                names=schema.names,
             )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield from explode(pdf)
-
-    return filters.mapInPandas(gen, schema=schema)
+    return filters.mapInArrow(explode, schema=schema)
 
 
 def probe_filter(

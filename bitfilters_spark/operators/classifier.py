@@ -117,6 +117,66 @@ def _margins(
     )
 
 
+def _sgd_step(
+    feats: DataFrame,
+    labels: DataFrame,
+    n: float,
+    w: np.ndarray,
+    bias: float,
+    lr: float,
+    l2: float,
+) -> tuple[float, float]:
+    """One full-gradient step over cached ``feats``/``labels`` (``n``
+    labelled rows): updates ``w`` in place and returns the new bias and
+    the mean log-loss at the step's starting weights."""
+    m = _margins(feats, labels, _weight_df(feats.sparkSession, w), bias)
+    errs = m.select(
+        "id",
+        (F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("margin"))) - F.col("y"))
+        .alias("err"),
+        # numerically-stable log-loss: log(1+e^m) - y*m, with the
+        # standard max(m,0) rewrite so e^|m| never overflows
+        (
+            F.greatest(F.col("margin"), F.lit(0.0))
+            + F.log1p(F.exp(-F.abs(F.col("margin"))))
+            - F.col("y") * F.col("margin")
+        ).alias("ll"),
+    ).persist()  # consumed by both union branches below
+    # ONE model-scale collect per step: the per-bucket gradients plus a
+    # sentinel row (bucket = -1) carrying the bias gradient in `g` and
+    # the summed log-loss in `ll` — per-step driver round-trips halve vs
+    # separate gradient/scalar actions
+    grad_rows = (
+        errs.join(feats.select("id", "bucket", "cnt"), "id")
+        .groupBy("bucket")
+        .agg(
+            F.sum(F.col("err") * F.col("cnt")).alias("g"),
+            F.lit(0.0).alias("ll"),
+        )
+        .unionByName(
+            errs.select(
+                F.lit(-1).cast("long").alias("bucket"),
+                F.col("err").alias("g"),
+                F.col("ll"),
+            ).groupBy("bucket").agg(
+                F.sum("g").alias("g"), F.sum("ll").alias("ll")
+            )
+        )
+        .collect()
+    )
+    errs.unpersist()
+
+    g = np.zeros(w.shape[0], dtype="float64")
+    be = ll = 0.0
+    for r in grad_rows:
+        if r["bucket"] < 0:
+            be, ll = float(r["g"]), float(r["ll"])
+        else:
+            g[int(r["bucket"])] = float(r["g"])
+    w -= lr * (g / n + l2 * w)
+    return bias - lr * be / n, ll / n
+
+
 def train_text_classifier(
     df: DataFrame,
     id_col: str,
@@ -134,7 +194,6 @@ def train_text_classifier(
     iter]}``. Deterministic: full-batch (no sampling), float64, zero
     init. The learning rate is per-mean-gradient (gradient is divided
     by n), so ``lr`` is scale-free in corpus size."""
-    spark = df.sparkSession
     # NULL labels would silently inflate n while contributing zero
     # gradient — shrinking the effective learning rate with no signal
     # that anything is wrong. Unlabeled rows are a caller bug: drop them
@@ -157,54 +216,8 @@ def train_text_classifier(
     bias = 0.0
     losses: list[float] = []
     for _ in range(iters):
-        m = _margins(feats, labels, _weight_df(spark, w), bias)
-        errs = m.select(
-            "id",
-            "y",
-            (F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("margin"))) - F.col("y"))
-            .alias("err"),
-            # numerically-stable log-loss: log(1+e^m) - y*m, with the
-            # standard max(m,0) rewrite so e^|m| never overflows
-            (
-                F.greatest(F.col("margin"), F.lit(0.0))
-                + F.log1p(F.exp(-F.abs(F.col("margin"))))
-                - F.col("y") * F.col("margin")
-            ).alias("ll"),
-        ).persist()  # consumed by both union branches below
-        # ONE model-scale collect per iteration: the per-bucket gradients
-        # plus a sentinel row (bucket = -1) carrying the bias gradient in
-        # `g` and the summed log-loss in `ll` — per-iteration driver
-        # round-trips halve vs separate gradient/scalar actions
-        grad_rows = (
-            errs.join(feats.select("id", "bucket", "cnt"), "id")
-            .groupBy("bucket")
-            .agg(
-                F.sum(F.col("err") * F.col("cnt")).alias("g"),
-                F.lit(0.0).alias("ll"),
-            )
-            .unionByName(
-                errs.select(
-                    F.lit(-1).cast("long").alias("bucket"),
-                    F.col("err").alias("g"),
-                    F.col("ll"),
-                ).groupBy("bucket").agg(
-                    F.sum("g").alias("g"), F.sum("ll").alias("ll")
-                )
-            )
-            .collect()
-        )
-        errs.unpersist()
-
-        g = np.zeros(n_buckets, dtype="float64")
-        be = ll = 0.0
-        for r in grad_rows:
-            if r["bucket"] < 0:
-                be, ll = float(r["g"]), float(r["ll"])
-            else:
-                g[int(r["bucket"])] = float(r["g"])
-        w -= lr * (g / n + l2 * w)
-        bias -= lr * be / n
-        losses.append(ll / n)
+        bias, loss = _sgd_step(feats, labels, n, w, bias, lr, l2)
+        losses.append(loss)
     feats.unpersist()
     labels.unpersist()
     return {"weights": w, "bias": bias, "n_buckets": n_buckets, "losses": losses}

@@ -21,7 +21,7 @@ import io
 import numpy as np
 from pyspark.sql import DataFrame
 
-from ..operators.classifier import _margins, _weight_df, hashed_features
+from ..operators.classifier import _sgd_step, hashed_features
 from . import state_io
 
 
@@ -66,7 +66,6 @@ def fold_classifier_batch(
     ``batch=<id>``."""
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
     prior = None
     for bid, path in reversed(_state_dirs(state_path)):
         if bid < batch_id:
@@ -91,44 +90,8 @@ def fold_classifier_batch(
     feats = hashed_features(batch_df, id_col, text_col, n_buckets).persist()
     n = float(labels.count())
     for _ in range(steps_per_batch):
-        m = _margins(feats, labels, _weight_df(spark, w), bias)
-        errs = m.select(
-            "id",
-            (F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("margin"))) - F.col("y"))
-            .alias("err"),
-            (
-                F.greatest(F.col("margin"), F.lit(0.0))
-                + F.log1p(F.exp(-F.abs(F.col("margin"))))
-                - F.col("y") * F.col("margin")
-            ).alias("ll"),
-        ).persist()
-        grad_rows = (
-            errs.join(feats.select("id", "bucket", "cnt"), "id")
-            .groupBy("bucket")
-            .agg(F.sum(F.col("err") * F.col("cnt")).alias("g"),
-                 F.lit(0.0).alias("ll"))
-            .unionByName(
-                errs.select(
-                    F.lit(-1).cast("long").alias("bucket"),
-                    F.col("err").alias("g"),
-                    F.col("ll"),
-                ).groupBy("bucket").agg(
-                    F.sum("g").alias("g"), F.sum("ll").alias("ll")
-                )
-            )
-            .collect()
-        )
-        errs.unpersist()
-        g = np.zeros(n_buckets, dtype="float64")
-        be = ll = 0.0
-        for r in grad_rows:
-            if r["bucket"] < 0:
-                be, ll = float(r["g"]), float(r["ll"])
-            else:
-                g[int(r["bucket"])] = float(r["g"])
-        w -= lr * (g / n + l2 * w)
-        bias -= lr * be / n
-        losses.append(ll / n)
+        bias, loss = _sgd_step(feats, labels, n, w, bias, lr, l2)
+        losses.append(loss)
     feats.unpersist()
     labels.unpersist()
 

@@ -1,5 +1,5 @@
-"""Streaming sketch aggregation: per-window distinct counts with BOUNDED
-state.
+"""Streaming sketch aggregation: per-window distinct counts, frequencies,
+quantiles, heavy hitters and drift with BOUNDED state.
 
 Exact streaming COUNT(DISTINCT) needs state proportional to the number of
 distinct keys — unbounded on an unbounded stream. A KMV sketch per window
@@ -7,6 +7,13 @@ caps state at ``k`` u64 values (8k bytes at k=1024) regardless of stream
 length, stays exact while under-full, and merges associatively across
 micro-batches (the same algebra the batch build uses). This is the
 100 TB-stream cardinality profile: state size = #open-windows × k × 8 B.
+
+All five operators run on ONE windowed state machine, :func:`_windowed`:
+tumbling-window projection, one state row per open window, the kernel's
+build + merge folded into it per micro-batch (state blob first), an
+update-mode emit, and EventTimeTimeout eviction once the watermark passes
+a window's end + allowance. Each operator supplies only its columns, its
+``fold`` and its ``emit``.
 """
 
 from __future__ import annotations
@@ -24,6 +31,106 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+
+def _long(name: str) -> StructField:
+    return StructField(name, LongType())
+
+
+# state row of the four hash sketches: the blob and the rows it has seen
+_SKETCH_STATE = StructType([StructField("sketch", BinaryType()), _long("n")])
+
+
+def _ms(duration: str) -> int:
+    return int(pd.Timedelta(duration).total_seconds() * 1000)
+
+
+def _windowed(
+    stream: DataFrame,
+    ts_col: str,
+    window: str,
+    watermark: str | None,
+    cols: list,
+    out_fields: list,
+    state_schema: StructType,
+    fold,
+    emit,
+    where=None,
+) -> DataFrame:
+    """The per-window state machine: group ``cols`` by tumbling
+    ``window`` start, fold each micro-batch's pandas chunk into the
+    window's state row with ``fold(state_or_None, pdf) -> state``, store
+    it, and emit ``win_start`` + ``emit(state)`` (a dict of equal-length
+    columns, possibly empty) in update mode. With a ``watermark`` a
+    window's state row is evicted once the watermark passes its end +
+    allowance (see :func:`streaming_distinct_counts`). ``where`` filters
+    rows after ``withWatermark``; Catalyst pushes a filter that does not
+    read the event time below the watermark, so the rows it drops do not
+    advance it.
+    """
+    src = stream if watermark is None else stream.withWatermark(ts_col, watermark)
+    if where is not None:
+        src = src.where(where)
+    win_ms = _ms(window)
+    allow_ms = 0 if watermark is None else _ms(watermark)
+    proj = [F.window(F.col(ts_col), window).start.alias("win_start"), *cols]
+    if watermark is not None:
+        # the event-time-tagged column must survive projection for
+        # EventTimeTimeout's analysis check (window(...).start drops the tag)
+        proj.append(F.col(ts_col).alias("__ts"))
+
+    def agg(key, pdfs, state: GroupState):
+        if state.hasTimedOut:
+            # watermark passed this window's end + allowance: final value
+            # was already emitted in update mode; free the state row
+            state.remove()
+            return
+        st = state.get if state.exists else None
+        for pdf in pdfs:
+            if len(pdf):
+                st = fold(st, pdf)
+        if st is None:
+            return
+        state.update(st)
+        if watermark is not None:
+            win_end = int(pd.Timestamp(key[0]).value // 1_000_000) + win_ms
+            wm = state.getCurrentWatermarkMs()
+            state.setTimeoutTimestamp(max(win_end + allow_ms, wm + 1))
+        out = emit(st)
+        m = len(next(iter(out.values())))
+        yield pd.DataFrame({"win_start": [key[0]] * m, **out})
+
+    return src.select(*proj).groupBy("win_start").applyInPandasWithState(
+        agg,
+        outputStructType=StructType(
+            [StructField("win_start", TimestampType()), *out_fields]
+        ),
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=(
+            GroupStateTimeout.EventTimeTimeout
+            if watermark is not None
+            else GroupStateTimeout.NoTimeout
+        ),
+    )
+
+
+def _sketch_fold(build, merge):
+    """``fold`` over a ``(sketch, n)`` state: the chunk's partial from its
+    u64 hashes (``build(h, pdf)``), merged after the state blob."""
+
+    def fold(st, pdf):
+        h = pdf["h"].to_numpy(dtype=np.int64).view(np.uint64)
+        part = build(h, pdf)
+        if st is None:
+            return part, len(h)
+        return merge([bytes(st[0]), part]), st[1] + len(h)
+
+    return fold
+
+
+def _key_hash(key_col: str):
+    return F.xxhash64(F.col(key_col)).alias("h")
 
 
 def streaming_distinct_counts(
@@ -46,74 +153,15 @@ def streaming_distinct_counts(
     restart that window's count from empty; pick the allowance to cover
     the stream's real lateness.)
     """
-    from ..core.kmv import kmv_build, kmv_deserialize, kmv_estimate, kmv_merge
+    from ..core.kmv import kmv_build, kmv_estimate, kmv_merge
 
-    src = stream if watermark is None else stream.withWatermark(ts_col, watermark)
-    win_ms = int(pd.Timedelta(window).total_seconds() * 1000)
-    allow_ms = 0 if watermark is None else int(pd.Timedelta(watermark).total_seconds() * 1000)
-    cols = [
-        F.window(F.col(ts_col), window).start.alias("win_start"),
-        F.xxhash64(F.col(key_col)).alias("h"),
-    ]
-    if watermark is not None:
-        # the event-time-tagged column must survive projection for
-        # EventTimeTimeout's analysis check (window(...).start drops the tag)
-        cols.append(F.col(ts_col).alias("__ts"))
-    keyed = src.select(*cols)
-
-    out_schema = StructType(
-        [
-            StructField("win_start", TimestampType()),
-            StructField("est_distinct", LongType()),
-            StructField("n_rows", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("sketch", BinaryType()), StructField("n", LongType())]
-    )
-
-    def agg(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            # watermark passed this window's end + allowance: final value
-            # was already emitted in update mode; free the sketch row
-            state.remove()
-            return
-        if state.exists:
-            blob, n = state.get
-            blob = bytes(blob)
-        else:
-            blob, n = None, 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            h = pdf["h"].to_numpy(dtype=np.int64).view(np.uint64)
-            part = kmv_build(h, k)
-            blob = part if blob is None else kmv_merge([blob, part])
-            n += len(h)
-        if blob is not None:
-            state.update((blob, n))
-            if watermark is not None:
-                win_end = int(pd.Timestamp(key[0]).value // 1_000_000) + win_ms
-                wm = state.getCurrentWatermarkMs()
-                state.setTimeoutTimestamp(max(win_end + allow_ms, wm + 1))
-            yield pd.DataFrame(
-                {
-                    "win_start": [key[0]],
-                    "est_distinct": [kmv_estimate(blob)],
-                    "n_rows": [n],
-                }
-            )
-
-    return keyed.groupBy("win_start").applyInPandasWithState(
-        agg,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if watermark is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _windowed(
+        stream, ts_col, window, watermark,
+        cols=[_key_hash(key_col)],
+        out_fields=[_long("est_distinct"), _long("n_rows")],
+        state_schema=_SKETCH_STATE,
+        fold=_sketch_fold(lambda h, pdf: kmv_build(h, k), kmv_merge),
+        emit=lambda st: {"est_distinct": [kmv_estimate(st[0])], "n_rows": [st[1]]},
     )
 
 
@@ -144,83 +192,32 @@ def streaming_cms_counts(
     ``watermark`` evicts closed windows' sketches via EventTimeTimeout,
     exactly like the KMV variant.
     """
-    from ..core.cms import cms_counts, cms_deserialize, cms_estimate, cms_merge, cms_serialize
+    from ..core.cms import cms_counts, cms_estimate, cms_merge, cms_serialize
 
-    spark = stream.sparkSession
-    trows = spark.createDataFrame(
-        [(t,) for t in tracked], f"k {stream.schema[key_col].dataType.simpleString()}"
+    key_dt = stream.schema[key_col].dataType
+    trows = stream.sparkSession.createDataFrame(
+        [(t,) for t in tracked], f"k {key_dt.simpleString()}"
     ).select("k", F.xxhash64("k").alias("h")).collect()
     tracked_keys = [r["k"] for r in trows]
     tracked_hs = np.array([r["h"] for r in trows], dtype=np.int64).view(np.uint64)
 
-    src = stream if watermark is None else stream.withWatermark(ts_col, watermark)
-    win_ms = int(pd.Timedelta(window).total_seconds() * 1000)
-    allow_ms = 0 if watermark is None else int(
-        pd.Timedelta(watermark).total_seconds() * 1000
-    )
-    cols = [
-        F.window(F.col(ts_col), window).start.alias("win_start"),
-        F.xxhash64(F.col(key_col)).alias("h"),
-    ]
-    if watermark is not None:
-        cols.append(F.col(ts_col).alias("__ts"))
-    keyed = src.select(*cols)
+    def emit(st):
+        ests = cms_estimate(st[0], tracked_hs)
+        return {
+            "key": tracked_keys,
+            "est_count": ests.astype(np.int64),
+            "n_rows": [st[1]] * len(tracked_keys),
+        }
 
-    key_dt = stream.schema[key_col].dataType
-    out_schema = StructType(
-        [
-            StructField("win_start", TimestampType()),
-            StructField("key", key_dt),
-            StructField("est_count", LongType()),
-            StructField("n_rows", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("sketch", BinaryType()), StructField("n", LongType())]
-    )
-
-    def agg(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            blob, n = state.get
-            blob = bytes(blob)
-        else:
-            blob, n = None, 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            h = pdf["h"].to_numpy(dtype=np.int64).view(np.uint64)
-            part = cms_serialize(cms_counts(h, d, w))
-            blob = part if blob is None else cms_merge([blob, part])
-            n += len(h)
-        if blob is not None:
-            state.update((blob, n))
-            if watermark is not None:
-                win_end = int(pd.Timestamp(key[0]).value // 1_000_000) + win_ms
-                wm = state.getCurrentWatermarkMs()
-                state.setTimeoutTimestamp(max(win_end + allow_ms, wm + 1))
-            ests = cms_estimate(blob, tracked_hs)
-            yield pd.DataFrame(
-                {
-                    "win_start": [key[0]] * len(tracked_keys),
-                    "key": tracked_keys,
-                    "est_count": ests.astype(np.int64),
-                    "n_rows": [n] * len(tracked_keys),
-                }
-            )
-
-    return keyed.groupBy("win_start").applyInPandasWithState(
-        agg,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if watermark is not None
-            else GroupStateTimeout.NoTimeout
+    return _windowed(
+        stream, ts_col, window, watermark,
+        cols=[_key_hash(key_col)],
+        out_fields=[StructField("key", key_dt), _long("est_count"), _long("n_rows")],
+        state_schema=_SKETCH_STATE,
+        fold=_sketch_fold(
+            lambda h, pdf: cms_serialize(cms_counts(h, d, w)), cms_merge
         ),
+        emit=emit,
     )
 
 
@@ -249,67 +246,24 @@ def streaming_quantiles(
     """
     from ..core.bksample import bks_build, bks_merge, bks_quantile
 
-    src = stream if watermark is None else stream.withWatermark(ts_col, watermark)
-    win_ms = int(pd.Timedelta(window).total_seconds() * 1000)
-    allow_ms = 0 if watermark is None else int(
-        pd.Timedelta(watermark).total_seconds() * 1000
-    )
-    cols = [
-        F.window(F.col(ts_col), window).start.alias("win_start"),
-        F.xxhash64(F.col(key_col)).alias("h"),
-        F.col(value_col).cast("long").alias("v"),
-    ]
-    if watermark is not None:
-        cols.append(F.col(ts_col).alias("__ts"))
-    keyed = src.select(*cols)
+    names = [f"p{int(q * 100)}" for q in qs]
 
-    out_fields = [
-        StructField("win_start", TimestampType()),
-        StructField("n_rows", LongType()),
-    ] + [StructField(f"p{int(q * 100)}", LongType()) for q in qs]
-    out_schema = StructType(out_fields)
-    state_schema = StructType(
-        [StructField("sketch", BinaryType()), StructField("n", LongType())]
-    )
+    def emit(st):
+        return {
+            "n_rows": [st[1]],
+            **{p: [bks_quantile(st[0], q)] for p, q in zip(names, qs)},
+        }
 
-    def agg(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            blob, n = state.get
-            blob = bytes(blob)
-        else:
-            blob, n = None, 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            h = pdf["h"].to_numpy(dtype=np.int64).view(np.uint64)
-            v = pdf["v"].to_numpy(dtype=np.int64)
-            part = bks_build(h, v, k)
-            blob = part if blob is None else bks_merge([blob, part])
-            n += len(h)
-        if blob is not None:
-            state.update((blob, n))
-            if watermark is not None:
-                win_end = int(pd.Timestamp(key[0]).value // 1_000_000) + win_ms
-                wm = state.getCurrentWatermarkMs()
-                state.setTimeoutTimestamp(max(win_end + allow_ms, wm + 1))
-            row = {"win_start": [key[0]], "n_rows": [n]}
-            for q in qs:
-                row[f"p{int(q * 100)}"] = [bks_quantile(blob, q)]
-            yield pd.DataFrame(row)
-
-    return keyed.groupBy("win_start").applyInPandasWithState(
-        agg,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if watermark is not None
-            else GroupStateTimeout.NoTimeout
+    return _windowed(
+        stream, ts_col, window, watermark,
+        cols=[_key_hash(key_col), F.col(value_col).cast("long").alias("v")],
+        out_fields=[_long("n_rows"), *map(_long, names)],
+        state_schema=_SKETCH_STATE,
+        fold=_sketch_fold(
+            lambda h, pdf: bks_build(h, pdf["v"].to_numpy(dtype=np.int64), k),
+            bks_merge,
         ),
+        emit=emit,
     )
 
 
@@ -341,73 +295,21 @@ def streaming_topk(
     """
     from ..core.mg import mg_build, mg_merge, mg_topk
 
-    src = stream if watermark is None else stream.withWatermark(ts_col, watermark)
-    win_ms = int(pd.Timedelta(window).total_seconds() * 1000)
-    allow_ms = 0 if watermark is None else int(
-        pd.Timedelta(watermark).total_seconds() * 1000
-    )
-    cols = [
-        F.window(F.col(ts_col), window).start.alias("win_start"),
-        F.xxhash64(F.col(key_col)).alias("h"),
-    ]
-    if watermark is not None:
-        cols.append(F.col(ts_col).alias("__ts"))
-    keyed = src.select(*cols)
+    def emit(st):
+        keys, counts = mg_topk(st[0], top_k)
+        return {
+            "key_hash": keys.view(np.int64),
+            "est_count": counts.astype(np.int64),
+            "n_rows": [st[1]] * len(keys),
+        }
 
-    out_schema = StructType(
-        [
-            StructField("win_start", TimestampType()),
-            StructField("key_hash", LongType()),
-            StructField("est_count", LongType()),
-            StructField("n_rows", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("sketch", BinaryType()), StructField("n", LongType())]
-    )
-
-    def agg(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            blob, n = state.get
-            blob = bytes(blob)
-        else:
-            blob, n = None, 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            h = pdf["h"].to_numpy(dtype=np.int64).view(np.uint64)
-            part = mg_build(h, k)
-            blob = part if blob is None else mg_merge([blob, part])
-            n += len(h)
-        if blob is not None:
-            state.update((blob, n))
-            if watermark is not None:
-                win_end = int(pd.Timestamp(key[0]).value // 1_000_000) + win_ms
-                wm = state.getCurrentWatermarkMs()
-                state.setTimeoutTimestamp(max(win_end + allow_ms, wm + 1))
-            keys, counts = mg_topk(blob, top_k)
-            yield pd.DataFrame(
-                {
-                    "win_start": [key[0]] * len(keys),
-                    "key_hash": keys.view(np.int64),
-                    "est_count": counts.astype(np.int64),
-                    "n_rows": [n] * len(keys),
-                }
-            )
-
-    return keyed.groupBy("win_start").applyInPandasWithState(
-        agg,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if watermark is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _windowed(
+        stream, ts_col, window, watermark,
+        cols=[_key_hash(key_col)],
+        out_fields=[_long("key_hash"), _long("est_count"), _long("n_rows")],
+        state_schema=_SKETCH_STATE,
+        fold=_sketch_fold(lambda h, pdf: mg_build(h, k), mg_merge),
+        emit=emit,
     )
 
 
@@ -433,8 +335,6 @@ def streaming_drift(
     range clamping into the edge buckets. Watermark evicts closed
     windows via EventTimeTimeout like the sketch siblings.
     """
-    import math
-
     mn, mx = float(baseline["min"]), float(baseline["max"])
     base_counts = np.asarray(baseline["counts"], dtype=np.float64)
     n_buckets = len(base_counts)
@@ -445,11 +345,6 @@ def streaming_drift(
     )
     width = (mx - mn) / n_buckets
 
-    src = stream if watermark is None else stream.withWatermark(ts_col, watermark)
-    win_ms = int(pd.Timedelta(window).total_seconds() * 1000)
-    allow_ms = 0 if watermark is None else int(
-        pd.Timedelta(watermark).total_seconds() * 1000
-    )
     bucket = F.greatest(
         F.least(
             F.floor((F.col(value_col).cast("double") - F.lit(mn)) / F.lit(width)),
@@ -457,56 +352,28 @@ def streaming_drift(
         ),
         F.lit(0),
     ).cast("int")
-    cols = [
-        F.window(F.col(ts_col), window).start.alias("win_start"),
-        bucket.alias("b"),
-    ]
-    if watermark is not None:
-        cols.append(F.col(ts_col).alias("__ts"))
-    keyed = src.where(F.col(value_col).isNotNull()).select(*cols)
 
-    out_schema = StructType(
-        [
-            StructField("win_start", TimestampType()),
-            StructField("n_rows", LongType()),
-            StructField("psi", DoubleType()),
-        ]
-    )
-    state_schema = StructType([StructField("counts", BinaryType())])
-
-    def agg(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            counts = np.frombuffer(bytes(state.get[0]), dtype="<i8").copy()
-        else:
+    def fold(st, pdf):
+        if st is None:
             counts = np.zeros(n_buckets, dtype=np.int64)
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            np.add.at(counts, pdf["b"].to_numpy(dtype=np.int64), 1)
-        n = int(counts.sum())
-        if n:
-            state.update((counts.astype("<i8").tobytes(),))
-            if watermark is not None:
-                win_end = int(pd.Timestamp(key[0]).value // 1_000_000) + win_ms
-                wm = state.getCurrentWatermarkMs()
-                state.setTimeoutTimestamp(max(win_end + allow_ms, wm + 1))
-            p = np.maximum(counts / n, 1e-6)
-            psi = float(np.sum((p - base_p) * np.log(p / base_p)))
-            yield pd.DataFrame(
-                {"win_start": [key[0]], "n_rows": [n], "psi": [round(psi, 6)]}
-            )
+        else:
+            counts = np.frombuffer(bytes(st[0]), dtype="<i8").copy()
+        np.add.at(counts, pdf["b"].to_numpy(dtype=np.int64), 1)
+        return (counts.astype("<i8").tobytes(),)
 
-    return keyed.groupBy("win_start").applyInPandasWithState(
-        agg,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if watermark is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    def emit(st):
+        counts = np.frombuffer(st[0], dtype="<i8")
+        n = int(counts.sum())
+        p = np.maximum(counts / n, 1e-6)
+        psi = float(np.sum((p - base_p) * np.log(p / base_p)))
+        return {"n_rows": [n], "psi": [round(psi, 6)]}
+
+    return _windowed(
+        stream, ts_col, window, watermark,
+        cols=[bucket.alias("b")],
+        out_fields=[_long("n_rows"), StructField("psi", DoubleType())],
+        state_schema=StructType([StructField("counts", BinaryType())]),
+        fold=fold,
+        emit=emit,
+        where=F.col(value_col).isNotNull(),
     )

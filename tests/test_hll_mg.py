@@ -146,6 +146,21 @@ def test_mg_exact_regime_matches_group_by(spark, orders):
     assert got == want
 
 
+def test_heavy_hitters_group_keys_stay_exact_beside_a_null(spark):
+    """A bigint group key 2^53+1 in a batch that also holds a NULL key
+    comes back exact from ``heavy_hitters``, each group with its own
+    counters."""
+    big = 2**53 + 1
+    rows = [(big, 11), (big, 11), (None, 22), (5, 33)]
+    df = spark.createDataFrame(rows, "g long, h long").coalesce(1)
+    filters = build_filter(df, ["g"], "h", "mg", k=8).coalesce(1)
+    got = {
+        (r["g"], r["key_hash"]): r["est_count"]
+        for r in heavy_hitters(filters).collect()
+    }
+    assert got == {(big, 11): 2, (None, 22): 1, (5, 33): 1}
+
+
 def test_mg_skewed_spark_build_tracks_heavy_keys(spark):
     # 5 heavy keys (x400) over ~8000 noise rows; k=64 -> guaranteed tracked
     heavy = spark.range(2000).select(

@@ -379,16 +379,52 @@ def test_streaming_dedup_ttl_evicts_and_readmits(spark, tmp_path):
         q.stop()
 
 
-def test_streaming_distinct_counts_watermark_closes_windows(spark, tmp_path):
-    """KMV window state is dropped once the watermark passes window end +
-    allowance: the state store's row count (query progress metrics) shrinks
-    after the watermark advances — closed windows no longer hold sketches."""
+@pytest.mark.parametrize("kind", ["kmv", "drift", "topk"])
+def test_streaming_distinct_counts_watermark_closes_windows(spark, tmp_path, kind):
+    """Window state is dropped once the watermark passes window end +
+    allowance: the state store's row count (query progress metrics)
+    shrinks after the watermark advances — closed windows no longer hold
+    state. Run for KMV, for drift (its own state schema, and a NULL
+    filter) and for top-k with ``top_k=0`` (every emit empty, yet each
+    window still holds and frees state)."""
     import datetime as dt
 
-    from bitfilters_spark.streaming import streaming_distinct_counts
+    from bitfilters_spark.streaming import (
+        streaming_distinct_counts,
+        streaming_drift,
+        streaming_topk,
+    )
 
     src = str(tmp_path / "wmc_in")
     ckpt = str(tmp_path / "wmc_ckpt")
+    wm = "30 minutes"
+    build, row, want_10, want_15 = {
+        "kmv": (
+            lambda s: streaming_distinct_counts(
+                s, "k", "ts", "1 hour", k=64, watermark=wm
+            ),
+            lambda r: (r["est_distinct"], r["n_rows"]),
+            [(2, 3)],
+            [(1, 1), (2, 2)],
+        ),
+        "drift": (
+            lambda s: streaming_drift(
+                s, "id", {"min": 0, "max": 8, "counts": [1, 1]}, "ts", "1 hour",
+                watermark=wm,
+            ),
+            lambda r: r["n_rows"],
+            [3],
+            [1],  # the NULL-valued 15:10 row is filtered out
+        ),
+        "topk": (
+            lambda s: streaming_topk(
+                s, "k", "ts", "1 hour", k=64, top_k=0, watermark=wm
+            ),
+            None,
+            [],
+            [],
+        ),
+    }[kind]
 
     def write(rows):
         spark.createDataFrame(
@@ -402,39 +438,36 @@ def test_streaming_distinct_counts_watermark_closes_windows(spark, tmp_path):
     write([(1, "x", t(10, 0)), (2, "y", t(10, 20)), (3, "x", t(10, 40))])
 
     stream = spark.readStream.schema("id long, k string, ts timestamp").parquet(src)
-    counts = streaming_distinct_counts(
-        stream, "k", "ts", "1 hour", k=64, watermark="30 minutes"
-    )
     q = (
-        counts.writeStream.format("memory")
+        build(stream).writeStream.format("memory")
         .queryName("wmc_sink")
         .option("checkpointLocation", ckpt)
         .outputMode("update")
         .start()
     )
 
-    def latest():
-        out = {}
-        for r in spark.sql("SELECT * FROM wmc_sink ORDER BY n_rows").collect():
-            out[str(r["win_start"])] = (r["est_distinct"], r["n_rows"])
-        return out
+    def emitted(hour):
+        return sorted(
+            row(r) for r in spark.sql("SELECT * FROM wmc_sink").collect()
+            if r["win_start"].hour == hour
+        )
 
     try:
         q.processAllAvailable()
-        assert latest()["2024-01-01 10:00:00"] == (2, 3)
+        assert emitted(10) == want_10
         assert state_rows(q) == 1  # the open 10:00 window
 
         # advance the watermark (15:00 - 30min = 14:30) far past the 10:00
         # window's end + allowance (11:30): its timeout becomes due
         write([(4, "z", t(15, 0))])
         q.processAllAvailable()
-        assert latest()["2024-01-01 15:00:00"] == (1, 1)
 
         # the timeout fires in the batch AFTER the watermark advances; any
-        # subsequent batch shows the 10:00 sketch row gone
-        write([(5, "w", t(15, 10))])
+        # subsequent batch shows the 10:00 state row gone
+        write([(None, "w", t(15, 10))])
         q.processAllAvailable()
         assert state_rows(q) == 1, "closed 10:00 window must be evicted"
+        assert emitted(15) == want_15
     finally:
         q.stop()
 
