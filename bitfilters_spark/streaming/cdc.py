@@ -2,22 +2,23 @@
 chunk-duplication picture stays current as a crawl lands.
 
 The per-chunk-hash (n, bytes) table is ADDITIVE over documents (chunking
-never crosses a document boundary), so it folds under micro-batching
-exactly like `streaming/tokenizer.py`'s word counts (#150): each batch
-appends its own (chunk_hash, n, bytes) partial as parquet rows
-(distributed writes — the chunk table is hash-vocabulary-scale and never
-crosses the driver), and any read folds the partials with one
-groupBy-sum. A 3-batch fold equals one `cdc_chunks` pass over the union
-(pinned in pytest), so streamed and batch dup accounting cannot diverge.
+never crosses a document boundary), so it is an additive partial table
+of the fold store (`state_io.append_partials` / `read_partials` /
+`compact_partials`): each batch appends its own (chunk_hash, n, bytes)
+partial as parquet rows (distributed writes — the chunk table is
+hash-vocabulary-scale and never crosses the driver), and any read folds
+the partials with one groupBy-sum. A 3-batch fold equals one
+`cdc_chunks` pass over the union (pinned in pytest), so streamed and
+batch dup accounting cannot diverge.
 
 Exactly-once per batch via `state_io.once_per_batch`'s batch-id
 markers: a crash-replayed batch no-ops when its marker exists; the
 honest residual is one batch's double-append when the crash lands
 between the parquet write and the marker write (at-least-once for
 exactly that batch). Partial file-sets accumulate per batch;
-:func:`compact_cdc_stats` rewrites them to one aggregated file-set
-(fold-identical before/after, crash-safe rename-aside swap + self-heal —
-the `compact_word_stats` contract)."""
+:func:`compact_cdc_stats` rewrites them to their folded rows
+(fold-identical before/after, crash-safe through the store's
+rename-aside swap)."""
 
 from __future__ import annotations
 
@@ -35,13 +36,8 @@ __all__ = [
     "compact_cdc_stats",
 ]
 
-
-def _heal(spark: SparkSession, state_path: str) -> None:
-    """Self-heal a compact interrupted between its two renames (the
-    `streaming/tokenizer._heal` contract)."""
-    live, old = f"{state_path}/chunks", f"{state_path}/chunks__old"
-    if not state_io.exists(live, spark) and state_io.exists(old, spark):
-        state_io.rename(old, live, spark)
+# group keys and summed columns of the chunk table
+_FOLD = (["chunk_hash"], ["n", "bytes"])
 
 
 def cdc_stats_fold(
@@ -59,20 +55,15 @@ def cdc_stats_fold(
     any thresholding is a query-time concern, never baked into state."""
 
     def apply(batch_df: DataFrame) -> None:
-        spark = batch_df.sparkSession
-        _heal(spark, state_path)
-        (
-            cdc_chunks(
-                batch_df, id_col, text_col, min_size, avg_size, max_size,
-                keep_bytes=False,
-            )
-            .groupBy("chunk_hash")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("length").alias("bytes"),
-            )
-            .write.mode("append")
-            .parquet(f"{state_path}/chunks")
+        chunks = cdc_chunks(
+            batch_df, id_col, text_col, min_size, avg_size, max_size,
+            keep_bytes=False,
+        )
+        state_io.append_partials(
+            chunks.groupBy("chunk_hash").agg(
+                F.count(F.lit(1)).alias("n"), F.sum("length").alias("bytes")
+            ),
+            f"{state_path}/chunks",
         )
 
     return state_io.once_per_batch(marker_path, apply)
@@ -111,14 +102,7 @@ def streaming_chunk_counts(
     so far — exactly the chunk-hash counts of `cdc_chunks` over the
     streamed union — or None before the first fold. Missing state means
     "no chunks yet"; any OTHER read failure propagates."""
-    _heal(spark, state_path)
-    if not state_io.exists(f"{state_path}/chunks", spark):
-        return None
-    return (
-        spark.read.parquet(f"{state_path}/chunks")
-        .groupBy("chunk_hash")
-        .agg(F.sum("n").alias("n"), F.sum("bytes").alias("bytes"))
-    )
+    return state_io.read_partials(spark, f"{state_path}/chunks", *_FOLD)
 
 
 def streaming_cdc_dup_report(
@@ -144,25 +128,8 @@ def streaming_cdc_dup_report(
 
 
 def compact_cdc_stats(spark: SparkSession, state_path: str) -> dict:
-    """Rewrite the accumulated per-batch partial file-sets as ONE
-    aggregated file-set (fold-identical; the `compact_word_stats`
-    crash-safe swap: stage, rename live aside, rename stage in, delete
-    old — every reader/writer self-heals an interrupted swap)."""
-    _heal(spark, state_path)
-    live = f"{state_path}/chunks"
-    if not state_io.exists(live, spark):
-        return {"rows_before": 0, "rows_after": 0}
-    raw = spark.read.parquet(live)
-    rows_before = raw.count()
-    agg = raw.groupBy("chunk_hash").agg(
-        F.sum("n").alias("n"), F.sum("bytes").alias("bytes")
-    )
-    stage = f"{state_path}/chunks__stage"
-    agg.write.mode("overwrite").parquet(stage)
-    rows_after = spark.read.parquet(stage).count()
-    old = f"{state_path}/chunks__old"
-    state_io.delete(old, spark)
-    state_io.rename(live, old, spark)
-    state_io.rename(stage, live, spark)
-    state_io.delete(old, spark)
-    return {"rows_before": rows_before, "rows_after": rows_after}
+    """Rewrite the accumulated per-batch partial file-sets as their
+    folded rows (fold-identical), through the fold store's crash-safe
+    swap (`state_io.compact_partials`). Returns ``{"rows_before": n,
+    "rows_after": n, ...}``."""
+    return state_io.compact_partials(spark, f"{state_path}/chunks", *_FOLD)

@@ -5,9 +5,10 @@ Each micro-batch takes ``steps_per_batch`` full-gradient steps ON THAT
 BATCH (classic mini-batch SGD — the stream provides the batching), using
 the SAME distributed gradient machinery as the batch trainer: features
 explode/aggregate JVM-side, the driver sees only model-scale gradient
-rows. Weight state is batch-id-keyed (``state_path/batch=<id>/``) like
-`streaming/pca.py`: a replayed batch re-derives FROM THE PRIOR state and
-overwrites its own directory — crash redelivery can never double-step.
+rows. Weight state is a batch-keyed snapshot of the fold store
+(`state_io.write_snapshot`, ``state_path/batch=<id>/weights.npz``): a
+replayed batch re-derives FROM THE PRIOR state and overwrites its own
+directory — crash redelivery can never double-step.
 
 At any moment `load_streaming_classifier` yields a model dict usable by
 `classifier_score` / `classifier_filter` from any session — the "score
@@ -16,8 +17,6 @@ today's crawl with the model as of now" loop with no retraining job.
 
 from __future__ import annotations
 
-import io
-
 import numpy as np
 from pyspark.sql import DataFrame
 
@@ -25,22 +24,10 @@ from ..operators.classifier import _sgd_step, hashed_features
 from . import state_io
 
 
-def _state_dirs(state_path: str) -> list[tuple[int, str]]:
-    # batch= dirs whose weights.npz exists (crash between mkdirs and the
-    # payload write leaves an empty dir readers must not trip on);
-    # state_path is any Hadoop-FS URI — see streaming/state_io.py
-    return state_io.batch_state_dirs(state_path, "weights.npz")
-
-
-def _load_npz(path: str):
-    return np.load(io.BytesIO(state_io.read_bytes(path)))
-
-
 def load_streaming_classifier(state_path: str) -> dict | None:
-    dirs = _state_dirs(state_path)
-    if not dirs:
+    blob = state_io.load_snapshot(state_path, "weights.npz")
+    if blob is None:
         return None
-    blob = _load_npz(state_io.join(dirs[-1][1], "weights.npz"))
     return {
         "weights": blob["w"],
         "bias": float(blob["bias"]),
@@ -66,16 +53,12 @@ def fold_classifier_batch(
     ``batch=<id>``."""
     if batch_df.isEmpty():
         return
-    prior = None
-    for bid, path in reversed(_state_dirs(state_path)):
-        if bid < batch_id:
-            blob = _load_npz(state_io.join(path, "weights.npz"))
-            prior = (blob["w"].copy(), float(blob["bias"]), list(blob["losses"]))
-            break
+    prior = state_io.load_snapshot(state_path, "weights.npz", before=batch_id)
     if prior is None:
         w, bias, losses = np.zeros(n_buckets, dtype="float64"), 0.0, []
     else:
-        w, bias, losses = prior
+        w, bias = prior["w"].copy(), float(prior["bias"])
+        losses = list(prior["losses"])
         if w.shape[0] != n_buckets:
             raise ValueError(
                 f"state has n_buckets={w.shape[0]}, fold called with {n_buckets}"
@@ -95,17 +78,14 @@ def fold_classifier_batch(
     feats.unpersist()
     labels.unpersist()
 
-    buf = io.BytesIO()
-    np.savez(
-        buf,
+    state_io.write_snapshot(
+        state_path,
+        "weights.npz",
+        batch_id,
         w=w,
         bias=bias,
         n_buckets=n_buckets,
         losses=np.asarray(losses, dtype="float64"),
-    )
-    state_io.write_bytes(
-        state_io.join(state_path, f"batch={batch_id}", "weights.npz"),
-        buf.getvalue(),
     )
 
 

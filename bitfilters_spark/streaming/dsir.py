@@ -4,12 +4,13 @@ model (#118).
 `operators/dsir.fit_dsir` reduces each corpus to an n_buckets-row
 multinomial — an ADDITIVE statistic, so the raw (crawl) side can stream:
 each micro-batch's hashed-feature bucket counts fold into a persisted
-int64 vector, exactly the `streaming/pca.py` moments pattern. The TARGET
-distribution describes a small fixed reference corpus, so it stays a
-batch computation; `streaming_dsir_model` combines the live raw counts
-with the target at read time into the same (bucket, log_ratio) model
-`dsir_weights` / `dsir_select` consume — score today's crawl against
-everything ever streamed, from any session, mid-stream.
+int64 vector, a batch-keyed snapshot of the fold store
+(`state_io.write_snapshot`). The TARGET distribution describes a small
+fixed reference corpus, so it stays a batch computation;
+`streaming_dsir_model` combines the live raw counts with the target at
+read time into the same (bucket, log_ratio) model `dsir_weights` /
+`dsir_select` consume — score today's crawl against everything ever
+streamed, from any session, mid-stream.
 
 Exactly-once: state is keyed by micro-batch id (``batch=<id>/`` holds
 the fold of every batch up to it; replay overwrites with identical
@@ -20,8 +21,6 @@ the same metadata-scale contract as the classifier's gradient collect.
 
 from __future__ import annotations
 
-import io
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,20 +29,11 @@ from ..operators.dsir import _feature_buckets
 from . import state_io
 
 
-def _state_dirs(state_path: str) -> list[tuple[int, str]]:
-    return state_io.batch_state_dirs(state_path, "counts.npz")
-
-
 def load_dsir_counts(state_path: str) -> np.ndarray | None:
     """int64[n_buckets] raw-feature counts folded over every micro-batch
     so far, or None before the first fold."""
-    dirs = _state_dirs(state_path)
-    if not dirs:
-        return None
-    blob = np.load(
-        io.BytesIO(state_io.read_bytes(state_io.join(dirs[-1][1], "counts.npz")))
-    )
-    return blob["nq"]
+    blob = state_io.load_snapshot(state_path, "counts.npz")
+    return None if blob is None else blob["nq"]
 
 
 def _batch_counts(
@@ -77,21 +67,10 @@ def fold_dsir_batch(
     if batch_df.isEmpty():
         return
     nq = _batch_counts(batch_df, text_col, n_buckets, bigrams)
-    for bid, path in reversed(_state_dirs(state_path)):
-        if bid < batch_id:
-            blob = np.load(
-                io.BytesIO(
-                    state_io.read_bytes(state_io.join(path, "counts.npz"))
-                )
-            )
-            nq = nq + blob["nq"]
-            break
-    buf = io.BytesIO()
-    np.savez(buf, nq=nq)
-    state_io.write_bytes(
-        state_io.join(state_path, f"batch={batch_id}", "counts.npz"),
-        buf.getvalue(),
-    )
+    prior = state_io.load_snapshot(state_path, "counts.npz", before=batch_id)
+    if prior is not None:
+        nq = nq + prior["nq"]
+    state_io.write_snapshot(state_path, "counts.npz", batch_id, nq=nq)
 
 
 def streaming_dsir_counts(

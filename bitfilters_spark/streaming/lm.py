@@ -17,10 +17,11 @@ Exactly-once per batch via `state_io.once_per_batch`'s batch-id
 markers: a crash-replayed batch no-ops when its marker exists; the honest
 residual is one batch's double-append when the crash lands between the
 parquet write and the marker write (at-least-once for exactly that
-batch). Partial file-sets accumulate per batch; model builds fold them
-anyway, and a periodic `compact_kn_state` rewrites the directories to one
-aggregated file-set (model-identical before/after — same contract as
-`compact_bm25_index`).
+batch). Both tables are additive partial tables of the fold store
+(`state_io.append_partials` / `read_partials` / `compact_partials`):
+partial file-sets accumulate per batch, model builds fold them anyway,
+and a periodic `compact_kn_state` rewrites each directory to its folded
+rows (model-identical before/after).
 """
 
 from __future__ import annotations
@@ -38,6 +39,9 @@ __all__ = [
     "streaming_kn_model",
     "compact_kn_state",
 ]
+
+# (directory, group keys, summed columns) of the two additive tables
+_TABLES = (("bigrams", ["hp", "hc"], ["cb"]), ("unigrams", ["h"], ["c_tok"]))
 
 
 def _batch_tables(df: DataFrame, text_col: str) -> tuple[DataFrame, DataFrame]:
@@ -63,11 +67,8 @@ def kn_stats_fold(text_col: str, state_path: str, marker_path: str):
     once per batch id."""
 
     def apply(batch_df: DataFrame) -> None:
-        spark = batch_df.sparkSession
-        _heal(spark, state_path)
-        bi, uni = _batch_tables(batch_df, text_col)
-        bi.write.mode("append").parquet(f"{state_path}/bigrams")
-        uni.write.mode("append").parquet(f"{state_path}/unigrams")
+        for (name, _, _), df in zip(_TABLES, _batch_tables(batch_df, text_col)):
+            state_io.append_partials(df, f"{state_path}/{name}")
 
     return state_io.once_per_batch(marker_path, apply)
 
@@ -88,38 +89,6 @@ def streaming_kn_stats(
     )
 
 
-def _heal(spark: SparkSession, state_path: str) -> None:
-    """Self-heal a compact interrupted between its two renames: if the
-    live directory is missing but its ``__old`` sibling exists, the old
-    state is still complete — rename it back before anything reads or
-    appends (an append against a missing live dir would otherwise
-    recreate it with only new batches, silently orphaning history)."""
-    for name in ("bigrams", "unigrams"):
-        live, old = f"{state_path}/{name}", f"{state_path}/{name}__old"
-        if not state_io.exists(live, spark) and state_io.exists(old, spark):
-            state_io.rename(old, live, spark)
-
-
-def _folded_tables(
-    spark: SparkSession, state_path: str
-) -> tuple[DataFrame, DataFrame] | None:
-    _heal(spark, state_path)
-    # missing state means "no model yet"; any OTHER read failure
-    # (permissions, corrupt files) must propagate, not masquerade as an
-    # empty stream (ADVICE r11 — a blanket except here silently hid
-    # transient errors)
-    if not (
-        state_io.exists(f"{state_path}/bigrams", spark)
-        and state_io.exists(f"{state_path}/unigrams", spark)
-    ):
-        return None
-    bi_raw = spark.read.parquet(f"{state_path}/bigrams")
-    uni_raw = spark.read.parquet(f"{state_path}/unigrams")
-    bi = bi_raw.groupBy("hp", "hc").agg(F.sum("cb").alias("cb"))
-    uni = uni_raw.groupBy("h").agg(F.sum("c_tok").alias("c_tok"))
-    return bi, uni
-
-
 def streaming_kn_model(
     spark: SparkSession,
     state_path: str,
@@ -130,10 +99,12 @@ def streaming_kn_model(
     `train_kn_lm` dict (feed it to `kn_score`/`perplexity_buckets`
     unchanged), or None before the first fold. One groupBy-sum over the
     accumulated partials, then the shared derivation."""
-    tables = _folded_tables(spark, state_path)
-    if tables is None:
+    bi, uni = (
+        state_io.read_partials(spark, f"{state_path}/{name}", keys, sums)
+        for name, keys, sums in _TABLES
+    )
+    if bi is None or uni is None:
         return None
-    bi, uni = tables
     return kn_model_from_type_tables(
         bi.localCheckpoint(eager=False),
         uni.localCheckpoint(eager=False),
@@ -143,37 +114,14 @@ def streaming_kn_model(
 
 
 def compact_kn_state(spark: SparkSession, state_path: str) -> dict:
-    """Rewrite the accumulated per-batch partial file-sets as ONE
-    aggregated file-set per table. Crash-safe swap: the aggregate is
-    staged, the live directory is renamed ASIDE (``__old``), the stage
-    renamed in, and only then the old state deleted — a crash between
-    the two renames leaves the live name briefly missing but the
-    complete old state intact under ``__old``, and every reader/writer
-    self-heals it back (:func:`_heal`); the old delete-then-rename
-    order had a window where a crash orphaned ALL accumulated history.
-    Model-identical before/after — the counts are additive, summing
-    partials early changes nothing. Returns {"files_before": int,
-    "files_after": int}."""
-    tables = _folded_tables(spark, state_path)
-    if tables is None:
-        return {"files_before": 0, "files_after": 0}
-    bi, uni = tables
-    before = state_io.count_files(f"{state_path}/bigrams", spark) + (
-        state_io.count_files(f"{state_path}/unigrams", spark)
+    """Rewrite each table's accumulated per-batch partial file-sets as its
+    folded rows, through the fold store's crash-safe swap
+    (`state_io.compact_partials`). Model-identical before/after — the
+    counts are additive, summing partials early changes nothing. Returns
+    the two tables' summed ``{"files_before", "files_after",
+    "rows_before", "rows_after"}``."""
+    a, b = (
+        state_io.compact_partials(spark, f"{state_path}/{name}", keys, sums)
+        for name, keys, sums in _TABLES
     )
-    # sever lineage from the files about to move
-    bi_m = bi.localCheckpoint()
-    uni_m = uni.localCheckpoint()
-    for name, df in (("bigrams", bi_m), ("unigrams", uni_m)):
-        live = f"{state_path}/{name}"
-        stage, old = f"{live}__stage", f"{live}__old"
-        state_io.delete(stage, spark)
-        state_io.delete(old, spark)
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        state_io.rename(live, old, spark)
-        state_io.rename(stage, live, spark)
-        state_io.delete(old, spark)
-    after = state_io.count_files(f"{state_path}/bigrams", spark) + (
-        state_io.count_files(f"{state_path}/unigrams", spark)
-    )
-    return {"files_before": before, "files_after": after}
+    return {k: a[k] + b[k] for k in a}

@@ -25,9 +25,10 @@ disk-bounded, not executor-memory-bounded — the same design choice as
 
 Replay safety (two independent mechanisms):
 
-* A committed batch id is recorded next to the index (atomic
-  tmp+rename) AFTER output + append succeed; clean re-deliveries of a
-  committed batch are skipped outright.
+* A committed batch id is recorded next to the index (the fold store's
+  high-water marker, `state_io.write_last_batch`: atomic tmp+rename)
+  AFTER output + append succeed; clean re-deliveries of a committed
+  batch are skipped outright.
 * A crash BETWEEN those steps re-runs the whole batch, and every step
   is idempotent under that re-run: the output goes to a
   batch-id-keyed directory in overwrite mode (a half-written or
@@ -56,23 +57,6 @@ from pyspark.sql import functions as F
 from . import state_io
 
 
-def _marker_path(path: str) -> str:
-    return state_io.join(path, "_last_batch")
-
-
-def _read_marker(path: str) -> int:
-    # marker lives next to the index at any Hadoop-FS URI (state_io)
-    try:
-        raw = state_io.read_bytes(_marker_path(path))
-        return -1 if raw is None else int(raw.decode().strip())
-    except ValueError:
-        return -1
-
-
-def _write_marker(path: str, batch_id: int) -> None:
-    state_io.write_bytes(_marker_path(path), str(batch_id).encode())
-
-
 def make_neardup_fold(
     id_col: str,
     text_col: str,
@@ -96,7 +80,7 @@ def make_neardup_fold(
     )
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= _read_marker(index_path):
+        if batch_id <= state_io.read_last_batch(index_path):
             return  # committed and re-delivered: skip
         spark = batch_df.sparkSession
         batch_df = batch_df.localCheckpoint(eager=True)  # several consumers
@@ -139,7 +123,7 @@ def make_neardup_fold(
                 kept, id_col, text_col, name, k, bands, shingle_n,
                 path=index_path,
             )
-        _write_marker(index_path, batch_id)
+        state_io.write_last_batch(index_path, batch_id)
 
     return fold
 

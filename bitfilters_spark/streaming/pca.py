@@ -9,11 +9,11 @@ moment `load_moments` + `pca_from_moments` yields the PCA of EVERYTHING
 streamed so far — loadable mid-stream, by other sessions, with no
 state-store coupling (the same contract as `streaming_filter_build`).
 
-Exactly-once: state is written under ``state_path/batch=<id>/`` keyed by
-the micro-batch id — a replayed batch overwrites its own directory with
-identical content instead of double-adding (the crash-idempotency
-pattern `streaming/neardup.py` established); `load_moments` reads the
-HIGHEST batch id, which always holds the fold of every batch up to it.
+Exactly-once: state is a batch-keyed snapshot of the fold store
+(`state_io.write_snapshot`, ``state_path/batch=<id>/moments.npz``) — a
+replayed batch overwrites its own directory with identical content
+instead of double-adding; `load_moments` reads the HIGHEST committed
+batch id, which always holds the fold of every batch up to it.
 
 ``state_path`` is any Hadoop-FS URI (``s3a://``, ``hdfs://``, local) —
 all I/O goes through `state_io` (driver-side, scheme-agnostic), and
@@ -24,30 +24,16 @@ committed batch instead of raising.
 
 from __future__ import annotations
 
-import io
-
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.similarity import embedding_moments
 from . import state_io
 
 
-def _state_dirs(state_path: str) -> list[tuple[int, str]]:
-    return state_io.batch_state_dirs(state_path, "moments.npz")
-
-
-def _load_npz(path: str):
-    return np.load(io.BytesIO(state_io.read_bytes(path)))
-
-
 def load_moments(state_path: str):
     """(n, s, g) folded over every micro-batch so far, or None."""
-    dirs = _state_dirs(state_path)
-    if not dirs:
-        return None
-    blob = _load_npz(state_io.join(dirs[-1][1], "moments.npz"))
-    return int(blob["n"]), blob["s"], blob["g"]
+    blob = state_io.load_snapshot(state_path, "moments.npz")
+    return None if blob is None else (int(blob["n"]), blob["s"], blob["g"])
 
 
 def streaming_embedding_moments(
@@ -76,21 +62,11 @@ def fold_moments_batch(
     same content (prior state + this batch), never double-adds."""
     if batch_df.isEmpty():
         return
-    n_b, s_b, g_b = embedding_moments(batch_df, vec_col)
-    prior = None
-    for bid, path in reversed(_state_dirs(state_path)):
-        if bid < batch_id:  # fold onto the state BEFORE this batch only
-            blob = _load_npz(state_io.join(path, "moments.npz"))
-            prior = (int(blob["n"]), blob["s"], blob["g"])
-            break
+    n, s, g = embedding_moments(batch_df, vec_col)
+    prior = state_io.load_snapshot(state_path, "moments.npz", before=batch_id)
     if prior is not None:
-        n_b, s_b, g_b = n_b + prior[0], s_b + prior[1], g_b + prior[2]
-    buf = io.BytesIO()
-    np.savez(buf, n=n_b, s=s_b, g=g_b)
-    state_io.write_bytes(
-        state_io.join(state_path, f"batch={batch_id}", "moments.npz"),
-        buf.getvalue(),
-    )
+        n, s, g = n + int(prior["n"]), s + prior["s"], g + prior["g"]
+    state_io.write_snapshot(state_path, "moments.npz", batch_id, n=n, s=s, g=g)
 
 
 def streaming_pca(spark: SparkSession, state_path: str, k: int, center: bool = True):

@@ -25,11 +25,12 @@ Per micro-batch of raw JSONL lines:
    file-skipping index at ``index_path`` refreshes incrementally (only
    the new files are scanned).
 
-Replay safety = the `streaming/neardup.py` contract: a commit marker
-(tied to the checkpoint lineage) skips clean re-deliveries; a crash
-mid-fold re-runs a batch whose every step is idempotent (batch-keyed
-overwrites; filter re-merge of the same keys is a set union; the index
-refresh indexes whatever files exist). State and outputs live at
+Replay safety = the `streaming/neardup.py` contract: the fold store's
+high-water marker (`state_io.read_last_batch`, tied to the checkpoint
+lineage) skips clean re-deliveries; a crash mid-fold re-runs a batch
+whose every step is idempotent (batch-keyed overwrites; filter re-merge
+of the same keys is a set union; the index refresh indexes whatever
+files exist). State and outputs live at
 Hadoop-FS URIs via `state_io` / Spark writers — object-store safe.
 """
 
@@ -42,7 +43,6 @@ from ..functions.filters import MERGEABLE, _merge_blobs, build_filter, probe_fil
 from ..sources.ingest import CORRUPT_COL
 from . import state_io
 from .filter_build import load_filter_blob
-from .neardup import _read_marker, _write_marker
 
 
 def make_prep_pipeline_fold(
@@ -68,7 +68,7 @@ def make_prep_pipeline_fold(
     index_keys = list(index_key_cols or [id_col])
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= _read_marker(index_path):
+        if batch_id <= state_io.read_last_batch(index_path):
             return  # committed and re-delivered
         spark = batch_df.sparkSession
 
@@ -158,7 +158,7 @@ def make_prep_pipeline_fold(
             idx = refresh_file_index(spark, out_path, old, index_keys,
                                      kind=kind, **filter_kw)
         save_index(idx, index_path)
-        _write_marker(index_path, batch_id)
+        state_io.write_last_batch(index_path, batch_id)
 
     return fold
 

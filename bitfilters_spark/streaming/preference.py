@@ -3,14 +3,15 @@
 
 The report is six ADDITIVE counters (pair/ok/longer/tied counts and the
 ok-pairs' len_delta sum), so each micro-batch appends ONE tiny partial
-row (the `streaming/lm.py` fold pattern at its smallest — a 6-column
-parquet row per batch, no compaction needed at any realistic batch
-count; fold cost is O(batches) over ~48-byte rows) and the live report
-is one sum over the partials. `mean_len_delta` is derived from the
-folded sum/count by the same single division the batch aggregate ends
-with, so batch and streamed reports are EXACTLY equal — pinned by a
-pytest comparing a 3-batch fold against `length_bias_report` on the
-union.
+row to an additive partial table of the fold store
+(`state_io.append_partials` at its smallest — a 6-column parquet row per
+batch, no compaction needed at any realistic batch count; fold cost is
+O(batches) over ~48-byte rows) and the live report is one sum over the
+partials (`state_io.read_partials` with no group keys).
+`mean_len_delta` is derived from the folded sum/count by the same single
+division the batch aggregate ends with, so batch and streamed reports
+are EXACTLY equal — pinned by a pytest comparing a 3-batch fold against
+`length_bias_report` on the union.
 
 Exactly-once per batch via `state_io.once_per_batch`'s
 batch-id markers, same residual as every fold in this package (a crash
@@ -73,9 +74,10 @@ def preference_stats_fold(
     per batch id."""
 
     def apply(batch_df: DataFrame) -> None:
-        _batch_partial(
-            batch_df, prompt_col, chosen_col, rejected_col
-        ).write.mode("append").parquet(f"{state_path}/partials")
+        state_io.append_partials(
+            _batch_partial(batch_df, prompt_col, chosen_col, rejected_col),
+            f"{state_path}/partials",
+        )
 
     return state_io.once_per_batch(marker_path, apply)
 
@@ -109,12 +111,10 @@ def streaming_preference_report(
     so far — `length_bias_report`'s exact columns (mean_len_delta from
     the folded integer sum by the same one division), or None before
     the first fold. Missing state means "no pairs yet"; any OTHER read
-    failure propagates (the `streaming/lm` convention)."""
-    if not state_io.exists(f"{state_path}/partials", spark):
+    failure propagates (`state_io.read_partials`)."""
+    folded = state_io.read_partials(spark, f"{state_path}/partials", [], _COLS)
+    if folded is None:
         return None
-    folded = spark.read.parquet(f"{state_path}/partials").agg(
-        *[F.sum(c).cast("long").alias(c) for c in _COLS]
-    )
     return folded.select(
         "n_pairs", "n_ok", "n_chosen_longer", "n_rejected_longer",
         "n_len_tied",

@@ -55,7 +55,6 @@ def _windowed(
     state_schema: StructType,
     fold,
     emit,
-    where=None,
 ) -> DataFrame:
     """The per-window state machine: group ``cols`` by tumbling
     ``window`` start, fold each micro-batch's pandas chunk into the
@@ -63,14 +62,10 @@ def _windowed(
     it, and emit ``win_start`` + ``emit(state)`` (a dict of equal-length
     columns, possibly empty) in update mode. With a ``watermark`` a
     window's state row is evicted once the watermark passes its end +
-    allowance (see :func:`streaming_distinct_counts`). ``where`` filters
-    rows after ``withWatermark``; Catalyst pushes a filter that does not
-    read the event time below the watermark, so the rows it drops do not
-    advance it.
+    allowance (see :func:`streaming_distinct_counts`). A ``fold`` that
+    returns its state object unchanged stores and emits nothing.
     """
     src = stream if watermark is None else stream.withWatermark(ts_col, watermark)
-    if where is not None:
-        src = src.where(where)
     win_ms = _ms(window)
     allow_ms = 0 if watermark is None else _ms(watermark)
     proj = [F.window(F.col(ts_col), window).start.alias("win_start"), *cols]
@@ -85,11 +80,11 @@ def _windowed(
             # was already emitted in update mode; free the state row
             state.remove()
             return
-        st = state.get if state.exists else None
+        prior = st = state.get if state.exists else None
         for pdf in pdfs:
             if len(pdf):
                 st = fold(st, pdf)
-        if st is None:
+        if st is prior:
             return
         state.update(st)
         if watermark is not None:
@@ -345,20 +340,30 @@ def streaming_drift(
     )
     width = (mx - mn) / n_buckets
 
-    bucket = F.greatest(
-        F.least(
-            F.floor((F.col(value_col).cast("double") - F.lit(mn)) / F.lit(width)),
-            F.lit(n_buckets - 1),
+    value = F.col(value_col).cast("double")
+    # greatest/least skip NULLs, so a NULL value keeps a NULL bucket only
+    # through the explicit when
+    bucket = F.when(
+        value.isNotNull(),
+        F.greatest(
+            F.least(
+                F.floor((value - F.lit(mn)) / F.lit(width)), F.lit(n_buckets - 1)
+            ),
+            F.lit(0),
         ),
-        F.lit(0),
     ).cast("int")
 
     def fold(st, pdf):
+        # NULL values reach the state machine (so their event time still
+        # advances the watermark) and are dropped here
+        b = pdf["b"].dropna()
+        if b.empty:
+            return st
         if st is None:
             counts = np.zeros(n_buckets, dtype=np.int64)
         else:
             counts = np.frombuffer(bytes(st[0]), dtype="<i8").copy()
-        np.add.at(counts, pdf["b"].to_numpy(dtype=np.int64), 1)
+        np.add.at(counts, b.to_numpy(dtype=np.int64), 1)
         return (counts.astype("<i8").tobytes(),)
 
     def emit(st):
@@ -375,5 +380,4 @@ def streaming_drift(
         state_schema=StructType([StructField("counts", BinaryType())]),
         fold=fold,
         emit=emit,
-        where=F.col(value_col).isNotNull(),
     )

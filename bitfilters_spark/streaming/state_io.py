@@ -1,4 +1,5 @@
-"""Scheme-agnostic small-state I/O for the streaming family.
+"""Scheme-agnostic small-state I/O for the streaming family, and the
+one fold store every streaming fold persists through.
 
 The streaming operators keep their tiny out-of-store state (filter
 blobs, moment/weight npz files, commit markers) at a user-supplied
@@ -14,8 +15,23 @@ Durability contract: `write_bytes` writes to a ``.tmp`` sibling and
 renames into place — atomic on HDFS/POSIX, best-effort on object
 stores (single-object PUT there, which is itself atomic per object).
 Readers must additionally tolerate a *missing* file inside an
-already-created directory (the mkdirs→write window): the batch-keyed
-state loaders skip entries whose payload file does not exist yet.
+already-created directory (the mkdirs→write window): `load_snapshot`
+skips entries whose payload file does not exist yet.
+
+Streaming folds rest on one algebra — partial results merge — and
+persist it in one of three shapes, each implemented only here:
+
+* **additive partial tables** (`append_partials` / `read_partials` /
+  `compact_partials`): each batch appends its own parquet partial rows,
+  readers fold them with one groupBy-sum, and compaction rewrites the
+  table through a stage → rename-aside (``__old``) → rename-in →
+  delete swap that every read, append and compaction self-heals;
+* **batch-keyed npz snapshots** (`load_snapshot` / `write_snapshot`):
+  ``batch=<id>/<payload>`` holds the fold of every batch up to ``id``,
+  so a replayed batch rewrites its own snapshot from its predecessor;
+* **the high-water batch marker** (`read_last_batch` /
+  `write_last_batch`): ``<path>/_last_batch`` records the last committed
+  batch id of a fold that is not otherwise idempotent per batch.
 
 These calls run on the DRIVER only (``foreachBatch`` folds and
 mid-stream loaders) — py4j access to the JVM FileSystem is available by
@@ -24,9 +40,17 @@ construction; nothing here ships to executors.
 
 from __future__ import annotations
 
+import io
 from typing import Callable
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from ..sources.io import _target_file_count
+
+# compacted partial tables are sized like `sources/io.compact_files`
+_COMPACT_FILE_BYTES = 512 * 1024 * 1024
 
 
 def _jvm_fs(path: str, spark: SparkSession | None = None):
@@ -122,26 +146,16 @@ def list_names(path: str, spark: SparkSession | None = None) -> list[str]:
     return [s.getPath().getName() for s in fs.listStatus(jpath)]
 
 
-def batch_state_dirs(
-    state_path: str,
-    payload: str,
-    spark: SparkSession | None = None,
-) -> list[tuple[int, str]]:
+def _batch_dirs(state_path: str) -> list[tuple[int, str]]:
     """Sorted (batch_id, dir_uri) for every ``batch=<id>`` entry under
-    ``state_path`` whose ``payload`` file actually exists — a directory
-    created by a crash between mkdirs and the payload write is invisible
-    to readers (they fall back to the previous committed batch)."""
+    ``state_path``, committed or not."""
     out = []
-    for name in list_names(state_path, spark):
-        if not name.startswith("batch="):
-            continue
-        try:
-            bid = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        d = join(state_path, name)
-        if exists(join(d, payload), spark):
-            out.append((bid, d))
+    for name in list_names(state_path):
+        if name.startswith("batch="):
+            try:
+                out.append((int(name.split("=", 1)[1]), join(state_path, name)))
+            except ValueError:
+                pass
     return sorted(out)
 
 
@@ -165,3 +179,115 @@ def once_per_batch(
         write_bytes(marker, b"1", spark)
 
     return fold
+
+
+def read_last_batch(path: str) -> int:
+    """The high-water batch id committed at ``path``, or -1 when none
+    (or an unreadable marker) is there."""
+    try:
+        raw = read_bytes(join(path, "_last_batch"))
+        return -1 if raw is None else int(raw.decode().strip())
+    except ValueError:
+        return -1
+
+
+def write_last_batch(path: str, batch_id: int) -> None:
+    write_bytes(join(path, "_last_batch"), str(batch_id).encode())
+
+
+def load_snapshot(state_path: str, payload: str, before: int | None = None):
+    """The npz arrays of the newest committed ``batch=<id>/<payload>``
+    (only ids below ``before`` when given), or None. A ``batch=``
+    directory without its payload — a crash between mkdirs and the
+    write, or a snapshot `write_snapshot` deleted after the listing — is
+    skipped, so readers fall back to the previous committed batch."""
+    for bid, d in reversed(_batch_dirs(state_path)):
+        if before is not None and bid >= before:
+            continue
+        raw = read_bytes(join(d, payload))
+        if raw is not None:
+            return np.load(io.BytesIO(raw))
+    return None
+
+
+def write_snapshot(state_path: str, payload: str, batch_id: int, **arrays) -> None:
+    """Write ``batch=<batch_id>/<payload>`` as an npz of ``arrays``, then
+    delete every ``batch=`` directory older than the newest committed one
+    below ``batch_id``: that one is what a crash-replay of ``batch_id``
+    folds onto, so the listing stays bounded at two snapshots."""
+    buf = io.BytesIO()
+    np.savez(buf, **arrays)
+    write_bytes(join(state_path, f"batch={batch_id}", payload), buf.getvalue())
+    below = [(bid, d) for bid, d in _batch_dirs(state_path) if bid < batch_id]
+    keep = next(
+        (bid for bid, d in reversed(below) if exists(join(d, payload))), None
+    )
+    for bid, d in below:
+        if keep is not None and bid < keep:
+            delete(d)
+
+
+def _heal(path: str, spark: SparkSession) -> None:
+    """Self-heal a compaction interrupted between its two renames: the
+    live directory missing but its ``__old`` sibling present means the
+    old state is complete — rename it back before anything reads or
+    appends (an append against a missing live directory would recreate
+    it with only new batches, silently orphaning history)."""
+    old = path + "__old"
+    if not exists(path, spark) and exists(old, spark):
+        rename(old, path, spark)
+
+
+def append_partials(df: DataFrame, path: str) -> None:
+    """Append one batch's partial rows to the additive table at ``path``."""
+    _heal(path, df.sparkSession)
+    df.write.mode("append").parquet(path)
+
+
+def read_partials(
+    spark: SparkSession, path: str, keys: list, sums: list
+) -> DataFrame | None:
+    """The partials at ``path`` folded by one groupBy(``keys``)-sum of
+    ``sums``, or None before the first append. Missing state means "no
+    data yet"; any OTHER read failure propagates, it must not masquerade
+    as an empty stream."""
+    _heal(path, spark)
+    if not exists(path, spark):
+        return None
+    return (
+        spark.read.parquet(path)
+        .groupBy(*keys)
+        .agg(*[F.sum(c).alias(c) for c in sums])
+    )
+
+
+def compact_partials(spark: SparkSession, path: str, keys: list, sums: list) -> dict:
+    """Rewrite the partial file-sets at ``path`` as their folded rows —
+    fold-identical, since the sums are additive. Crash-safe swap: the
+    fold is staged (``__stage``), the live directory renamed ASIDE
+    (``__old``), the stage renamed in, and only then the old state
+    deleted; a crash between the renames leaves the complete old state
+    under ``__old``, which the next read, append or compaction renames
+    back. Returns ``{"rows_before", "rows_after", "files_before",
+    "files_after"}``."""
+    folded = read_partials(spark, path, keys, sums)
+    if folded is None:
+        return dict.fromkeys(
+            ("rows_before", "rows_after", "files_before", "files_after"), 0
+        )
+    stage, old = path + "__stage", path + "__old"
+    delete(old, spark)  # after the heal, a leftover __old is stale
+    files_before = count_files(path, spark)
+    rows_before = spark.read.parquet(path).count()
+    n = _target_file_count(spark, path, _COMPACT_FILE_BYTES, "parquet")
+    folded.coalesce(n).write.mode("overwrite").parquet(stage)
+    out = {
+        "rows_before": rows_before,
+        "rows_after": spark.read.parquet(stage).count(),
+        "files_before": files_before,
+        "files_after": count_files(stage, spark),
+    }
+    rename(path, old, spark)
+    rename(stage, path, spark)
+    delete(old, spark)
+    return out

@@ -4,16 +4,16 @@ ONE sufficient statistic both production tokenizer trainers consume
 reduce the corpus to `word_frequencies` first) — current as a crawl
 lands, so a fresh BPE or Unigram model is one fold away at any moment.
 
-The `streaming/lm.py` pattern verbatim, one table instead of two: word
-counts are ADDITIVE, so each micro-batch appends its own (word, n)
-partial as parquet rows (distributed writes — the word table is
-vocabulary-scale and never crosses the driver in the fold), and a model
-build folds the partials with one groupBy-sum before handing them to
-the SAME derivations the batch trainers use
-(`bpe_model_from_word_counts`, `train_unigram_from_words`) — so batch
-and streamed models cannot diverge arithmetically; pinned by pytests
-comparing a 3-batch fold against one batch train over the union, for
-BOTH tokenizer families.
+Word counts are ADDITIVE, so the table is an additive partial table of
+the fold store (`state_io.append_partials` / `read_partials` /
+`compact_partials`): each micro-batch appends its own (word, n) partial
+as parquet rows (distributed writes — the word table is vocabulary-scale
+and never crosses the driver in the fold), and a model build folds the
+partials with one groupBy-sum before handing them to the SAME
+derivations the batch trainers use (`bpe_model_from_word_counts`,
+`train_unigram_from_words`) — so batch and streamed models cannot
+diverge arithmetically; pinned by pytests comparing a 3-batch fold
+against one batch train over the union, for BOTH tokenizer families.
 
 Exactly-once per batch via `state_io.once_per_batch`'s
 batch-id markers: a crash-replayed batch no-ops when its marker exists;
@@ -21,9 +21,8 @@ the honest residual is one batch's double-append when the crash lands
 between the parquet write and the marker write (at-least-once for
 exactly that batch). Partial file-sets accumulate per batch; model
 builds fold them anyway, and a periodic :func:`compact_word_stats`
-rewrites the directory to one aggregated file-set (model-identical
-before/after, crash-safe via the rename-aside swap + self-heal — the
-`compact_kn_state` contract).
+rewrites the directory to its folded rows (model-identical
+before/after, crash-safe through the store's rename-aside swap).
 """
 
 from __future__ import annotations
@@ -45,16 +44,6 @@ __all__ = [
 ]
 
 
-def _heal(spark: SparkSession, state_path: str) -> None:
-    """Self-heal a compact interrupted between its two renames (the
-    `streaming/lm._heal` contract): live dir missing + ``__old``
-    present means the old state is complete — rename it back before
-    anything reads or appends."""
-    live, old = f"{state_path}/words", f"{state_path}/words__old"
-    if not state_io.exists(live, spark) and state_io.exists(old, spark):
-        state_io.rename(old, live, spark)
-
-
 def word_stats_fold(text_col: str, state_path: str, marker_path: str):
     """The ``foreachBatch`` function itself (exposed so tests can replay
     a batch id): append the batch's (word, n) partial, exactly once per
@@ -64,11 +53,10 @@ def word_stats_fold(text_col: str, state_path: str, marker_path: str):
     drop tail mass that later batches promote)."""
 
     def apply(batch_df: DataFrame) -> None:
-        spark = batch_df.sparkSession
-        _heal(spark, state_path)
-        word_frequencies(batch_df, text_col, top_words=None).write.mode(
-            "append"
-        ).parquet(f"{state_path}/words")
+        state_io.append_partials(
+            word_frequencies(batch_df, text_col, top_words=None),
+            f"{state_path}/words",
+        )
 
     return state_io.once_per_batch(marker_path, apply)
 
@@ -95,16 +83,9 @@ def streaming_word_frequencies(
     """The folded (word, n) table over everything streamed so far —
     exactly `word_frequencies` of the streamed union — or None before
     the first fold. Missing state means "no words yet"; any OTHER read
-    failure propagates (the ADVICE-r11 `streaming/lm` convention)."""
-    _heal(spark, state_path)
-    if not state_io.exists(f"{state_path}/words", spark):
-        return None
-    agg = (
-        spark.read.parquet(f"{state_path}/words")
-        .groupBy("word")
-        .agg(F.sum("n").alias("n"))
-    )
-    if top_words is None:
+    failure propagates (`state_io.read_partials`)."""
+    agg = state_io.read_partials(spark, f"{state_path}/words", ["word"], ["n"])
+    if agg is None or top_words is None:
         return agg
     return agg.orderBy(F.col("n").desc(), "word").limit(top_words)
 
@@ -160,27 +141,11 @@ def streaming_unigram_model(
 
 
 def compact_word_stats(spark: SparkSession, state_path: str) -> dict:
-    """Rewrite the accumulated per-batch partial file-sets as ONE
-    aggregated file-set. Crash-safe swap (the `compact_kn_state`
-    contract): stage the aggregate, rename the live directory ASIDE
-    (``__old``), rename the stage in, only then delete the old state —
-    a crash between the renames leaves the complete old state under
-    ``__old`` and every reader/writer self-heals it back. Returns
-    ``{"rows_before": n, "rows_after": n}`` (file counts are an FS
-    detail; the row count collapse is the observable)."""
-    _heal(spark, state_path)
-    live = f"{state_path}/words"
-    if not state_io.exists(live, spark):
-        return {"rows_before": 0, "rows_after": 0}
-    raw = spark.read.parquet(live)
-    rows_before = raw.count()
-    agg = raw.groupBy("word").agg(F.sum("n").alias("n"))
-    stage = f"{state_path}/words__stage"
-    agg.write.mode("overwrite").parquet(stage)
-    rows_after = spark.read.parquet(stage).count()
-    old = f"{state_path}/words__old"
-    state_io.delete(old, spark)
-    state_io.rename(live, old, spark)
-    state_io.rename(stage, live, spark)
-    state_io.delete(old, spark)
-    return {"rows_before": rows_before, "rows_after": rows_after}
+    """Rewrite the accumulated per-batch partial file-sets as the folded
+    (word, n) rows, through the fold store's crash-safe swap
+    (`state_io.compact_partials`). Returns ``{"rows_before": n,
+    "rows_after": n, ...}`` (the row count collapse is the observable;
+    the file counts ride along)."""
+    return state_io.compact_partials(
+        spark, f"{state_path}/words", ["word"], ["n"]
+    )

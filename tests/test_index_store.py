@@ -226,10 +226,29 @@ STORE = PACKAGE / "sources" / "index_store.py"
 # ``__stage`` name and swap it with state_io renames
 DIRECTORY_SWAPS = {
     "operators/packing.py": "packed shards stage under path/__stage",
-    "streaming/lm.py": "KN count partials compact through a directory swap",
-    "streaming/tokenizer.py": "word-count partials compact through a directory swap",
-    "streaming/cdc.py": "chunk-count partials compact through a directory swap",
+    "streaming/state_io.py": "additive partial tables compact through a directory swap",
 }
+
+
+def test_streaming_fold_state_lives_in_state_io():
+    """Only `streaming/state_io.py` heals a rename-aside swap, lists
+    batch-keyed snapshots or writes npz state, and no streaming module
+    imports a private name of a sibling."""
+    found = []
+    for path in sorted((PACKAGE / "streaming").glob("*.py")):
+        src = path.read_text()
+        if path.name != "state_io.py":
+            for token in ("__old", "batch_state_dirs", "np.savez"):
+                if token in src:
+                    found.append(f"{path.name}: {token}")
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.ImportFrom) and node.level == 1:
+                found += [
+                    f"{path.name}: imports {node.module}.{a.name}"
+                    for a in node.names
+                    if a.name.startswith("_")
+                ]
+    assert not found, found
 
 
 def test_index_protocol_lives_in_one_module():

@@ -472,6 +472,51 @@ def test_streaming_distinct_counts_watermark_closes_windows(spark, tmp_path, kin
         q.stop()
 
 
+def test_streaming_drift_null_rows_advance_watermark(spark, tmp_path):
+    """Rows with a NULL value are not counted by ``streaming_drift`` but
+    their event time still advances the watermark: batches of only NULL
+    values at a later hour evict the open 10:00 window, and the later
+    window, which saw only NULLs, holds no state and emits nothing."""
+    import datetime as dt
+
+    from bitfilters_spark.streaming import streaming_drift
+
+    src = str(tmp_path / "dn_in")
+    t = lambda h, m=0: dt.datetime(2024, 1, 1, h, m)
+
+    def write(rows):
+        spark.createDataFrame(rows, "id long, ts timestamp").coalesce(1) \
+            .write.mode("append").parquet(src)
+
+    write([(1, t(10, 0)), (2, t(10, 20)), (5, t(10, 40))])
+    stream = spark.readStream.schema("id long, ts timestamp").parquet(src)
+    q = (
+        streaming_drift(
+            stream, "id", {"min": 0, "max": 8, "counts": [1, 1]}, "ts",
+            "1 hour", watermark="30 minutes",
+        )
+        .writeStream.format("memory")
+        .queryName("drift_null_sink")
+        .option("checkpointLocation", str(tmp_path / "dn_ckpt"))
+        .outputMode("update")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        # NULL-only batches: the first moves the watermark to 14:30, past
+        # the 10:00 window's end + allowance; the timeout fires after it
+        write([(None, t(15, 0))])
+        q.processAllAvailable()
+        write([(None, t(15, 10))])
+        q.processAllAvailable()
+        state_rows = q.lastProgress["stateOperators"][0]["numRowsTotal"]
+        assert state_rows == 0, "closed 10:00 window must be evicted"
+        rows = spark.sql("SELECT * FROM drift_null_sink").collect()
+        assert [(r["win_start"].hour, r["n_rows"]) for r in rows] == [(10, 3)]
+    finally:
+        q.stop()
+
+
 def test_streaming_sessionize_matches_batch(spark, tmp_path):
     """Streaming sessionization emits exactly the sessions the batch
     operator computes, closing them via next-event and via watermark
@@ -1239,7 +1284,7 @@ def test_neardup_fold_crash_replay_is_idempotent(spark, tmp_path):
     themselves out (self-match exclusion)."""
     import os
 
-    from bitfilters_spark.streaming.neardup import _marker_path, make_neardup_fold
+    from bitfilters_spark.streaming.neardup import make_neardup_fold
 
     idx = str(tmp_path / "cr_idx")
     outp = str(tmp_path / "cr_out")
@@ -1255,7 +1300,7 @@ def test_neardup_fold_crash_replay_is_idempotent(spark, tmp_path):
     first = sorted(r["doc_id"] for r in spark.read.parquet(outp).collect())
     assert first == [1, 3]
     # crash before commit: marker lost, batch 0 re-delivered and re-run
-    os.remove(_marker_path(idx))
+    os.remove(os.path.join(idx, "_last_batch"))
     fold(b0, 0)
     replay = sorted(r["doc_id"] for r in spark.read.parquet(outp).collect())
     assert replay == first  # no duplicates, no self-knockout
@@ -1683,6 +1728,32 @@ def test_state_io_scheme_qualified_uri_and_crash_window(spark, tmp_path):
     (tmp_path / "clf_state" / "batch=7").mkdir()
     m2 = load_streaming_classifier(cstate)
     assert m2 is not None and list(m2["losses"]) == list(m["losses"])
+
+
+def test_snapshot_retention_keeps_the_replay_predecessor(spark, tmp_path):
+    """Batch-keyed snapshots do not accumulate: after each write only the
+    newest committed snapshot below it survives, so after 4 folds at
+    most 2 ``batch=`` directories remain, and a crash-replay of the last
+    batch id still folds onto its predecessor to the same state."""
+    import numpy as np
+    from bitfilters_spark.streaming.dsir import fold_dsir_batch, load_dsir_counts
+
+    state = str(tmp_path / "ret_state")
+    batches = [
+        spark.createDataFrame(
+            [(i, f"alpha{i % 5} beta{b}") for i in range(10)],
+            "doc_id long, text string",
+        )
+        for b in range(4)
+    ]
+    for b, df in enumerate(batches):
+        fold_dsir_batch(df, "text", state, b, n_buckets=64)
+    kept = sorted(p.name for p in (tmp_path / "ret_state").iterdir())
+    assert len(kept) <= 2 and kept[-1] == "batch=3", kept
+    want = load_dsir_counts(state)
+    assert want.sum() == 4 * 10 * 3  # 2 unigrams + 1 bigram per row
+    fold_dsir_batch(batches[3], "text", state, 3, n_buckets=64)
+    np.testing.assert_array_equal(load_dsir_counts(state), want)
 
 
 def test_streaming_dsir_counts_match_batch_fit(spark, tmp_path):
@@ -2324,6 +2395,84 @@ def test_streaming_word_stats_match_batch_tokenizers(spark, tmp_path):
     # empty state: None
     assert streaming_word_frequencies(spark, str(tmp_path / "nope")) is None
     assert streaming_bpe_model(spark, str(tmp_path / "nope")) is None
+
+
+@pytest.mark.parametrize("family", ["lm", "tokenizer", "cdc"])
+def test_partial_table_compaction_crash_heals(spark, tmp_path, family):
+    """A compaction that crashed between its two renames — the live table
+    renamed to ``__old``, its ``__stage`` written but not renamed in —
+    loses nothing: the read returns the same totals, the next fold
+    appends to the healed state, and a new compaction completes."""
+    from bitfilters_spark.streaming import cdc, lm, tokenizer
+
+    def kn_totals(state):
+        m = lm.streaming_kn_model(spark, state, vocab_size=1 << 20)
+        return m and (m["n_bigram_types"], m["n_bigrams"], m["n_tokens"])
+
+    def table_totals(read):
+        def totals(state):
+            df = read(spark, state)
+            return None if df is None else set(map(tuple, df.collect()))
+
+        return totals
+
+    fold, table, totals, compact = {
+        "lm": (
+            lambda st, mk: lm.kn_stats_fold("text", st, mk),
+            "bigrams", kn_totals, lm.compact_kn_state,
+        ),
+        "tokenizer": (
+            lambda st, mk: tokenizer.word_stats_fold("text", st, mk),
+            "words", table_totals(tokenizer.streaming_word_frequencies),
+            tokenizer.compact_word_stats,
+        ),
+        "cdc": (
+            lambda st, mk: cdc.cdc_stats_fold(
+                "doc_id", "text", st, mk, min_size=16, avg_size=64, max_size=256
+            ),
+            "chunks", table_totals(cdc.streaming_chunk_counts),
+            cdc.compact_cdc_stats,
+        ),
+    }[family]
+
+    rows = [
+        (i, " ".join(f"w{(i * j) % 11} v{j % 4}" for j in range(30)))
+        for i in range(12)
+    ]
+    batches = [
+        spark.createDataFrame(rows[k::3], "doc_id long, text string")
+        for k in range(3)
+    ]
+    state = str(tmp_path / "state")
+    live = tmp_path / "state" / table
+
+    def crash():
+        spark.read.parquet(str(live)).write.mode("overwrite").parquet(
+            f"{live}__stage"
+        )
+        os.rename(live, f"{live}__old")
+
+    step = fold(state, str(tmp_path / "markers"))
+    step(batches[0], 0)
+    step(batches[1], 1)
+    before = totals(state)
+    crash()
+    assert totals(state) == before  # the read heals
+
+    crash()
+    step(batches[2], 2)  # the append heals before it writes
+    ref = str(tmp_path / "ref")
+    fold(ref, str(tmp_path / "ref_markers"))(
+        spark.createDataFrame(rows, "doc_id long, text string"), 0
+    )
+    want = totals(ref)
+    assert want and totals(state) == want
+
+    crash()
+    compact(spark, state)  # the compaction heals, then swaps
+    assert not os.path.exists(f"{live}__old")
+    assert not os.path.exists(f"{live}__stage")
+    assert totals(state) == want
 
 
 def test_streaming_preference_report_matches_batch(spark, tmp_path):
