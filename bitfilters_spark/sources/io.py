@@ -105,11 +105,15 @@ def read_table(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
 
 
+# default size of a file written by compaction and Z-order layout
+TARGET_FILE_BYTES = 512 * 1024 * 1024
+
+
 def compact_files(
     spark: SparkSession,
     src: str,
     dest: str,
-    target_file_bytes: int = 512 * 1024 * 1024,
+    target_file_bytes: int = TARGET_FILE_BYTES,
     order_col: str | None = None,
     format: str = "parquet",
 ) -> int:
@@ -126,7 +130,7 @@ def compact_files(
     ``repartition(n)`` balances bytes. Returns the file count written.
     """
     df = spark.read.format(format).load(src)
-    n = _target_file_count(spark, src, target_file_bytes, format)
+    n = target_file_count(spark, src, target_file_bytes, format)
     from pyspark.sql import functions as F
 
     if order_col is not None:
@@ -139,8 +143,11 @@ def compact_files(
     return n
 
 
-def _target_file_count(
-    spark: SparkSession, src: str, target_file_bytes: int, format: str
+def target_file_count(
+    spark: SparkSession,
+    src: str,
+    target_file_bytes: int = TARGET_FILE_BYTES,
+    format: str = "parquet",
 ) -> int:
     """Ceil(on-disk bytes / target) from the input files' metadata
     (driver-side listing — no data read)."""
@@ -207,7 +214,7 @@ def zorder_layout(
     src: str,
     dest: str,
     cols: list,
-    target_file_bytes: int = 512 * 1024 * 1024,
+    target_file_bytes: int = TARGET_FILE_BYTES,
     bits: int = 16,
     format: str = "parquet",
 ) -> int:
@@ -217,7 +224,7 @@ def zorder_layout(
     space and ``build_zone_index`` + ``prune_files_range`` stay
     selective on EVERY listed column. Returns the file count written."""
     df = spark.read.format(format).load(src)
-    n = _target_file_count(spark, src, target_file_bytes, format)
+    n = target_file_count(spark, src, target_file_bytes, format)
     zdf = zorder_column(df, cols, bits=bits)
     (
         zdf.repartitionByRange(n, F.col("__z"))

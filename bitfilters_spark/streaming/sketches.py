@@ -63,7 +63,8 @@ def _windowed(
     columns, possibly empty) in update mode. With a ``watermark`` a
     window's state row is evicted once the watermark passes its end +
     allowance (see :func:`streaming_distinct_counts`). A ``fold`` that
-    returns its state object unchanged stores and emits nothing.
+    returns its state object unchanged stores and emits nothing, but
+    still re-arms the window's eviction timeout.
     """
     src = stream if watermark is None else stream.withWatermark(ts_col, watermark)
     win_ms = _ms(window)
@@ -84,13 +85,17 @@ def _windowed(
         for pdf in pdfs:
             if len(pdf):
                 st = fold(st, pdf)
-        if st is prior:
+        if st is None:
             return
-        state.update(st)
         if watermark is not None:
+            # GroupState's timeout resets on every call: re-arm it even
+            # when the fold changed nothing, or the window never evicts
             win_end = int(pd.Timestamp(key[0]).value // 1_000_000) + win_ms
             wm = state.getCurrentWatermarkMs()
             state.setTimeoutTimestamp(max(win_end + allow_ms, wm + 1))
+        if st is prior:
+            return
+        state.update(st)
         out = emit(st)
         m = len(next(iter(out.values())))
         yield pd.DataFrame({"win_start": [key[0]] * m, **out})

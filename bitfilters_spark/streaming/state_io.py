@@ -15,8 +15,9 @@ Durability contract: `write_bytes` writes to a ``.tmp`` sibling and
 renames into place — atomic on HDFS/POSIX, best-effort on object
 stores (single-object PUT there, which is itself atomic per object).
 Readers must additionally tolerate a *missing* file inside an
-already-created directory (the mkdirs→write window): `load_snapshot`
-skips entries whose payload file does not exist yet.
+already-created directory (the mkdirs→write window) or one deleted by
+snapshot retention mid-read: `read_bytes` returns None for both, and
+`load_snapshot` skips such entries.
 
 Streaming folds rest on one algebra — partial results merge — and
 persist it in one of three shapes, each implemented only here:
@@ -44,13 +45,11 @@ import io
 from typing import Callable
 
 import numpy as np
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.io import _target_file_count
-
-# compacted partial tables are sized like `sources/io.compact_files`
-_COMPACT_FILE_BYTES = 512 * 1024 * 1024
+from ..sources.io import target_file_count
 
 
 def _jvm_fs(path: str, spark: SparkSession | None = None):
@@ -77,11 +76,17 @@ def exists(path: str, spark: SparkSession | None = None) -> bool:
 
 
 def read_bytes(path: str, spark: SparkSession | None = None) -> bytes | None:
-    """The file's bytes, or None if it does not exist."""
+    """The file's bytes, or None if it does not exist — also when it is
+    deleted between the existence check and the open."""
     jvm, fs, jpath = _jvm_fs(path, spark)
     if not fs.exists(jpath):
         return None
-    stream = fs.open(jpath)
+    try:
+        stream = fs.open(jpath)
+    except Py4JJavaError:
+        if fs.exists(jpath):
+            raise
+        return None
     try:
         return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
     finally:
@@ -200,13 +205,18 @@ def load_snapshot(state_path: str, payload: str, before: int | None = None):
     (only ids below ``before`` when given), or None. A ``batch=``
     directory without its payload — a crash between mkdirs and the
     write, or a snapshot `write_snapshot` deleted after the listing — is
-    skipped, so readers fall back to the previous committed batch."""
-    for bid, d in reversed(_batch_dirs(state_path)):
-        if before is not None and bid >= before:
-            continue
-        raw = read_bytes(join(d, payload))
-        if raw is not None:
-            return np.load(io.BytesIO(raw))
+    skipped, so readers fall back to the previous committed batch. When
+    every listed snapshot is gone the directory is listed once more:
+    retention may have deleted them all behind a newer snapshot."""
+    for _ in range(2):
+        dirs = [d for bid, d in _batch_dirs(state_path)
+                if before is None or bid < before]
+        for d in reversed(dirs):
+            raw = read_bytes(join(d, payload))
+            if raw is not None:
+                return np.load(io.BytesIO(raw))
+        if not dirs:
+            break
     return None
 
 
@@ -279,8 +289,11 @@ def compact_partials(spark: SparkSession, path: str, keys: list, sums: list) -> 
     delete(old, spark)  # after the heal, a leftover __old is stale
     files_before = count_files(path, spark)
     rows_before = spark.read.parquet(path).count()
-    n = _target_file_count(spark, path, _COMPACT_FILE_BYTES, "parquet")
-    folded.coalesce(n).write.mode("overwrite").parquet(stage)
+    # sized like `sources/io.compact_files`; repartition (not coalesce)
+    # keeps the groupBy-sum at full shuffle width
+    folded.repartition(target_file_count(spark, path)).write.mode(
+        "overwrite"
+    ).parquet(stage)
     out = {
         "rows_before": rows_before,
         "rows_after": spark.read.parquet(stage).count(),

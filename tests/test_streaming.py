@@ -476,7 +476,9 @@ def test_streaming_drift_null_rows_advance_watermark(spark, tmp_path):
     """Rows with a NULL value are not counted by ``streaming_drift`` but
     their event time still advances the watermark: batches of only NULL
     values at a later hour evict the open 10:00 window, and the later
-    window, which saw only NULLs, holds no state and emits nothing."""
+    window, which saw only NULLs, holds no state and emits nothing. A
+    NULL-only batch inside the open 10:00 window keeps its eviction
+    timeout armed."""
     import datetime as dt
 
     from bitfilters_spark.streaming import streaming_drift
@@ -502,6 +504,9 @@ def test_streaming_drift_null_rows_advance_watermark(spark, tmp_path):
         .start()
     )
     try:
+        q.processAllAvailable()
+        # a NULL-only row in the open 10:00 window changes no state
+        write([(None, t(10, 40))])
         q.processAllAvailable()
         # NULL-only batches: the first moves the watermark to 14:30, past
         # the 10:00 window's end + allowance; the timeout fires after it
@@ -1754,6 +1759,49 @@ def test_snapshot_retention_keeps_the_replay_predecessor(spark, tmp_path):
     assert want.sum() == 4 * 10 * 3  # 2 unigrams + 1 bigram per row
     fold_dsir_batch(batches[3], "text", state, 3, n_buckets=64)
     np.testing.assert_array_equal(load_dsir_counts(state), want)
+
+
+def test_snapshot_reads_survive_retention_races(spark, tmp_path, monkeypatch):
+    """A reader racing snapshot retention neither raises nor reports "no
+    state": a payload deleted between ``read_bytes``' existence check and
+    its open reads as missing, and a listing whose snapshots were all
+    deleted behind a newer one is listed once more."""
+    import numpy as np
+    from bitfilters_spark.streaming import state_io
+
+    state = str(tmp_path / "race_state")
+    for b in range(4):
+        state_io.write_snapshot(state, "x.npz", b, x=np.array([b]))
+
+    real_fs = state_io._jvm_fs
+
+    class CheckedThenDeleted:
+        def __init__(self, fs):
+            self.fs, self.checked = fs, False
+
+        def exists(self, p):
+            if not self.checked:
+                self.checked = True
+                return True
+            return self.fs.exists(p)
+
+        def open(self, p):
+            return self.fs.open(p)
+
+    def racy_fs(path, spark=None):
+        jvm, fs, jpath = real_fs(path, spark)
+        return jvm, CheckedThenDeleted(fs), jpath
+
+    with monkeypatch.context() as m:
+        m.setattr(state_io, "_jvm_fs", racy_fs)
+        assert state_io.read_bytes(state_io.join(state, "batch=0", "x.npz")) is None
+
+    listings = iter([
+        [(b, state_io.join(state, f"batch={b}")) for b in (0, 1)],
+        state_io._batch_dirs(state),
+    ])
+    monkeypatch.setattr(state_io, "_batch_dirs", lambda _: next(listings))
+    assert state_io.load_snapshot(state, "x.npz")["x"].tolist() == [3]
 
 
 def test_streaming_dsir_counts_match_batch_fit(spark, tmp_path):
